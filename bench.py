@@ -309,14 +309,14 @@ def main() -> None:
     }
     # Cross-round comparability after a window rotation (VERDICT r6 item
     # 4): subtotal THIS run's timings over the queries shared with the
-    # PREVIOUS round's recorded bench (highest-numbered BENCH_r*.json on
-    # disk), so round-over-round deltas compare identical work even when
-    # the headline window changes.
-    shared = _shared_with_prev(timings)
+    # newest recorded bench from the same core count, so round-over-round
+    # deltas compare identical work even when the headline window changes.
+    shared = _shared_with_prev(timings, spark.sparkContext.defaultParallelism)
     if shared is not None:
         compact["shared_with_prev_window_seconds"] = shared["seconds"]
         compact["shared_with_prev_window_n"] = shared["n"]
         compact["prev_bench_file"] = shared["file"]
+        compact["prev_bench_cpus"] = shared["cpus"]
     # Attribution lands on the stdout line too (the driver records only
     # stdout as BENCH_rN): disk-hygiene state, per-query >1.5x deltas vs
     # the committed run, and any runtime path decisions — all bounded-size.
@@ -408,32 +408,43 @@ def _ratio_vs_committed(
     }
 
 
-def _shared_with_prev(timings: dict[str, float]) -> dict | None:
-    """Subtotal of `timings` restricted to the query names present in the
-    most recent driver-recorded BENCH_r*.json (its full per-query map if
-    readable via its full_results_file, else its headline map). None when
-    no prior round artifact exists."""
+def _shared_with_prev(
+    timings: dict[str, float], cpus: int, root: str = _HERE
+) -> dict | None:
+    """Subtotal of `timings` restricted to the query names of the newest
+    recorded BENCH_r*.json whose `cpus` matches this run (newest =
+    highest round `n`, then latest mtime). A run on another core count is
+    never the comparison base: the lexically-last file is often the
+    8-core `_c8` twin of a 32-core round. Files without a readable query
+    map are skipped. None when no such file exists."""
     import glob
 
-    prior = sorted(glob.glob(os.path.join(_HERE, "BENCH_r*.json")))
-    if not prior:
-        return None
-    path = prior[-1]
-    try:
-        prev = json.load(open(path))
+    best = None
+    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
+        try:
+            with open(path) as fh:
+                rec = json.load(fh)
+        except (json.JSONDecodeError, OSError):
+            continue
+        if not isinstance(rec, dict) or rec.get("cpus") != cpus:
+            continue
         # The driver wraps bench.py's stdout line under "parsed".
-        if "parsed" in prev and isinstance(prev["parsed"], dict):
-            prev = prev["parsed"]
-        prev_names = set(prev.get("queries") or {})
-    except (json.JSONDecodeError, OSError):
+        prev = rec.get("parsed") if "parsed" in rec else rec
+        names = set((prev or {}).get("queries") or {})
+        if not names:
+            continue
+        key = (rec.get("n", -1), os.path.getmtime(path))
+        if best is None or key > best[0]:
+            best = (key, path, names)
+    if best is None:
         return None
-    if not prev_names:
-        return None
-    both = prev_names & set(timings)
+    _key, path, names = best
+    both = names & set(timings)
     return {
         "seconds": round(sum(timings[n] for n in both), 3),
         "n": len(both),
         "file": os.path.basename(path),
+        "cpus": cpus,
     }
 
 

@@ -11,20 +11,26 @@ an explicit tie-break ordering (SURVEY.md §7 Hard-1).
 Scale extensions (no reference counterpart; BASELINE.json:6): MinHash-LSH /
 SimHash / n-gram-Jaccard near-dup for a 100 TB document corpus. All are
 pure-DataFrame compositions — no MLlib dependency, no Python in the shuffle
-path. MinHash signatures are MAP-ONLY (array_min over per-row shingle
-hashes; a per-doc min needs no shuffle). SimHash's 60-bit majority vote
-deliberately KEEPS the explode + two hash aggregations: the same vote as a
-nested higher-order aggregate is shuffle-free but evaluates interpreted
-(measured 13 s vs 1.4 s at sf0.1) — whole-stage-codegen'd hash aggregates
-beat interpreted HOFs when the per-row expansion is large. The production
-SimHash uses one Arrow-vectorized pandas UDF for the same inner loop
-(numpy bit ops), a narrow per-row map with no shuffle.
+path. MinHash and SimHash share one LSH core (`_lsh_pairs`) parameterized
+by hash family: signatures are MAP-ONLY (array_min over per-row shingle
+hashes; a per-doc min needs no shuffle), band keys come from one builder
+per family, and candidate pairs are emitted INSIDE each (band, bucket)
+group carrying both members' signatures — one aggregation, no band
+self-join, no verify join, no persisted signature table. SimHash's 60-bit
+md5 majority vote deliberately KEEPS the explode + two hash aggregations:
+the same vote as a nested higher-order aggregate is shuffle-free but
+evaluates interpreted (measured 13 s vs 1.4 s at sf0.1) — whole-stage-
+codegen'd hash aggregates beat interpreted HOFs when the per-row expansion
+is large. The production SimHash computes the FNV vote in numpy over each
+Arrow batch, a narrow per-row map with no shuffle.
 
 Scale notes:
-- MinHash bands join is an equi-join on (band_id, band_hash) — shuffle keys
-  are uniformly distributed hashes, so no skew; candidate verification is
-  restricted to bucket-colliding pairs (LSH's whole point: no O(n²) pair
-  enumeration).
+- LSH bucket keys are uniformly distributed hashes, so the bucket
+  aggregation has no skew beyond true duplicate clusters; pairs are only
+  ever enumerated within a bucket (LSH's whole point: no O(n²) pair
+  enumeration). A bucket is one row in one task, so an uncapped bucket
+  must fit in one task's heap; at corpus scale set
+  `max_bucket_occupancy` (see `_lsh_pairs`).
 - Exact dedup on a hash of the payload (not the payload itself) keeps shuffle
   rows narrow: 16-byte digest instead of multi-KB documents.
 """
@@ -123,427 +129,44 @@ def first_wins_dedup_agg(
     return grouped.select(*cols)
 
 
-def char_shingles(text: Column | str, n: int = 5) -> Column:
+def _md5_bigint_sql(x: str, n_hex: int) -> str:
+    """Engine-portable hash as SQL text: the first `n_hex` hex chars of
+    md5(x) as a bigint. DuckDB reproduces it bit for bit with
+    `('0x' || substr(md5(x), 1, n_hex))::BIGINT`; 15 chars (60 bits) is
+    the widest prefix that stays a non-negative signed bigint."""
+    return f"CAST(conv(substring(md5({x}), 1, {n_hex}), 16, 10) AS BIGINT)"
+
+
+def char_shingles(text_col: str, n: int = 5) -> Column:
     """Array of lowercase character n-gram shingles (distinct).
 
     `sequence(1, len-n+1)` + `transform(substring)` stays fully JVM-side; the
-    distinct set is what MinHash needs.
+    distinct set is what MinHash needs. A text shorter than n is one
+    shingle (itself), an empty text one empty shingle.
     """
-    t = F.lower(F.col(text) if isinstance(text, str) else text)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, n)))
-
-
-def minhash_signatures(
-    docs: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle_n: int = 5
-) -> DataFrame:
-    """(id, sig: array<bigint>[num_hashes]) MinHash signature per document.
-
-    Implementation: `array_min(transform(shingles, s -> xxhash64(s, seed_i)))`
-    per seed, over the per-row shingle array — the signature build is
-    MAP-ONLY (the earlier explode + groupBy-min formulation shuffled every
-    (doc, shingle) row; a per-doc min never needs a shuffle because all of
-    a doc's shingles already live in its own row). All hashing is the
-    JVM's xxhash64 — deterministic across runs/partitions.
-    """
-
-    def _seed_min(i: int) -> Column:
-        # One-parameter lambda required: transform() treats a two-parameter
-        # lambda as (element, index).
-        return F.array_min(
-            F.transform(F.col("__shs"), lambda s: F.xxhash64(s, F.lit(i)))
-        )
-
-    return docs.select(
-        F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
-    ).select(
-        F.col(id_col),
-        F.array(*[_seed_min(i) for i in range(num_hashes)]).alias("sig"),
+    t = f"lower(`{text_col}`)"
+    return F.expr(
+        f"array_distinct(transform(sequence(1, greatest(length({t}) - {n - 1}, 1)),"
+        f" i -> substring({t}, i, {n})))"
     )
 
 
-def minhash_signatures_md5(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """(id, sig: array<bigint>) signatures on the engine-portable md5
-    Carter-Wegman family (`minhash_pairs_md5`'s hash, array-shaped like
-    `minhash_signatures`) — the oracle-reproducible signature tier for
-    consumers that store/join signature arrays (the incremental store).
-    Same map-only plan: one md5 per shingle, per-seed affine min."""
-    based = docs.select(
-        F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
-    ).select(
-        F.col(id_col),
-        F.transform(
-            F.col("__shs"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("__xs"),
-    )
-    coeffs = _minhash_coeffs(num_hashes)
+# ---------------------------------------------------------------------------
+# LSH near-dup: one bucket-grouped core, parameterized by hash family.
+#
+# signature -> band keys -> bucket -> pairs -> score. Every family supplies
+# three SQL fragments (signature, band keys, score); `_lsh_pairs` does the
+# rest. Each projection is ONE selectExpr string — one py4j call and one
+# parse, instead of a Column tree whose every lambda and operator is a
+# separate JVM round trip (~4.5k of them for the md5 MinHash pair plan).
+#
+# The core groups each (band, bucket) into one sorted member list and emits
+# the pairs inside it, each pair carrying both members' signatures, so the
+# score needs no join back to a signature table: no persisted signatures,
+# no band self-join, no verify joins.
+# ---------------------------------------------------------------------------
 
-    def _seed_min(a: int, c: int) -> Column:
-        return F.array_min(
-            F.transform(
-                F.col("__xs"),
-                lambda x: (F.lit(a) * x + F.lit(c)) % F.lit(MINHASH_PRIME),
-            )
-        )
-
-    return based.select(
-        F.col(id_col),
-        F.array(
-            *[_seed_min(a, c) for a, c in coeffs]
-        ).alias("sig"),
-    )
-
-
-def _band_keys(
-    sig: DataFrame,
-    id_col: str,
-    bands: int,
-    rows_per_band: int,
-    out_id: str = "id",
-) -> DataFrame:
-    """(out_id, band, bh) band-bucket keys for a signature table — the ONE
-    band-hash construction every LSH consumer (batch candidates,
-    incremental store lookups) shares, so cross-consumer bucket parity is
-    structural rather than hand-synced."""
-    return sig.select(
-        F.col(id_col).alias(out_id),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(
-                            F.col("sig"), b * rows_per_band + 1, rows_per_band
-                        ),
-                        b,
-                    ).alias("bh"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(out_id, "bb.band", "bb.bh")
-
-
-def minhash_lsh_candidates(
-    sig: DataFrame,
-    id_col: str,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    max_bucket_occupancy: int | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) via banded LSH on signatures.
-
-    Each signature is cut into `bands` bands of `rows_per_band` hashes; a pair
-    is a candidate iff some band hashes identically. The band bucket join is
-    an equi-join on (band, band_hash) — uniform hash keys, never enumerates
-    O(n²) pairs across the corpus. The per-BUCKET cost is c·(c−1)/2, though,
-    and bucket occupancy grows with the size of true duplicate clusters:
-    measured on the synthetic corpus, 10× docs ⇒ ~10× max occupancy ⇒ ~96×
-    implied pairs (`lsh_bucket_occupancy` is the audit). That is the real
-    driver of the sf1 bench slope — not shuffle constants.
-
-    `max_bucket_occupancy` is the production guardrail for that regime:
-    buckets holding more than this many members are EXCLUDED from pair
-    generation (at web scale these are boilerplate/template mega-clusters;
-    skipping them is standard practice — they are better handled by exact
-    dedup on a normalized form). The pair report loses only pairs whose
-    EVERY agreeing band landed in a mega-bucket. None (default, and all
-    oracled queries) disables the cap.
-    """
-    banded = _band_keys(sig, id_col, bands, rows_per_band, out_id=id_col)
-    if max_bucket_occupancy is not None:
-        from pyspark.sql.window import Window
-
-        occ = F.count(F.lit(1)).over(Window.partitionBy("band", "bh"))
-        banded = (
-            banded.withColumn("__occ", occ)
-            .filter(F.col("__occ") <= max_bucket_occupancy)
-            .drop("__occ")
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    return pairs
-
-
-def lsh_bucket_occupancy(
-    sig: DataFrame,
-    id_col: str,
-    bands: int = 8,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Band-bucket occupancy report for the LSH candidate join — the
-    scale-health metric behind the banded join's cost model: the equi-join
-    emits sum_b c_b·(c_b−1)/2 candidate pairs per bucket, so if
-    max/implied-pair occupancy grows super-linearly with the corpus the
-    "near-linear" claim is failing (VERDICT r3 item 6: watch whether the
-    sf1 slope is shuffle constants or creeping bucket occupancy).
-
-    One aggregation over the shared `_band_keys` construction (identical
-    keys to the production join). Returns one row per band:
-    (band, n_buckets, max_occupancy, implied_pairs) — implied_pairs is the
-    exact number of within-bucket candidate pairs the join for that band
-    will enumerate before the distinct/verify stages.
-    """
-    banded = _band_keys(sig, id_col, bands, rows_per_band, out_id=id_col)
-    per_bucket = banded.groupBy("band", "bh").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    return (
-        per_bucket.groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("c").alias("max_occupancy"),
-            F.sum(
-                (F.col("c") * (F.col("c") - 1)) / F.lit(2)
-            ).cast("bigint").alias("implied_pairs"),
-        )
-        .orderBy("band")
-    )
-
-
-def minhash_dedup(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 5,
-    threshold: float = 0.8,
-    max_bucket_occupancy: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs with estimated Jaccard ≥ threshold.
-
-    Estimated Jaccard = fraction of agreeing MinHash components (the standard
-    unbiased estimator), computed with `zip_with` on the two signatures —
-    no re-shingling of the texts in the verify step.
-    `max_bucket_occupancy` passes through to the candidate stage: the
-    mega-bucket guardrail for corpora whose duplicate-cluster sizes grow
-    with the corpus (see minhash_lsh_candidates).
-    """
-    rows = num_hashes // bands
-    # The signature table feeds three consumers (banding + both sides of the
-    # verify join). Persist it: signatures are num_hashes×8 bytes per doc —
-    # at 100 TB corpus scale that's GBs, not TBs — and without the persist
-    # the shingle-explode + 32-way min agg (the expensive pass over the full
-    # corpus) runs three times.
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n).persist()
-    cand = minhash_lsh_candidates(
-        sig, id_col, bands, rows, max_bucket_occupancy=max_bucket_occupancy
-    )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    scored = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-            / F.lit(num_hashes),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-    # Expose the persisted signature table so callers that consume the
-    # pairs lazily (curation_pipeline's cached chain) can release it with
-    # their other intermediates — capture it BEFORE any further
-    # transformation (a .select returns a fresh object without the attr).
-    scored._crz_cached = sig
-    return scored
-
-
-@F.pandas_udf(T.LongType())
-def _simhash64(tokens: pd.Series) -> pd.Series:
-    """64-bit SimHash of a token array — Arrow-batched, numpy inner loop.
-
-    Per-row map (no shuffle); the bit-count aggregation across tokens is the
-    one part of SimHash that built-in columnar functions can't express without
-    a 64-way explode, so it goes to numpy (SURVEY.md §2.9 pattern (b)).
-    """
-    import numpy as np
-
-    def one(toks) -> int:
-        if toks is None or len(toks) == 0:
-            return 0
-        # FNV-1a 64-bit per token, vectorized over the token list.
-        hs = np.zeros(len(toks), dtype=np.uint64)
-        for j, t in enumerate(toks):
-            h = np.uint64(0xCBF29CE484222325)
-            for ch in t.encode("utf-8"):
-                h = np.uint64((int(h) ^ ch) * 0x100000001B3 & 0xFFFFFFFFFFFFFFFF)
-            hs[j] = h
-        bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(
-            np.int64
-        )
-        v = np.where(bits.sum(axis=0) * 2 >= len(toks), np.uint64(1), np.uint64(0))
-        out = np.uint64(0)
-        for b in range(64):
-            out |= np.uint64(int(v[b]) << b)
-        return int(out.astype(np.int64))
-
-    return tokens.apply(one)
-
-
-def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash: bigint) per document."""
-    return docs.select(
-        F.col(id_col), _simhash64(tokens_nonempty(text_col)).alias("simhash")
-    )
-
-
-def simhash_near_pairs(
-    docs: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs whose SimHashes differ in ≤ max_hamming bits.
-
-    Candidate generation blocks on 16-bit quarters of the hash (pigeonhole:
-    any pair within Hamming ≤ 3 agrees on at least one of 4 quarters), so the
-    join is equi on (quarter_id, quarter_value) — no O(n²) scan.
-    """
-    # Both sides of the quarter join descend from this DF; persist so the
-    # pandas-UDF SimHash (the expensive full-corpus pass) runs once, not
-    # twice. 16 bytes per doc — negligible cache footprint at any scale.
-    sh = simhash(docs, id_col, text_col).persist()
-    # shiftright needs a literal bit count — build the 4 quarters explicitly.
-    quarters = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("q"),
-                F.shiftright(F.col("simhash"), q * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("qv"),
-            )
-            for q in range(4)
-        ]
-    )
-    quartered = sh.select(
-        id_col, "simhash", F.explode(quarters).alias("qq")
-    ).select(id_col, "simhash", "qq.q", "qq.qv")
-    a, b = quartered.alias("a"), quartered.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.qv") == F.col("b.qv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs
-
-
-SIMHASH_MD5_BITS = 60  # fits the signed-bigint-safe 15-hex-char md5 hash
-
-
-def simhash_md5(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash) on the engine-portable md5 token hash — every step a
-    built-in JVM expression (no UDF), so the hash is reproducible in any
-    engine: per token take the 60-bit md5 prefix, per bit position count
-    +1/-1 over tokens, set the bit where the count is ≥ 0.
-
-    Distributed form: explode (token → 60 bit rows) then two hash
-    aggregations — both partial/final map-side combinable, so the 60×
-    intermediate never leaves the executor unaggregated. `simhash`
-    (FNV/numpy) stays the production path; this is the correctness witness.
-    Docs with zero tokens produce no row (the oracle's unnest does the
-    same)."""
-    toks = docs.select(
-        F.col(id_col), F.explode(tokens_nonempty(text_col)).alias("t")
-    )
-    hashed = toks.select(id_col, _md5_hash64(F.col("t")).alias("h"))
-    bits = hashed.select(
-        id_col,
-        "h",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(SIMHASH_MD5_BITS - 1))
-        ).alias("b"),
-    )
-    counts = bits.groupBy(id_col, "b").agg(
-        F.sum(
-            F.when(F.expr("(shiftright(h, b) & 1) = 1"), 1).otherwise(-1)
-        ).alias("c")
-    )
-    return counts.groupBy(id_col).agg(
-        F.expr(
-            "sum(CASE WHEN c >= 0 THEN shiftleft(1L, b) ELSE 0L END)"
-        ).alias("simhash")
-    )
-
-
-def simhash_near_pairs_md5(
-    docs: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """`simhash_near_pairs` on the portable hash: 15-bit block keys
-    (pigeonhole over 4 blocks of the 60-bit hash covers Hamming ≤ 3),
-    equi-join on (block, value), exact Hamming verify via bit_count(xor).
-    Fully oracle-able — DuckDB reproduces every intermediate."""
-    sh = simhash_md5(docs, id_col, text_col).persist()
-    blocks = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("q"),
-                F.shiftright(F.col("simhash"), q * 15)
-                .bitwiseAND(F.lit(0x7FFF))
-                .alias("qv"),
-            )
-            for q in range(4)
-        ]
-    )
-    blocked = sh.select(
-        id_col, "simhash", F.explode(blocks).alias("qq")
-    ).select(id_col, "simhash", "qq.q", "qq.qv")
-    a, b = blocked.alias("a"), blocked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.qv") == F.col("b.qv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
+MINHASH_FAMILIES = ("xxhash64", "md5")
 MINHASH_PRIME = (1 << 31) - 1  # Mersenne prime for the Carter-Wegman family
 
 
@@ -563,149 +186,343 @@ def _minhash_coeffs(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return out
 
 
-def _md5_hash64(col: Column) -> Column:
-    """Engine-portable 60-bit hash: first 15 hex chars of md5 as a bigint.
-    Exists so the MinHash pipeline can be verified bit-for-bit against a
-    DuckDB oracle (`('0x' || substr(md5(x),1,15))::BIGINT` produces the
-    identical value); xxhash64 stays the production hash (faster, no hex
-    round-trip) in `minhash_signatures`."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+def _check_family(family: str) -> None:
+    if family not in MINHASH_FAMILIES:
+        # A typo must not silently pick the other family's hashes.
+        raise ValueError(
+            f"MinHash family must be one of {MINHASH_FAMILIES}, got {family!r}"
+        )
 
 
-def minhash_banded_md5(
+def minhash_signatures(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
+    num_hashes: int = 32,
     shingle_n: int = 5,
-    persist_sig: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """(signatures, band-keys) for the portable-md5 MinHash-LSH pipeline —
-    the shared front half of `minhash_pairs_md5`, exposed so diagnostics
-    (the band-occupancy report) ride the IDENTICAL construction the
-    candidate join uses. Returns (sig, banded): `sig` holds num_hashes
-    flat columns h0..hN (persisted by default — it feeds both verify-join
-    sides of the pairs query; pass persist_sig=False when only `banded`
-    is consumed, e.g. the occupancy report, so the full signature table
-    isn't cached for nothing), `banded` is (id, band, bh)."""
-    rows = num_hashes // bands
+    family: str = "xxhash64",
+) -> DataFrame:
+    """(id, sig: array<bigint>[num_hashes]) MinHash signature per document.
+
+    Map-only: `array_min` over the row's own shingle array per seed (a
+    per-doc min never needs a shuffle). Hash families:
+    - "xxhash64" (production): seed i hashes a shingle as `xxhash64(s, i)`;
+    - "md5" (engine-portable): ONE md5 per shingle gives a 32-bit base x,
+      and seed i is the Carter-Wegman hash (a_i*x + c_i) mod p with fixed
+      coefficients. The multiply wraps the modulus many times (an additive
+      family's components would correlate and inflate the Jaccard
+      estimate), every step is exact in signed-64 on any engine, and the
+      corpus pass runs one digest per shingle instead of num_hashes.
+    """
+    _check_family(family)
     shingled = docs.select(
         F.col(id_col), char_shingles(text_col, shingle_n).alias("__shs")
     )
-    # Carter-Wegman universal family: ONE md5 per shingle yields a 32-bit
-    # base x (hex chars 1-8); seed i's hash is (a_i*x + c_i) mod p with
-    # p = 2^31-1 and fixed per-seed coefficients. The multiply wraps the
-    # modulus many times (unlike an additive family, whose components
-    # correlate and inflate the Jaccard estimate), every step is exact in
-    # signed-64 on both engines, and the corpus pass runs one digest per
-    # shingle instead of num_hashes (measured 14.3 s → ~2 s at sf0.1).
-    based = shingled.select(
-        F.col(id_col),
-        F.transform(
-            F.col("__shs"),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("__xs"),
-    )
-    coeffs = _minhash_coeffs(num_hashes)
+    if family == "xxhash64":
+        mins = [
+            f"array_min(transform(__shs, s -> xxhash64(s, {i})))"
+            for i in range(num_hashes)
+        ]
+    else:
+        shingled = shingled.selectExpr(
+            f"`{id_col}`", f"transform(__shs, s -> {_md5_bigint_sql('s', 8)}) AS __xs"
+        )
+        mins = [
+            f"array_min(transform(__xs, x -> ({a} * x + {c}) % {MINHASH_PRIME}))"
+            for a, c in _minhash_coeffs(num_hashes)
+        ]
+    return shingled.selectExpr(f"`{id_col}`", f"array({', '.join(mins)}) AS sig")
 
-    def _seed_min(a: int, c: int) -> F.Column:
-        # Map-only per-doc min over the base-hash array (no explode, no
-        # groupBy — see minhash_signatures). One-parameter lambda required.
-        return F.array_min(
-            F.transform(
-                F.col("__xs"),
-                lambda x: (F.lit(a) * x + F.lit(c)) % F.lit(MINHASH_PRIME),
+
+def minhash_bands(
+    sig: DataFrame,
+    id_col: str,
+    bands: int,
+    rows_per_band: int,
+    family: str = "xxhash64",
+) -> DataFrame:
+    """(id, sig, band, bh) band-bucket keys for a signature table — the ONE
+    band-key construction every LSH consumer (pairs, occupancy report,
+    incremental store, fuzzy-name blocking) shares, so bucket parity across
+    consumers is structural. Band b hashes signature slice
+    [b*rows, (b+1)*rows): `xxhash64(slice, b)` for "xxhash64", the 60-bit
+    md5 of the comma-joined values for "md5"."""
+    _check_family(family)
+    sl = f"slice(sig, b * {rows_per_band} + 1, {rows_per_band})"
+    if family == "xxhash64":
+        bh = f"xxhash64({sl}, b)"
+    else:
+        bh = _md5_bigint_sql(f"concat_ws(',', CAST({sl} AS ARRAY<STRING>))", 15)
+    keys = (
+        f"inline(transform(sequence(0, {bands - 1}),"
+        f" b -> named_struct('band', b, 'bh', {bh})))"
+    )
+    return sig.selectExpr(f"`{id_col}`", "sig", keys)
+
+
+def _minhash_score_sql(family: str, a: str, b: str) -> str:
+    """Estimated Jaccard = fraction of agreeing signature components (the
+    standard unbiased estimator). The md5 tier rounds to 6 dp so the score
+    hash-matches its SQL oracle."""
+    frac = (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x = y AS INT)), 0,"
+        f" (acc, v) -> acc + v) / size({a})"
+    )
+    return frac if family == "xxhash64" else f"round({frac}, 6)"
+
+
+def _lsh_pairs(
+    keyed: DataFrame,
+    id_col: str,
+    payload: str,
+    score_sql: str,
+    max_bucket_occupancy: int | None = None,
+) -> DataFrame:
+    """Distinct (id_a, id_b, score) for every pair of rows sharing a
+    (band, bh) bucket, id_a < id_b.
+
+    `keyed` holds (id, band, bh, payload). One aggregation collects each
+    bucket's (id, payload) members into a sorted list; the pairs m[i], m[j]
+    (i < j) are emitted inside the bucket, each carrying both payloads, and
+    `score_sql` scores them from `a.p` and `b.p`. Rows with a NULL id are
+    dropped first, and rows sharing an id never pair. The pairs are
+    generated one member at a time (posexplode, then the members after it),
+    so a bucket's pairs stream instead of materializing as one array.
+
+    Cost model. Pairs never cross buckets, so the corpus never enumerates
+    O(n²) pairs, but a bucket of c members emits c·(c−1)/2 of them, and
+    bucket occupancy grows with the size of true duplicate clusters:
+    measured on the synthetic corpus, 10× docs ⇒ ~10× max occupancy ⇒ ~96×
+    implied pairs (`lsh_bucket_occupancy` is the audit).
+
+    Memory limit. A bucket is ONE row, built and held by one task:
+    c × (id + payload), about 264 B per member for a 32-hash signature
+    (16 B for SimHash). The collect buffers are JVM objects the memory
+    manager does not track, and the aggregation cannot spill part of a
+    bucket, so an uncapped bucket must fit in one task's heap. Measured on
+    sf0.1 replicated 10× (exact copies, max occupancy 4,380), the uncapped
+    query ran out of a 2 GB local heap where a band self-join on narrow id
+    rows finishes. Uncapped is therefore for corpora whose largest
+    duplicate cluster is known to be small (every oracled query).
+
+    `max_bucket_occupancy` is the production guardrail: a window count
+    drops the members of buckets holding more than the cap BEFORE the
+    aggregation (the window's buffer spills, and it shares the
+    aggregation's (band, bh) exchange), so no bucket row exceeds cap
+    members and no bucket emits more than cap·(cap−1)/2 pairs. At web
+    scale the over-cap buckets are boilerplate/template mega-clusters,
+    better handled by exact dedup on a normalized form; the pair report
+    loses only pairs whose EVERY agreeing band landed in a mega-bucket.
+    """
+    keyed = keyed.where(f"`{id_col}` IS NOT NULL")
+    if max_bucket_occupancy is not None:
+        keyed = keyed.withColumn(
+            "__c", F.expr("count(1) OVER (PARTITION BY band, bh)")
+        ).where(f"__c <= {int(max_bucket_occupancy)}")
+    return (
+        keyed.groupBy("band", "bh")
+        .agg(
+            F.expr(
+                f"sort_array(collect_list(named_struct('id', `{id_col}`,"
+                f" 'p', `{payload}`))) AS m"
             )
         )
-
-    sig = based.select(
-        F.col(id_col),
-        *[
-            _seed_min(a, c).alias(f"h{i}")
-            for i, (a, c) in enumerate(coeffs)
-        ],
+        .where("size(m) > 1")
+        .selectExpr("m", "posexplode(m) AS (i, a)")
+        .selectExpr("a", "explode(slice(m, i + 2, size(m))) AS b")
+        .where("a.id < b.id")
+        .selectExpr("a.id AS id_a", "b.id AS id_b", score_sql)
+        .distinct()
     )
-    if persist_sig:
-        sig = sig.persist()
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _md5_hash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"h{b * rows + j}").cast("string")
-                                    for j in range(rows)
-                                ],
-                            )
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bh")
-    return sig, banded
 
 
-def minhash_pairs_md5(
+def lsh_bucket_occupancy(
+    sig: DataFrame,
+    id_col: str,
+    bands: int = 8,
+    rows_per_band: int = 4,
+    family: str = "xxhash64",
+) -> DataFrame:
+    """Band-bucket occupancy report — the scale-health metric behind the
+    LSH cost model: a bucket of c members emits c·(c−1)/2 pairs inside its
+    group, so if max occupancy or implied pairs grow super-linearly with
+    the corpus the "near-linear" claim is failing (watch whether a slope
+    is shuffle constants or creeping bucket occupancy).
+
+    Two aggregations over the shared `minhash_bands` keys (identical to the
+    pair path's). Returns one row per band:
+    (band, n_buckets, max_occupancy, implied_pairs) — implied_pairs is the
+    exact number of within-bucket pairs that band emits before the
+    distinct/threshold steps.
+    """
+    keys = minhash_bands(sig, id_col, bands, rows_per_band, family)
+    return (
+        keys.groupBy("band", "bh")
+        .agg(F.expr("count(1) AS c"))
+        .groupBy("band")
+        .agg(
+            F.expr("count(1) AS n_buckets"),
+            F.expr("max(c) AS max_occupancy"),
+            F.expr("sum(c * (c - 1) div 2) AS implied_pairs"),
+        )
+        .orderBy("band")
+    )
+
+
+def minhash_dedup(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
+    num_hashes: int = 32,
+    bands: int = 8,
     shingle_n: int = 5,
-    threshold: float = 0.5,
+    threshold: float = 0.8,
+    max_bucket_occupancy: int | None = None,
+    family: str = "xxhash64",
 ) -> DataFrame:
-    """Fully-oracled MinHash-LSH near-dup pairs: same shingle → per-seed min
-    → band-bucket join → signature-agreement verify pipeline as
-    `minhash_dedup`, built on the portable md5 hash so every intermediate
-    (signatures, band keys, candidates, scores) is reproducible in ANSI SQL.
-
-    Signatures are held as `num_hashes` flat columns (h0..hN) rather than an
-    array — same physical plan, trivially expressible oracle.
+    """Near-dup pairs (id_a, id_b, est_jaccard) with estimated Jaccard ≥
+    threshold: shingle → signature → band buckets → within-bucket pairs →
+    agreement score, on either hash family ("md5" is the fully-oracled
+    tier: signatures, band keys, candidates and scores all reproduce in
+    ANSI SQL). Each signature is cut into `bands` bands of
+    num_hashes // bands hashes; a pair is a candidate iff some band hashes
+    identically. `max_bucket_occupancy` is the mega-bucket guardrail; set
+    it on any corpus whose duplicate-cluster sizes are not known to be
+    small (see `_lsh_pairs` for the cost and memory model).
     """
-    sig, banded = minhash_banded_md5(
-        docs, id_col, text_col, num_hashes, bands, shingle_n
+    sig = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n, family)
+    return _lsh_pairs(
+        minhash_bands(sig, id_col, bands, num_hashes // bands, family),
+        id_col,
+        "sig",
+        _minhash_score_sql(family, "a.p", "b.p") + " AS est_jaccard",
+        max_bucket_occupancy,
+    ).where(f"est_jaccard >= {float(threshold)!r}D")
+
+
+def _simhash64_batch(tokens: pd.Series) -> pd.Series:
+    """64-bit FNV-1a SimHash of each token array in an Arrow batch, in numpy
+    over the whole batch (no per-character Python loop).
+
+    All tokens of the batch are UTF-8 encoded into one byte buffer and
+    sorted by length, longest first, so the tokens still hashing at byte
+    column k are a prefix of that order: FNV-1a runs column by column over
+    that prefix in wrapping uint64 arithmetic. Each bit is then voted per
+    document with one bincount over the token→doc index, and a bit is set
+    where at least half of the doc's tokens have it. NULL and empty token
+    arrays hash to 0. Memory is linear in the batch's bytes (no padded
+    token × max-length matrix).
+    """
+    import numpy as np
+
+    n_docs = len(tokens)
+    n_tok = np.fromiter(
+        (0 if t is None else len(t) for t in tokens), dtype=np.int64, count=n_docs
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    words = [w.encode("utf-8") for t in tokens if t is not None for w in t]
+    out = np.zeros(n_docs, dtype=np.uint64)
+    if words:
+        blen = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+        buf = np.frombuffer(b"".join(words), dtype=np.uint8)
+        start = np.concatenate(([0], np.cumsum(blen)[:-1]))
+        order = np.argsort(-blen, kind="stable")
+        live = np.searchsorted(-blen[order], -np.arange(blen.max()), side="left")
+        h = np.full(len(words), 0xCBF29CE484222325, dtype=np.uint64)
+        prime = np.uint64(0x100000001B3)
+        for k, n_live in enumerate(live):
+            idx = order[:n_live]
+            h[idx] = (h[idx] ^ buf[start[idx] + k]) * prime
+        doc = np.repeat(np.arange(n_docs), n_tok)
+        for bit in range(64):
+            ones = np.bincount(
+                doc, weights=(h >> np.uint64(bit)) & np.uint64(1), minlength=n_docs
+            )
+            out |= ((ones * 2 >= n_tok) & (n_tok > 0)).astype(np.uint64) << np.uint64(
+                bit
+            )
+    return pd.Series(out.view(np.int64))
+
+
+_simhash64 = F.pandas_udf(_simhash64_batch, T.LongType())
+
+
+def simhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash: bigint) per document — FNV-1a token hashes, one
+    Arrow-batched pandas UDF (a narrow per-row map, no shuffle)."""
+    return docs.select(
+        F.col(id_col), _simhash64(tokens_nonempty(text_col)).alias("simhash")
+    )
+
+
+SIMHASH_MD5_BITS = 60  # fits the signed-bigint-safe 15-hex-char md5 hash
+
+
+def simhash_md5(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash) on the engine-portable md5 token hash — every step a
+    built-in JVM expression (no UDF), so the hash is reproducible in any
+    engine: per token take the 60-bit md5 prefix, per bit position count
+    +1/-1 over tokens, set the bit where the count is ≥ 0.
+
+    Distributed form: explode (token → 60 bit rows) then two hash
+    aggregations — both partial/final map-side combinable, so the 60×
+    intermediate never leaves the executor unaggregated. `simhash`
+    (FNV/numpy) stays the production path; this is the correctness witness.
+    Docs with zero tokens produce no row (the oracle's unnest does the
+    same)."""
+    bits = (
+        docs.select(F.col(id_col), F.explode(tokens_nonempty(text_col)).alias("t"))
+        .selectExpr(f"`{id_col}`", f"{_md5_bigint_sql('t', 15)} AS h")
+        .selectExpr(
+            f"`{id_col}`", "h", f"explode(sequence(0, {SIMHASH_MD5_BITS - 1})) AS b"
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
     )
-    sa = sig.select(F.col(id_col).alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)])
-    sb = sig.select(F.col(id_col).alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)])
-    agree = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(num_hashes)
+    counts = bits.groupBy(id_col, "b").agg(
+        F.expr("sum(CASE WHEN (shiftright(h, b) & 1) = 1 THEN 1 ELSE -1 END) AS c")
     )
-    out = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard"),
+    return counts.groupBy(id_col).agg(
+        F.expr("sum(CASE WHEN c >= 0 THEN shiftleft(1L, b) ELSE 0L END) AS simhash")
+    )
+
+
+# SimHash families: (signature builder, block width in bits). Candidate
+# generation blocks on 4 blocks of the hash (pigeonhole: any pair within
+# Hamming ≤ 3 agrees on at least one of the 4), 16-bit quarters of the
+# 64-bit FNV hash or 15-bit blocks of the 60-bit md5 hash.
+SIMHASH_FAMILIES = {"fnv": (simhash, 16), "md5": (simhash_md5, 15)}
+
+
+def simhash_blocks(sh: DataFrame, id_col: str, block_bits: int) -> DataFrame:
+    """(id, simhash, band, bh): the 4 pigeonhole block keys of each simhash —
+    shared by the pair path and the incremental store."""
+    mask = (1 << block_bits) - 1
+    blocks = ", ".join(
+        f"named_struct('band', {q},"
+        f" 'bh', shiftright(simhash, {q * block_bits}) & {mask})"
+        for q in range(4)
+    )
+    return sh.selectExpr(f"`{id_col}`", "simhash", f"inline(array({blocks}))")
+
+
+def simhash_near_pairs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    max_hamming: int = 3,
+    family: str = "fnv",
+) -> DataFrame:
+    """Near-dup pairs (id_a, id_b, hamming) whose SimHashes differ in ≤
+    max_hamming bits: pigeonhole block keys → within-bucket pairs → exact
+    Hamming via bit_count(xor). "fnv" is the production hash; "md5" is the
+    fully-oracled tier (DuckDB reproduces every intermediate)."""
+    if family not in SIMHASH_FAMILIES:
+        raise ValueError(
+            f"SimHash family must be one of {tuple(SIMHASH_FAMILIES)}, got {family!r}"
         )
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    # Same contract as minhash_dedup: expose the persisted signature table
-    # so chained consumers (curation_pipeline's cached-frame ledger) can
-    # release it with their other intermediates.
-    out._crz_cached = sig
-    return out
+    build, block_bits = SIMHASH_FAMILIES[family]
+    keyed = simhash_blocks(build(docs, id_col, text_col), id_col, block_bits)
+    return _lsh_pairs(
+        keyed, id_col, "simhash", "bit_count(a.p ^ b.p) AS hamming"
+    ).where(f"hamming <= {int(max_hamming)}")
 
 
 def _parse_byte_size(s: str, default_unit: int = 1) -> int:
@@ -1239,13 +1056,13 @@ def minhash_incremental(
     bands: int = 8,
     shingle_n: int = 5,
     threshold: float = 0.8,
-    signature_fn=None,
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Incremental near-dup maintenance — the daily-ingest form of
     `minhash_dedup`: signatures are computed for the NEW batch only
     (map-only scan over the increment), appended to the persisted
     signature store, and the batch is compared against store ∪ batch via
-    the same banded-LSH candidate join. The corpus-wide shingling pass
+    the same band keys (`minhash_bands`). The corpus-wide shingling pass
     never re-runs: daily cost is O(increment); the store carries
     `num_hashes × 8` bytes/doc (GBs at 100 TB corpus scale — the
     incremental_daily_rollup discipline applied to dedup).
@@ -1273,27 +1090,24 @@ def minhash_incremental(
     `id_other` any earlier-stored or same-batch lower-id document. Assumes
     ingest ids are monotonically increasing across batches (daily ingest's
     natural property) — the `other < new` direction filter relies on it.
+    `family` picks the hash family ("md5" lets a SQL oracle reproduce the
+    store and the pair report exactly).
     """
     rows = num_hashes // bands
-
-    # signature_fn picks the hash family: xxhash64 (default, production)
-    # or minhash_signatures_md5 (engine-portable — lets a SQL oracle
-    # reproduce the store and the pair report exactly).
-    if signature_fn is None:
-        signature_fn = minhash_signatures
     # One store = one hash family, forever: a store built with xxhash64
     # signatures later fed md5 signatures would pass the id anti-join
     # silently and report meaningless est_jaccard values from
     # cross-family signature comparisons. The first batch records the
-    # family in a `_family` marker; every later batch must match.
+    # family in a `_family` marker; every later batch must match. (The
+    # marker names are the signature builders' names before the family
+    # became a parameter, so existing stores keep opening.)
+    _check_family(family)
+    marker = "minhash_signatures" + ("_md5" if family == "md5" else "")
     _store_family_check(
-        spark,
-        store_path,
-        f"{getattr(signature_fn, '__name__', repr(signature_fn))}"
-        f":h{num_hashes}:n{shingle_n}",
+        spark, store_path, f"{marker}:h{num_hashes}:n{shingle_n}"
     )
-    sig_new = signature_fn(
-        new_docs, id_col, text_col, num_hashes, shingle_n
+    sig_new = minhash_signatures(
+        new_docs, id_col, text_col, num_hashes, shingle_n, family
     )
     old_files = _store_list(spark, store_path)
     if old_files:
@@ -1310,37 +1124,24 @@ def minhash_incremental(
     sig_batch = sig_all.join(
         new_docs.select(id_col).distinct(), id_col, "left_semi"
     )
-
-    cand = (
-        _band_keys(sig_batch, id_col, bands, rows, out_id="id_new")
-        .join(
-            _band_keys(sig_all, id_col, bands, rows, out_id="id_other"),
-            ["band", "bh"],
-        )
-        .filter(F.col("id_other") < F.col("id_new"))
-        .select("id_new", "id_other")
-        .distinct()
+    # Each side carries its signature through the bucket join, so the
+    # score needs no join back to the store.
+    new = minhash_bands(sig_batch, id_col, bands, rows, family).selectExpr(
+        f"`{id_col}` AS id_new", "band", "bh", "sig AS sig_new"
     )
-    sa = sig_batch.select(
-        F.col(id_col).alias("id_new"), F.col("sig").alias("sig_a")
-    )
-    sb = sig_all.select(
-        F.col(id_col).alias("id_other"), F.col("sig").alias("sig_b")
+    other = minhash_bands(sig_all, id_col, bands, rows, family).selectExpr(
+        f"`{id_col}` AS id_other", "band", "bh", "sig AS sig_other"
     )
     return (
-        cand.join(sa, "id_new")
-        .join(sb, "id_other")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            )
-            / F.lit(num_hashes),
+        new.join(other, ["band", "bh"])
+        .where("id_other < id_new")
+        .selectExpr(
+            "id_new",
+            "id_other",
+            _minhash_score_sql(family, "sig_new", "sig_other") + " AS est_jaccard",
         )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_new", "id_other", "est_jaccard")
+        .distinct()
+        .where(f"est_jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -1384,7 +1185,7 @@ def _store_family_check(spark, store_path: str, family: str) -> None:
                 f"signature store at {store_path} was built with family "
                 f"{existing!r}; this batch supplies {family!r}. Mixing "
                 f"families makes est_jaccard meaningless — use a new "
-                f"store path or the original signature_fn/params."
+                f"store path or the original family/params."
             )
     else:
         out = fs.create(marker, True)
@@ -1461,39 +1262,19 @@ def simhash_incremental(
     sh_batch = sh_all.join(
         new_docs.select(id_col).distinct(), id_col, "left_semi"
     )
-
-    def _blocked(df: DataFrame, out_id: str) -> DataFrame:
-        blocks = F.array(
-            *[
-                F.struct(
-                    F.lit(q).alias("q"),
-                    F.shiftright(F.col("simhash"), q * 15)
-                    .bitwiseAND(F.lit(0x7FFF))
-                    .alias("qv"),
-                )
-                for q in range(4)
-            ]
-        )
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col("simhash").alias(f"sh_{out_id}"),
-            F.explode(blocks).alias("qq"),
-        ).select(out_id, f"sh_{out_id}", "qq.q", "qq.qv")
-
-    a = _blocked(sh_batch, "id_new")
-    b = _blocked(sh_all, "id_other")
+    block_bits = SIMHASH_FAMILIES["md5"][1]
+    new = simhash_blocks(sh_batch, id_col, block_bits).selectExpr(
+        f"`{id_col}` AS id_new", "simhash AS sh_new", "band", "bh"
+    )
+    other = simhash_blocks(sh_all, id_col, block_bits).selectExpr(
+        f"`{id_col}` AS id_other", "simhash AS sh_other", "band", "bh"
+    )
     return (
-        a.join(b, ["q", "qv"])
-        .filter(F.col("id_other") < F.col("id_new"))
-        .select(
-            "id_new",
-            "id_other",
-            F.bit_count(
-                F.col("sh_id_new").bitwiseXOR(F.col("sh_id_other"))
-            ).alias("hamming"),
-        )
+        new.join(other, ["band", "bh"])
+        .where("id_other < id_new")
+        .selectExpr("id_new", "id_other", "bit_count(sh_new ^ sh_other) AS hamming")
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .where(f"hamming <= {int(max_hamming)}")
     )
 
 

@@ -232,7 +232,7 @@ def curation_pipeline(
     `hash_tier` selects the hash family for the two hash-dependent stages:
     "production" (default) is xxhash64 end to end; "portable_md5" swaps in
     the engine-portable md5 tier (md5 content digest for exact dedup, the
-    `minhash_pairs_md5` LSH pipeline for near-dup) so the WHOLE chain has
+    md5 MinHash-LSH family for near-dup) so the WHOLE chain has
     an ANSI-SQL analog — the tier the fully-oracled
     `curation_pipeline_audit_md5` registry twin runs. Same structure,
     same stage wiring; only the hash family changes.
@@ -243,7 +243,6 @@ def curation_pipeline(
         connected_components,
         first_wins_dedup_agg,
         minhash_dedup,
-        minhash_pairs_md5,
     )
     from crz_scraper_spark.operators.textquality import (
         lang_guess_expr,
@@ -284,18 +283,17 @@ def curation_pipeline(
     # Stage 2 — near-dup: LSH pairs -> connected components -> keep the
     # cluster representative (minimum reachable id). No broadcast hint:
     # non_reps scales with the corpus; AQE picks the join strategy.
-    if portable:
-        scored_pairs = minhash_pairs_md5(
-            exact, id_col, text_col, threshold=near_dup_threshold
-        )
-    else:
-        scored_pairs = minhash_dedup(
-            exact, id_col, text_col, threshold=near_dup_threshold
-        )
-    # The signature persist inside the pairs stage must be releasable with
-    # the rest of the chain; capture its handle before the select drops it.
-    sig_cache = getattr(scored_pairs, "_crz_cached", None)
-    pairs = scored_pairs.select(F.col("id_a"), F.col("id_b"))
+    # The portable tier is the md5 family at its oracled shape (16 hashes
+    # in 4 bands); production is xxhash64 with 32 hashes in 8 bands.
+    pairs = minhash_dedup(
+        exact,
+        id_col,
+        text_col,
+        num_hashes=16 if portable else 32,
+        bands=4 if portable else 8,
+        threshold=near_dup_threshold,
+        family="md5" if portable else "xxhash64",
+    ).select("id_a", "id_b")
     clusters = connected_components(pairs)
     non_reps = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias(id_col)
@@ -377,8 +375,7 @@ def curation_pipeline(
         "dropped": dropped,
         "near_dup_clusters": clusters,
         "audit": audit,
-        "cached": ([exact, deduped] if persist else [])
-        + ([sig_cache] if sig_cache is not None else []),
+        "cached": [exact, deduped] if persist else [],
     }
 
 

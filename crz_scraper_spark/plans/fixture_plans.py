@@ -310,10 +310,7 @@ _MHI_THRESHOLD = 0.5
 
 
 def minhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crz_scraper_spark.operators.dedup import (
-        minhash_incremental,
-        minhash_signatures_md5,
-    )
+    from crz_scraper_spark.operators.dedup import minhash_incremental
 
     store = _fixture_dir("mhinc", sf_dir)
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -322,7 +319,7 @@ def minhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_MHI_BANDS,
         shingle_n=_MHI_SHINGLE,
         threshold=_MHI_THRESHOLD,
-        signature_fn=minhash_signatures_md5,
+        family="md5",
     )
     if store not in _BUILT:
         _sh.rmtree(store, ignore_errors=True)
@@ -662,7 +659,7 @@ def curation_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # curation_pipeline_audit_md5 — the SAME end-to-end curation chain on the
 # engine-portable md5 tier (md5 content digest for exact dedup, the
-# minhash_pairs_md5 LSH family for near-dup), so the ENTIRE nightly chain —
+# md5 MinHash-LSH family for near-dup), so the ENTIRE nightly chain —
 # exact dedup → LSH pairs → connected components → quality floor → split —
 # has one composed ANSI-SQL oracle: the md5-pairs CTEs chain into the
 # recursive-CTE closure and the doc_quality score formula, and the five-row

@@ -39,24 +39,24 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # every query whose CODE or ORACLE changed this round (first check of
 # the new shape) + the remaining slots refresh the STALEST coverage —
 # queries whose last driver check is oldest, oldest-first in registry
-# order. Round 11 changes (both optimization rewrites, oracles
-# unchanged): boilerplate_ngram_filter (per-doc counts computed per-row
-# against the collected blacklist array instead of explode + join +
-# re-aggregation — it already sits in the r7 staleness tier below) and
-# ngram_jaccard_consecutive (NULL doc_ids now dropped before role
-# tagging, matching the old self-join's implicit null-key drop).
-# The remaining slots take the WHOLE r7-checked tier (41 oracled
-# queries, per the r10 window's own plan) plus the 3 oldest r8-checked
-# oracled queries in registry order; dictionary_oov_morph among them
-# also carries this round's probe-uniqueness guard and the shared
-# morph-vocab helper, so its slot doubles as the changed-code check.
+# order. Changed code in this rotation: the four LSH near-dup pipelines
+# became one bucket-grouped core (no signature persist, no band
+# self-join, no verify joins), and the MinHash signature / band-key
+# builders and the SimHash block keys are shared by every LSH consumer.
+# Every oracled query on that path takes a changed-code slot
+# (minhash_near_dup_md5 is already pinned): simhash_near_dup_md5,
+# lsh_band_occupancy_md5,
+# fuzzy_name_pairs_banded, near_dup_clusters, near_dup_keep_best,
+# curation_pipeline_audit_md5, minhash_incremental_md5 and
+# simhash_incremental_md5. The remaining 37 slots take the r8-checked
+# tier (the stalest oracled one) in registry order; its last member,
+# returned_revenue_by_customer, rolls to the next rotation.
 # The window stays all-oracled by policy (tests/test_integrity.py:
 # every window slot must hash-match, the strongest driver signal) —
-# the 10 rows-only entries are deliberately never window-rotated: each
+# the rows-only entries are deliberately never window-rotated: each
 # declares its oracled twin in ROWS_ONLY_TWINS below (machine-checked
 # total), and their rows-only counts are covered by the judge's
-# full-registry replay plus invariant tests every round. After this
-# rotation no oracled query's last driver check is older than r8.
+# full-registry replay plus invariant tests every round.
 _FIRST_WINDOW = [
     # -- pinned flagships (continuously driver-verified) ------------------
     "pricing_summary",          # flagship: decimal aggs, O1 multi-key sort
@@ -64,56 +64,54 @@ _FIRST_WINDOW = [
     "xml_ingest_flatten",       # S1/S2 XML dump scan + corrupt routing
     "minhash_near_dup_md5",     # dedup: MinHash-LSH (portable hash)
     "streaming_interval_join",  # §2.8 stream-stream interval join
-    # -- changed this round: first check of the new shape ------------------
-    "ngram_jaccard_consecutive",    # NULL-key drop before role tagging
-    # -- staleness refresh: last checked r7 (all 41 oracled, registry order;
-    #    boilerplate_ngram_filter is also this round's rewritten query)
-    "top_orders_per_customer",
-    "customers_without_orders",
-    "order_lineitem_rollup",
-    "priority_status_pivot",
-    "dedup_orders_first_wins",
-    "nationkey_set_ops",
-    "date_sequence",
-    "order_parts_array",
-    "top_status_per_priority",
-    "string_column_profile",
-    "corpus_drift_topk",
-    "perplexity_filter",
-    "doc_chunking",
-    "boilerplate_ngram_filter",
-    "ngram_lm_counts",
-    "pii_redact",
-    "per_class_sample",
-    "repetition_stats",
-    "stratified_sample",
-    "eval_contamination",
-    "token_heavy_hitters",
-    "bpe_fixed_merges_stats",
-    "word_frequency",
-    "tf_idf_top_terms",
-    "train_test_split",
-    "sequence_packing",
-    "keyword_tagging",
-    "keyword_hits_unpivot",
-    "subject_extract_600",
-    "contains_theta_join",
-    "doc_quality",
-    "event_transition_matrix",
-    "tumbling_hourly",
-    "scd2_intervals",
-    "funnel_conversion",
-    "weekly_retention",
-    "semantic_dedup_trained_fixed",
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "multimodal_frame_index",
-    "multimodal_resize_audit",
-    # -- staleness refresh: last checked r8 (first 3 oracled, registry order;
-    #    dictionary_oov_morph also carries the r11 probe guard + helper)
-    "dup_span_detect",
-    "line_dedup_reconstruct",
-    "dictionary_oov_morph",
+    # -- changed code: first check of the LSH core's new shape ------------
+    "simhash_near_dup_md5",
+    "lsh_band_occupancy_md5",
+    "fuzzy_name_pairs_banded",
+    "near_dup_clusters",
+    "near_dup_keep_best",
+    "curation_pipeline_audit_md5",
+    "minhash_incremental_md5",
+    "simhash_incremental_md5",
+    # -- staleness refresh: last checked r8 (37 of 38 oracled, registry
+    #    order)
+    "gopher_rules_filter",
+    "epoch_shuffle",
+    "bm25_search",
+    "token_count_stats",
+    "doc_fingerprint",
+    "lang_id",
+    "exact_dedup_groups",
+    "rolling_active_users",
+    "user_running_totals",
+    "hard_negative_mining",
+    "fuzzy_name_pairs",
+    "pdf_text_extract",
+    "pdf_table_detect",
+    "embedding_quantization_recall",
+    "multimodal_decode",
+    "multimodal_frame_features",
+    "keyword_rollup",
+    "orders_snapshot_diff",
+    "ivf_incremental_assign",
+    "pipe_csv_roundtrip",
+    "dir_tree_corpus_scan",
+    "wordlist_sink_roundtrip",
+    "suggested_keywords_score",
+    "natural_sort_rank",
+    "table_checksum",
+    "incremental_daily_rollup",
+    "partition_minmax_index",
+    "zorder_layout_key",
+    "daily_gap_fill",
+    "locf_fill",
+    "event_value_distribution",
+    "tagged_metadata_rank",
+    "jsonl_ingest_roundtrip",
+    "attachments_explode_sum",
+    "path_derived_metadata_join",
+    "tables_per_contract",
+    "embedding_cosine_near_dup",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}

@@ -20,11 +20,12 @@ from crz_scraper_spark.catalog import fan_out, load_table, pin
 from crz_scraper_spark.functions.text import WORD_SEPARATOR_RE, tokens_nonempty
 from crz_scraper_spark.operators.dedup import (
     fixed_centroids,
+    lsh_bucket_occupancy,
+    minhash_bands,
     minhash_dedup,
-    minhash_pairs_md5,
+    minhash_signatures,
     semantic_dedup,
     simhash_near_pairs,
-    simhash_near_pairs_md5,
 )
 from crz_scraper_spark.operators.extraction import (
     detect_tables,
@@ -638,7 +639,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# simhash_near_dup_md5 — the SAME block→equi-join→hamming-verify pipeline on
+# simhash_near_dup_md5 — the SAME block→bucket→hamming-verify pipeline on
 # the engine-portable md5 token hash, every step a built-in expression:
 # signatures, block keys, candidate pairs, and Hamming distances all
 # hash-match the DuckDB oracle. xxhash64/FNV (`simhash_near_dup`) stays the
@@ -650,8 +651,8 @@ _SH_MAX_HAMMING = 3
 
 def simhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return simhash_near_pairs_md5(
-        docs, "doc_id", "text", max_hamming=_SH_MAX_HAMMING
+    return simhash_near_pairs(
+        docs, "doc_id", "text", max_hamming=_SH_MAX_HAMMING, family="md5"
     )
 
 
@@ -689,7 +690,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {_SH_MAX_HAMMING}
 
 
 # ---------------------------------------------------------------------------
-# minhash_near_dup_md5 — the SAME shingle→minhash→band→bucket-join pipeline
+# minhash_near_dup_md5 — the SAME shingle→minhash→band→bucket-pairs pipeline
 # on the engine-portable md5 hash, so the ENTIRE LSH path (signatures, band
 # keys, candidate set, agreement scores) hash-matches a DuckDB oracle
 # generated from the same constants. xxhash64 (`minhash_near_dup`) stays the
@@ -705,7 +706,7 @@ _MH_THRESHOLD = 0.5
 
 def minhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return minhash_pairs_md5(
+    return minhash_dedup(
         docs,
         "doc_id",
         "text",
@@ -713,13 +714,14 @@ def minhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_MH_BANDS,
         shingle_n=_MH_SHINGLE,
         threshold=_MH_THRESHOLD,
+        family="md5",
     )
 
 
 def _minhash_md5_sql(
     src: str = "documents", threshold: float = _MH_THRESHOLD
 ) -> str:
-    """DuckDB analog of `minhash_pairs_md5` over the table/CTE `src`.
+    """DuckDB analog of `minhash_near_dup_md5` over the table/CTE `src`.
     Callers that re-head this string (`_lsh_band_occupancy_md5_sql`,
     `_near_dup_clusters_sql`, the curation-audit oracle) split on the CTE
     markers below — keep the layout stable."""
@@ -775,32 +777,23 @@ WHERE round(({agree}) / {nh}.0, 6) >= {threshold}
 
 
 # ---------------------------------------------------------------------------
-# lsh_band_occupancy_md5 — the banded join's cost model as a FULLY-ORACLED
+# lsh_band_occupancy_md5 — the LSH pair path's cost model as a FULLY-ORACLED
 # query: per band, bucket count, max occupancy, and the implied candidate
-# pairs sum c·(c−1)/2 the bucket join will enumerate. Round-4 measured 10×
+# pairs sum c·(c−1)/2 the buckets will emit. Round-4 measured 10×
 # docs ⇒ ~96× implied pairs on this corpus (duplicate-cluster size grows
 # with the corpus) — this query makes that scale-health metric part of the
-# driver-verified surface, riding the IDENTICAL `minhash_banded_md5`
-# construction the candidate join uses (shared code, not a re-derivation).
+# oracle-checked surface, riding the IDENTICAL `minhash_bands`
+# construction the pair path uses (shared code, not a re-derivation).
 # ---------------------------------------------------------------------------
 
 
 def lsh_band_occupancy_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crz_scraper_spark.operators.dedup import minhash_banded_md5
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    # Only the band keys are consumed here — skip the signature persist
-    # the pairs query needs (it would cache the full h0..hN table for
-    # nothing and hold it until clearCache).
-    _sig, banded = minhash_banded_md5(
-        docs, "doc_id", "text", _MH_HASHES, _MH_BANDS, _MH_SHINGLE,
-        persist_sig=False,
+    sig = minhash_signatures(
+        docs, "doc_id", "text", _MH_HASHES, _MH_SHINGLE, family="md5"
     )
-    per = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("c"))
-    return per.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("c").alias("max_occupancy"),
-        F.expr("sum(c * (c - 1) div 2)").alias("implied_pairs"),
+    return lsh_bucket_occupancy(
+        sig, "doc_id", _MH_BANDS, _MH_HASHES // _MH_BANDS, family="md5"
     )
 
 
@@ -1499,7 +1492,7 @@ GROUP BY 1
 # that actually survives 100 TB: candidates come from a MinHash band-bucket
 # equi-join over character-3-gram shingles of the name (the IDENTICAL
 # portable-md5 construction minhash_near_dup_md5 uses, via
-# minhash_banded_md5), then the exact levenshtein(≤2) verify runs only on
+# minhash_bands), then the exact levenshtein(≤2) verify runs only on
 # bucket-collision pairs. Both hand-picked blocking keys above bound pair
 # work by a DATA property (brand / first-token frequency) that grows with
 # the corpus; the LSH bucket key is governed by signature diversity
@@ -1522,8 +1515,6 @@ _FNB_SHINGLE = 3
 
 
 def fuzzy_name_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from crz_scraper_spark.operators.dedup import minhash_banded_md5
-
     p = fan_out(load_table(spark, sf_dir, "part")).select(
         "p_partkey", "p_name", "p_brand"
     )
@@ -1548,14 +1539,14 @@ def fuzzy_name_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = g.select(
         F.col("gid").alias("doc_id"), F.col("p_name").alias("text")
     )
-    _sig, banded = minhash_banded_md5(
-        names,
+    banded = minhash_bands(
+        minhash_signatures(
+            names, "doc_id", "text", _FNB_HASHES, _FNB_SHINGLE, family="md5"
+        ),
         "doc_id",
-        "text",
-        _FNB_HASHES,
         _FNB_BANDS,
-        _FNB_SHINGLE,
-        persist_sig=False,
+        _FNB_HASHES // _FNB_BANDS,
+        family="md5",
     )
     keyed = banded.join(
         g.select(

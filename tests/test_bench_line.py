@@ -44,6 +44,7 @@ def _fake_compact(n_notes: int) -> dict:
         "shared_with_prev_window_seconds": 123.456,
         "shared_with_prev_window_n": 50,
         "prev_bench_file": "BENCH_r10.json",
+        "prev_bench_cpus": 32,
         "environment": {
             "blockmgr_orphans": 0,
             "blockmgr_orphan_bytes": 0,
@@ -129,3 +130,31 @@ def test_parsed_line_matches_driver_contract_keys():
     assert isinstance(parsed["value"], float)
     assert isinstance(parsed["sf"], float)
     assert all(isinstance(v, (int, float)) for v in parsed["queries"].values())
+
+
+def _bench_record(path, n, cpus, queries):
+    path.write_text(json.dumps({"n": n, "cpus": cpus, "parsed": {"queries": queries}}))
+
+
+def test_shared_with_prev_picks_newest_file_with_matching_cpus(tmp_path):
+    import os
+
+    _bench_record(tmp_path / "BENCH_r10.json", 10, 32, {"a": 1.0})
+    _bench_record(tmp_path / "BENCH_r11.json", 11, 32, {"a": 1.0, "b": 2.0})
+    # The 8-core twin is lexically last AND has the newest mtime.
+    c8 = tmp_path / "BENCH_r11_c8.json"
+    _bench_record(c8, 11, 8, {"a": 1.0, "b": 2.0, "c": 3.0})
+    later = os.path.getmtime(tmp_path / "BENCH_r11.json") + 60
+    os.utime(c8, (later, later))
+    # A record whose stdout line did not parse is never the base.
+    (tmp_path / "BENCH_r12.json").write_text(
+        json.dumps({"n": 12, "cpus": 32, "parsed": None})
+    )
+    timings = {"a": 0.5, "b": 0.25, "c": 4.0}
+
+    got = bench._shared_with_prev(timings, 32, root=str(tmp_path))
+    assert got == {"seconds": 0.75, "n": 2, "file": "BENCH_r11.json", "cpus": 32}
+    got8 = bench._shared_with_prev(timings, 8, root=str(tmp_path))
+    assert got8["file"] == "BENCH_r11_c8.json" and got8["cpus"] == 8
+    assert got8["n"] == 3
+    assert bench._shared_with_prev(timings, 4, root=str(tmp_path)) is None

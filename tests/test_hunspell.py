@@ -1,10 +1,13 @@
 """Hunspell affix-expansion fidelity (X6/J7 upgrade, SURVEY §7 Hard-3).
 
-Probe set: entries read from the reference's PUBLIC en_US dictionary data
-(`/root/reference/Dicts/en_US/`) with inflections whose acceptance under
-real Hunspell is known (standard English morphology + the .aff rules
-themselves); negatives assert the expander is not just accepting
-everything. A synthetic FLAG-num dictionary mirrors the sk_SK.aff style
+Probe set: entries of the PUBLIC en_US dictionary with inflections whose
+acceptance under real Hunspell is known (standard English morphology + the
+.aff rules themselves); negatives assert the expander is not just
+accepting everything. The probes read the reference's en_US pair
+(`Dicts/en_US/` of the reference checkout) when it is present, else the
+synthetic `tests/data/hunspell/en_US_mini.*` pair: the en_US.aff rule
+blocks for the probe words' flags and the probe stems with their en_US
+flags. A synthetic FLAG-num dictionary mirrors the sk_SK.aff style
 (`FLAG num`, numeric comma flags) so the Slovak path is exercised without
 shipping the 130 KB affix file through the test."""
 
@@ -21,16 +24,16 @@ from crz_scraper_spark.functions.hunspell import (
 )
 
 _EN_DIR = "/root/reference/Dicts/en_US"
-_has_en = os.path.isdir(_EN_DIR)
+if not os.path.isdir(_EN_DIR):
+    _EN_DIR = os.path.join(os.path.dirname(__file__), "data", "hunspell")
+_EN_NAME = "en_US" if _EN_DIR.endswith("en_US") else "en_US_mini"
+_EN_DIC = os.path.join(_EN_DIR, f"{_EN_NAME}.dic")
+_EN_AFF = os.path.join(_EN_DIR, f"{_EN_NAME}.aff")
 
 
 @pytest.fixture(scope="module")
 def en_forms():
-    if not _has_en:
-        pytest.skip("reference en_US dictionary not present")
-    return expand_dictionary(
-        os.path.join(_EN_DIR, "en_US.dic"), os.path.join(_EN_DIR, "en_US.aff")
-    )
+    return expand_dictionary(_EN_DIC, _EN_AFF)
 
 
 def test_en_us_inflections_accepted(en_forms):
@@ -118,8 +121,8 @@ def test_sk_aff_parses_if_present():
     assert len(rules.rules) > 100  # the Slovak affix classes all parsed
 
 
-def test_hunspell_oov_profile_end_to_end(spark, en_forms):
-    """The full-fidelity X6 path end-to-end: the real en_US .dic/.aff pair
+def test_hunspell_oov_profile_end_to_end(spark):
+    """The full-fidelity X6 path end-to-end: the en_US .dic/.aff pair
     expands at broadcast-build time and feeds the SAME semi-join plan as
     the wordset approximation — inflected forms are in-vocabulary, the
     gibberish document is flagged."""
@@ -131,11 +134,7 @@ def test_hunspell_oov_profile_end_to_end(spark, en_forms):
     )
     prof = {
         r["doc_id"]: r
-        for r in hunspell_oov_profile(
-            docs,
-            os.path.join(_EN_DIR, "en_US.dic"),
-            os.path.join(_EN_DIR, "en_US.aff"),
-        ).collect()
+        for r in hunspell_oov_profile(docs, _EN_DIC, _EN_AFF).collect()
     }
     assert prof[1]["n_oov"] == 0 and prof[1]["is_gibberish"] == 0
     assert prof[2]["n_oov"] == 4 and prof[2]["is_gibberish"] == 1

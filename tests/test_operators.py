@@ -1013,7 +1013,7 @@ def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
 def test_incremental_store_rejects_mixed_hash_families(spark, tmp_path):
     """A signature store is permanently bound to the hash family (and
     signature-shaping params) of its first batch: feeding a different
-    signature_fn, num_hashes, or a simhash batch into a minhash store
+    hash family, num_hashes, or a simhash batch into a minhash store
     raises instead of silently producing cross-family est_jaccard noise.
     The `_family` marker rides the store dir (underscore-prefixed, so
     parquet listings never see it)."""
@@ -1023,7 +1023,6 @@ def test_incremental_store_rejects_mixed_hash_families(spark, tmp_path):
 
     from crz_scraper_spark.operators.dedup import (
         minhash_incremental,
-        minhash_signatures_md5,
         simhash_incremental,
     )
 
@@ -1043,7 +1042,7 @@ def test_incremental_store_rejects_mixed_hash_families(spark, tmp_path):
     with _pytest.raises(ValueError, match="family"):
         minhash_incremental(
             spark, day2, "doc_id", "text", store,
-            signature_fn=minhash_signatures_md5,
+            family="md5",
         )
     # Different signature width on the same store: refused.
     with _pytest.raises(ValueError, match="family"):

@@ -990,16 +990,18 @@ def test_curation_pipeline_scale_plan(spark, sf_dir):
     quality/lang as map-only columns (no join-back of score frames)."""
     from crz_scraper_spark.pipeline import curation_pipeline
 
+    spark.catalog.clearCache()
+    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = curation_pipeline(docs)
     try:
         for frame in (out["survivors"], out["audit"], out["dropped"]):
             assert not _forced_big_broadcasts(frame)
         # (b) dedup intermediates persisted AND every persist handle is
-        # surfaced for release: exact, deduped, plus the LSH signature
-        # cache captured from minhash_dedup (ADVICE r4 made that handle
-        # releasable; a leaked-but-unlisted persist would fail here).
-        assert len(out["cached"]) == 3
+        # surfaced for release: exact and deduped. The LSH stage persists
+        # nothing (its pairs carry their own signatures); a
+        # leaked-but-unlisted persist fails the RDD check below.
+        assert len(out["cached"]) == 2
         for frame in out["cached"]:
             assert frame.storageLevel.useMemory or frame.storageLevel.useDisk
         out["audit"].collect()
@@ -1017,9 +1019,14 @@ def test_curation_pipeline_scale_plan(spark, sf_dir):
             )
 
         assert n_joins(out["survivors"]) == n_joins(out["cached"][1])
+        out["survivors"].collect()
     finally:
         for frame in out["cached"]:
             frame.unpersist()
+    # Releasing the listed handles releases every block the chain
+    # persisted (ids persisted by earlier tests in the session excepted).
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert persisted - persisted_before == set()
 
 
 def test_delete_by_key_escaped_partition_values(spark, tmp_path):
