@@ -43,6 +43,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crz_scraper_spark.functions.sql import sql_ident, sql_str
 from crz_scraper_spark.operators.upsert import _hadoop_fs
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -101,6 +102,31 @@ def _list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
             continue
         out.append((st.getPath().toString(), st.getLen()))
     return out
+
+
+def _repack_partitions(
+    df: DataFrame,
+    partition_col: str,
+    files_per_partition: list[tuple[str, int]],
+    hash_cols: list[str],
+) -> DataFrame:
+    """`df` hash-repartitioned on (partition, salt) so one task owns one
+    output file of one partition directory; salt = pmod(xxhash64(hash_cols),
+    the row's partition's file count) spreads each partition over exactly
+    its target file count. The counts are one map literal (#partitions
+    entries, metadata-sized) in one SQL expression — one py4j call."""
+    nmap = ", ".join(f"{sql_str(k)}, {n}" for k, n in files_per_partition)
+    cols = ", ".join(sql_ident(c) for c in hash_cols)
+    salted = df.selectExpr(
+        "*",
+        f"pmod(xxhash64({cols}), element_at(map({nmap}), "
+        f"CAST({sql_ident(partition_col)} AS STRING))) AS __salt",
+    )
+    return salted.repartition(
+        sum(n for _, n in files_per_partition),
+        F.col(partition_col),
+        F.col("__salt"),
+    ).drop("__salt")
 
 
 def plan_compaction(
@@ -183,27 +209,10 @@ def compact_small_files(
             k: max(1, math.ceil(b / target_file_bytes))
             for k, b in part_bytes.items()
         }
-        # salt = pmod(xxhash64(whole row), files_for_partition): spreads a
-        # partition's rows over exactly its target file count. The map
-        # literal is #partitions entries — metadata-sized, broadcast free.
-        nmap = F.create_map(
-            *[
-                x
-                for k, n in sorted(n_files.items())
-                for x in (F.lit(k), F.lit(n))
-            ]
-        )
-        salted = df.withColumn(
-            "__salt",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in df.columns]),
-                F.element_at(nmap, F.col(partition_col).cast("string")),
-            ),
-        )
-        total_out = sum(n_files.values())
         (
-            salted.repartition(total_out, F.col(partition_col), F.col("__salt"))
-            .drop("__salt")
+            _repack_partitions(
+                df, partition_col, sorted(n_files.items()), df.columns
+            )
             .write.mode("overwrite")
             .partitionBy(partition_col)
             .parquet(staging)
@@ -241,7 +250,8 @@ def compact_small_files(
         "bytes_before": bytes_before,
         "files_after": len(after),
         "bytes_after": sum(b for _, b in after),
-        "n_rows": spark.read.parquet(dst_dir).count(),
+        # The schema is known: reading it back costs no footer job.
+        "n_rows": spark.read.schema(df.schema).parquet(dst_dir).count(),
     }
 
 
@@ -308,28 +318,16 @@ def compact_offenders(
     files_before = sum(stats[k][0] for k in offenders)
     dirs = [f"{root.rstrip('/')}/{prefix}{k}" for k in sorted(offenders)]
     df = spark.read.option("basePath", root).parquet(*dirs)
-    nmap = F.create_map(
-        *[
-            x
-            for k, n in sorted(offenders.items())
-            for x in (
-                F.lit(_unescape_partition_value(spark, k)),
-                F.lit(n),
-            )
-        ]
-    )
-    data_cols = [c for c in df.columns if c != partition_col]
-    salted = df.withColumn(
-        "__salt",
-        F.pmod(
-            F.xxhash64(*[F.col(c) for c in data_cols]),
-            F.element_at(nmap, F.col(partition_col).cast("string")),
-        ),
-    )
-    total_out = sum(offenders.values())
     (
-        salted.repartition(total_out, F.col(partition_col), F.col("__salt"))
-        .drop("__salt")
+        _repack_partitions(
+            df,
+            partition_col,
+            [
+                (_unescape_partition_value(spark, k), n)
+                for k, n in sorted(offenders.items())
+            ],
+            [c for c in df.columns if c != partition_col],
+        )
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
@@ -344,6 +342,7 @@ def compact_offenders(
     )
     n_rows = (
         spark.read.option("basePath", root)
+        .schema(df.schema)
         .parquet(*dirs)
         .count()
     )

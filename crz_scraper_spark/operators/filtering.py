@@ -15,7 +15,7 @@ Semantic details mirrored exactly:
 
 - The reference's first three checks all run unconditionally, each
   OVERWRITING `tosslevel` — so a row failing CIN *and* attachments reports
-  reason 2. The `when()` ladder below encodes that precedence (2, then -1,
+  reason 2. The CASE ladder below encodes that precedence (2, then -1,
   then 1).
 - Price/date/dup checks only run when `tosslevel == 0` so far.
 - **Resort early-exit quirk**: the reference's `key_count` logic
@@ -29,26 +29,33 @@ Semantic details mirrored exactly:
   reference's accumulating-list semantics deterministic and distributed.
 
 One lazy DataFrame pass: Catalyst fuses every predicate; the two reference
-lists ride along as broadcast structures; the only shuffle is the dedup
-window partition.
+lists ride along as array literals; the only shuffle is the dedup window
+partition. The whole ladder is built as SQL text and handed to Spark in one
+`selectExpr` — one py4j call however long the lists are (the reference's
+companies list alone has 2,429 rows). The `AND` chains are parenthesized
+left to right: the SQL parser balances an unparenthesized chain, and the
+left-deep tree is the one `Column` `&` builds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from crz_scraper_spark.functions.casts import try_double
+from crz_scraper_spark.functions.sql import sql_ident, sql_str
 
 
-def _norm_key(c: Column) -> Column:
+def _norm_key(sql: str) -> str:
     """Space-stripped key normalization (`02:201`: `.replace(" ","")`)."""
-    return F.regexp_replace(c, " ", "")
+    return f"regexp_replace({sql}, ' ', '')"
 
 
-def _norm_name(c: Column) -> Column:
+def _norm_name(sql: str) -> str:
     """Dedup-key name normalization (`02:263`: strip + newline→space)."""
-    return F.trim(F.regexp_replace(c, "\n", " "))
+    return f"trim(regexp_replace({sql}, {sql_str(chr(10))}, ' '))"
+
+
+def _array(items) -> str:
+    return "array(" + ", ".join(sql_str(s) for s in items) + ")"
 
 
 def stage2_filter(
@@ -64,78 +71,68 @@ def stage2_filter(
 
     `company_cins` / `resort_names_by_key` are the small curated reference
     lists (companies.csv / resorts.csv — 2,429 rows in the reference); they
-    are embedded as broadcast array literals, the Spark analog of the
-    reference's in-memory Python lists.
+    are embedded as array literals, the Spark analog of the reference's
+    in-memory Python lists. `price_min` must be finite.
 
     Callers keep rows with `discard_reason == 0` and may audit the rest —
     the reference only printed the reasons to the console.
     """
-    cins = F.array(*[F.lit(c.replace(" ", "")) for c in company_cins])
     keys = resort_names_by_key
     if max_resort_keys is not None:
         keys = keys[:max_resort_keys]
-    resort_names = [
+    cins = _array(c.replace(" ", "") for c in company_cins)
+    resorts = _array(
         n.upper().replace(" ", "") for names in keys for n in names if n
-    ]
-    resorts = F.array(*[F.lit(n) for n in resort_names])
+    )
 
     # NULL inputs (missing CIN/name/links) must read as check-failed, not
-    # unknown — coalesce every flag to False (the reference's str() coercion
+    # unknown — coalesce every flag to false (the reference's str() coercion
     # turns missing into 'nan', which fails every membership test).
-    cin_ok = F.coalesce(
-        F.array_contains(cins, _norm_key(F.col("dodavatel_ico"))), F.lit(False)
+    cin_ok = f"coalesce(array_contains({cins}, {_norm_key('dodavatel_ico')}), false)"
+    purchaser = _norm_key("upper(objednavatel)")
+    resort_ok = f"coalesce(exists({resorts}, r -> contains({purchaser}, r)), false)"
+    att_ok = (
+        "coalesce(((prilohy IS NOT NULL AND size(prilohy) > 0) AND exists("
+        "prilohy, a -> contains(coalesce(a.odkaz, ''), 'https://'))), false)"
     )
-    purchaser = _norm_key(F.upper(F.col("objednavatel")))
-    resort_ok = F.coalesce(
-        F.exists(resorts, lambda n: purchaser.contains(n)), F.lit(False)
+    # gibberish → reject (02:241)
+    price_ok = (
+        f"coalesce(try_cast(cena_konecna AS DOUBLE) >= {float(price_min)!r}D, false)"
+    )
+    date_ok = (
+        "true"
+        if date_min is None
+        else "coalesce(to_timestamp(datum_zverejnenia) >= "
+        f"to_timestamp({sql_str(date_min)}), false)"
+    )
+    pass14 = (
+        f"(((({cin_ok} AND {resort_ok}) AND {att_ok}) AND {price_ok})"
+        f" AND {date_ok})"
     )
 
-    att = F.col("prilohy")
-    att_ok = F.coalesce(
-        att.isNotNull()
-        & (F.size(att) > 0)
-        & F.exists(att, lambda a: F.coalesce(a["odkaz"], F.lit("")).contains("https://")),
-        F.lit(False),
+    earlier_kept = (
+        f"coalesce(sum(CASE WHEN {pass14} THEN 1 ELSE 0 END) OVER ("
+        f"PARTITION BY {_norm_name('nazov')}, id ORDER BY {sql_ident(index_col)} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
     )
-
-    price_ok = try_double(F.col("cena_konecna")) >= F.lit(price_min)
-    price_ok = F.coalesce(price_ok, F.lit(False))  # gibberish → reject (02:241)
-
-    if date_min is not None:
-        d = F.to_timestamp(F.col("datum_zverejnenia"))
-        date_ok = F.coalesce(d >= F.to_timestamp(F.lit(date_min)), F.lit(False))
-    else:
-        date_ok = F.lit(True)
-
-    pass14 = cin_ok & resort_ok & att_ok & price_ok & date_ok
-
-    w = (
-        Window.partitionBy(_norm_name(F.col("nazov")), F.col("id"))
-        .orderBy(F.col(index_col))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    earlier_kept = F.coalesce(
-        F.sum(F.when(pass14, 1).otherwise(0)).over(w), F.lit(0)
-    )
-    is_dup = pass14 & (earlier_kept > 0)
-
     reason = (
-        F.when(~att_ok, F.lit(2))
-        .when(~resort_ok, F.lit(-1))
-        .when(~cin_ok, F.lit(1))
-        .when(~price_ok, F.lit(3))
-        .when(~date_ok, F.lit(4))
-        .when(is_dup, F.lit(5))
-        .otherwise(F.lit(0))
+        f"CASE WHEN NOT {att_ok} THEN 2 WHEN NOT {resort_ok} THEN -1"
+        f" WHEN NOT {cin_ok} THEN 1 WHEN NOT {price_ok} THEN 3"
+        f" WHEN NOT {date_ok} THEN 4"
+        f" WHEN ({pass14} AND {earlier_kept} > 0) THEN 5 ELSE 0 END"
     )
-    return contracts.withColumn("discard_reason", reason)
+    return contracts.selectExpr("*", f"{reason} AS discard_reason")
 
 
 def stage2_clean(filtered: DataFrame) -> DataFrame:
     """Keep survivors and apply the reference's final string normalization
     (`02:275-277`: strip + newline→space on every metadata string column)."""
-    out = filtered.filter(F.col("discard_reason") == 0).drop("discard_reason")
-    for c, t in out.dtypes:
-        if t == "string":
-            out = out.withColumn(c, _norm_name(F.col(c)))
-    return out
+    return filtered.where("discard_reason = 0").selectExpr(
+        *[
+            f"{_norm_name(sql_ident(c))} AS {sql_ident(c)}"
+            if t == "string"
+            else sql_ident(c)
+            for c, t in filtered.dtypes
+            if c != "discard_reason"
+        ]
+    )

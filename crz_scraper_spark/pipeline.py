@@ -42,6 +42,12 @@ def contracts_pipeline(
     `discard_reason` (the reference only printed these,
     `02_filter_by_CIN.py:270-298`); `corrupt` is the unparseable-record
     routing (≈ Corrupted_XML_files/).
+
+    Nothing is cached between them: each output a caller consumes parses
+    the dump again (see `split_corrupt`). To get the discard tallies
+    without a second pass, wrap `audit` in `observe_discards` and write
+    the observed frame; `corrupt` caches its own bad records on its first
+    action.
     """
     parsed = read_contracts_xml(spark, xml_path)
     ok, corrupt = split_corrupt(parsed)

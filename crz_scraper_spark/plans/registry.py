@@ -39,18 +39,22 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # every query whose CODE or ORACLE changed this round (first check of
 # the new shape) + the remaining slots refresh the STALEST coverage —
 # queries whose last driver check is oldest, oldest-first in registry
-# order. Changed code in this rotation: the four LSH near-dup pipelines
-# became one bucket-grouped core (no signature persist, no band
-# self-join, no verify joins), and the MinHash signature / band-key
-# builders and the SimHash block keys are shared by every LSH consumer.
-# Every oracled query on that path takes a changed-code slot
-# (minhash_near_dup_md5 is already pinned): simhash_near_dup_md5,
-# lsh_band_occupancy_md5,
-# fuzzy_name_pairs_banded, near_dup_clusters, near_dup_keep_best,
-# curation_pipeline_audit_md5, minhash_incremental_md5 and
-# simhash_incremental_md5. The remaining 37 slots take the r8-checked
-# tier (the stalest oracled one) in registry order; its last member,
-# returned_revenue_by_customer, rolls to the next rotation.
+# order. Changed code in this rotation: the contracts ingest path —
+# split_corrupt no longer caches the whole dump behind the clean side,
+# stage 2 and flatten_contracts are built as SQL text, the streaming
+# helpers size state partitions to min(8, defaultParallelism) through one
+# conf scope, and compaction's salt is one SQL expression with a read-back
+# that skips schema inference. The oracled queries on that path take the
+# changed-code slots (stage2_contract_filter, xml_ingest_flatten and
+# streaming_interval_join are already pinned): compaction_roundtrip,
+# jsonl_ingest_roundtrip and the seven unpinned oracled streaming_*
+# queries. The staleness slots start with returned_revenue_by_customer,
+# carried over from the last rotation, then take 35 of the r9-checked
+# tier in registry order (simhash_incremental_md5, already refreshed by
+# the last rotation, is skipped); avg_qty_outlier_revenue,
+# disjunctive_brand_quantity, lonely_returning_supplier,
+# rich_inactive_customers and top_revenue_supplier roll to the next
+# rotation.
 # The window stays all-oracled by policy (tests/test_integrity.py:
 # every window slot must hash-match, the strongest driver signal) —
 # the rows-only entries are deliberately never window-rotated: each
@@ -64,54 +68,54 @@ _FIRST_WINDOW = [
     "xml_ingest_flatten",       # S1/S2 XML dump scan + corrupt routing
     "minhash_near_dup_md5",     # dedup: MinHash-LSH (portable hash)
     "streaming_interval_join",  # §2.8 stream-stream interval join
-    # -- changed code: first check of the LSH core's new shape ------------
-    "simhash_near_dup_md5",
-    "lsh_band_occupancy_md5",
-    "fuzzy_name_pairs_banded",
-    "near_dup_clusters",
-    "near_dup_keep_best",
-    "curation_pipeline_audit_md5",
-    "minhash_incremental_md5",
-    "simhash_incremental_md5",
-    # -- staleness refresh: last checked r8 (37 of 38 oracled, registry
-    #    order)
-    "gopher_rules_filter",
-    "epoch_shuffle",
-    "bm25_search",
-    "token_count_stats",
-    "doc_fingerprint",
-    "lang_id",
-    "exact_dedup_groups",
-    "rolling_active_users",
-    "user_running_totals",
-    "hard_negative_mining",
-    "fuzzy_name_pairs",
-    "pdf_text_extract",
-    "pdf_table_detect",
-    "embedding_quantization_recall",
-    "multimodal_decode",
-    "multimodal_frame_features",
-    "keyword_rollup",
-    "orders_snapshot_diff",
-    "ivf_incremental_assign",
-    "pipe_csv_roundtrip",
-    "dir_tree_corpus_scan",
-    "wordlist_sink_roundtrip",
-    "suggested_keywords_score",
-    "natural_sort_rank",
-    "table_checksum",
-    "incremental_daily_rollup",
-    "partition_minmax_index",
-    "zorder_layout_key",
-    "daily_gap_fill",
-    "locf_fill",
-    "event_value_distribution",
-    "tagged_metadata_rank",
+    # -- changed code: first check of the ingest path's new shape --------
+    "compaction_roundtrip",
     "jsonl_ingest_roundtrip",
-    "attachments_explode_sum",
-    "path_derived_metadata_join",
-    "tables_per_contract",
-    "embedding_cosine_near_dup",
+    "streaming_left_outer_join",
+    "streaming_tumbling_hourly",
+    "streaming_parquet_sink_roundtrip",
+    "streaming_upsert_sink_roundtrip",
+    "streaming_enriched_segments",
+    "streaming_dedup_events",
+    "streaming_stateful_counts",
+    # -- staleness refresh: carried over, then last checked r9 (35 of 40
+    #    oracled, registry order)
+    "returned_revenue_by_customer",
+    "ewma_nation_revenue",
+    "props_json_rollup",
+    "props_variant_rollup",
+    "udtf_widen_roundtrip",
+    "embedding_kmeans_clusters",
+    "ann_lsh_recall",
+    "fuzzy_name_pairs_refined",
+    "cosine_topk_bruteforce",
+    "pdf_table_detect_udtf",
+    "hll_distinct_md5",
+    "status_priority_grouping_sets",
+    "dictionary_oov",
+    "cube_status_priority",
+    "session_window_agg",
+    "value_stats",
+    "value_outliers",
+    "table_profile",
+    "value_histogram",
+    "monthly_revenue_growth",
+    "brand_part_rollup",
+    "events_dedup_first",
+    "part_triangles",
+    "value_time_regression",
+    "mixture_weights",
+    "sliding_window_counts",
+    "value_percentiles",
+    "trailing_hour_stats",
+    "priority_by_shipwindow",
+    "large_volume_orders",
+    "regional_local_volume",
+    "forecast_revenue",
+    "order_priority_semijoin",
+    "nation_volume_shipping",
+    "customer_order_distribution",
+    "promo_revenue_ratio",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}

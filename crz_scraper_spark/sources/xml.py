@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crz_scraper_spark.functions.sql import sql_ident, sql_str
+
 CORRUPT_COL = "_corrupt_record"
 
 # Typed contract schema mirroring the 22-column table of
@@ -127,14 +129,23 @@ def stream_contracts_xml(
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean, corrupt) — route bad records like `Corrupted_XML_files/`.
 
-    Spark forbids corrupt-record-only queries against raw file sources
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); cache the parsed
-    result first, as the error message itself prescribes. In a pipeline the
-    parsed batch would be persisted to Parquet at this point anyway.
+    No cache of the whole dump: each consumed output parses the dump again
+    (discard tallies ride the clean write via `pipeline.observe_discards`).
+    A record is corrupt only if a field the parser reads fails to convert,
+    so the clean filter names every column (`c IS NULL OR c IS NOT NULL`,
+    kept by Catalyst): a narrow select or a bare count parses the full row
+    and sees the same clean records. The corrupt side alone is cached, as
+    Spark's QUERY_ONLY_CORRUPT_RECORD_COLUMN error prescribes for queries
+    that read only that column — lazily, so only a caller that runs an
+    action on `corrupt` fills it and owns `corrupt.unpersist()`.
     """
-    df = df.cache()
-    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    corrupt = df.filter(F.col(CORRUPT_COL).isNotNull())
+    full_row = " AND ".join(
+        f"({sql_ident(c)} IS NULL OR {sql_ident(c)} IS NOT NULL)"
+        for c in df.columns
+        if c != CORRUPT_COL
+    )
+    clean = df.where(f"{CORRUPT_COL} IS NULL AND {full_row}").drop(CORRUPT_COL)
+    corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).cache()
     return clean, corrupt
 
 
@@ -142,18 +153,24 @@ def flatten_contracts(df: DataFrame) -> DataFrame:
     """Unwrap the XML nesting into the flat 22-column contracts table
     (P1 positional projection, done by name instead of node index) with a
     stable ingest index for order-dependent dedup (SURVEY §7 Hard-1 ≈
-    `01_parse_xml.py:191-195`'s total_index)."""
-    return (
-        df.withColumn("prilohy", F.col("prilohy.priloha"))
-        # Unwrap the inner per-supplement attachment wrapper too: dodatky
-        # becomes array<struct<..., prilohy: array<struct>>> — the doubly
-        # nested form `explode(dodatky)` + `explode(prilohy)` consumes.
-        .withColumn(
-            "dodatky",
-            F.transform(
-                F.col("dodatky.dodatok"),
-                lambda d: d.withField("prilohy", d["prilohy"]["priloha"]),
-            ),
-        )
-        .withColumn("ingest_idx", F.monotonically_increasing_id())
+    `01_parse_xml.py:191-195`'s total_index).
+
+    One projection, built as SQL text. `dodatky` also loses the inner
+    per-supplement attachment wrapper — array<struct<..., prilohy:
+    array<struct>>>, the doubly nested form `explode(dodatky)` +
+    `explode(prilohy)` consumes — rebuilt as the expression Catalyst
+    expands `Column.withField` into."""
+    sup = df.schema["dodatky"].dataType["dodatok"].dataType.elementType
+    fields = ", ".join(
+        f"{sql_str(f)}, d.{sql_ident(f)}" + (".priloha" if f == "prilohy" else "")
+        for f in sup.fieldNames()
+    )
+    unwrap = {
+        "prilohy": "prilohy.priloha AS prilohy",
+        "dodatky": "transform(dodatky.dodatok, d -> IF(d IS NULL, NULL, "
+        f"named_struct({fields}))) AS dodatky",
+    }
+    return df.selectExpr(
+        *[unwrap.get(c, sql_ident(c)) for c in df.columns],
+        "monotonically_increasing_id() AS ingest_idx",
     )

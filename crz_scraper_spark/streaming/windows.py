@@ -16,10 +16,74 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+@contextmanager
+def _stream_confs(spark: SparkSession, needs_eviction_batch: bool = False):
+    """Session confs for one bounded streaming run, restored on exit (also
+    when the query raises).
+
+    State partitions: stateful operators hash-partition their state by
+    `spark.sql.shuffle.partitions` *captured at query start*, and every
+    micro-batch commits one state-store delta file per partition per store
+    (a stream-stream join keeps FOUR stores per partition). Inheriting the
+    batch default (32) means ~128 file commits per micro-batch for a join
+    whose whole state fits in one page — pure fixed overhead locally, and
+    the same sizing mistake a real deployment makes when it lets state
+    partitioning default instead of sizing it to stateful-key cardinality /
+    throughput. The default, `min(8, defaultParallelism)`, is one wave of
+    state tasks (8 partitions on 4 cores are two waves of ~200 ms commits).
+    SPARK_GRAFT_STREAM_STATE_PARTS overrides it; a production stream sets
+    it to O(cores × state volume) before the FIRST start, since it is fixed
+    into the checkpoint thereafter. Partition count never affects results.
+
+    No-data batch: after the data is exhausted the engine runs one more
+    NO-DATA micro-batch (noDataMicroBatches, default on) purely to advance
+    the watermark and evict state. That extra batch re-plans and
+    re-executes the full streaming plan over zero input rows — measured
+    2-4 s per query locally, ~⅓ of each streaming query's cost — and
+    changes the RESULT only for operators that EMIT on eviction (the
+    left-outer join's null-padded rows). Queries whose sinks are complete/
+    update-mode aggregations or append-mode pass-throughs (inner join,
+    dedup, an update-mode foreachBatch whose trailing batch carries zero
+    changed rows) emit everything in the data batches, so they skip it;
+    `needs_eviction_batch=True` keeps it. SPARK_GRAFT_STREAM_NODATA_BATCH=1
+    restores the engine default for every query (the A/B escape hatch).
+    """
+    parts = str(min(8, spark.sparkContext.defaultParallelism))
+    no_data = needs_eviction_batch or (
+        os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCH") == "1"
+    )
+    confs = {
+        "spark.sql.shuffle.partitions": os.environ.get(
+            "SPARK_GRAFT_STREAM_STATE_PARTS", parts
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(no_data).lower(),
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _drain(spark: SparkSession, writer, needs_eviction_batch: bool = False) -> None:
+    """Start `writer` (a memory sink, or an update-mode foreachBatch sink)
+    under `_stream_confs` and run it to completion over the bounded input."""
+    with _stream_confs(spark, needs_eviction_batch):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
 
 def _run_bounded(
@@ -30,63 +94,16 @@ def _run_bounded(
 ) -> DataFrame:
     """Run a streaming DataFrame to completion over the bounded local input
     (memory sink + processAllAvailable) and return the materialized result.
-
-    Stateful operators hash-partition their state by
-    `spark.sql.shuffle.partitions` *captured at query start*, and every
-    micro-batch commits one state-store delta file per partition per store
-    (a stream-stream join keeps FOUR stores per partition). Inheriting the
-    batch default (32) means ~128 file commits per micro-batch for a join
-    whose whole state fits in one page — pure fixed overhead locally, and
-    the same sizing mistake a real deployment makes when it lets state
-    partitioning default instead of sizing it to stateful-key cardinality /
-    throughput. We size it explicitly (SPARK_GRAFT_STREAM_STATE_PARTS,
-    default 8 for the local bounded drops; a production stream sets it to
-    O(cores × state volume) before the FIRST start, since it is fixed into
-    the checkpoint thereafter) and restore the batch setting afterwards.
-    Partition count never affects results — only state-file fan-out.
-
-    `needs_eviction_batch`: after the data is exhausted the engine runs one
-    more NO-DATA micro-batch (noDataMicroBatches, default on) purely to
-    advance the watermark and evict state. That extra batch re-plans and
-    re-executes the full streaming plan over zero input rows — measured
-    2-4 s per query locally, ~⅓ of each streaming query's cost — and
-    changes the RESULT only for operators that EMIT on eviction (the
-    left-outer join's null-padded rows). Queries whose sinks are complete/
-    update-mode aggregations or append-mode pass-throughs (inner join,
-    dedup) emit everything in the data batches, so they skip it; the
-    left-outer join sets True. Same knob, same reasoning on a real
-    cluster: an availableNow backfill pays one extra full-plan cycle per
-    run unless the query semantically needs eviction emission.
-    """
+    State partitions default to `min(8, defaultParallelism)`, and the
+    trailing no-data batch runs only when `needs_eviction_batch` (see
+    `_stream_confs`)."""
     spark = df.sparkSession
-    batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    no_data = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    state_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.shuffle.partitions", state_parts)
-    # SPARK_GRAFT_STREAM_NODATA_BATCH=1 restores the engine default
-    # (always run the trailing no-data batch) — the A/B escape hatch.
-    force_no_data = os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCH") == "1"
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if (needs_eviction_batch or force_no_data) else "false",
+    _drain(
+        spark,
+        df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+        needs_eviction_batch,
     )
-    try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", no_data
-        )
     return spark.table(name)
 
 
@@ -268,41 +285,6 @@ def _windowed_counts(src: DataFrame, window_len: str, watermark: str) -> DataFra
     )
 
 
-def _run_foreach_batch(spark: SparkSession, agg: DataFrame, write_batch) -> None:
-    """Run an update-mode foreachBatch stream to completion with the same
-    explicit state-partition sizing as _run_bounded (32 default shuffle
-    partitions = 32 state-store delta commits per micro-batch for state
-    that fits a page — measured ~2× on the whole run locally), and the
-    same no-data-micro-batch skip: an update-mode windowed aggregation
-    emits a window the moment a batch changes it, so the trailing
-    watermark-advance batch calls write_batch with ZERO changed rows —
-    a full extra plan+execute+sink cycle that never alters the store."""
-    batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    no_data = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    state_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
-    spark.conf.set("spark.sql.shuffle.partitions", state_parts)
-    force_no_data = os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCH") == "1"
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if force_no_data else "false",
-    )
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", no_data
-        )
-
-
 def stream_to_upsert_store(
     spark: SparkSession,
     sf_dir: str,
@@ -348,7 +330,7 @@ def stream_to_upsert_store(
                 "window_date",
             )
 
-    _run_foreach_batch(spark, agg, write_batch)
+    _drain(spark, agg.writeStream.outputMode("update").foreachBatch(write_batch))
 
 
 def stream_to_partitioned_parquet(
@@ -385,7 +367,7 @@ def stream_to_partitioned_parquet(
             .parquet(out_dir)
         )
 
-    _run_foreach_batch(spark, agg, write_batch)
+    _drain(spark, agg.writeStream.outputMode("update").foreachBatch(write_batch))
 
 
 def stateful_user_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
