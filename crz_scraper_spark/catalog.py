@@ -96,21 +96,39 @@ def pin(df: DataFrame) -> DataFrame:
     concurrently-submitted consumer stages race to compute unmaterialized
     partitions (the r10 containment/perplexity race class).
 
-    Trade-offs (accepted deliberately, documented once here — ADVICE r10):
+    Trade-offs (accepted deliberately, documented once here):
     the upstream plan executes at construction time (an eager Spark job
-    per call, inside the bench's timed window, so reps stay honest); the
-    checkpoint blocks live UNREPLICATED on executor storage and are freed
-    by GC/ContextCleaner, not spark.catalog.clearCache() — acceptable for
-    bounded read-compute-report queries, wrong for a frame that must
-    survive executor preemption; and localCheckpoint is unavailable over
-    Spark Connect before 4.0, so on an old Connect gateway we fall back
-    to persist + count (keeps the lineage but still materializes once).
+    per call, inside the bench's timed window, so reps stay honest); and
+    the checkpoint blocks live UNREPLICATED on executor storage and are
+    freed by GC/ContextCleaner, not spark.catalog.clearCache() —
+    acceptable for bounded read-compute-report queries, wrong for a frame
+    that must survive executor preemption.
     """
-    if hasattr(df, "localCheckpoint"):
-        return df.localCheckpoint(eager=True)
-    out = df.persist()  # pre-4.0 Spark Connect: no localCheckpoint proxy
-    out.count()
-    return out
+    return df.localCheckpoint(eager=True)
+
+
+def collect_and_release(df: DataFrame, *cached: DataFrame) -> DataFrame:
+    """Collect the BOUNDED result ``df``, unpersist ``cached``, and return
+    the rows as a local frame with ``df.schema``.
+
+    The cache-lifetime rule (ARCHITECTURE.md): a function that persists a
+    frame releases it before it returns. A lazy result that still reads a
+    persisted frame cannot do that — unpersisting first makes the final
+    plan recompute the lineage the cache was there to share, and not
+    unpersisting leaks the cache into every session that never calls
+    clearCache (whoever calls ``__spark_entry__.queries()[name](spark,
+    sf_dir)`` gets the result and releases nothing). When the result is
+    small (a top-k, a per-group rollup, a ledger) the way out is to run it
+    here, while the cache is still live, and hand back its rows; the order
+    — collect, THEN unpersist — is the point (the release also runs when
+    the collect raises). A corpus-sized result is ``pin``ned instead.
+    """
+    try:
+        rows = df.collect()
+    finally:
+        for frame in cached:
+            frame.unpersist()
+    return df.sparkSession.createDataFrame(rows, df.schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crz_scraper_spark.catalog import pin
 from crz_scraper_spark.functions.text import tokens_nonempty
 
 
@@ -814,7 +815,34 @@ def semantic_dedup(
     threshold cut, so a last-ulp summation difference cannot flip a cell
     assignment or the keep/drop decision; argmax ties break to the lowest
     centroid index on both engines.
+
+    Cache lifetime: the per-vector base (vectors, cell, norm) is persisted
+    because it feeds both pair-join sides and the result join; the narrow
+    verdict is `catalog.pin`ned and the base released before returning,
+    so no cache outlives the call.
     """
+    result, base = _semantic_dedup_plan(
+        emb, centroids, id_col, vec_col, threshold, round_to, pair_impl,
+        max_cell_rows,
+    )
+    out = pin(result)
+    base.unpersist()
+    return out
+
+
+def _semantic_dedup_plan(
+    emb: DataFrame,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    round_to: int,
+    pair_impl: str,
+    max_cell_rows: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """`semantic_dedup`'s lazy verdict plus the persisted base it reads —
+    the operator pins the first and releases the second; plan-shape tests
+    inspect the lazy join here."""
     from crz_scraper_spark.operators.similarity import (
         _dot,
         _norm,
@@ -855,14 +883,11 @@ def semantic_dedup(
                 "__nrm": _norm(v),
             }
         )
-    # base feeds BOTH self-join sides AND the final result join — persist
-    # so the scan + cell assignment + norms compute once, not three times
-    # (at scaled n_cells the assignment is the third of the cost).
-    base = base.persist()
     if pair_impl == "gram":
         # Schema must follow the id column's actual type — hardcoding
         # bigint would miscast/fail for string or decimal ids that the
-        # expression path accepts.
+        # expression path accepts. Checked before the persist below, so a
+        # rejected call leaves no cache behind.
         id_type = base.schema["vec_id"].dataType.simpleString()
         if id_type not in ("tinyint", "smallint", "int", "bigint"):
             raise ValueError(
@@ -871,6 +896,11 @@ def semantic_dedup(
                 f"integral id (numpy comparison + min semantics). Use "
                 f"pair_impl='expr' or map ids to integers first."
             )
+    # base feeds BOTH self-join sides AND the final result join — persist
+    # so the scan + cell assignment + norms compute once, not three times
+    # (at scaled n_cells the assignment is the third of the cost).
+    base = base.persist()
+    if pair_impl == "gram":
         # Per-cell BLAS gram matrix instead of the pair self-join: one
         # applyInPandas group per cell computes all within-cell cosines as
         # (X @ X.T) / outer(norms) in vectorized BLAS — same dot-first,
@@ -1014,13 +1044,7 @@ def semantic_dedup(
         .alias("kept"),
         F.coalesce(F.col("__rep"), F.col("vec_id")).alias("rep_id"),
     )
-    # `base` is persisted because it feeds the self-join sides AND the
-    # result join; a lazy return can't unpersist it here without losing
-    # the sharing. Expose the handle so long-lived sessions can release
-    # it after materializing (`result._crz_cached.unpersist()`); bench
-    # and tests clear the cache between queries.
-    result._crz_cached = base
-    return result
+    return result, base
 
 
 def _assign_cells_numpy_udf(centroids: list[list[float]]):

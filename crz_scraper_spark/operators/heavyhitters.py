@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crz_scraper_spark.catalog import collect_and_release
+
 
 def _mg_fold(counters: dict, counts, m: int) -> dict:
     """One Misra–Gries merge step: add a batch's (item -> count) partials,
@@ -214,7 +216,6 @@ def heavy_hitters_arrays(
     freq_num: int = 1,
     freq_den: int = 100,
     m: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """`heavy_hitters` over the ELEMENTS of an array column (the token-
     stream shape: one row per document, `arr_col` its token array) —
@@ -228,10 +229,8 @@ def heavy_hitters_arrays(
       the already-computed arrays instead of re-deriving them; because at
       most freq_den/freq_num values can exceed frequency
       freq_num/freq_den, the final report is PROVABLY bounded — it is
-      collected, the cache released, and a local DataFrame returned, so
-      no corpus-sized persist ever outlives the call (set persist=False
-      to trade a second derivation pass for zero caching, e.g. when the
-      projection is a cheap column reference).
+      collected and the cache released (`catalog.collect_and_release`),
+      so no corpus-sized persist outlives the call.
 
     Array elements must be non-null; null/empty arrays contribute
     nothing."""
@@ -240,28 +239,19 @@ def heavy_hitters_arrays(
     eltype = df.schema[arr_col].dataType.elementType.simpleString()
     spark = df.sparkSession
     empty_schema = f"{out_col} {eltype}, cnt bigint, freq_ppm bigint"
-    arr = df.select(arr_col)
-    if persist:
-        arr = arr.persist()
-    try:
-        raw = mg_candidates_arrays(arr, arr_col, out_col, m).collect()
-        n_total = sum(r["__pn"] for r in raw if r["__pn"] is not None)
-        cands = _sorted_keys(r[out_col] for r in raw)
-        if not n_total or not cands:
-            return spark.createDataFrame([], empty_schema)
-        cand = spark.createDataFrame(
-            [(c,) for c in cands], f"{out_col} {eltype}"
-        )
-        toks = arr.select(F.explode(F.col(arr_col)).alias(out_col))
-        recount = (
-            toks.join(F.broadcast(cand), out_col, "left_semi")
-            .groupBy(out_col)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .filter(F.col("cnt") * freq_den > F.lit(n_total) * freq_num)
-        )
-        report = _hitter_report(recount, out_col, n_total)
-        rows = report.collect()
-        return spark.createDataFrame(rows, report.schema)
-    finally:
-        if persist:
-            arr.unpersist()
+    arr = df.select(arr_col).persist()
+    raw = mg_candidates_arrays(arr, arr_col, out_col, m).collect()
+    n_total = sum(r["__pn"] for r in raw if r["__pn"] is not None)
+    cands = _sorted_keys(r[out_col] for r in raw)
+    if not n_total or not cands:
+        arr.unpersist()
+        return spark.createDataFrame([], empty_schema)
+    cand = spark.createDataFrame([(c,) for c in cands], f"{out_col} {eltype}")
+    toks = arr.select(F.explode(F.col(arr_col)).alias(out_col))
+    recount = (
+        toks.join(F.broadcast(cand), out_col, "left_semi")
+        .groupBy(out_col)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") * freq_den > F.lit(n_total) * freq_num)
+    )
+    return collect_and_release(_hitter_report(recount, out_col, n_total), arr)

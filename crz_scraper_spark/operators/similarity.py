@@ -521,7 +521,6 @@ def kmeans_lloyd_distributed(
     dim: int = 64,
     seed: int = 99,
     round_to: int = 9,
-    unpersist_base: bool = True,
 ):
     """Full-corpus Lloyd iterations, deterministic across partitionings.
 
@@ -537,14 +536,14 @@ def kmeans_lloyd_distributed(
 
     Returns (assignments DataFrame[(id, cell)], centroids list, inertia
     history list) — inertia (decimal-exact sum of squared distances) is
-    the monotone-non-increasing convergence witness.
+    the monotone-non-increasing convergence witness. The assignments are
+    lazy: they read ``emb`` once more when the caller runs them.
 
-    ``unpersist_base=False`` keeps the trainer's persisted (cast,
-    repartitioned) input frame alive and exposes it as ``_crz_base`` on
-    the returned assignments — for consumers that immediately run ANOTHER
-    full pass over the same vectors (the trained-SemDeDup queries): reusing
-    the cache saves one corpus scan + its fan-out exchange per query (r10,
-    guide §1.2/§2.4). The caller owns the unpersist.
+    The trainer persists nothing. It reads ``emb`` ``n_iter + 1`` times
+    (one aggregation pass per iteration, plus the returned final
+    assignment), so a caller should pass a persisted frame — and can then
+    run its own further passes over the same cache (the trained-SemDeDup
+    queries feed it to `semantic_dedup`) — and releases it when done.
     """
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -556,86 +555,71 @@ def kmeans_lloyd_distributed(
     base = emb.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
-    ).persist()
+    )
     inertia_hist: list[float] = []
-    try:
-        for _ in range(n_iter):
-            # ONE Spark job per iteration (optimization round 10; guide
-            # §1.2 "remove passes"): the assign UDF returns BOTH the
-            # argmin cell and its (9-dp-rounded) squared distance, and a
-            # single explode + groupBy(cell, dim) aggregation carries the
-            # per-(cell, dim) decimal sums AND per-cell inertia partials
-            # (summed only on the dim==0 replica of each row, so each
-            # row's d2 counts exactly once). The previous shape persisted
-            # the assignment and ran TWO collect jobs per iteration
-            # (stats, then inertia) — 2 jobs + a cache write per iteration
-            # over what is one aggregation pass of work. Exactness is
-            # unchanged: per-value decimal casts and per-group decimal
-            # sums are order-independent, and the driver-side total is an
-            # exact Decimal sum of exact per-cell partials, rounded
-            # HALF_UP to 3 like Spark's round() on decimals.
-            assign_udf = _assign_l2_d2_numpy_udf(cents)
-            assigned = base.withColumn("__a", assign_udf("__v")).select(
-                F.col("__a.cell").alias("cell"),
-                F.col("__a.d2").alias("__d2"),
-                "__v",
-            )
-            stats = (
-                assigned.select(
-                    "cell", "__d2", F.posexplode("__v").alias("dim", "val")
-                )
-                .groupBy("cell", "dim")
-                .agg(
-                    F.sum(F.col("val").cast("decimal(28,12)")).alias("s"),
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.when(
-                            F.col("dim") == 0,
-                            F.col("__d2").cast("decimal(28,9)"),
-                        )
-                    ).alias("i"),
-                )
-                .select(
-                    "cell",
-                    "dim",
-                    F.round(
-                        (F.col("s") / F.col("n")).cast("double"), round_to
-                    ).alias("m"),
-                    "i",
-                )
-                .collect()
-            )
-            new_cents = [list(c) for c in cents]  # empty cells keep old
-            itot, seen = Decimal(0), False
-            for r in stats:
-                new_cents[r["cell"]][r["dim"]] = r["m"]
-                if r["dim"] == 0 and r["i"] is not None:
-                    itot += r["i"]
-                    seen = True
-            # Inertia of the CURRENT assignment vs the centroids it was
-            # made against (the Lloyd monotonicity witness) — exact sum of
-            # the per-cell decimal partials from the same single pass.
-            inertia = (
-                float(
-                    itot.quantize(
-                        Decimal("0.001"), rounding=ROUND_HALF_UP
-                    )
-                )
-                if seen
-                else None
-            )
-            inertia_hist.append(inertia)
-            cents = new_cents
-        final_udf = _assign_l2_d2_numpy_udf(cents)
-        final = base.withColumn("__a", final_udf("__v")).select(
-            F.col("__id").alias(id_col), F.col("__a.cell").alias("cell")
+    for _ in range(n_iter):
+        # ONE Spark job per iteration: the assign UDF returns BOTH the
+        # argmin cell and its (9-dp-rounded) squared distance, and a single
+        # explode + groupBy(cell, dim) aggregation carries the per-(cell,
+        # dim) decimal sums AND per-cell inertia partials (summed only on
+        # the dim==0 replica of each row, so each row's d2 counts exactly
+        # once). Exactness: per-value decimal casts and per-group decimal
+        # sums are order-independent, and the Python-side total is an
+        # exact Decimal sum of exact per-cell partials, rounded HALF_UP to
+        # 3 like Spark's round() on decimals.
+        assign_udf = _assign_l2_d2_numpy_udf(cents)
+        assigned = base.withColumn("__a", assign_udf("__v")).select(
+            F.col("__a.cell").alias("cell"),
+            F.col("__a.d2").alias("__d2"),
+            "__v",
         )
-        if not unpersist_base:
-            final._crz_base = base
-        return final, cents, inertia_hist
-    finally:
-        if unpersist_base:
-            base.unpersist()
+        stats = (
+            assigned.select(
+                "cell", "__d2", F.posexplode("__v").alias("dim", "val")
+            )
+            .groupBy("cell", "dim")
+            .agg(
+                F.sum(F.col("val").cast("decimal(28,12)")).alias("s"),
+                F.count("*").alias("n"),
+                F.sum(
+                    F.when(
+                        F.col("dim") == 0,
+                        F.col("__d2").cast("decimal(28,9)"),
+                    )
+                ).alias("i"),
+            )
+            .select(
+                "cell",
+                "dim",
+                F.round(
+                    (F.col("s") / F.col("n")).cast("double"), round_to
+                ).alias("m"),
+                "i",
+            )
+            .collect()
+        )
+        new_cents = [list(c) for c in cents]  # empty cells keep old
+        itot, seen = Decimal(0), False
+        for r in stats:
+            new_cents[r["cell"]][r["dim"]] = r["m"]
+            if r["dim"] == 0 and r["i"] is not None:
+                itot += r["i"]
+                seen = True
+        # Inertia of the CURRENT assignment vs the centroids it was made
+        # against (the Lloyd monotonicity witness) — exact sum of the
+        # per-cell decimal partials from the same single pass.
+        inertia = (
+            float(itot.quantize(Decimal("0.001"), rounding=ROUND_HALF_UP))
+            if seen
+            else None
+        )
+        inertia_hist.append(inertia)
+        cents = new_cents
+    final_udf = _assign_l2_d2_numpy_udf(cents)
+    final = base.withColumn("__a", final_udf("__v")).select(
+        F.col("__id").alias(id_col), F.col("__a.cell").alias("cell")
+    )
+    return final, cents, inertia_hist
 
 
 def _assign_l2_numpy_udf(centroids: list[list[float]]):
@@ -686,18 +670,6 @@ def _assign_l2_d2_numpy_udf(centroids: list[list[float]]):
         )
 
     return assign
-
-
-def _sq_dist_to_centroid_col(centroids: list[list[float]]) -> Column:
-    """Squared distance from __v to ITS cell's centroid (codegen-side,
-    via the 2-D literal + element_at on the cell index)."""
-    cm = matrix_lit(centroids)
-    own = F.element_at(cm, F.col("cell") + 1)
-    return F.aggregate(
-        F.zip_with(F.col("__v"), own, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0).cast("double"),
-        lambda a, v: a + v,
-    )
 
 
 def ivf_incremental_assign(

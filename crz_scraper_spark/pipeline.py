@@ -202,7 +202,6 @@ def curation_pipeline(
     near_dup_threshold: float = 0.8,
     quality_min: float = 0.3,
     train_pct: int = 80,
-    persist: bool = True,
     hash_tier: str = "production",
 ) -> dict[str, DataFrame]:
     """The training-data curation chain, end-to-end as one composition —
@@ -220,13 +219,14 @@ def curation_pipeline(
     in place as map-only column expressions (zero joins, zero
     shuffles); the split is a shuffle-free hash bucket.
 
-    With `persist=True` (default) the two frames every downstream output
-    re-reads — `exact` and `deduped` — are persisted MEMORY_AND_DISK, so
-    materializing the five-stage `audit` costs ONE dedup + ONE LSH pass
-    instead of re-running the chain per count. The persisted frames are
-    returned under `"cached"`; long-lived sessions should
-    `for f in out["cached"]: f.unpersist()` when done (bench/tests clear
-    cache; library callers own the lifetime).
+    The two frames every downstream output re-reads — `exact` and
+    `deduped` — are persisted MEMORY_AND_DISK, so materializing the
+    five-stage `audit` costs ONE dedup + ONE LSH pass instead of
+    re-running the chain per count. The outputs stay lazy (a caller picks
+    which to run), so the caches cannot be released here: they are
+    returned under `"cached"`, and the caller releases them once it has
+    consumed the outputs it needs — e.g.
+    `catalog.collect_and_release(out["audit"], *out["cached"])`.
 
     Returns:
     - `survivors`  — (id, text, quality_score, lang_guess, split)
@@ -283,9 +283,7 @@ def curation_pipeline(
         keys=["__h"],
         order_by=[F.col(id_col)],
         group_size_col="__grp_n",
-    ).drop("__h")
-    if persist:
-        exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
+    ).drop("__h").persist(StorageLevel.MEMORY_AND_DISK)
     # Stage 2 — near-dup: LSH pairs -> connected components -> keep the
     # cluster representative (minimum reachable id). No broadcast hint:
     # non_reps scales with the corpus; AQE picks the join strategy.
@@ -305,9 +303,11 @@ def curation_pipeline(
         F.col("doc_id").alias(id_col)
     )
     # __grp_n is audit bookkeeping — it must not leak into survivors.
-    deduped = exact.drop("__grp_n").join(non_reps, id_col, "left_anti")
-    if persist:
-        deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
+    deduped = (
+        exact.drop("__grp_n")
+        .join(non_reps, id_col, "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # Stage 3 — quality floor + language tag, appended in place (map-only;
     # the old join-back shape cost two full-corpus shuffles for columns
     # that are pure functions of `text`). The token array is staged once
@@ -381,7 +381,7 @@ def curation_pipeline(
         "dropped": dropped,
         "near_dup_clusters": clusters,
         "audit": audit,
-        "cached": [exact, deduped] if persist else [],
+        "cached": [exact, deduped],
     }
 
 

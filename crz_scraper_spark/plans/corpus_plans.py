@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crz_scraper_spark.catalog import fan_out, load_table, pin
+from crz_scraper_spark.catalog import (
+    collect_and_release,
+    fan_out,
+    load_table,
+    pin,
+)
 
 _TOKS_SQL = "list_filter(regexp_split_to_array(lower(text), ' +'), w -> w <> '')"
 _TOKS_SPARK = "filter(split(lower(text), ' +'), w -> w <> '')"
@@ -838,9 +843,7 @@ def corpus_drift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join — without the persist the corpus tokenize+count pass runs
     # twice (one extra full scan at 100 TB for a vocabulary-sized
     # intermediate). The cache is vocab-sized, the same budget the BPE
-    # corpus learner and word_frequency already spend; bench/driver
-    # sessions clear it between queries, and the handle is exposed below
-    # for library callers.
+    # corpus learner and word_frequency already spend.
     counts = toks.groupBy("word").agg(
         F.sum(F.when(F.col("b") == 0, 1).otherwise(0)).alias("cnt_a"),
         F.sum(F.when(F.col("b") == 1, 1).otherwise(0)).alias("cnt_b"),
@@ -864,14 +867,7 @@ def corpus_drift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("drift_ppm"), F.asc("word"))
         .limit(_DRIFT_TOPK)
     )
-    # The report is top-K rows — materialize HERE (TakeOrderedAndProject
-    # executes now) and release the vocab-sized counts cache, so no
-    # registry-path invocation leaves a persisted frame behind in a
-    # session that doesn't clearCache (the curation_pipeline_audit
-    # collect-and-release discipline).
-    rows = out.collect()
-    counts.unpersist()
-    return spark.createDataFrame(rows, out.schema)
+    return collect_and_release(out, counts)
 
 
 CORPUS_DRIFT_TOPK_SQL = f"""

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from crz_scraper_spark.catalog import fan_out, load_table
+from crz_scraper_spark.catalog import collect_and_release, fan_out, load_table
 from crz_scraper_spark.functions.casts import dsum
 
 _BUILT: set = set()
@@ -644,16 +644,8 @@ def curation_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     out = curation_pipeline(docs)
-    # The audit ledger is 5 rows — materialize it HERE so the persisted
-    # corpus intermediates (`exact`/`deduped`, MEMORY_AND_DISK) can be
-    # released before returning; a lazy return would leak two
-    # corpus-sized cached frames per invocation in any session that
-    # doesn't clearCache between queries (e.g. the driver gate).
-    audit_df = out["audit"]
-    rows = audit_df.collect()
-    for f in out["cached"]:
-        f.unpersist()
-    return spark.createDataFrame(rows, audit_df.schema)
+    # The audit ledger is 5 rows.
+    return collect_and_release(out["audit"], *out["cached"])
 
 
 # ---------------------------------------------------------------------------
@@ -676,14 +668,7 @@ def curation_pipeline_audit_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     out = curation_pipeline(docs, hash_tier="portable_md5")
-    # Same collect-and-release discipline as the production twin: the
-    # ledger is 5 rows; the corpus-sized persisted intermediates must not
-    # outlive the query in a session that doesn't clearCache.
-    audit_df = out["audit"]
-    rows = audit_df.collect()
-    for f in out["cached"]:
-        f.unpersist()
-    return spark.createDataFrame(rows, audit_df.schema)
+    return collect_and_release(out["audit"], *out["cached"])
 
 
 def _curation_audit_md5_sql() -> str:

@@ -426,7 +426,10 @@ def xml_ingest_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTextFile(out_dir)
         )
         _XML_INGEST_BUILT.add(out_dir)
-    clean, _corrupt = split_corrupt(read_contracts_xml(spark, out_dir))
+    clean, corrupt = split_corrupt(read_contracts_xml(spark, out_dir))
+    # Only the clean side is read: drop the lazy corrupt-side cache
+    # split_corrupt registers, so none outlives the call.
+    corrupt.unpersist()
     att = F.element_at(F.col("prilohy"), 1)
     return flatten_contracts(clean).select(
         "id",

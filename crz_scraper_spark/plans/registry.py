@@ -39,22 +39,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # every query whose CODE or ORACLE changed this round (first check of
 # the new shape) + the remaining slots refresh the STALEST coverage —
 # queries whose last driver check is oldest, oldest-first in registry
-# order. Changed code in this rotation: the contracts ingest path —
-# split_corrupt no longer caches the whole dump behind the clean side,
-# stage 2 and flatten_contracts are built as SQL text, the streaming
-# helpers size state partitions to min(8, defaultParallelism) through one
-# conf scope, and compaction's salt is one SQL expression with a read-back
-# that skips schema inference. The oracled queries on that path take the
-# changed-code slots (stage2_contract_filter, xml_ingest_flatten and
-# streaming_interval_join are already pinned): compaction_roundtrip,
-# jsonl_ingest_roundtrip and the seven unpinned oracled streaming_*
-# queries. The staleness slots start with returned_revenue_by_customer,
-# carried over from the last rotation, then take 35 of the r9-checked
-# tier in registry order (simhash_incremental_md5, already refreshed by
-# the last rotation, is skipped); avg_qty_outlier_revenue,
-# disjunctive_brand_quantity, lonely_returning_supplier,
-# rich_inactive_customers and top_revenue_supplier roll to the next
-# rotation.
+# order. Changed code in this rotation: cache lifetime — every function
+# that persists a frame now releases it before returning (bounded
+# results through catalog.collect_and_release, corpus-sized ones
+# pinned), semantic_dedup owns its base, the Lloyd trainer persists
+# nothing and its three callers persist the fanned vectors once, and
+# xml_ingest_flatten (already pinned) releases the corrupt-side cache
+# it does not read. The oracled queries on those paths take the
+# changed-code slots. The staleness slots start with the five r9-checked
+# queries carried over from the last rotation, then take 28 of the 29
+# oracled queries last checked in r10 and not refreshed since, in
+# registry order; excess_quantity_suppliers rolls to the next rotation.
 # The window stays all-oracled by policy (tests/test_integrity.py:
 # every window slot must hash-match, the strongest driver signal) —
 # the rows-only entries are deliberately never window-rotated: each
@@ -68,54 +63,55 @@ _FIRST_WINDOW = [
     "xml_ingest_flatten",       # S1/S2 XML dump scan + corrupt routing
     "minhash_near_dup_md5",     # dedup: MinHash-LSH (portable hash)
     "streaming_interval_join",  # §2.8 stream-stream interval join
-    # -- changed code: first check of the ingest path's new shape --------
-    "compaction_roundtrip",
-    "jsonl_ingest_roundtrip",
-    "streaming_left_outer_join",
-    "streaming_tumbling_hourly",
-    "streaming_parquet_sink_roundtrip",
-    "streaming_upsert_sink_roundtrip",
-    "streaming_enriched_segments",
-    "streaming_dedup_events",
-    "streaming_stateful_counts",
-    # -- staleness refresh: carried over, then last checked r9 (35 of 40
-    #    oracled, registry order)
-    "returned_revenue_by_customer",
-    "ewma_nation_revenue",
-    "props_json_rollup",
-    "props_variant_rollup",
-    "udtf_widen_roundtrip",
+    # -- changed code: first check of the cache-lifetime rule ------------
+    "semantic_dedup",
+    "semantic_dedup_trained_fixed",
     "embedding_kmeans_clusters",
-    "ann_lsh_recall",
-    "fuzzy_name_pairs_refined",
-    "cosine_topk_bruteforce",
-    "pdf_table_detect_udtf",
-    "hll_distinct_md5",
-    "status_priority_grouping_sets",
-    "dictionary_oov",
-    "cube_status_priority",
-    "session_window_agg",
-    "value_stats",
-    "value_outliers",
-    "table_profile",
-    "value_histogram",
-    "monthly_revenue_growth",
-    "brand_part_rollup",
-    "events_dedup_first",
-    "part_triangles",
-    "value_time_regression",
-    "mixture_weights",
-    "sliding_window_counts",
-    "value_percentiles",
-    "trailing_hour_stats",
-    "priority_by_shipwindow",
-    "large_volume_orders",
-    "regional_local_volume",
-    "forecast_revenue",
-    "order_priority_semijoin",
-    "nation_volume_shipping",
-    "customer_order_distribution",
-    "promo_revenue_ratio",
+    "embedding_quantization_recall",
+    "token_heavy_hitters",
+    "corpus_drift_topk",
+    "bm25_search",
+    "cms_token_estimate",
+    "fuzzy_name_pairs_banded",
+    "ann_ivf_topk",
+    "ann_pq_topk",
+    "curation_pipeline_audit_md5",
+    # -- staleness refresh: carried over (last checked r9)
+    "avg_qty_outlier_revenue",
+    "disjunctive_brand_quantity",
+    "lonely_returning_supplier",
+    "rich_inactive_customers",
+    "top_revenue_supplier",
+    # -- staleness refresh: last checked r10 (28 of 29 oracled, registry
+    #    order)
+    "sql_shipping_priority",
+    "revenue_by_nation",
+    "quality_band_filter",
+    "weighted_sample",
+    "token_budget_sample",
+    "bloom_decontaminate",
+    "asof_last_purchase",
+    "range_click_purchase",
+    "sessionization",
+    "ann_lsh_topk",
+    "containment_near_dup",
+    "salted_skew_join",
+    "quantile_histogram_profile",
+    "schema_evolution_roundtrip",
+    "bucketed_colocated_join",
+    "hll_incremental_md5",
+    "delete_by_key_audit",
+    "part_pagerank",
+    "part_reach_3hops",
+    "referential_integrity_audit",
+    "range_split_points",
+    "min_cost_supplier",
+    "part_affinity",
+    "association_rules",
+    "nation_market_share",
+    "product_profit",
+    "important_part_value",
+    "part_supplier_variety",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crz_scraper_spark.catalog import fan_out, load_table, pin
+from crz_scraper_spark.catalog import collect_and_release, fan_out, load_table
 from crz_scraper_spark.functions.text import WORD_SEPARATOR_RE, tokens_nonempty
 from crz_scraper_spark.operators.dedup import (
     fixed_centroids,
@@ -183,7 +183,11 @@ def embedding_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         F.lit(1e-12),
     )
     qv = F.transform(F.col("v"), lambda x: F.round(x / scale))
-    base = emb.select("vec_id", "v", qv.alias("q")).cache()
+    # Not cached: all four top-k inputs read `base`, but a cache would
+    # have to be released before returning, which means running the
+    # report here; measured at sf0.1 that costs more (one more job, about
+    # 0.3 s) than the second embeddings scan the plan does without it.
+    base = emb.select("vec_id", "v", qv.alias("q"))
     exact = cosine_topk(
         base.select("vec_id", F.col("v").alias("embedding")),
         base.filter(F.col("vec_id") < 8).select(
@@ -287,8 +291,7 @@ def _with_recall_guard(
     the driver's weak rows-only count into a real index-health assertion
     (VERDICT r3 item 7)."""
     # topk feeds BOTH the returned rows and the health aggregate — persist
-    # so the ANN pipeline (k-means training, encode, score) runs once per
-    # materialization, not twice (bench clears cache between queries).
+    # so the ANN pipeline (k-means training, encode, score) runs once.
     topk = topk.persist()
     n = corpus.agg(F.count(F.lit(1)).alias("__n"))
     hits = exact.join(
@@ -313,12 +316,8 @@ def _with_recall_guard(
     guarded = topk.join(F.broadcast(health)).filter(
         F.col("corpus_recall_ppm") >= F.col("floor_ppm")
     )
-    # The guarded report is bounded (8 queries × k rows) — materialize it
-    # and release the persisted topk before returning, so the ANN
-    # pipeline's cache never outlives the call.
-    rows = guarded.collect()
-    topk.unpersist()
-    return topk.sparkSession.createDataFrame(rows, guarded.schema)
+    # 8 queries × k rows.
+    return collect_and_release(guarded, topk)
 
 
 def _exact_l2_topk(emb: DataFrame, k: int = 5) -> DataFrame:
@@ -1612,12 +1611,8 @@ def fuzzy_name_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_dist"),
         )
     )
-    # The per-brand rollup is bounded (one row per brand) — materialize it
-    # and release the persisted name-group frame before returning, so no
-    # cache outlives the call in driver-gate/bench sessions.
-    rows = report.collect()
-    g.unpersist()
-    return spark.createDataFrame(rows, report.schema)
+    # One row per brand.
+    return collect_and_release(report, g)
 
 
 def _fuzzy_name_pairs_banded_sql() -> str:
@@ -1758,9 +1753,7 @@ _SEMDEDUP_TAU = 0.35
 _SEMDEDUP_SEED = 99
 
 
-def _semantic_dedup_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The un-materialized SemDeDup frame — plan-shape tests inspect THIS
-    (the released query below cuts lineage, hiding the join shape)."""
+def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     cents = fixed_centroids(_SEMDEDUP_DIM, _SEMDEDUP_CELLS, _SEMDEDUP_SEED)
     return semantic_dedup(
@@ -1776,10 +1769,6 @@ def _semantic_dedup_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 35.8s -> ~2s at sf1-scale.
         pair_impl="gram",
     )
-
-
-def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _release_semdedup_cache(_semantic_dedup_lazy(spark, sf_dir))
 
 
 _KM_K = 8
@@ -1807,16 +1796,15 @@ def embedding_kmeans_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_lloyd_distributed,
     )
 
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    # unpersist_base=False + eager checkpoint of the k-row report: the
-    # trainer unpersisting in its finally meant the FINAL assignment pass
-    # (lazily executed after return) re-scanned + re-fanned the input
-    # instead of reading the trainer's cache (r10, guide §1.2/§2.4 — one
-    # corpus scan and one round-robin exchange removed per run). The
-    # checkpoint holds only k rows; the base is released before return.
+    # The trainer reads its input once per iteration and the final
+    # assignment once more: persisting the fanned vectors keeps that to
+    # one corpus scan and one round-robin exchange per run.
+    emb = fan_out(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    ).persist()
     assigned, _cents, hist = kmeans_lloyd_distributed(
         emb, "vec_id", "embedding", k=_KM_K, n_iter=_KM_ITER,
-        dim=_KM_DIM, seed=_KM_SEED, unpersist_base=False,
+        dim=_KM_DIM, seed=_KM_SEED,
     )
     # In-query invariant: Lloyd's inertia is provably non-increasing; a
     # trainer regression that breaks monotonicity (or empties a cell)
@@ -1831,8 +1819,8 @@ def embedding_kmeans_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.lit(monotone) & (F.col("n_vectors") > 0))
         .orderBy("cell")
     )
-    report._crz_cached = assigned._crz_base
-    return _release_semdedup_cache(report)
+    # k rows.
+    return collect_and_release(report, emb)
 
 
 def _kmeans_train_ctes() -> tuple[str, str]:
@@ -1948,47 +1936,36 @@ def semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     raw = load_table(spark, sf_dir, "embeddings")
-    emb = fan_out(raw)
     # k ∝ √n is the IVF balance point: quantizer assignment costs O(n·k)
     # and the within-cell pair phase O(n·(n/k)) — both n^1.5 at k = √n. A
     # FIXED k (the pre-round-5 k=8) makes the pair phase quadratic the
     # moment the corpus outgrows it (measured: 128 s at sf3 vs 16 s at
     # sf1 for 3× data). Count the RAW table, not the fanned frame: the
     # value is identical, but counting after repartition shuffles the
-    # whole table to answer a metadata question (r10, guide §2.1).
+    # whole table to answer a metadata question.
     n = raw.count()
     k = max(8, isqrt(n))
-    # unpersist_base=False: the SemDeDup pass below runs over the SAME
-    # cast+repartitioned vectors the trainer just cached — feeding it the
-    # trainer's persisted base saves one corpus scan + one fan-out
-    # exchange per query (r10, guide §1.2/§2.4); values are identical
-    # (the cast is already applied, the re-cast is a no-op).
-    _assigned, cents, _hist = kmeans_lloyd_distributed(
-        emb, "vec_id", "embedding", k=k, n_iter=3, unpersist_base=False,
-    )
-    tbase = _assigned._crz_base
-    out = _release_semdedup_cache(
-        _semdedup_invariant(
-            semantic_dedup(
-                tbase,
-                cents,
-                "__id",
-                "__v",
-                threshold=_SEMDEDUP_TAU,
-                round_to=4,
-                pair_impl="gram",
-                # Trained centroids balance occupancy on healthy data,
-                # but a genuinely dense direction (boilerplate
-                # embeddings) can still produce a mega cell; bound
-                # per-task memory regardless.
-                max_cell_rows=1024,
-            )
+    # The trainer and the SemDeDup pass read the SAME persisted vectors:
+    # one corpus scan + one fan-out exchange per query.
+    emb = fan_out(raw.select("vec_id", "embedding")).persist()
+    try:
+        _assigned, cents, _hist = kmeans_lloyd_distributed(
+            emb, "vec_id", "embedding", k=k, n_iter=3,
         )
-    )
-    # The release wrapper's eager checkpoint has materialized the verdict;
-    # the trainer's base has no further consumer.
-    tbase.unpersist()
-    return out
+        sd = semantic_dedup(
+            emb,
+            cents,
+            threshold=_SEMDEDUP_TAU,
+            round_to=4,
+            pair_impl="gram",
+            # Trained centroids balance occupancy on healthy data, but a
+            # genuinely dense direction (boilerplate embeddings) can still
+            # produce a mega cell; bound per-task memory regardless.
+            max_cell_rows=1024,
+        )
+    finally:
+        emb.unpersist()
+    return _semdedup_invariant(sd)
 
 
 def semantic_dedup_trained_fixed_q(
@@ -2009,24 +1986,19 @@ def semantic_dedup_trained_fixed_q(
         kmeans_lloyd_distributed,
     )
 
-    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    # unpersist_base=False: same cache-sharing as semantic_dedup_trained —
-    # the dedup pass reads the trainer's persisted vectors instead of
-    # re-scanning + re-fanning the input (r10, guide §1.2/§2.4).
-    _assigned, cents, hist = kmeans_lloyd_distributed(
-        emb, "vec_id", "embedding", k=_KM_K, n_iter=_KM_ITER,
-        dim=_KM_DIM, seed=_KM_SEED, unpersist_base=False,
-    )
-    tbase = _assigned._crz_base
-    monotone = all(
-        hist[i + 1] <= hist[i] + 1e-9 for i in range(len(hist) - 1)
-    )
-    sd = _semdedup_invariant(
-        semantic_dedup(
-            tbase,
+    # Same cache-sharing as semantic_dedup_trained: the trainer and the
+    # dedup pass read one persisted copy of the fanned vectors.
+    emb = fan_out(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    ).persist()
+    try:
+        _assigned, cents, hist = kmeans_lloyd_distributed(
+            emb, "vec_id", "embedding", k=_KM_K, n_iter=_KM_ITER,
+            dim=_KM_DIM, seed=_KM_SEED,
+        )
+        sd = semantic_dedup(
+            emb,
             cents,
-            "__id",
-            "__v",
             threshold=_SEMDEDUP_TAU,
             round_to=4,
             pair_impl="gram",
@@ -2040,16 +2012,14 @@ def semantic_dedup_trained_fixed_q(
             # parity-tested output-identical, so the oracle is unchanged.
             max_cell_rows=1024,
         )
+    finally:
+        emb.unpersist()
+    monotone = all(
+        hist[i + 1] <= hist[i] + 1e-9 for i in range(len(hist) - 1)
     )
     # Mirror the trainer's monotone-inertia witness (the oracle gates on
     # the same predicate): a trainer regression empties the result.
-    gated = sd.filter(F.lit(monotone))
-    cached = getattr(sd, "_crz_cached", None)
-    if cached is not None:
-        gated._crz_cached = cached
-    out = _release_semdedup_cache(gated)
-    tbase.unpersist()
-    return out
+    return _semdedup_invariant(sd).filter(F.lit(monotone))
 
 
 def _semantic_dedup_trained_fixed_sql() -> str:
@@ -2100,52 +2070,26 @@ def semantic_dedup_scaled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = raw.count()
     n_cells = max(8, n // 250)
     cents = fixed_centroids(_SEMDEDUP_DIM, n_cells, _SEMDEDUP_SEED)
-    return _release_semdedup_cache(
-        _semdedup_invariant(
-            semantic_dedup(
-                emb,
-                cents,
-                "vec_id",
-                "embedding",
-                threshold=_SEMDEDUP_TAU,
-                round_to=4,
-                # Per-cell BLAS gram matrix for the pair phase:
-                # within-cell work is one vectorized (c × dim) @
-                # (dim × c) per cell instead of c²/2 interpreted 64-term
-                # dots (measured 29s -> see PLANS.md at sf1).
-                # max_cell_rows bounds per-task memory when fixed RANDOM
-                # centroids meet a drifted distribution and a mega cell
-                # forms (the sf3 datapoint measured 363 s with one
-                # 50k-row cell serialized into a single task; the blocked
-                # pair phase distributes it over bounded block-pair
-                # tasks).
-                pair_impl="gram",
-                max_cell_rows=1024,
-            )
+    return _semdedup_invariant(
+        semantic_dedup(
+            emb,
+            cents,
+            "vec_id",
+            "embedding",
+            threshold=_SEMDEDUP_TAU,
+            round_to=4,
+            # Per-cell BLAS gram matrix for the pair phase: within-cell
+            # work is one vectorized (c × dim) @ (dim × c) per cell
+            # instead of c²/2 interpreted 64-term dots (measured 29s ->
+            # see PLANS.md at sf1). max_cell_rows bounds per-task memory
+            # when fixed RANDOM centroids meet a drifted distribution and
+            # a mega cell forms (the sf3 datapoint measured 363 s with one
+            # 50k-row cell serialized into a single task; the blocked pair
+            # phase distributes it over bounded block-pair tasks).
+            pair_impl="gram",
+            max_cell_rows=1024,
         )
     )
-
-
-def _release_semdedup_cache(result: DataFrame) -> DataFrame:
-    """Consume the `_crz_cached` handle `semantic_dedup` exposes: cut the
-    result's lineage with an EAGER localCheckpoint (the checkpoint holds
-    only the narrow per-vector verdict — vec_id/cell/kept/rep_id — on
-    executor block storage, freed by the ContextCleaner when the frame is
-    GC'd), then unpersist the wide MEMORY-persisted vector base
-    immediately. Without this the base frame leaks until clearCache in
-    long-lived driver-gate/bench sessions. NOT a driver collect: the
-    verdict table is corpus-sized (one row per vector), so it stays
-    distributed — the bounded-collect pattern fuzzy_name_pairs_banded
-    uses applies only to per-group rollups. The eager-checkpoint
-    trade-offs (construction-time execution, unreplicated blocks,
-    GC-released, pre-4.0 Connect persist fallback) are documented once on
-    `catalog.pin`, which this wraps (ADVICE r10)."""
-    cached = getattr(result, "_crz_cached", None)
-    if cached is None:
-        return result
-    out = pin(result)
-    cached.unpersist()
-    return out
 
 
 def _semdedup_invariant(result: DataFrame) -> DataFrame:
@@ -2156,16 +2100,7 @@ def _semdedup_invariant(result: DataFrame) -> DataFrame:
     every row (one per input vector)."""
     kept_ok = (F.col("kept") == 1) & (F.col("rep_id") == F.col("vec_id"))
     drop_ok = (F.col("kept") == 0) & (F.col("rep_id") < F.col("vec_id"))
-    out = result.filter(kept_ok | drop_ok)
-    # Re-attach the persisted-base handle the filter would otherwise drop
-    # (any DataFrame transformation returns a fresh object) so the
-    # _release_semdedup_cache wrapper every semantic_dedup* plan function
-    # applies can checkpoint the verdict and unpersist the base — the
-    # handle now has an actual consumer on every registry path.
-    cached = getattr(result, "_crz_cached", None)
-    if cached is not None:
-        out._crz_cached = cached
-    return out
+    return result.filter(kept_ok | drop_ok)
 
 
 def _semantic_dedup_sql() -> str:

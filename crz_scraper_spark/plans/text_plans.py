@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crz_scraper_spark.catalog import fan_out, load_table, pin
+from crz_scraper_spark.catalog import (
+    collect_and_release,
+    fan_out,
+    load_table,
+    pin,
+)
 from crz_scraper_spark.functions.text import (
     WORD_SEPARATOR_RE,
     subject_extract,
@@ -674,11 +679,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= 10)
         .select("doc_id", "score", "rnk")
     )
-    # Top-10 rows — materialize and release the persisted per_doc posting
-    # frame before returning (no cache outlives the call).
-    rows = result.collect()
-    per_doc.unpersist()
-    return spark.createDataFrame(rows, result.schema)
+    return collect_and_release(result, per_doc)
 
 
 def _bm25_sql() -> str:
@@ -916,25 +917,19 @@ def cms_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .persist()
     )
-    try:
-        sketch = cms_build(
-            wc, "word", _CMS_DEPTH, _CMS_WIDTH, weight_col="cnt"
-        )
-        total = wc.agg(F.sum("cnt")).collect()[0][0]
-        # Probe set = the exact >1% heavy hitters (bounded at <= 100 rows by
-        # construction), so the output carries both truths side by side.
-        probes = wc.filter(F.col("cnt") * 100 > F.lit(total))
-        est = cms_estimate(sketch, probes, "word", _CMS_DEPTH, _CMS_WIDTH)
-        out = est.select(
-            "word",
-            "cnt",
-            "est",
-            (F.col("est") - F.col("cnt")).alias("overcount"),
-        ).orderBy(F.desc("cnt"), "word")
-        out = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        wc.unpersist()
-    return out
+    sketch = cms_build(wc, "word", _CMS_DEPTH, _CMS_WIDTH, weight_col="cnt")
+    total = wc.agg(F.sum("cnt")).collect()[0][0]
+    # Probe set = the exact >1% heavy hitters (bounded at <= 100 rows by
+    # construction), so the output carries both truths side by side.
+    probes = wc.filter(F.col("cnt") * 100 > F.lit(total))
+    est = cms_estimate(sketch, probes, "word", _CMS_DEPTH, _CMS_WIDTH)
+    out = est.select(
+        "word",
+        "cnt",
+        "est",
+        (F.col("est") - F.col("cnt")).alias("overcount"),
+    ).orderBy(F.desc("cnt"), "word")
+    return collect_and_release(out, wc)
 
 
 def _cms_sql() -> str:

@@ -21,19 +21,31 @@ def con():
     c.close()
 
 
+def _cache_is_empty(spark) -> bool:
+    """The cache-lifetime rule (ARCHITECTURE.md): a query function releases
+    every frame it persists before it returns, so once its result has been
+    consumed the CacheManager is empty — nothing between queries calls
+    clearCache for it."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("name", _SQL_QUERIES)
 def test_oracle_parity(spark, sf_dir, con, name):
     fn, sql = REGISTRY[name]
+    spark.catalog.clearCache()
     problems = compare(fn(spark, sf_dir), con, sql)
     assert not problems, f"{name}: {problems}"
+    assert _cache_is_empty(spark), f"{name} left a cached frame behind"
 
 
 @pytest.mark.parametrize("name", _ROWS_ONLY)
 def test_rows_only_queries_run(spark, sf_dir, name):
     fn, _sql = REGISTRY[name]
+    spark.catalog.clearCache()
     df = fn(spark, sf_dir)
     assert df.count() >= 0
     assert df.columns  # stable non-empty schema
+    assert _cache_is_empty(spark), f"{name} left a cached frame behind"
 
 
 def test_entry_smoke(spark):

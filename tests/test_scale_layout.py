@@ -460,43 +460,86 @@ def test_epoch_shuffle_no_global_sort_window(spark):
     assert "Exchange SinglePartition" not in plan
 
 
-def test_semantic_dedup_pair_join_is_equi_on_cell(spark):
+def _semdedup_inputs(spark, sf_dir):
+    from crz_scraper_spark.catalog import fan_out, load_table
+    from crz_scraper_spark.operators.dedup import fixed_centroids
+    from crz_scraper_spark.plans import scale_plans as sp
+
+    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    cents = fixed_centroids(
+        sp._SEMDEDUP_DIM, sp._SEMDEDUP_CELLS, sp._SEMDEDUP_SEED
+    )
+    return emb, cents
+
+
+def test_semantic_dedup_pair_join_is_equi_on_cell(spark, sf_dir):
     """SemDeDup's quadratic is bounded per cluster ONLY if the pair
     compare joins equi on the cell id (broadcast or shuffled hash) — a
-    nested-loop cross join would be O(n^2) corpus-wide."""
-    from crz_scraper_spark.plans.scale_plans import _semantic_dedup_lazy
+    nested-loop cross join would be O(n^2) corpus-wide. Inspected on
+    `_semantic_dedup_plan`'s lazy verdict (the operator pins it, which
+    cuts the lineage and hides the join shape), for both pair phases."""
+    from crz_scraper_spark.operators.dedup import _semantic_dedup_plan
 
-    lazy = _semantic_dedup_lazy(spark, "/root/testdata/sf0.001")
-    try:
-        plan = _plan(lazy)
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        # release the SAME frame's persisted base (ADVICE r6: a second
-        # _semantic_dedup_lazy build would leave the inspected frame's
-        # cache registered — unpersist the one we actually built)
-        lazy._crz_cached.unpersist()
+    emb, cents = _semdedup_inputs(spark, sf_dir)
+    for pair_impl in ("expr", "gram"):
+        lazy, base = _semantic_dedup_plan(
+            emb, cents, "vec_id", "embedding", 0.35, 4, pair_impl, None
+        )
+        try:
+            plan = _plan(lazy)
+            assert "BroadcastNestedLoopJoin" not in plan
+            assert "CartesianProduct" not in plan
+        finally:
+            base.unpersist()
 
 
-def test_release_semdedup_cache_unpersists_base(spark):
-    """ADVICE r5: the `_crz_cached` handle must have a CONSUMER on the
-    registry paths — `_release_semdedup_cache` checkpoints the verdict and
-    unpersists the wide vector base, row-identically."""
-    from crz_scraper_spark.plans.scale_plans import (
-        _release_semdedup_cache,
-        _semantic_dedup_lazy,
+def test_semantic_dedup_releases_its_base(spark, sf_dir):
+    """`semantic_dedup` owns the base it persists: once it returns, the
+    CacheManager is empty (the verdict is pinned, which the CacheManager
+    does not hold), and its rows equal `_semantic_dedup_plan`'s."""
+    from crz_scraper_spark.operators.dedup import (
+        _semantic_dedup_plan,
+        semantic_dedup,
     )
 
-    res = _semantic_dedup_lazy(spark, "/root/testdata/sf0.001")
-    base = res._crz_cached
-    expect = sorted(tuple(r) for r in res.collect())
-    lvl = base.storageLevel
-    assert lvl.useMemory or lvl.useDisk  # persisted going in
-    out = _release_semdedup_cache(res)
-    lvl = base.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)  # base released
-    assert not hasattr(out, "_crz_cached")  # handle consumed, not passed on
+    emb, cents = _semdedup_inputs(spark, sf_dir)
+    kw = dict(threshold=0.35, round_to=4, pair_impl="gram")
+    spark.catalog.clearCache()
+    out = semantic_dedup(emb, cents, "vec_id", "embedding", **kw)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    lazy, base = _semantic_dedup_plan(
+        emb, cents, "vec_id", "embedding", max_cell_rows=None, **kw
+    )
+    try:
+        expect = sorted(tuple(r) for r in lazy.collect())
+    finally:
+        base.unpersist()
+    assert expect
     assert sorted(tuple(r) for r in out.collect()) == expect
+
+
+def test_collect_and_release_unpersists_after_collect(spark):
+    """`catalog.collect_and_release` returns the bounded result's rows
+    under its schema and leaves the CacheManager empty — also when the
+    collect raises."""
+    from crz_scraper_spark.catalog import collect_and_release
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    base = spark.range(100).withColumn("g", F.col("id") % 3).persist()
+    report = base.groupBy("g").agg(F.count("*").alias("n")).orderBy("g")
+    out = collect_and_release(report, base)
+    assert cache_empty()
+    assert out.schema == report.schema
+    assert [tuple(r) for r in out.collect()] == [(0, 34), (1, 33), (2, 33)]
+
+    base = spark.range(10).persist()
+    bad = base.select(F.assert_true(F.col("id") < 5).alias("ok"))
+    with pytest.raises(Exception):
+        collect_and_release(bad, base)
+    assert cache_empty()
 
 
 def test_sequence_packing_single_tokenizer_pass(spark):
