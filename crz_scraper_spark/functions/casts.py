@@ -13,7 +13,8 @@ Window *prefix* sums (running totals) are evaluated in frame order by every
 engine, so they stay plain doubles.
 
 The reference's numeric story is `float()` casts on strings with
-reject-on-invalid (`02_filter_by_CIN.py:233-243`) — see `try_double`.
+reject-on-invalid (`02_filter_by_CIN.py:233-243`); the engine writes that
+as `try_cast(x AS DOUBLE)` at the point of use.
 """
 
 from __future__ import annotations
@@ -37,9 +38,3 @@ def davg(expr: Column, scale: int = 6, cast_scale: int = 4) -> Column:
         scale,
     )
 
-
-def try_double(col: Column | str) -> Column:
-    """String → double with NULL on invalid — the reference's
-    `float()`-with-ValueError-reject semantics (P7) as `try_cast`."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("double")

@@ -14,15 +14,14 @@ same deterministic hash family, there are NO false negatives: prefilter +
 exact verify ≡ the exact join, so the composed operator stays fully
 oracle-checkable.
 
-Two key forms, one Kirsch-Mitzenmacher probe core (`_probe_positions` —
-build and probe share it, so the no-false-negative invariant is structural):
-
-- string-keyed (`build_bloom`/`might_contain_udf`): h1/h2 from two C-speed
-  crc32 calls per item; good when the caller has no precomputed hash.
-- hash-keyed (`build_bloom_from_hashes`/`might_contain_hash_udf`): the
-  64-bit key (e.g. Spark-side `xxhash64`) is split into h1/h2 halves — the
-  JVM hashes in codegen and the UDF ships 8-byte longs instead of strings
-  (measured: the sf0.1 decontamination probe dropped ~10× in UDF cost).
+Keys are PRE-HASHED 64-bit longs (`build_bloom_from_hashes` /
+`might_contain_hash_udf`): a string item is hashed Spark-side
+(`xxhash64`), and the long is split into the h1/h2 halves of one
+Kirsch-Mitzenmacher probe core (`_probe_positions` — build and probe share
+it, so the no-false-negative invariant is structural). The JVM hashes in
+codegen and the UDF ships 8-byte longs instead of strings (measured: the
+sf0.1 decontamination probe dropped ~10× in UDF cost against crc32 halves
+of the strings in Python).
 
 The hash choice is FREE of cross-engine concerns: correctness never
 depends on which items the filter passes (exactness comes from the verify
@@ -34,7 +33,6 @@ testable.
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterable
 
 import numpy as np
@@ -48,7 +46,7 @@ def _probe_positions(
     h1: np.ndarray, h2: np.ndarray, n_bits: int, k: int
 ) -> Iterable[np.ndarray]:
     """The ONE probe sequence (Kirsch-Mitzenmacher: pos_i = h1 + i*h2 mod
-    n_bits) shared by every build/probe pair below — edits here keep both
+    n_bits) shared by the build and the probe below — edits here keep both
     sides bit-identical by construction."""
     h2 = h2 | np.uint64(1)  # odd stride: never degenerates on 2^k n_bits
     for i in range(k):
@@ -70,57 +68,8 @@ def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
     )
 
 
-def _crc_halves(items: Iterable[bytes]) -> tuple[np.ndarray, np.ndarray]:
-    enc = list(items)
-    h1 = np.fromiter(
-        (zlib.crc32(e) for e in enc), dtype=np.uint64, count=len(enc)
-    )
-    h2 = np.fromiter(
-        (zlib.crc32(e, 0x9E3779B9) for e in enc),
-        dtype=np.uint64,
-        count=len(enc),
-    )
-    return h1, h2
-
-
 def _hash_halves(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return h, h >> np.uint64(32)
-
-
-def build_bloom(
-    items: Iterable[str], n_bits: int = 1 << 20, k: int = 5
-) -> np.ndarray:
-    """Build the bitset from the SMALL side (driver-side; the eval set /
-    blocklist is index-metadata-sized by assumption). n_bits=2^20 at k=5
-    holds ~10^5 items under 1% fp; size for ~1.44 * n * log2(1/fp) bits."""
-    bits = np.zeros((n_bits + 7) // 8, dtype=np.uint8)
-    h1, h2 = _crc_halves(it.encode() for it in items)
-    for pos in _probe_positions(h1, h2, n_bits, k):
-        _set_bits(bits, pos)
-    return bits
-
-
-def might_contain_udf(
-    spark: SparkSession, bits: np.ndarray, n_bits: int = 1 << 20, k: int = 5
-):
-    """Arrow-batched membership probe over the broadcast bitset (string
-    keys). Never False for an inserted item; True for a bounded fraction
-    of absent items, which the caller removes with an exact broadcast
-    join. Nulls probe as False."""
-    bc = spark.sparkContext.broadcast(bits)
-
-    @pandas_udf(BooleanType())
-    def might_contain(s: pd.Series) -> pd.Series:
-        b = bc.value
-        ok = s.notna().to_numpy().copy()
-        h1, h2 = _crc_halves(
-            x.encode() if isinstance(x, str) else b"" for x in s
-        )
-        for pos in _probe_positions(h1, h2, n_bits, k):
-            ok &= _test_bits(b, pos).astype(bool)
-        return pd.Series(ok)
-
-    return might_contain
 
 
 def build_bloom_from_hashes(

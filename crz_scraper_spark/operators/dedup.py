@@ -778,6 +778,12 @@ def fixed_centroids(dim: int, n_cells: int, seed: int = 99) -> list[list[float]]
     return rng.standard_normal((n_cells, dim)).tolist()
 
 
+# Rows per block of the SemDeDup pair phase: a cell of c rows is split
+# into ceil(c / _CELL_BLOCK_ROWS) blocks, so one task's gram matrix is at
+# most (2 × _CELL_BLOCK_ROWS)² whatever the cell size.
+_CELL_BLOCK_ROWS = 1024
+
+
 def semantic_dedup(
     emb: DataFrame,
     centroids: list[list[float]],
@@ -785,8 +791,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.35,
     round_to: int = 4,
-    pair_impl: str = "expr",
-    max_cell_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster the
     embedding space, then drop any vector whose cosine similarity to a
@@ -798,32 +802,36 @@ def semantic_dedup(
     vector 3's rep_id is 2, which is itself dropped; a consumer that needs
     a KEPT representative per dropped vector resolves chains with the
     connected-components pass (`near_dup_clusters`) over the same pairs.
+    The id column must be integral (the gram groups compare and min ids
+    in numpy).
 
     Plan shape / 100 TB posture: cell assignment is a scalar argmax over the
     centroid matrix as ONE 2-D array literal (pure codegen scan, no UDF, no
-    shuffle — the `bucket_signature` trick); the pairwise compare is a
-    self-join EQUI on the cell id, so the quadratic blow-up is bounded per
-    cluster (SemDeDup's whole point — n_cells grows with the corpus so
-    cluster sizes stay bounded; a skewed giant cluster is handled by
-    re-clustering its members, not by salting, since intra-cluster pairs are
-    the semantics). Norms are precomputed per row BEFORE the pair join
-    (higher-order array expressions are interpreted — the measured 3× of
-    `parity_plans.embedding_cosine_near_dup` applies here too).
+    shuffle — the `bucket_signature` trick). The pair phase is a BLOCKED
+    BLAS gram: each cell's rows are hashed into
+    ceil(cell rows / _CELL_BLOCK_ROWS) blocks, and each unordered block
+    pair is one applyInPandas group that computes its cosines as
+    (X @ X.T) / outer(norms). Pairs never leave their cell, so the
+    quadratic work is bounded per cluster (SemDeDup's whole point — n_cells
+    grows with the corpus so cluster sizes stay bounded), and the blocks
+    bound each task's memory when a cell is oversized anyway; intra-cluster
+    pairs are the semantics, so a giant cluster is split into blocks, never
+    salted away.
 
     Cross-engine determinism: per-centroid similarities are rounded to 6 dp
     BEFORE the argmax and pair similarities to `round_to` before the
-    threshold cut, so a last-ulp summation difference cannot flip a cell
-    assignment or the keep/drop decision; argmax ties break to the lowest
-    centroid index on both engines.
+    threshold cut, so a last-ulp summation difference (BLAS pairwise vs a
+    SQL engine's sequential sum) cannot flip a cell assignment or the
+    keep/drop decision; argmax ties break to the lowest centroid index on
+    both engines.
 
     Cache lifetime: the per-vector base (vectors, cell, norm) is persisted
-    because it feeds both pair-join sides and the result join; the narrow
-    verdict is `catalog.pin`ned and the base released before returning,
-    so no cache outlives the call.
+    because it feeds the cell counts, the pair phase and the result join;
+    the narrow verdict is `catalog.pin`ned and the base released before
+    returning, so no cache outlives the call.
     """
     result, base = _semantic_dedup_plan(
-        emb, centroids, id_col, vec_col, threshold, round_to, pair_impl,
-        max_cell_rows,
+        emb, centroids, id_col, vec_col, threshold, round_to
     )
     out = pin(result)
     base.unpersist()
@@ -837,8 +845,6 @@ def _semantic_dedup_plan(
     vec_col: str,
     threshold: float,
     round_to: int,
-    pair_impl: str,
-    max_cell_rows: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """`semantic_dedup`'s lazy verdict plus the persisted base it reads —
     the operator pins the first and releases the second; plan-shape tests
@@ -883,159 +889,94 @@ def _semantic_dedup_plan(
                 "__nrm": _norm(v),
             }
         )
-    if pair_impl == "gram":
-        # Schema must follow the id column's actual type — hardcoding
-        # bigint would miscast/fail for string or decimal ids that the
-        # expression path accepts. Checked before the persist below, so a
-        # rejected call leaves no cache behind.
-        id_type = base.schema["vec_id"].dataType.simpleString()
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            raise ValueError(
-                f"semantic_dedup(pair_impl='gram'): id column {id_col!r} "
-                f"has type {id_type}; the BLAS gram path requires an "
-                f"integral id (numpy comparison + min semantics). Use "
-                f"pair_impl='expr' or map ids to integers first."
-            )
-    # base feeds BOTH self-join sides AND the final result join — persist
-    # so the scan + cell assignment + norms compute once, not three times
+    # The group output schema follows the id column's actual type; numpy
+    # comparison and min need an integral id. Checked before the persist
+    # below, so a rejected call leaves no cache behind.
+    id_type = base.schema["vec_id"].dataType.simpleString()
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"semantic_dedup: id column {id_col!r} has type {id_type}; the "
+            f"BLAS gram pair phase requires an integral id (numpy "
+            f"comparison + min semantics). Map ids to integers first."
+        )
+    # base feeds the cell counts, the pair phase AND the final result
+    # join — persist so the scan + cell assignment + norms compute once
     # (at scaled n_cells the assignment is the third of the cost).
     base = base.persist()
-    if pair_impl == "gram":
-        # Per-cell BLAS gram matrix instead of the pair self-join: one
-        # applyInPandas group per cell computes all within-cell cosines as
-        # (X @ X.T) / outer(norms) in vectorized BLAS — same dot-first,
-        # divide-then-round form as the expression path (last-ulp pairwise
-        # vs sequential summation absorbed by the round; parity asserted
-        # empirically in tests). Memory is O(cell_size²) per task, which
-        # is exactly the quantity SemDeDup's n_cells ∝ corpus bounds —
-        # the path for the scaled variant, while the oracled fixed-cell
-        # query keeps the SQL-reproducible expression join.
-        pair_schema = f"vec_id {id_type}, __rep {id_type}"
-        tau, rt = threshold, round_to
-
-        def _cell_drops(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            ids = pdf["vec_id"].to_numpy()
-            x = np.stack(pdf["__v"].to_numpy())  # (c, dim)
-            nrm = pdf["__nrm"].to_numpy()
-            sims = np.round((x @ x.T) / np.outer(nrm, nrm), rt)
-            lo = ids[:, None] < ids[None, :]  # a.vec_id < b.vec_id
-            ai, bi = np.nonzero((sims >= tau) & lo)
-            if len(bi) == 0:
-                return pd.DataFrame({"vec_id": [], "__rep": []}).astype(
-                    {"vec_id": "int64", "__rep": "int64"}
-                )
-            out = pd.DataFrame({"vec_id": ids[bi], "__rep": ids[ai]})
-            return out.groupby("vec_id", as_index=False)["__rep"].min()
-
-        if max_cell_rows is None:
-            drops = (
-                base.select("vec_id", "cell", "__v", "__nrm")
-                .groupBy("cell")
-                .applyInPandas(lambda _key, pdf: _cell_drops(pdf), pair_schema)
-                .groupBy("vec_id")
-                .agg(F.min("__rep").alias("__rep"))
-            )
-        else:
-            # MEGA-CELL-SAFE pair phase. One-task-per-cell dies when a cell
-            # is oversized (a genuine dense direction in embedding space —
-            # boilerplate docs, or drifted replicas): a 50k-row cell means
-            # one task allocating a 20 GB gram matrix. Instead, rows of a
-            # cell with c > max_cell_rows are hashed into
-            # nb = ceil(c / max_cell_rows) blocks and every UNORDERED block
-            # pair (bi ≤ bj) becomes its own applyInPandas group: each row
-            # explodes over the nb partner blocks (group key
-            # (cell, min(blk, other), max(blk, other)), so a pair group
-            # receives each side's rows exactly once), the group computes
-            # the cross-block gram (bi < bj: only cross pairs count —
-            # within-block pairs belong to the (bi, bi) group), and memory
-            # is bounded at O(max_cell_rows²) regardless of cell size. The
-            # within-cell O(c²) similarity work is SemDeDup's semantics —
-            # this distributes it over nb·(nb+1)/2 bounded tasks instead of
-            # serializing it into one unbounded one. Healthy cells have
-            # nb = 1 and take the identical single-group path. Replication
-            # cost: each row is shipped nb times (c²/max_cell_rows rows per
-            # mega cell — a factor dim/max_cell_rows of the unavoidable
-            # flops, i.e. noise for max_cell_rows ≥ dim).
-            counts = base.groupBy("cell").agg(
-                F.count(F.lit(1)).alias("__c")
-            )
-            nb_col = F.ceil(F.col("__c") / F.lit(max_cell_rows)).cast("int")
-            tagged = (
-                base.select("vec_id", "cell", "__v", "__nrm")
-                .join(F.broadcast(counts.select("cell", nb_col.alias("__nb"))),
-                      "cell")
-                .withColumn(
-                    "__blk",
-                    F.pmod(F.xxhash64(F.col("vec_id")), F.col("__nb")).cast(
-                        "int"
-                    ),
-                )
-            )
-            expanded = tagged.select(
-                "vec_id",
-                "cell",
-                "__v",
-                "__nrm",
-                "__blk",
-                F.explode(
-                    F.sequence(F.lit(0), F.col("__nb") - 1)
-                ).alias("__other"),
-            ).select(
-                "vec_id",
-                "cell",
-                "__v",
-                "__nrm",
-                "__blk",
-                F.least(F.col("__blk"), F.col("__other")).alias("__bi"),
-                F.greatest(F.col("__blk"), F.col("__other")).alias("__bj"),
-            )
-
-            def _block_drops(pdf: pd.DataFrame) -> pd.DataFrame:
-                import numpy as np
-
-                ids = pdf["vec_id"].to_numpy()
-                x = np.stack(pdf["__v"].to_numpy())
-                nrm = pdf["__nrm"].to_numpy()
-                blk = pdf["__blk"].to_numpy()
-                sims = np.round((x @ x.T) / np.outer(nrm, nrm), rt)
-                mask = ids[:, None] < ids[None, :]
-                if blk.min() != blk.max():
-                    # bi < bj group: within-block pairs are the
-                    # (bi, bi)/(bj, bj) groups' job — count cross only.
-                    mask &= blk[:, None] != blk[None, :]
-                ai, bi = np.nonzero((sims >= tau) & mask)
-                if len(bi) == 0:
-                    return pd.DataFrame({"vec_id": [], "__rep": []}).astype(
-                        {"vec_id": "int64", "__rep": "int64"}
-                    )
-                out = pd.DataFrame({"vec_id": ids[bi], "__rep": ids[ai]})
-                return out.groupby("vec_id", as_index=False)["__rep"].min()
-
-            drops = (
-                expanded.groupBy("cell", "__bi", "__bj")
-                .applyInPandas(lambda _key, pdf: _block_drops(pdf), pair_schema)
-                .groupBy("vec_id")
-                .agg(F.min("__rep").alias("__rep"))
-            )
-    else:
-        a, b = base.alias("a"), base.alias("b")
-        pair_sim = F.round(
-            _dot(F.col("a.__v"), F.col("b.__v"))
-            / (F.col("a.__nrm") * F.col("b.__nrm")),
-            round_to,
+    # Blocked pair phase. One task per cell dies when a cell is oversized
+    # (a genuine dense direction in embedding space — boilerplate docs, or
+    # drifted replicas): a 50k-row cell means one task allocating a 20 GB
+    # gram matrix. Instead, the rows of a cell of c rows are hashed into
+    # nb = ceil(c / _CELL_BLOCK_ROWS) blocks and every UNORDERED block pair
+    # (bi ≤ bj) becomes its own applyInPandas group: each row explodes
+    # over the nb partner blocks (group key (cell, min(blk, other),
+    # max(blk, other)), so a pair group receives each side's rows exactly
+    # once), the group computes the gram (bi < bj: only cross pairs count
+    # — within-block pairs belong to the (bi, bi) group), and memory is
+    # bounded at O(_CELL_BLOCK_ROWS²) regardless of cell size. A healthy
+    # cell has nb = 1 and is one group. Replication cost: each row is
+    # shipped nb times (c²/_CELL_BLOCK_ROWS rows per mega cell — a factor
+    # dim/_CELL_BLOCK_ROWS of the unavoidable flops).
+    counts = base.groupBy("cell").agg(F.count(F.lit(1)).alias("__c"))
+    nb_col = F.ceil(F.col("__c") / F.lit(_CELL_BLOCK_ROWS)).cast("int")
+    tagged = (
+        base.select("vec_id", "cell", "__v", "__nrm")
+        .join(F.broadcast(counts.select("cell", nb_col.alias("__nb"))), "cell")
+        .withColumn(
+            "__blk",
+            F.pmod(F.xxhash64(F.col("vec_id")), F.col("__nb")).cast("int"),
         )
-        drops = (
-            a.join(
-                b,
-                (F.col("a.cell") == F.col("b.cell"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
+    )
+    expanded = tagged.select(
+        "vec_id",
+        "cell",
+        "__v",
+        "__nrm",
+        "__blk",
+        F.explode(F.sequence(F.lit(0), F.col("__nb") - 1)).alias("__other"),
+    ).select(
+        "vec_id",
+        "cell",
+        "__v",
+        "__nrm",
+        "__blk",
+        F.least(F.col("__blk"), F.col("__other")).alias("__bi"),
+        F.greatest(F.col("__blk"), F.col("__other")).alias("__bj"),
+    )
+    tau, rt = threshold, round_to
+
+    def _block_drops(pdf: pd.DataFrame) -> pd.DataFrame:
+        # Same dot-first, divide-then-round form as the SQL oracle's
+        # cosine; the round absorbs pairwise vs sequential summation ulp.
+        import numpy as np
+
+        ids = pdf["vec_id"].to_numpy()
+        x = np.stack(pdf["__v"].to_numpy())
+        nrm = pdf["__nrm"].to_numpy()
+        blk = pdf["__blk"].to_numpy()
+        sims = np.round((x @ x.T) / np.outer(nrm, nrm), rt)
+        mask = ids[:, None] < ids[None, :]
+        if blk.min() != blk.max():
+            # bi < bj group: within-block pairs are the (bi, bi)/(bj, bj)
+            # groups' job — count cross only.
+            mask &= blk[:, None] != blk[None, :]
+        ai, bi = np.nonzero((sims >= tau) & mask)
+        if len(bi) == 0:
+            return pd.DataFrame({"vec_id": [], "__rep": []}).astype(
+                {"vec_id": "int64", "__rep": "int64"}
             )
-            .filter(pair_sim >= threshold)
-            .groupBy(F.col("b.vec_id").alias("vec_id"))
-            .agg(F.min(F.col("a.vec_id")).alias("__rep"))
+        out = pd.DataFrame({"vec_id": ids[bi], "__rep": ids[ai]})
+        return out.groupby("vec_id", as_index=False)["__rep"].min()
+
+    drops = (
+        expanded.groupBy("cell", "__bi", "__bj")
+        .applyInPandas(
+            lambda _key, pdf: _block_drops(pdf),
+            f"vec_id {id_type}, __rep {id_type}",
         )
+        .groupBy("vec_id")
+        .agg(F.min("__rep").alias("__rep"))
+    )
     result = base.join(drops, "vec_id", "left").select(
         "vec_id",
         "cell",

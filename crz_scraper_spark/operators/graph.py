@@ -218,8 +218,6 @@ def copurchase_edges(
 def triangle_counts(
     edges: DataFrame | None = None,
     top_k: int | None = None,
-    compact_ids: bool = True,
-    hash_join_hint: bool = True,
     adjacency: DataFrame | None = None,
 ) -> DataFrame:
     """(node, n_tri): how many triangles each node participates in.
@@ -302,11 +300,11 @@ def triangle_counts(
         # neighbor ARRAY (sum-of-outdeg² elements in aggregate; the sf3
         # spill the r5/r7 slope work documented). Two payload levers,
         # both exact:
-        #   compact_ids — when the long ids actually fit in int32 (one
+        #   compact ids — when the long ids actually fit in int32 (one
         #   bounds agg over the persisted edges; this also materializes
         #   the persist), carry them as ints: halves every array element
         #   and shrinks the sort keys.
-        #   hash_join_hint — SHUFFLE_HASH on the node-sized adjacency
+        #   hash join hint — SHUFFLE_HASH on the node-sized adjacency
         #   side so the edge×array side STREAMS through both joins
         #   instead of being sort-spilled by sort-merge (the array rows
         #   are exactly the payload you don't want to sort).
@@ -318,7 +316,7 @@ def triangle_counts(
         id_type = dict(oriented.dtypes)["a"]
         work = oriented
         out_cast: str | None = None
-        if compact_ids and id_type in ("bigint", "long"):
+        if id_type in ("bigint", "long"):
             lo, hi = oriented.agg(
                 F.min(F.least("a", "b")), F.max(F.greatest("a", "b"))
             ).first()
@@ -336,11 +334,12 @@ def triangle_counts(
         adj = work.groupBy(F.col("a").alias("node")).agg(
             F.sort_array(F.collect_list("b")).alias("nbrs")
         )
-        adj_a = adj.select(F.col("node").alias("a"), F.col("nbrs").alias("na"))
-        adj_b = adj.select(F.col("node").alias("b"), F.col("nbrs").alias("nb"))
-        if hash_join_hint:
-            adj_a = adj_a.hint("shuffle_hash")
-            adj_b = adj_b.hint("shuffle_hash")
+        adj_a = adj.select(
+            F.col("node").alias("a"), F.col("nbrs").alias("na")
+        ).hint("shuffle_hash")
+        adj_b = adj.select(
+            F.col("node").alias("b"), F.col("nbrs").alias("nb")
+        ).hint("shuffle_hash")
         # Join ORDER is a payload lever (round 9): whichever adjacency joins
         # FIRST rides inside the wide intermediate through the second join's
         # shuffle. Attaching the DST side first ships sum_e outdeg(dst)

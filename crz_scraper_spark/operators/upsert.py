@@ -121,51 +121,6 @@ def snapshot_diff(
     )
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    target_files_per_partition: int = 1,
-) -> dict[str, int]:
-    """Small-file compaction for a partitioned parquet table: streaming
-    micro-batches and repeated upserts accumulate many tiny files per
-    partition (each an independent task at read time — the classic
-    small-files tax at 100 TB). Rewrites each partition's data into
-    `target_files_per_partition` files via a repartition keyed on the
-    partition column, leaving values byte-identical. Returns
-    {files_before, files_after} for observability. Partitions already at
-    or below the target are still rewritten here — at production scale,
-    list the partition sizes first and compact only the offenders (the
-    same partition-pruned read upsert_by_key uses).
-
-    This is the simple fixed-files-per-partition, in-place variant (file
-    census is driver-local glob — file:// only). The size-TARGETED,
-    remote-safe (Hadoop FS), staging-then-atomic-rename generalization —
-    per-partition output counts derived from byte totals, plus the
-    `plan_compaction` skip-healthy inventory step — lives in
-    `operators/compaction.py::compact_small_files` and is the one the
-    oracled `compaction_roundtrip` query drives.
-    """
-    import glob as _glob
-    import os as _os
-
-    def _count_files() -> int:
-        return len(
-            _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-
-    before = _count_files()
-    df = spark.read.parquet(path)
-    (
-        df.repartition(target_files_per_partition, F.col(partition_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    return {"files_before": before, "files_after": _count_files()}
-
-
 def _hadoop_fs(spark: SparkSession, path: str):
     """Hadoop FileSystem handle for `path` — works for any scheme the
     cluster can read (file://, hdfs://, s3a://); driver-local os/glob

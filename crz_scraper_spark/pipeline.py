@@ -46,8 +46,7 @@ def contracts_pipeline(
     Nothing is cached between them: each output a caller consumes parses
     the dump again (see `split_corrupt`). To get the discard tallies
     without a second pass, wrap `audit` in `observe_discards` and write
-    the observed frame; `corrupt` caches its own bad records on its first
-    action.
+    the observed frame.
     """
     parsed = read_contracts_xml(spark, xml_path)
     ok, corrupt = split_corrupt(parsed)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from crz_scraper_spark.catalog import load_table, pin
 from crz_scraper_spark.functions.text import WORD_SEPARATOR_RE, tokens_nonempty
 from crz_scraper_spark.operators.dedup import first_wins_dedup
+from crz_scraper_spark.operators.skew import salted_join
 
 from crz_scraper_spark.operators.tagging import DEFAULT_TAXONOMY, _safe
 from crz_scraper_spark.functions.text import substring_count
@@ -921,50 +922,34 @@ GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 # demonstrated with a provably-skewed key: ~40% of lineitem rows collapse
 # onto hot key 0 (l_orderkey % 5 < 2), so an unsalted shuffle join would
 # put 40% of the fact table in ONE reducer task — the classic straggler.
-# The fact side appends salt = pmod(xxhash64(linenumber-disambiguated
-# row), SALTS); the dim side EXPLODES ×SALTS; the join keys on
-# (key, salt), splitting the hot key across SALTS tasks. The merge hint
-# keeps it a shuffle join (a broadcast would hide the technique at test
-# SF — at 100 TB the dim that needs salting is precisely the one too big
-# to broadcast). FULLY oracled against the plain unsalted join: salting
-# must change the distribution, never the answer.
+# `operators/skew.salted_join` salts the fact side with a content hash of
+# the whole row (row-unique here: it carries l_orderkey, l_linenumber),
+# explodes the dim side ×SALTS, and joins on (key, salt), splitting the
+# hot key across SALTS tasks. The merge hint keeps it a shuffle join (a
+# broadcast would hide the technique at test SF — at 100 TB the dim that
+# needs salting is precisely the one too big to broadcast). FULLY oracled
+# against the plain unsalted join: salting must change the distribution,
+# never the answer.
 # ---------------------------------------------------------------------------
 
 _SALTS = 8
 
 
 def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    fact = li.select(
-        F.when(F.col("l_orderkey") % 5 < 2, F.lit(0))
-        .otherwise(F.col("l_orderkey"))
-        .alias("k"),
-        "l_orderkey",
-        "l_linenumber",
-        "l_extendedprice",
-    ).withColumn(
-        "salt",
-        F.pmod(
-            F.xxhash64(F.col("l_orderkey"), F.col("l_linenumber")),
-            F.lit(_SALTS),
-        ).cast("int"),
+    li = load_table(spark, sf_dir, "lineitem").withColumn(
+        "k",
+        F.when(F.col("l_orderkey") % 5 < 2, F.lit(0)).otherwise(
+            F.col("l_orderkey")
+        ),
     )
+    fact = li.select("k", "l_orderkey", "l_linenumber", "l_extendedprice")
     dim = (
-        li.select(
-            F.when(F.col("l_orderkey") % 5 < 2, F.lit(0))
-            .otherwise(F.col("l_orderkey"))
-            .alias("k")
-        )
+        li.select("k")
         .distinct()
         .withColumn("grp", F.pmod(F.col("k"), F.lit(10)).cast("int"))
-        .withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(_SALTS - 1)))
-        )
-        .withColumn("salt", F.col("salt").cast("int"))
     )
     return (
-        fact.hint("merge")
-        .join(dim, ["k", "salt"])
+        salted_join(fact.hint("merge"), dim, "k", "k", salt=_SALTS)
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -23,6 +23,8 @@ over the flat-mapped detector output.
 
 from __future__ import annotations
 
+import shutil as _sh
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +36,7 @@ from crz_scraper_spark.operators.tagging import (
     _safe,
     tag_rank_filter,
 )
+from crz_scraper_spark.plans.fixture_plans import _BUILT, _fixture_dir
 from crz_scraper_spark.plans.scale_plans import _doc_binaries
 
 # ---------------------------------------------------------------------------
@@ -351,31 +354,17 @@ WHERE round(list_cosine_similarity(a.emb, b.emb), 4) >= 0.35
 # fixture write is test scaffolding, not part of the measured operator.
 # ---------------------------------------------------------------------------
 
-_XML_INGEST_DIR = "/tmp/crz_xml_ingest_fixture"
-# Fixture dirs already materialized by THIS process (content is
-# deterministic per sf_dir, so one build per process suffices — and the
-# repeated bench/driver invocations then measure the XML scan under test,
-# not fixture I/O).
-_XML_INGEST_BUILT: set = set()
-
-
 def xml_ingest_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib as _hl
-    import os as _os
-
     from crz_scraper_spark.sources.xml import (
         flatten_contracts,
         read_contracts_xml,
         split_corrupt,
     )
 
-    # The pid suffix keeps concurrent sessions (parallel pytest, bench
-    # running beside tests) from racing on rmtree/saveAsTextFile of a
-    # shared path.
-    out_dir = (
-        f"{_XML_INGEST_DIR}_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_{_os.getpid()}"
-    )
+    # Per-pid path, built once per process (`fixture_plans._fixture_dir`):
+    # repeated bench/driver invocations measure the XML scan under test,
+    # not fixture I/O.
+    out_dir = _fixture_dir("xml_ingest_fixture", sf_dir)
     orders = load_table(spark, sf_dir, "orders").filter(
         F.expr("o_orderkey % 20 = 0")
     )
@@ -408,9 +397,7 @@ def xml_ingest_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     # XML files are unsplittable for the rowTag scan, so a fixed file count
     # caps scan parallelism at that constant and turns a 10x data bump into
     # a >10x wall-clock bump (measured 58s -> 3s at sf1-scale, 32 cores).
-    import shutil as _sh
-
-    if out_dir not in _XML_INGEST_BUILT:
+    if out_dir not in _BUILT:
         n_files = max(4, int(xml.count() // 2000) + 1)
         _sh.rmtree(out_dir, ignore_errors=True)
         (
@@ -425,11 +412,8 @@ def xml_ingest_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .saveAsTextFile(out_dir)
         )
-        _XML_INGEST_BUILT.add(out_dir)
-    clean, corrupt = split_corrupt(read_contracts_xml(spark, out_dir))
-    # Only the clean side is read: drop the lazy corrupt-side cache
-    # split_corrupt registers, so none outlives the call.
-    corrupt.unpersist()
+        _BUILT.add(out_dir)
+    clean, _corrupt = split_corrupt(read_contracts_xml(spark, out_dir))
     att = F.element_at(F.col("prilohy"), 1)
     return flatten_contracts(clean).select(
         "id",
@@ -469,23 +453,13 @@ WHERE o_orderkey % 20 = 0 AND o_orderkey % 37 <> 0
 # per-pid, build-once-per-process discipline.
 # ---------------------------------------------------------------------------
 
-_JSONL_DIR = "/tmp/crz_jsonl_ingest_fixture"
-_JSONL_BUILT: set = set()
-
 
 def jsonl_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib as _hl
-    import os as _os
-    import shutil as _sh
-
     from pyspark.sql import types as T
 
     from crz_scraper_spark.sources.jsonl import read_jsonl, split_corrupt
 
-    out_dir = (
-        f"{_JSONL_DIR}_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_{_os.getpid()}"
-    )
+    out_dir = _fixture_dir("jsonl_ingest_fixture", sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     line = F.to_json(F.struct("doc_id", "lang", "source", "n_chars", "text"))
     bad = F.col("doc_id") % 41 == 0
@@ -494,10 +468,10 @@ def jsonl_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(line)
         .alias("value")
     )
-    if out_dir not in _JSONL_BUILT:
+    if out_dir not in _BUILT:
         _sh.rmtree(out_dir, ignore_errors=True)
         rendered.repartition(4).write.mode("overwrite").text(out_dir)
-        _JSONL_BUILT.add(out_dir)
+        _BUILT.add(out_dir)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),

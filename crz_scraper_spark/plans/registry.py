@@ -39,17 +39,19 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # every query whose CODE or ORACLE changed this round (first check of
 # the new shape) + the remaining slots refresh the STALEST coverage —
 # queries whose last driver check is oldest, oldest-first in registry
-# order. Changed code in this rotation: cache lifetime — every function
-# that persists a frame now releases it before returning (bounded
-# results through catalog.collect_and_release, corpus-sized ones
-# pinned), semantic_dedup owns its base, the Lloyd trainer persists
-# nothing and its three callers persist the fanned vectors once, and
-# xml_ingest_flatten (already pinned) releases the corrupt-side cache
-# it does not read. The oracled queries on those paths take the
-# changed-code slots. The staleness slots start with the five r9-checked
-# queries carried over from the last rotation, then take 28 of the 29
-# oracled queries last checked in r10 and not refreshed since, in
-# registry order; excess_quantity_suppliers rolls to the next rotation.
+# order. Changed code in this rotation: one implementation per job —
+# semantic_dedup's pair phase is the blocked BLAS gram alone,
+# triangle_counts always compacts ids and hints the hash joins,
+# salted_skew_join salts through operators/skew.salted_join,
+# compact_small_files unescapes partition names through Catalyst
+# directly, write_pipe_csv lost its single-file option, the JSONL and XML
+# fixtures share fixture_plans' memo, and split_corrupt caches nothing
+# (xml_ingest_flatten, already pinned). The oracled queries on those
+# paths take the changed-code slots. The staleness slots start with
+# excess_quantity_suppliers (last checked r10, carried over), then take
+# 37 of the 40 oracled queries last checked in r11, in registry order;
+# multimodal_frame_index, multimodal_resize_audit and
+# dictionary_oov_morph roll to the next rotation.
 # The window stays all-oracled by policy (tests/test_integrity.py:
 # every window slot must hash-match, the strongest driver signal) —
 # the rows-only entries are deliberately never window-rotated: each
@@ -63,55 +65,55 @@ _FIRST_WINDOW = [
     "xml_ingest_flatten",       # S1/S2 XML dump scan + corrupt routing
     "minhash_near_dup_md5",     # dedup: MinHash-LSH (portable hash)
     "streaming_interval_join",  # §2.8 stream-stream interval join
-    # -- changed code: first check of the cache-lifetime rule ------------
+    # -- changed code: one implementation per job ------------------------
     "semantic_dedup",
     "semantic_dedup_trained_fixed",
-    "embedding_kmeans_clusters",
-    "embedding_quantization_recall",
-    "token_heavy_hitters",
-    "corpus_drift_topk",
-    "bm25_search",
-    "cms_token_estimate",
-    "fuzzy_name_pairs_banded",
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "curation_pipeline_audit_md5",
-    # -- staleness refresh: carried over (last checked r9)
-    "avg_qty_outlier_revenue",
-    "disjunctive_brand_quantity",
-    "lonely_returning_supplier",
-    "rich_inactive_customers",
-    "top_revenue_supplier",
-    # -- staleness refresh: last checked r10 (28 of 29 oracled, registry
-    #    order)
-    "sql_shipping_priority",
-    "revenue_by_nation",
-    "quality_band_filter",
-    "weighted_sample",
-    "token_budget_sample",
-    "bloom_decontaminate",
-    "asof_last_purchase",
-    "range_click_purchase",
-    "sessionization",
-    "ann_lsh_topk",
-    "containment_near_dup",
+    "part_triangles",
     "salted_skew_join",
-    "quantile_histogram_profile",
-    "schema_evolution_roundtrip",
-    "bucketed_colocated_join",
-    "hll_incremental_md5",
-    "delete_by_key_audit",
-    "part_pagerank",
-    "part_reach_3hops",
-    "referential_integrity_audit",
-    "range_split_points",
-    "min_cost_supplier",
-    "part_affinity",
-    "association_rules",
-    "nation_market_share",
-    "product_profit",
-    "important_part_value",
-    "part_supplier_variety",
+    "compaction_roundtrip",
+    "pipe_csv_roundtrip",
+    "jsonl_ingest_roundtrip",
+    # -- staleness refresh: carried over (last checked r10)
+    "excess_quantity_suppliers",
+    # -- staleness refresh: last checked r11 (37 of 40 oracled, registry
+    #    order)
+    "top_orders_per_customer",
+    "customers_without_orders",
+    "order_lineitem_rollup",
+    "priority_status_pivot",
+    "dedup_orders_first_wins",
+    "nationkey_set_ops",
+    "date_sequence",
+    "order_parts_array",
+    "top_status_per_priority",
+    "string_column_profile",
+    "perplexity_filter",
+    "doc_chunking",
+    "boilerplate_ngram_filter",
+    "ngram_lm_counts",
+    "dup_span_detect",
+    "line_dedup_reconstruct",
+    "pii_redact",
+    "per_class_sample",
+    "repetition_stats",
+    "stratified_sample",
+    "eval_contamination",
+    "bpe_fixed_merges_stats",
+    "word_frequency",
+    "tf_idf_top_terms",
+    "train_test_split",
+    "sequence_packing",
+    "keyword_tagging",
+    "keyword_hits_unpivot",
+    "subject_extract_600",
+    "contains_theta_join",
+    "doc_quality",
+    "event_transition_matrix",
+    "tumbling_hourly",
+    "scd2_intervals",
+    "funnel_conversion",
+    "weekly_retention",
+    "ngram_jaccard_consecutive",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}

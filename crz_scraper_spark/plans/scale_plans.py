@@ -1763,11 +1763,6 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         threshold=_SEMDEDUP_TAU,
         round_to=4,
-        # BLAS gram pair phase — parity-tested identical to the
-        # expression self-join and hash-matching the DuckDB oracle
-        # unchanged (the 4-dp round absorbs summation-order ulp);
-        # 35.8s -> ~2s at sf1-scale.
-        pair_impl="gram",
     )
 
 
@@ -1957,11 +1952,6 @@ def semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents,
             threshold=_SEMDEDUP_TAU,
             round_to=4,
-            pair_impl="gram",
-            # Trained centroids balance occupancy on healthy data, but a
-            # genuinely dense direction (boilerplate embeddings) can still
-            # produce a mega cell; bound per-task memory regardless.
-            max_cell_rows=1024,
         )
     finally:
         emb.unpersist()
@@ -2001,16 +1991,6 @@ def semantic_dedup_trained_fixed_q(
             cents,
             threshold=_SEMDEDUP_TAU,
             round_to=4,
-            pair_impl="gram",
-            # k is pinned at 8 for the oracle, so per-cell occupancy grows
-            # linearly with the corpus and the pair phase is quadratic per
-            # cell BY DESIGN (the k ∝ √n production posture lives in
-            # semantic_dedup_trained). Blocking the gram phase bounds
-            # per-task memory and spreads each cell's work over
-            # (c/1024)² block-pair tasks instead of one mega-task —
-            # measured 83.5 s → (see PLANS.md) at sf3 — and is
-            # parity-tested output-identical, so the oracle is unchanged.
-            max_cell_rows=1024,
         )
     finally:
         emb.unpersist()
@@ -2078,16 +2058,6 @@ def semantic_dedup_scaled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             threshold=_SEMDEDUP_TAU,
             round_to=4,
-            # Per-cell BLAS gram matrix for the pair phase: within-cell
-            # work is one vectorized (c × dim) @ (dim × c) per cell
-            # instead of c²/2 interpreted 64-term dots (measured 29s ->
-            # see PLANS.md at sf1). max_cell_rows bounds per-task memory
-            # when fixed RANDOM centroids meet a drifted distribution and
-            # a mega cell forms (the sf3 datapoint measured 363 s with one
-            # 50k-row cell serialized into a single task; the blocked pair
-            # phase distributes it over bounded block-pair tasks).
-            pair_impl="gram",
-            max_cell_rows=1024,
         )
     )
 

@@ -50,14 +50,13 @@ def read_pipe_csv(
     return df
 
 
-def write_pipe_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_pipe_csv(df: DataFrame, path: str) -> None:
     """S7 sink: pipe-separated headered CSV; `overwrite` makes each stage
     idempotent (S10 — replaces the reference's whole-file rewrite after every
     processed contract, `06_extract_tables.py:246,257`).
 
-    `single_file` coalesces to one partition for small edge outputs (the
-    reference's one-CSV-per-stage shape); large outputs keep one file per
-    partition — a 100 TB sink must never funnel through one writer.
+    One file per partition — a 100 TB sink must never funnel through one
+    writer.
 
     Spark's CSV WRITER trims leading/trailing whitespace by default
     (`ignoreLeading/TrailingWhiteSpace` default true on write, false on
@@ -65,9 +64,8 @@ def write_pipe_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     pinned false so whitespace-bearing cells round-trip exactly (caught by
     the `test_pipe_csv_roundtrip_arbitrary_content` property fuzz).
     """
-    out = df.coalesce(1) if single_file else df
     (
-        out.write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("sep", "|")
         .option("header", True)
         .option("quote", '"')

@@ -94,11 +94,3 @@ def read_corrupt_lines(
         .select(F.col("value").alias(CORRUPT_COL))
     )
 
-
-def write_jsonl(df: DataFrame, path: str, compression: str | None = None) -> None:
-    """Shard-parallel JSONL sink (one .json part file per partition; gzip
-    per-file compression keeps shards independently decompressible)."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)

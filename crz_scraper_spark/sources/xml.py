@@ -17,7 +17,6 @@ one distributed scan, no per-file Python.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crz_scraper_spark.functions.sql import sql_ident, sql_str
@@ -105,39 +104,17 @@ def read_contracts_xml(
     )
 
 
-def stream_contracts_xml(
-    spark: SparkSession, dir_path: str, row_tag: str = "contract"
-) -> DataFrame:
-    """Streaming form of the dump source: the daily-dump drop directory
-    consumed as a Structured Streaming file source (the engine's
-    incremental model for `00_download_CRZ_DB.py:179-220`'s re-run-for-new-
-    dates loop — each day's dump file is one new micro-batch; checkpointing
-    makes re-runs exactly-once instead of the reference's manual date
-    bookkeeping). Same schema, permissive mode, and corrupt-record routing
-    as the batch reader; downstream stage-2 filters compose unchanged since
-    they are stateless row operations."""
-    return (
-        spark.readStream.format("xml")
-        .option("rowTag", row_tag)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .schema(CONTRACT_SCHEMA)
-        .load(dir_path)
-    )
-
-
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean, corrupt) — route bad records like `Corrupted_XML_files/`.
 
-    No cache of the whole dump: each consumed output parses the dump again
+    Nothing is cached: each consumed output parses the dump again
     (discard tallies ride the clean write via `pipeline.observe_discards`).
     A record is corrupt only if a field the parser reads fails to convert,
-    so the clean filter names every column (`c IS NULL OR c IS NOT NULL`,
+    so both filters name every data column (`c IS NULL OR c IS NOT NULL`,
     kept by Catalyst): a narrow select or a bare count parses the full row
-    and sees the same clean records. The corrupt side alone is cached, as
-    Spark's QUERY_ONLY_CORRUPT_RECORD_COLUMN error prescribes for queries
-    that read only that column — lazily, so only a caller that runs an
-    action on `corrupt` fills it and owns `corrupt.unpersist()`.
+    and sees the same records, and a query over the corrupt side never
+    reads only the corrupt-record column, which Spark refuses
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
     """
     full_row = " AND ".join(
         f"({sql_ident(c)} IS NULL OR {sql_ident(c)} IS NOT NULL)"
@@ -145,7 +122,7 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         if c != CORRUPT_COL
     )
     clean = df.where(f"{CORRUPT_COL} IS NULL AND {full_row}").drop(CORRUPT_COL)
-    corrupt = df.filter(F.col(CORRUPT_COL).isNotNull()).cache()
+    corrupt = df.where(f"{CORRUPT_COL} IS NOT NULL AND {full_row}")
     return clean, corrupt
 
 

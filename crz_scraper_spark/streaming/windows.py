@@ -370,54 +370,6 @@ def stream_to_partitioned_parquet(
     _drain(spark, agg.writeStream.outputMode("update").foreachBatch(write_batch))
 
 
-def stateful_user_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running count via `transformWithStateInPandas` — Spark 4's
-    native stateful-processor API (typed ValueState on the RocksDB state
-    store), the successor to `applyInPandasWithState` above. Same semantics,
-    richer surface (multiple typed state variables, timers, TTL); on the
-    bounded local input the emitted counts equal the batch group-count.
-
-    Environment gate: the TWS Python worker serializes state through
-    protobuf; where the `protobuf` package is absent this raises
-    ImportError at run time (this container — which is why the registry
-    exposes the `applyInPandasWithState` form and tests importorskip this
-    one). On a standard cluster image it runs as-is.
-    """
-    import google.protobuf.descriptor  # noqa: F401 — fail fast if absent
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("count", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._count.update((n,))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-        def close(self) -> None:
-            pass
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = _events_stream(spark, sf_dir)
-    counted = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CountProcessor(),
-        outputStructType="user_id bigint, n_events bigint",
-        outputMode="Update",
-        timeMode="None",
-    )
-    return _run_bounded(counted, "update", "stream_tws")
-
-
 def stream_stream_interval_join(
     spark: SparkSession,
     sf_dir: str,

@@ -7,10 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crz_scraper_spark.operators.compaction import (
-    compact_small_files,
-    plan_compaction,
-)
+from crz_scraper_spark.operators.compaction import compact_small_files
 from crz_scraper_spark.operators.heavyhitters import (
     heavy_hitters,
     mg_candidates,
@@ -91,26 +88,6 @@ def test_compact_partitioned_splits_large_partitions(spark, tmp_path):
     assert audit["n_rows"] == 20000
 
 
-def test_plan_compaction_skips_healthy_layout(spark, tmp_path):
-    src = str(tmp_path / "healthy")
-    spark.range(0, 100).coalesce(1).write.parquet(src)
-    plan = plan_compaction(spark, src, target_file_bytes=1 << 28)
-    assert plan["files"] == 1 and plan["skip"] is True
-    frag = str(tmp_path / "ill")
-    spark.range(0, 100).repartition(8).write.parquet(frag)
-    plan = plan_compaction(spark, frag, target_file_bytes=1 << 28)
-    assert plan["files"] == 8 and plan["skip"] is False
-
-
-def test_compact_shuffle_mode_balances(spark, fragmented, tmp_path):
-    src, _df = fragmented
-    dst = str(tmp_path / "out_sh")
-    audit = compact_small_files(
-        spark, src, dst, target_file_bytes=1 << 28, shuffle=True
-    )
-    assert audit["files_after"] == 1 and audit["n_rows"] == 5000
-
-
 def test_compact_rejects_unpartitioned_dir_with_partition_col(
     spark, fragmented, tmp_path
 ):
@@ -141,26 +118,6 @@ def test_compact_overwrites_existing_dst_and_leaves_no_temp_dirs(
     assert back.exceptAll(df).count() == 0
     assert not os.path.exists(dst + "._compact_tmp")
     assert not os.path.exists(dst + "._old_tmp")
-
-
-def test_unescape_local_matches_jvm_codec(spark):
-    """The Spark-Connect fallback decoder must agree with Catalyst's
-    ExternalCatalogUtils.unescapePathName on escaped, partial, and
-    malformed inputs."""
-    from crz_scraper_spark.operators.compaction import (
-        _unescape_path_name_local,
-    )
-
-    jvm_codec = (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.unescapePathName
-    )
-    cases = [
-        "plain", "a%3Ab", "c%20d", "%2Fslash", "trail%", "%3", "%zz",
-        "mix%3A%2F%25end", "%25", "2026-01-02 03%3A04%3A05", "",
-    ]
-    for s in cases:
-        assert _unescape_path_name_local(s) == jvm_codec(s), s
 
 
 # ---------------------------------------------------------------------------
@@ -315,55 +272,6 @@ def test_heavy_hitters_arrays_empty_input(spark):
     assert [f.name for f in out.schema.fields] == ["w", "cnt", "freq_ppm"]
 
 
-def test_compact_offenders_touches_only_fragmented_partitions(
-    spark, tmp_path
-):
-    from crz_scraper_spark.operators.compaction import compact_offenders
-
-    root = str(tmp_path / "live")
-    healthy = spark.range(0, 500).select(
-        F.col("id"), F.lit("old").alias("day")
-    )
-    healthy.coalesce(1).write.partitionBy("day").parquet(root)
-    fresh = spark.range(500, 2500).select(
-        F.col("id"), F.lit("new").alias("day")
-    )
-    fresh.repartition(20).write.mode("append").partitionBy("day").parquet(
-        root
-    )
-    old_files = sorted(_data_files(os.path.join(root, "day=old")))
-    assert len(old_files) == 1
-    old_mtimes = [os.path.getmtime(p) for p in old_files]
-
-    audit = compact_offenders(
-        spark, root, "day", target_file_bytes=1 << 28,
-        max_files_per_partition=4,
-    )
-    assert audit["partitions_total"] == 2
-    assert audit["partitions_compacted"] == 1
-    assert audit["files_before"] == 20 and audit["files_after"] == 1
-    assert audit["n_rows"] == 2000
-    # the healthy partition was not rewritten: same files, same mtimes
-    assert sorted(_data_files(os.path.join(root, "day=old"))) == old_files
-    assert [os.path.getmtime(p) for p in old_files] == old_mtimes
-    # full-table content intact
-    back = spark.read.parquet(root)
-    assert back.count() == 2500
-    assert back.agg(F.sum("id")).collect()[0][0] == sum(range(2500))
-
-
-def test_compact_offenders_noop_on_healthy_table(spark, tmp_path):
-    from crz_scraper_spark.operators.compaction import compact_offenders
-
-    root = str(tmp_path / "healthy_live")
-    spark.range(0, 100).select(
-        F.col("id"), (F.col("id") % 2).cast("string").alias("day")
-    ).coalesce(1).write.partitionBy("day").parquet(root)
-    audit = compact_offenders(spark, root, "day", max_files_per_partition=4)
-    assert audit["partitions_compacted"] == 0
-    assert spark.read.parquet(root).count() == 100
-
-
 def test_compact_partitioned_escaped_values(spark, tmp_path):
     """Partition values needing Hive path-escaping (':' -> '%3A') must
     still map to their byte-derived file counts — the salt map is keyed
@@ -383,19 +291,3 @@ def test_compact_partitioned_escaped_values(spark, tmp_path):
     assert os.path.isdir(os.path.join(dst, "grp=a%3Ab"))
     back = spark.read.parquet(dst).select("id", F.col("grp").cast("string"))
     assert back.exceptAll(df).count() == 0 and df.exceptAll(back).count() == 0
-
-
-def test_compact_offenders_escaped_values(spark, tmp_path):
-    from crz_scraper_spark.operators.compaction import compact_offenders
-
-    root = str(tmp_path / "elive")
-    spark.range(0, 1500).select(
-        F.col("id"), F.lit("x:y").alias("day")
-    ).repartition(10).write.partitionBy("day").parquet(root)
-    audit = compact_offenders(
-        spark, root, "day", target_file_bytes=1 << 28,
-        max_files_per_partition=4,
-    )
-    assert audit["partitions_compacted"] == 1
-    assert audit["files_after"] == 1 and audit["n_rows"] == 1500
-    assert spark.read.parquet(root).count() == 1500

@@ -211,22 +211,15 @@ def test_datasource_writer_abort_removes_orphans(tmp_path):
 def test_jsonl_corrupt_routing(spark, sf_dir):
     """The injected corrupt cohort (doc_id % 41 == 0) lands whole in
     _corrupt_record; the clean cohort is exactly the complement."""
-    import hashlib, os
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from crz_scraper_spark.plans.parity_plans import (
-        _JSONL_DIR,
-        jsonl_ingest_roundtrip,
-    )
+    from crz_scraper_spark.plans.fixture_plans import _fixture_dir
+    from crz_scraper_spark.plans.parity_plans import jsonl_ingest_roundtrip
     from crz_scraper_spark.sources.jsonl import read_jsonl, split_corrupt
 
     jsonl_ingest_roundtrip(spark, sf_dir).count()  # materialize fixture
-    out_dir = (
-        f"{_JSONL_DIR}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_{os.getpid()}"
-    )
+    out_dir = _fixture_dir("jsonl_ingest_fixture", sf_dir)
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
@@ -247,11 +240,7 @@ def test_jsonl_corrupt_routing(spark, sf_dir):
 def test_jsonl_write_read_roundtrip(spark, tmp_path):
     from pyspark.sql import types as T
 
-    from crz_scraper_spark.sources.jsonl import (
-        read_jsonl,
-        split_corrupt,
-        write_jsonl,
-    )
+    from crz_scraper_spark.sources.jsonl import read_jsonl, split_corrupt
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -261,7 +250,7 @@ def test_jsonl_write_read_roundtrip(spark, tmp_path):
         [(1, 'plain'), (2, 'with "quotes" and | pipes'), (3, None)], schema
     )
     out = str(tmp_path / "shards")
-    write_jsonl(df, out)
+    df.write.mode("overwrite").json(out)
     back, _ = split_corrupt(read_jsonl(spark, out, schema))
     assert {tuple(r) for r in back.collect()} == {
         (1, "plain"), (2, 'with "quotes" and | pipes'), (3, None)

@@ -244,11 +244,30 @@ def test_clean_write_caches_nothing(spark, tmp_path, dump_with_corrupt):
     assert "InMemoryRelation" not in (
         clean._jdf.queryExecution().optimizedPlan().toString()
     )
-    # The corrupt side still counts (its lazy cache gets past Spark's
-    # corrupt-record-only rule), holding the bad records alone.
+    # The corrupt side counts the bad records alone.
     assert corrupt.count() == 2
     assert any("R&D" in r["_corrupt_record"] for r in corrupt.collect())
-    corrupt.unpersist()
+
+
+def test_contracts_pipeline_registers_no_cache(spark, dump_with_corrupt):
+    """No output of `contracts_pipeline` enters the CacheManager — not even
+    the corrupt side, which a caller may never read — and the corrupt
+    side still counts its bad records without one."""
+    from crz_scraper_spark.pipeline import contracts_pipeline
+
+    def cache_empty() -> bool:
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    _clean, _audit, corrupt = contracts_pipeline(
+        spark, dump_with_corrupt, ["11111111"], [["Ministerstvo vnútra"]]
+    )
+    assert cache_empty()
+    assert corrupt.count() == 2
+    # Reading only the corrupt-record column needs no cache either.
+    bad = [r[0] for r in corrupt.select("_corrupt_record").collect()]
+    assert len(bad) == 2 and any("R&D" in r for r in bad)
+    assert cache_empty()
 
 
 def test_clean_side_parses_the_full_row(spark, dump_with_corrupt):
@@ -261,7 +280,6 @@ def test_clean_side_parses_the_full_row(spark, dump_with_corrupt):
     assert clean.count() == 2
     assert sorted(r["id"] for r in clean.select("id").collect()) == ["1", "3"]
     assert sorted(r["id"] for r in clean.collect()) == ["1", "3"]
-    corrupt.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -330,11 +348,6 @@ SMALL_FILES = {
     "b%3Ac": [[1, 25, 49, 58], [4, 10, 19, 40, 46], [7, 37], [13, 34, 55], [16, 52], [22, 28, 31, 43]],
     "d%27e": [[2, 14, 32, 35, 41, 44, 47], [5, 11, 17, 23, 26, 38, 56], [8, 20], [29, 50, 53, 59]],
 }
-OFFENDER_FILES = {
-    "a": [[0, 15, 21, 24, 27, 42], [3, 12, 30, 45, 51, 57], [6, 36, 48], [9, 18, 33, 39, 54]],
-    "b%3Ac": [[1, 22, 46, 52], [4, 7, 13, 25, 58], [10, 55], [16, 31], [19, 43], [28, 34], [37, 40, 49]],
-    "d%27e": [[2, 38, 41, 56], [5, 14, 29, 35], [8, 11, 53, 59], [17, 32, 44], [20, 26, 47], [23, 50]],
-}
 
 
 def _write_fragmented(root: str, files_per_day: int) -> None:
@@ -366,27 +379,19 @@ def _files_by_day(root: str) -> dict[str, list[list[int]]]:
 
 
 def test_compaction_salt_keeps_file_assignment(spark, tmp_path):
-    from crz_scraper_spark.operators.compaction import (
-        compact_offenders,
-        compact_small_files,
-    )
+    from crz_scraper_spark.operators.compaction import compact_small_files
 
-    src, dst, live = (str(tmp_path / n) for n in ("src", "dst", "live"))
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     _write_fragmented(src, 6)
-    _write_fragmented(live, 8)
-    small = compact_small_files(
+    audit = compact_small_files(
         spark, src, dst, target_file_bytes=1500, partition_col="day"
     )
-    off = compact_offenders(
-        spark, live, "day", target_file_bytes=1500, max_files_per_partition=2
-    )
-    for audit, got, want in (
-        (small, _files_by_day(dst), SMALL_FILES),
-        (off, _files_by_day(live), OFFENDER_FILES),
-    ):
-        assert {k: len(v) for k, v in got.items()} == {k: len(v) for k, v in want.items()}
-        assert {k: [len(f) for f in v] for k, v in got.items()} == {
-            k: [len(f) for f in v] for k, v in want.items()
-        }
-        assert got == want
-        assert audit["n_rows"] == 60
+    got = _files_by_day(dst)
+    assert {k: len(v) for k, v in got.items()} == {
+        k: len(v) for k, v in SMALL_FILES.items()
+    }
+    assert {k: [len(f) for f in v] for k, v in got.items()} == {
+        k: [len(f) for f in v] for k, v in SMALL_FILES.items()
+    }
+    assert got == SMALL_FILES
+    assert audit["n_rows"] == 60

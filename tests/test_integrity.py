@@ -6,6 +6,8 @@ gate already proves.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from crz_scraper_spark.catalog import load_table
@@ -349,3 +351,94 @@ def test_readme_registry_counts_not_stale():
     assert m and int(m.group(1)) == n - oracled, (
         f"README rows-only count stale (registry has {n - oracled})"
     )
+
+
+# Public functions and classes of the package that no non-test code
+# references, each kept on purpose. Anything else unreached is either a
+# second implementation of a job the engine already does one way, or dead.
+KEPT_UNREACHED: dict[str, str] = {
+    # pipeline API — library entry points a caller composes itself
+    "documents_pipeline": "pipeline entry 2 (corpus -> curated documents)",
+    "tables_pipeline": "pipeline entry 3 (extracted table cells -> clean tables)",
+    "observe_discards": "one-pass stage-2 discard tallies for contracts_pipeline callers",
+    # the reference's stage 4a/6 real backends (ROADMAP carried item X2/X3)
+    "convert_to_pdf": "X3 document-to-PDF adapter; real converters are absent here",
+    "count_pages": "X4 page counter over the real PDF backends",
+    # SURVEY §7 Hard 3/4 tiers
+    "hunspell_oov_profile": "Hard 3: full Hunspell affix expansion (needs the .dic/.aff files)",
+    "keyword_tag_batched": "Hard 4: Arrow-batched tagging for >=10^3 keywords",
+    "keyword_tag_ac": "Hard 4: Aho-Corasick tagging for >=10^4 keywords",
+    # references the tests of a reached tier compare against
+    "hll_registers": "register table behind the hll_distinct_md5 tier's tests",
+    "hll_estimate": "estimator behind the hll_distinct_md5 tier's tests",
+    "pagerank_fixed_point": "fixed-iteration reference for the part_pagerank tests",
+    "copurchase_edges": "edge-list input the triangle/pagerank tests compare against",
+    "extract_features": "per-frame featurizer the multimodal tier's tests check",
+    "mg_candidates": "Misra-Gries candidate set the heavy-hitter tests check",
+    "heavy_hitters": "exact-count reference for the token_heavy_hitters tier",
+    "morph_oov_profile": "two-pass reference for the dictionary_oov_morph counts tier",
+    # small source/function helpers
+    "read_corrupt_lines": "raw-line quarantine reader for the JSONL source",
+    "normalize_ws": "whitespace normalizer (P2), a column helper for callers",
+}
+
+
+def _non_test_modules(root: str) -> list[str]:
+    out = []
+    for rel in ("crz_scraper_spark", "bench.py", "__spark_entry__.py", "tools", "perfbench"):
+        path = os.path.join(root, rel)
+        if os.path.isfile(path):
+            out.append(path)
+            continue
+        for d, dirs, files in os.walk(path):
+            dirs[:] = [x for x in dirs if x != "tests"]
+            out += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+def test_every_public_function_is_reached():
+    """Every public top-level function and class in the package is
+    referenced by non-test code (the package, bench.py, the driver entry,
+    tools/, perfbench/) — a Name, an Attribute or an import alias; a
+    reference inside the definition's own body and docstring mentions do
+    not count — or is named in KEPT_UNREACHED with its reason."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "crz_scraper_spark")
+    defined: set[tuple[str, str]] = set()
+    refs: dict[str, set[tuple[str, str | None]]] = {}
+    for path in _non_test_modules(root):
+        tree = ast.parse(open(path).read())
+        owner: dict[int, str] = {}
+        for top in tree.body:
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if path.startswith(pkg) and not top.name.startswith("_"):
+                    defined.add((path, top.name))
+                for node in ast.walk(top):
+                    owner[id(node)] = top.name
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.split(".")[-1]
+            else:
+                continue
+            refs.setdefault(name, set()).add((path, owner.get(id(node))))
+    def reached(path: str, name: str) -> bool:
+        return any((p, o) != (path, name) for p, o in refs.get(name, ()))
+
+    unreached = sorted(
+        f"{os.path.relpath(path, root)}::{name}"
+        for path, name in defined
+        if name not in KEPT_UNREACHED and not reached(path, name)
+    )
+    assert not unreached, (
+        "public functions no non-test code reaches (delete them, or keep "
+        f"one on purpose in KEPT_UNREACHED with a reason): {unreached}"
+    )
+    kept = {name: reached(path, name) for path, name in defined if name in KEPT_UNREACHED}
+    stale = sorted(n for n in KEPT_UNREACHED if kept.get(n, True))
+    assert not stale, f"KEPT_UNREACHED names a reached or missing function: {stale}"

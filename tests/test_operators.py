@@ -316,21 +316,6 @@ def test_quantile_histogram_ignores_nulls(spark):
     assert got[0].n_rows == 400  # NULL rows never reach the count
 
 
-def test_transform_with_state_counts(spark, sf_dir):
-    """Spark-4 transformWithStateInPandas stateful counts ≡ batch group
-    counts (runs only where the protobuf dependency exists)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from crz_scraper_spark.streaming.windows import stateful_user_counts_tws
-
-    out = stateful_user_counts_tws(spark, sf_dir)
-    got = {r.user_id: r.n_events for r in out.collect()}
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    want = {r.user_id: r["count"] for r in events.groupBy("user_id").count().collect()}
-    assert got == want
-
-
 def test_connected_components_chain_and_triangle(spark):
     """Min-label propagation finds components across multi-hop chains: a
     4-node chain (10-11-12-13), a triangle (20,21,22), one isolated pair."""
@@ -719,18 +704,26 @@ def test_epoch_shuffle_contiguous_and_epoch_varying(spark, sf_dir):
 
 
 def test_bloom_no_false_negatives_bounded_fp(spark):
-    from crz_scraper_spark.operators.bloom import build_bloom, might_contain_udf
+    """String items keyed the way `bloom_decontaminate` keys them: the
+    bitset is built from Spark-side xxhash64 of the inserted strings and
+    probed with the non-nullable hash column."""
+    from crz_scraper_spark.operators.bloom import (
+        build_bloom_from_hashes,
+        might_contain_hash_udf,
+    )
     import pyspark.sql.functions as F
 
     inserted = [f"gram {i} x" for i in range(2000)]
     absent = [f"other {i} y" for i in range(5000)]
-    bloom = build_bloom(inserted, n_bits=1 << 16, k=5)
-    probe = might_contain_udf(spark, bloom, n_bits=1 << 16, k=5)
     df = spark.createDataFrame(
         [(s, True) for s in inserted] + [(s, False) for s in absent],
         "item string, present boolean",
-    ).withColumn("hit", probe(F.col("item")))
-    rows = df.collect()
+    ).withColumn("h", F.coalesce(F.xxhash64("item"), F.lit(0)))
+    bloom = build_bloom_from_hashes(
+        [r["h"] for r in df.filter("present").collect()], n_bits=1 << 16, k=5
+    )
+    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16, k=5)
+    rows = df.withColumn("hit", probe(F.col("h"))).collect()
     assert all(r["hit"] for r in rows if r["present"])  # no false negatives
     fp = sum(1 for r in rows if r["hit"] and not r["present"])
     # 2000 items in 2^16 bits at k=5 ⇒ fp well under 5%.
@@ -1175,8 +1168,54 @@ def test_semantic_dedup_numpy_assignment_matches_expr(spark, sf_dir):
     assert expr_cells == np_cells
 
 
+def _semantic_dedup_self_join(emb, centroids, threshold, round_to):
+    """Reference verdict for `semantic_dedup`: the within-cell pair
+    compare as an expression self-join EQUI on the cell (a.vec_id <
+    b.vec_id, cosine rounded to `round_to`, keep-lowest-id) — the same
+    SQL form the DuckDB oracle runs."""
+    from pyspark.sql import functions as F
+
+    from crz_scraper_spark.operators.similarity import _dot, _norm, matrix_lit
+
+    v = F.col("__v")
+    sims = F.transform(
+        matrix_lit(centroids),
+        lambda c: F.round(_dot(v, c) / (_norm(v) * _norm(c)), 6),
+    )
+    base = emb.select(
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
+    ).withColumns(
+        {
+            "cell": (F.array_position(sims, F.array_max(sims)) - 1).cast("int"),
+            "__nrm": _norm(v),
+        }
+    )
+    a, b = base.alias("a"), base.alias("b")
+    pair_sim = F.round(
+        _dot(F.col("a.__v"), F.col("b.__v"))
+        / (F.col("a.__nrm") * F.col("b.__nrm")),
+        round_to,
+    )
+    drops = (
+        a.join(
+            b,
+            (F.col("a.cell") == F.col("b.cell"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .filter(pair_sim >= threshold)
+        .groupBy(F.col("b.vec_id").alias("vec_id"))
+        .agg(F.min(F.col("a.vec_id")).alias("__rep"))
+    )
+    return base.join(drops, "vec_id", "left").select(
+        "vec_id",
+        "cell",
+        F.when(F.col("__rep").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("kept"),
+        F.coalesce(F.col("__rep"), F.col("vec_id")).alias("rep_id"),
+    )
+
+
 def test_semantic_dedup_gram_pair_path_matches_expr(spark, sf_dir):
-    """The per-cell BLAS gram pair phase must produce exactly the same
+    """The blocked BLAS gram pair phase must produce exactly the same
     (vec_id, cell, kept, rep_id) table as the expression self-join on the
     same centroids — the 4-dp round before the threshold absorbs pairwise
     vs sequential summation ulp."""
@@ -1191,24 +1230,30 @@ def test_semantic_dedup_gram_pair_path_matches_expr(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = fixed_centroids(64, 8, seed=99)
-    kw = dict(threshold=0.35, round_to=4)
     expr_out = sorted(
-        map(tuple, semantic_dedup(emb, cents, **kw).collect())
+        map(tuple, _semantic_dedup_self_join(emb, cents, 0.35, 4).collect())
     )
     gram_out = sorted(
-        map(tuple, semantic_dedup(emb, cents, pair_impl="gram", **kw).collect())
+        map(
+            tuple,
+            semantic_dedup(emb, cents, threshold=0.35, round_to=4).collect(),
+        )
     )
     assert expr_out == gram_out
 
 
-def test_semantic_dedup_blocked_gram_matches_single_task(spark, sf_dir):
-    """The mega-cell-safe blocked pair phase (max_cell_rows) must produce
-    EXACTLY the single-task gram output — cross-block pairs counted once
-    via the (cell, bi, bj) group fan-out, within-block pairs only in the
-    diagonal groups, min-rep aggregation commutative across tasks. Tiny
-    max_cell_rows forces many blocks per cell, exercising the fan-out."""
+def test_semantic_dedup_blocked_gram_matches_single_task(
+    spark, sf_dir, monkeypatch
+):
+    """Splitting cells into many blocks must produce EXACTLY the output of
+    one block per cell — cross-block pairs counted once via the
+    (cell, bi, bj) group fan-out, within-block pairs only in the diagonal
+    groups, min-rep aggregation commutative across tasks. At the default
+    block size every cell here is one block (one task); a block size of 7
+    forces many blocks per cell, exercising the fan-out."""
     from pyspark.sql import functions as F
 
+    from crz_scraper_spark.operators import dedup
     from crz_scraper_spark.operators.dedup import (
         fixed_centroids,
         semantic_dedup,
@@ -1218,15 +1263,14 @@ def test_semantic_dedup_blocked_gram_matches_single_task(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = fixed_centroids(64, 4, seed=99)  # few cells => big cells
-    kw = dict(threshold=0.35, round_to=4, pair_impl="gram")
+    kw = dict(threshold=0.35, round_to=4)
+    assert emb.count() <= dedup._CELL_BLOCK_ROWS
     single = sorted(
         map(tuple, semantic_dedup(emb, cents, **kw).collect())
     )
+    monkeypatch.setattr(dedup, "_CELL_BLOCK_ROWS", 7)
     blocked = sorted(
-        map(
-            tuple,
-            semantic_dedup(emb, cents, max_cell_rows=7, **kw).collect(),
-        )
+        map(tuple, semantic_dedup(emb, cents, **kw).collect())
     )
     assert single == blocked and len(single) > 0
 

@@ -129,7 +129,7 @@ def test_pipe_csv_roundtrip(spark, tmp_path):
         [("1", 'va|lue', "te\nxt"), ("2", "plain", "x")], "id string, a string, b string"
     )
     out = str(tmp_path / "csv_out")
-    write_pipe_csv(df, out, single_file=True)
+    write_pipe_csv(df, out)
     back = read_pipe_csv(spark, out, all_string=True, multi_line=True)
     got = {r["id"]: (r["a"], r["b"]) for r in back.collect()}
     assert got == {"1": ("va|lue", "te\nxt"), "2": ("plain", "x")}
@@ -286,44 +286,6 @@ def test_jsonl_source_roundtrip(spark, sf_dir, tmp_path):
     ).json(str(bad)).cache()
     assert routed.filter(F.col("_corrupt_record").isNotNull()).count() == 1
     assert routed.filter(F.col("event_id") == 1).count() == 1
-
-
-def test_streaming_xml_ingest_matches_batch(spark, tmp_path):
-    """Two daily dump files consumed through the streaming XML file source
-    (the incremental model for the reference's date-range re-runs) produce
-    exactly the rows the batch reader sees."""
-    import uuid
-
-    from crz_scraper_spark.sources.xml import (
-        read_contracts_xml,
-        stream_contracts_xml,
-    )
-
-    d = tmp_path / "dumps"
-    d.mkdir()
-    for day, ids in (("0105", ["11", "12"]), ("0106", ["13"])):
-        (d / f"dump_2024{day}.xml").write_text(
-            "<?xml version='1.0'?>\n<dump>\n"
-            + "\n".join(_contract_xml(i) for i in ids)
-            + "\n</dump>"
-        )
-    stream = stream_contracts_xml(spark, str(d)).select("id", "nazov", "rezort")
-    name = f"xml_stream_{uuid.uuid4().hex[:8]}"
-    q = stream.writeStream.outputMode("append").format("memory").queryName(
-        name
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted(tuple(r) for r in spark.table(name).collect())
-    want = sorted(
-        tuple(r)
-        for r in read_contracts_xml(spark, str(d))
-        .select("id", "nazov", "rezort")
-        .collect()
-    )
-    assert got == want and len(got) == 3
 
 
 def test_observe_discards_one_pass_audit(spark, contracts_df):

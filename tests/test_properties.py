@@ -346,18 +346,18 @@ def test_natural_sort_matches_python_reference(spark, names):
     )
 )
 def test_jsonl_roundtrip_arbitrary_content(spark, tmp_path_factory, texts):
-    """write_jsonl -> read_jsonl is lossless for arbitrary text payloads:
+    """Spark's JSON writer -> read_jsonl is lossless for arbitrary text payloads:
     JSON escaping keeps newlines/quotes/unicode inside ONE line per record
     (the line-splittability the 100 TB interchange format depends on), and
     every value survives byte-for-byte."""
     from pyspark.sql import types as T
 
-    from crz_scraper_spark.sources.jsonl import read_jsonl, split_corrupt, write_jsonl
+    from crz_scraper_spark.sources.jsonl import read_jsonl, split_corrupt
 
     out = str(tmp_path_factory.mktemp("jsonl"))
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    write_jsonl(df, out)
+    df.write.mode("overwrite").json(out)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import io
 import contextlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -307,26 +308,6 @@ def test_snapshot_diff(spark):
     assert got == {2: "changed", 3: "changed", 4: "deleted", 5: "inserted"}
 
 
-def test_compact_partitions(spark, tmp_path):
-    """Many small files per partition collapse to one, values unchanged."""
-    from crz_scraper_spark.operators.upsert import compact_partitions
-
-    path = str(tmp_path / "frag")
-    base = spark.createDataFrame(
-        [(i, f"d{i % 2}", float(i)) for i in range(40)],
-        "k bigint, day string, v double",
-    )
-    # fragment: 10 files per partition
-    base.repartition(10).write.partitionBy("day").parquet(path)
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
-
-    stats = compact_partitions(spark, path, "day")
-    after = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert after == before
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] <= 2  # one per partition
-
-
 def test_runtime_bloom_filter_prunes_fact_scan(spark):
     """When a dim-side filter is selective and the join must shuffle (no
     broadcast), the optimizer injects a runtime Bloom filter on the fact
@@ -477,20 +458,19 @@ def test_semantic_dedup_pair_join_is_equi_on_cell(spark, sf_dir):
     compare joins equi on the cell id (broadcast or shuffled hash) — a
     nested-loop cross join would be O(n^2) corpus-wide. Inspected on
     `_semantic_dedup_plan`'s lazy verdict (the operator pins it, which
-    cuts the lineage and hides the join shape), for both pair phases."""
+    cuts the lineage and hides the join shape)."""
     from crz_scraper_spark.operators.dedup import _semantic_dedup_plan
 
     emb, cents = _semdedup_inputs(spark, sf_dir)
-    for pair_impl in ("expr", "gram"):
-        lazy, base = _semantic_dedup_plan(
-            emb, cents, "vec_id", "embedding", 0.35, 4, pair_impl, None
-        )
-        try:
-            plan = _plan(lazy)
-            assert "BroadcastNestedLoopJoin" not in plan
-            assert "CartesianProduct" not in plan
-        finally:
-            base.unpersist()
+    lazy, base = _semantic_dedup_plan(
+        emb, cents, "vec_id", "embedding", 0.35, 4
+    )
+    try:
+        plan = _plan(lazy)
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+    finally:
+        base.unpersist()
 
 
 def test_semantic_dedup_releases_its_base(spark, sf_dir):
@@ -503,12 +483,12 @@ def test_semantic_dedup_releases_its_base(spark, sf_dir):
     )
 
     emb, cents = _semdedup_inputs(spark, sf_dir)
-    kw = dict(threshold=0.35, round_to=4, pair_impl="gram")
+    kw = dict(threshold=0.35, round_to=4)
     spark.catalog.clearCache()
     out = semantic_dedup(emb, cents, "vec_id", "embedding", **kw)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     lazy, base = _semantic_dedup_plan(
-        emb, cents, "vec_id", "embedding", max_cell_rows=None, **kw
+        emb, cents, "vec_id", "embedding", **kw
     )
     try:
         expect = sorted(tuple(r) for r in lazy.collect())
@@ -987,14 +967,29 @@ def test_salted_join_splits_the_hot_key(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
     smj = next(l for l in plan.splitlines() if "SortMergeJoin" in l)
-    assert "salt" in smj and "k#" in smj, smj
-    # Distribution: hot-key rows occupy every salt bucket, none dominant.
+    # Both join keys are (k, __salt): the salt from operators/skew.salted_join.
+    keys = re.findall(r"\[([^\]]*)\]", smj)[:2]
+    assert len(keys) == 2, smj
+    for side in keys:
+        assert [re.sub(r"#\d+L?$", "", c.strip()) for c in side.split(",")] == [
+            "k",
+            "__salt",
+        ], smj
+    # Distribution: hot-key rows occupy every salt bucket, none dominant
+    # (salted_join's salt: xxhash64 of the whole fact row).
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     hot = (
         li.filter(F.col("l_orderkey") % 5 < 2)
         .select(
             F.pmod(
-                F.xxhash64(F.col("l_orderkey"), F.col("l_linenumber")),
+                F.xxhash64(
+                    F.struct(
+                        F.lit(0).cast("bigint").alias("k"),
+                        "l_orderkey",
+                        "l_linenumber",
+                        "l_extendedprice",
+                    )
+                ),
                 F.lit(_SALTS),
             ).alias("salt")
         )
