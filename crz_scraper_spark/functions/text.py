@@ -4,8 +4,6 @@ Every builder returns a `Column` composed of built-in `pyspark.sql.functions`
 — JVM-side, whole-stage-codegen'd, no Python in the hot path (SURVEY.md §2.7).
 
 Reference parity (cited file:line into /root/reference):
-- normalize_ws      ≈ `strip()` + `replace('\\n',' ')` (01_parse_xml.py:87,
-                      02_filter_by_CIN.py:275-277) — operator P2.
 - tokenize          ≈ the 20-line alphabet scanner
                       (05_build_special_dictionary.py:19-38,
                       09_clean_tables.py:20-38) — operator F13; one regex split.
@@ -26,11 +24,6 @@ from pyspark.sql import functions as F
 # ASCII; anything outside is a token separator. For the driver's synthetic
 # docs (ASCII English-ish) the effective alphabet is [a-z0-9].
 WORD_SEPARATOR_RE = "[^a-z0-9áäčďéíľĺňóôŕšťúýž]+"
-
-
-def normalize_ws(col: Column | str) -> Column:
-    """Collapse all whitespace runs to single spaces and trim (P2)."""
-    return F.trim(F.regexp_replace(F.col(col) if isinstance(col, str) else col, r"\s+", " "))
 
 
 def tokenize(col: Column | str, sep_re: str = WORD_SEPARATOR_RE) -> Column:

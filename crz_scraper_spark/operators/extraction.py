@@ -1,14 +1,19 @@
-"""Document-extraction operators X1–X5: PDF→text, OCR, page counting, and
-per-page table detection — the reference's subprocess black boxes re-shaped
-as Arrow-batched `mapInPandas` operators.
+"""Document-extraction operators X1, X2, X4 and X5: PDF→text with an OCR
+fallback, and per-page table detection with page counting — the
+reference's subprocess black boxes re-shaped as Arrow-batched
+`mapInPandas` operators.
 
 Reference behavior (`/root/reference`):
 - X1 `pdftotext -q` per file            (04_convert_contracts_to_text.py:265)
 - X2 `pdftoppm` + `tesseract` per page  (04_convert_contracts_to_text.py:318,338)
-- X3 `ebook-convert`/`unoconv` doc→pdf  (04_convert_contracts_to_text.py:251,256)
 - X4 pdfminer page count                (06_extract_tables.py:143-147)
 - X5 `camelot.read_pdf` per page with a 10 s timeout, 0..n tables per page
   (06_extract_tables.py:197-220) — a flat-map (UDTF shape).
+
+X2 runs inside `extract_text` (the scanned-document fallback) and X4 inside
+`detect_tables` (the page loop). X3, the reference's `ebook-convert`/
+`unoconv` doc→pdf step (04_convert_contracts_to_text.py:251,256), has no
+operator here: no query, pipeline or CLI command runs it.
 
 Spark design: each is a per-partition batched map over (id, payload) rows —
 no shuffle, linear scaling with input splits; the reference's
@@ -21,12 +26,12 @@ differ from the driver): for text/pages, `pypdf` -> poppler `pdftotext`
 subprocess -> a pure-stdlib PDF parser (FlateDecode via zlib + Tj/TJ text
 operators — genuinely functional on machine-generated PDFs with no
 dependencies at all) -> the deterministic sha256 stub; for OCR,
-`pytesseract` -> stub; for tables, `camelot` -> stub. The ORACLED registry
+`tesseract` -> stub; for tables, `camelot` -> stub. The ORACLED registry
 queries pin `backend="stub"` explicitly so their DuckDB value oracles stay
 valid in any environment; production callers use the default
 `backend="auto"`. The Spark-side contract — schemas, batch iteration,
-flat-map emission, extension routing — is identical across tiers, so a
-tier swap changes one resolved callable, not the plan.
+flat-map emission — is identical across tiers, so a tier swap changes one
+resolved callable, not the plan.
 """
 
 from __future__ import annotations
@@ -41,7 +46,6 @@ from pyspark.sql import functions as F
 TIMEOUT_SECONDS = 10  # per-page budget, 06_extract_tables.py:199
 
 TEXT_SCHEMA = "id string, filename string, text string, method string"
-PAGES_SCHEMA = "id string, filename string, n_pages bigint"
 TABLES_SCHEMA = (
     "id string, filename string, page int, table_no int, "
     "n_rows int, n_cols int, accuracy double"
@@ -80,7 +84,7 @@ def _fake_tables(payload: bytes, page: int) -> list[tuple[int, int, float]]:
 
 
 # ---------------------------------------------------------------------------
-# Backend resolution (X1-X5 real adapters, gated on availability)
+# Backend resolution (real adapters, gated on availability)
 # ---------------------------------------------------------------------------
 
 
@@ -99,8 +103,6 @@ def _capabilities() -> dict[str, bool]:
             "tesseract": _sh.which("tesseract") is not None
             and _sh.which("pdftoppm") is not None,
             "camelot": _ilu.find_spec("camelot") is not None,
-            "ebook_convert": _sh.which("ebook-convert") is not None,
-            "unoconv": _sh.which("unoconv") is not None,
         }
     return _CAPS
 
@@ -267,114 +269,6 @@ def _camelot_tables(payload: bytes, page: int) -> list[tuple[int, int, float]]:
         ]
 
 
-def _fake_convert_pdf(payload: bytes, ext: str) -> bytes:
-    """STUB for X3 doc/docx→pdf: a deterministic minimal PDF whose content
-    encodes the source digest — downstream X1/X4 tiers (incl. the pure
-    parser) can consume it, so the full route→convert→extract pipeline is
-    exercisable with no binaries installed."""
-    h = hashlib.sha256(payload).hexdigest()[:16]
-    txt = f"converted {ext} {h}".encode()
-    body = b"BT (%s) Tj ET" % txt
-    return (
-        b"%PDF-1.4\n1 0 obj << /Type /Page >> endobj\n"
-        b"stream\n" + body + b"\nendstream\n%%EOF\n"
-    )
-
-
-def _ebook_convert_pdf(payload: bytes, ext: str) -> bytes:
-    """X3 real adapter: `ebook-convert in.<ext> out.pdf` exactly as
-    04_convert_contracts_to_text.py:251."""
-    import os as _os
-    import subprocess
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        src = _os.path.join(td, f"in.{ext}")
-        dst = _os.path.join(td, "out.pdf")
-        with open(src, "wb") as fh:
-            fh.write(payload)
-        subprocess.run(
-            ["ebook-convert", src, dst],
-            capture_output=True,
-            timeout=TIMEOUT_SECONDS * 6,
-        )
-        with open(dst, "rb") as fh:
-            return fh.read()
-
-
-def _unoconv_pdf(payload: bytes, ext: str) -> bytes:
-    """X3 real adapter: `unoconv -f pdf -o out.pdf in.<ext>` exactly as
-    04_convert_contracts_to_text.py:256."""
-    import os as _os
-    import subprocess
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        src = _os.path.join(td, f"in.{ext}")
-        dst = _os.path.join(td, "out.pdf")
-        with open(src, "wb") as fh:
-            fh.write(payload)
-        subprocess.run(
-            ["unoconv", "-f", "pdf", "-o", dst, src],
-            capture_output=True,
-            timeout=TIMEOUT_SECONDS * 6,
-        )
-        with open(dst, "rb") as fh:
-            return fh.read()
-
-
-def _resolve_convert(backend: str):
-    if backend == "stub":
-        return _fake_convert_pdf
-    caps = _capabilities()
-    if caps["ebook_convert"]:
-        return _try_chain(_ebook_convert_pdf, _fake_convert_pdf)
-    if caps["unoconv"]:
-        return _try_chain(_unoconv_pdf, _fake_convert_pdf)
-    return _fake_convert_pdf
-
-
-CONVERT_SCHEMA = "id string, filename string, pdf binary, method string"
-
-
-def convert_to_pdf(binaries: DataFrame, backend: str = "auto") -> DataFrame:
-    """X3: normalize every document to PDF. Rows routed `pdf` pass through
-    untouched; `convert` rows (doc/docx, P11 routing) go through the
-    ebook-convert/unoconv adapter (stub tier in minimal images); everything
-    else is dropped — exactly the reference's per-extension ladder
-    (`04_convert_contracts_to_text.py:222-256`). Arrow-batched map, no
-    shuffle; at 100 TB conversion parallelizes as tasks the same way the
-    per-file subprocess loop did not."""
-    from crz_scraper_spark.sources.files import route_by_extension
-
-    routed = route_by_extension(binaries, "filename").filter(
-        F.col("route").isin("pdf", "convert")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        convert_fn = _resolve_convert(backend)
-        for pdf in it:
-            out: dict[str, list] = {
-                "id": [], "filename": [], "pdf": [], "method": [],
-            }
-            for rid, fname, payload, route in zip(
-                pdf["id"], pdf["filename"], pdf["content"], pdf["route"]
-            ):
-                p = payload if payload is not None else b""
-                if route == "pdf":
-                    blob, method = bytes(p), "passthrough"
-                else:
-                    ext = str(fname).rsplit(".", 1)[-1].lower()
-                    blob, method = convert_fn(bytes(p), ext), "converted"
-                out["id"].append(rid)
-                out["filename"].append(fname)
-                out["pdf"].append(blob)
-                out["method"].append(method)
-            yield pd.DataFrame(out)
-
-    return routed.mapInPandas(batches, CONVERT_SCHEMA)
-
-
 def _try_chain(*tiers):
     """Run extraction tiers in order; a tier that RAISES (corrupt payload,
     pypdf PdfReadError, subprocess TimeoutExpired on a pathological page)
@@ -485,26 +379,6 @@ def extract_text(binaries: DataFrame, backend: str = "auto") -> DataFrame:
             )
 
     return binaries.mapInPandas(batches, TEXT_SCHEMA)
-
-
-def count_pages(binaries: DataFrame, backend: str = "auto") -> DataFrame:
-    """X4: page count per document."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        count_fn = _resolve_page_count(backend)
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "filename": pdf["filename"],
-                    "n_pages": [
-                        count_fn(p if p is not None else b"")
-                        for p in pdf["content"]
-                    ],
-                }
-            )
-
-    return binaries.mapInPandas(batches, PAGES_SCHEMA)
 
 
 def detect_tables(binaries: DataFrame, backend: str = "auto") -> DataFrame:

@@ -30,42 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """(node, rank) after ``iterations`` damped power steps, integer ppm.
-
-    ``edges`` is a directed edge list; nodes are the distinct sources (a
-    symmetric graph — the co-occurrence graphs this engine builds — makes
-    that the full node set). Sinks receive the teleport mass only
-    (coalesce 0), matching the unrolled SQL oracle exactly.
-    """
-    # Adjacency-list form: the per-iteration join is then NODE-sized on
-    # both sides (ranks ⋈ adjacency), with the edge list riding along as
-    # an array payload that explodes map-side AFTER the join — each
-    # iteration ships ranks + one copy of the adjacency, not an edge-sized
-    # join probe. (First cut joined ranks against the raw 12M-row edge
-    # list every iteration; the array form measures ~2× faster at sf1 —
-    # 20 s → 10.5 s — and scales with nodes, not edges, on the join side.)
-    # Callers that already hold an adjacency (copurchase_adjacency) should
-    # use `pagerank_on_adjacency` directly and skip this regroup.
-    return pagerank_on_adjacency(
-        edges.groupBy(F.col(src).alias("node")).agg(
-            F.collect_list(dst).alias("nbrs")
-        ),
-        iterations=iterations,
-        damping_num=damping_num,
-        damping_den=damping_den,
-        scale=scale,
-    )
-
-
 def _pagerank_chain(
     adj: DataFrame,
     nodes: DataFrame,
@@ -134,10 +98,9 @@ def pagerank_on_adjacency(
 ) -> DataFrame:
     """PageRank over a prebuilt ``(node, nbrs array)`` adjacency.
 
-    Same fixed-point arithmetic as `pagerank_fixed_point`; the adjacency is
-    persisted here for the iteration loop. The groupBy(dst) message shuffle
-    is the irreducible Pregel step (one join + one aggregation per
-    iteration — see `_pagerank_chain`).
+    The adjacency is persisted here for the iteration loop. The
+    groupBy(dst) message shuffle is the irreducible Pregel step (one join
+    + one aggregation per iteration — see `_pagerank_chain`).
     """
     adj = adjacency.select("node", "nbrs").persist()
     nodes = adj.select("node")
@@ -198,23 +161,6 @@ def copurchase_adjacency(
     return pairs.groupBy("node").agg(F.collect_set("nbr").alias("nbrs"))
 
 
-def copurchase_edges(
-    lineitem: DataFrame, max_basket: int = 50
-) -> DataFrame:
-    """Distinct symmetric (src, dst) part pairs co-occurring in an order.
-
-    Derived by exploding `copurchase_adjacency` — distinctness comes from
-    the set semantics of the adjacency aggregate (a map-side-combined,
-    node-keyed shuffle), NOT from a pair-keyed ``distinct()`` over the full
-    expansion, which the sf10 probe measured at 332 s against 54 s for the
-    adjacency build it was feeding anyway. The explode is map-only, so
-    edge consumers pay one shuffle total.
-    """
-    return copurchase_adjacency(lineitem, max_basket).select(
-        F.col("node").alias("src"), F.explode("nbrs").alias("dst")
-    )
-
-
 def triangle_counts(
     edges: DataFrame | None = None,
     top_k: int | None = None,
@@ -222,8 +168,8 @@ def triangle_counts(
 ) -> DataFrame:
     """(node, n_tri): how many triangles each node participates in.
 
-    ``edges`` is a symmetric edge list (both directions present, as
-    `copurchase_edges` emits). ``adjacency`` — the cheaper input when the
+    ``edges`` is a symmetric edge list (both directions present, like an
+    exploded adjacency). ``adjacency`` — the cheaper input when the
     caller already built one — MUST likewise be SYMMETRIC (v ∈ nbrs[u] ⇔
     u ∈ nbrs[v]) and self-loop-free, as `copurchase_adjacency` guarantees:
     the fast path reads each node's undirected degree as ``size(nbrs)`` and

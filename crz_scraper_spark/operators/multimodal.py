@@ -159,8 +159,7 @@ def _frame_slices(p: bytes) -> list[bytes]:
 
 
 def _featurize_bytes(frame: bytes, dim: int, np, zero):
-    """The stub featurizer's strided byte-window sum, shared by
-    `extract_features` and the fused `frame_features`."""
+    """The stub featurizer's strided byte-window sum (`frame_features`)."""
     arr = np.frombuffer(frame or b"", dtype=np.uint8)
     if arr.size == 0:
         return zero
@@ -170,7 +169,7 @@ def _featurize_bytes(frame: bytes, dim: int, np, zero):
 
 
 def frame_features(binary: DataFrame, dim: int = 16) -> DataFrame:
-    """Fused sample_frames ∘ extract_features in ONE mapInPandas pass.
+    """Fused sample_frames ∘ featurize in ONE mapInPandas pass.
 
     Chaining the two verbs ships every frame's bytes across the JVM↔Python
     boundary twice (payload → Python → frame rows → JVM → Python →
@@ -209,38 +208,3 @@ def frame_features(binary: DataFrame, dim: int = 16) -> DataFrame:
             )
 
     return binary.mapInPandas(batches, FEATURES_SCHEMA)
-
-
-def extract_features(frames: DataFrame, dim: int = 16) -> DataFrame:
-    """Per-frame embedding: binary → array<float>[dim], numpy-vectorized.
-
-    STUB featurizer (a stand-in for a vision encoder), but a DETERMINISTIC
-    INTEGER one: feature[j] is the strided byte-window sum — the sum of
-    byte values at positions j, j+dim, j+2*dim, ... of the frame (zero
-    padded). Integer-valued float32 (frames are bounded, so sums stay far
-    below 2^24) ⇒ every downstream aggregate is exact and the whole chain
-    is byte-arithmetic oracleable in ANSI SQL — unlike the earlier
-    hash-seeded Gaussian stub, which had no SQL analog and forced the
-    registry query onto the weaker rows-only check. Output still feeds the
-    similarity-search operators (operators/similarity.py) unchanged —
-    binary column in, embedding column out is the whole multimodal→ANN
-    bridge.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        zero = np.zeros(dim, dtype="float32")
-        for pdf in it:
-            feats = [
-                _featurize_bytes(p, dim, np, zero) for p in pdf["frame"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_no": pdf["frame_no"],
-                    "feature": feats,
-                }
-            )
-
-    return frames.mapInPandas(batches, FEATURES_SCHEMA)

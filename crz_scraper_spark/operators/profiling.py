@@ -1,12 +1,11 @@
 """Stage-9 profiling/classification operators (SURVEY.md §2.4 A9/A10, §2.5
 O4): dictionary-based gibberish detection, header detection, numeric/price
 column classification over a long-format cells table, and weighted keyword
-suggestion. Dictionary membership has three fidelity tiers, all sharing the
-same broadcast-semi-join plan (J7): plain wordset (`oov_profile`),
-suffix-strip morphology (`morph_oov_profile`), and full Hunspell affix
-expansion (`hunspell_oov_profile` — .dic/.aff expanded once at
-broadcast-build time by functions/hunspell.py, the Spark-first equivalent
-of the reference's per-token Hunspell handles).
+suggestion. Dictionary membership has two fidelity tiers, both sharing the
+same broadcast-semi-join plan (J7): plain wordset (`oov_profile_counts`)
+and suffix-strip morphology (`morph_oov_profile_counts`). Full Hunspell
+affix expansion of a .dic/.aff pair has no tier here: no query, pipeline
+or CLI command runs it.
 
 Reference behavior (`09_clean_tables.py`):
 - gibberish column: spellcheck each cell's words; drop column when
@@ -22,9 +21,8 @@ Reference behavior (`09_clean_tables.py`):
 Spark design: everything is a groupBy over a long format (table_id, col,
 row_no, cell) — the reference's per-file pandas loops become one shuffle per
 profile; the dictionary is a broadcast semi-join (J7) instead of per-cell
-Hunspell calls (morphological affix fidelity would need real Hunspell
-handles inside a pandas UDF — SURVEY §7 Hard-3; the wordset approximation
-is used here).
+Hunspell calls (the suffix-strip tier approximates Hunspell's affix
+morphology — SURVEY §7 Hard-3).
 """
 
 from __future__ import annotations
@@ -35,42 +33,6 @@ from pyspark.sql import functions as F
 from crz_scraper_spark.functions.text import tokens_nonempty
 
 
-def oov_profile(
-    docs: DataFrame,
-    dictionary: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gibberish_threshold: float = 0.75,
-) -> DataFrame:
-    """Per-document out-of-vocabulary ratio + gibberish flag (A9+J7).
-
-    `dictionary` is a (word) DataFrame (e.g. the corpus words with count > 5,
-    the stage-5a special dictionary `05_build_special_dictionary.py:136-141`).
-    Tokens left-join the broadcast dictionary; OOV ratio =
-    unmatched / total, gibberish iff ratio > threshold (`09:211`).
-    """
-    toks = docs.select(
-        F.col(id_col), F.explode(tokens_nonempty(text_col)).alias("word")
-    )
-    dic = dictionary.select(
-        F.col(dictionary.columns[0]).alias("word"), F.lit(1).alias("__in_dict")
-    ).distinct()
-    joined = toks.join(F.broadcast(dic), "word", "left")
-    return (
-        joined.groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.count(F.when(F.col("__in_dict").isNull(), 1)).alias("n_oov"),
-        )
-        .withColumn(
-            "oov_ratio", F.round(F.col("n_oov") / F.col("n_tokens"), 6)
-        )
-        .withColumn(
-            "is_gibberish", (F.col("oov_ratio") > gibberish_threshold).cast("int")
-        )
-    )
-
-
 def oov_profile_counts(
     doc_word_counts: DataFrame,
     dictionary: DataFrame,
@@ -78,13 +40,18 @@ def oov_profile_counts(
     count_col: str = "n",
     gibberish_threshold: float = 0.75,
 ) -> DataFrame:
-    """oov_profile over a pre-aggregated per-(doc, word) count table — the
-    shared-scan tier for callers whose dictionary ALSO derives from the
-    corpus (dictionary_oov): tokenizing once into (id, word, n) and rolling
-    both the dictionary and the profile off that table replaces a second
-    full tokenize+explode pass with a shuffle of the far smaller count
-    table. Same rows as oov_profile by the count identity
-    Σ_word n = token count and Σ_{OOV word} n = OOV token count."""
+    """Per-document out-of-vocabulary ratio + gibberish flag (A9+J7) over a
+    pre-aggregated per-(doc, word) count table.
+
+    `dictionary` is a (word) DataFrame (e.g. the corpus words with count > 5,
+    the stage-5a special dictionary `05_build_special_dictionary.py:136-141`).
+    Words left-join the broadcast dictionary; OOV ratio = unmatched /
+    total tokens, gibberish iff ratio > threshold (`09:211`). Callers whose
+    dictionary ALSO derives from the corpus (dictionary_oov) tokenize once
+    into (id, word, n) and roll both the dictionary and the profile off
+    that table — a shuffle of the far smaller count table instead of a
+    second full tokenize+explode pass. Token counts are the sums
+    Σ_word n and Σ_{OOV word} n."""
     dic = dictionary.select(
         F.col(dictionary.columns[0]).alias("word"), F.lit(1).alias("__in_dict")
     ).distinct()
@@ -109,46 +76,20 @@ def oov_profile_counts(
     )
 
 
-def hunspell_oov_profile(
-    docs: DataFrame,
-    dic_path: str,
-    aff_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gibberish_threshold: float = 0.75,
-) -> DataFrame:
-    """Full-fidelity X6: expand the real .dic/.aff pair once (driver-side,
-    dictionary-sized work) into the accepted-surface-form set, then run the
-    identical broadcast-semi-join membership plan as `oov_profile`. The
-    corpus-side cost is unchanged at any scale; only the broadcast payload
-    grows (~10x the stem count)."""
-    from crz_scraper_spark.functions.hunspell import hunspell_dictionary_df
-
-    dictionary = hunspell_dictionary_df(docs.sparkSession, dic_path, aff_path)
-    return oov_profile(
-        docs,
-        dictionary,
-        id_col=id_col,
-        text_col=text_col,
-        gibberish_threshold=gibberish_threshold,
-    )
-
-
 # Hunspell-style affix approximation (SURVEY §7 Hard-3): a token is
-# in-vocabulary if it OR a suffix-stripped stem is in the dictionary. Real
-# Hunspell handles (per-executor, inside a pandas UDF) are the full-fidelity
-# path when the library is present; this suffix tier captures the common
-# inflections with pure relational operators — and is therefore oracleable.
+# in-vocabulary if it OR a suffix-stripped stem is in the dictionary. The
+# suffix tier captures the common inflections with pure relational
+# operators — and is therefore oracleable.
 MORPH_SUFFIXES = ["s", "es", "ed", "ing"]
 MORPH_MIN_STEM = 3
 
 
 def _morph_accepted_vocab(vocab: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """The accepted-word set shared by both morph tiers (ADVICE r10 — the
-    two copies could drift): each VOCABULARY word (not each occurrence —
-    the vocab is corpus-log sized) explodes to ≤ len(MORPH_SUFFIXES)+1
-    stem candidates, semi-joins the broadcast dictionary, and the accepted
-    words come back as a broadcastable (word, __ok=1) frame."""
+    """The suffix tier's accepted-word set: each VOCABULARY word (not each
+    occurrence — the vocab is corpus-log sized) explodes to
+    ≤ len(MORPH_SUFFIXES)+1 stem candidates, semi-joins the broadcast
+    dictionary, and the accepted words come back as a broadcastable
+    (word, __ok=1) frame."""
     dic = dictionary.select(
         F.col(dictionary.columns[0]).alias("dword")
     ).distinct()
@@ -174,39 +115,6 @@ def _morph_accepted_vocab(vocab: DataFrame, dictionary: DataFrame) -> DataFrame:
     )
 
 
-def morph_oov_profile(
-    docs: DataFrame,
-    dictionary: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gibberish_threshold: float = 0.75,
-) -> DataFrame:
-    """oov_profile with suffix-stripping morphology: the candidate-stem set
-    of each VOCABULARY word (not each occurrence — the vocab is corpus-log
-    sized) explodes to ≤ len(MORPH_SUFFIXES)+1 stems, semi-joins the
-    broadcast dictionary, and the accepted vocabulary broadcasts back onto
-    the token stream. Two broadcast joins, one corpus shuffle (the per-doc
-    aggregate) — same plan class as oov_profile."""
-    toks = docs.select(
-        F.col(id_col), F.explode(tokens_nonempty(text_col)).alias("word")
-    )
-    accepted = _morph_accepted_vocab(toks.select("word").distinct(), dictionary)
-    joined = toks.join(F.broadcast(accepted), "word", "left")
-    return (
-        joined.groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.count(F.when(F.col("__ok").isNull(), 1)).alias("n_oov"),
-        )
-        .withColumn(
-            "oov_ratio", F.round(F.col("n_oov") / F.col("n_tokens"), 6)
-        )
-        .withColumn(
-            "is_gibberish", (F.col("oov_ratio") > gibberish_threshold).cast("int")
-        )
-    )
-
-
 def morph_oov_profile_counts(
     doc_word_counts: DataFrame,
     dictionary: DataFrame,
@@ -214,11 +122,11 @@ def morph_oov_profile_counts(
     count_col: str = "n",
     gibberish_threshold: float = 0.75,
 ) -> DataFrame:
-    """morph_oov_profile over a pre-aggregated per-(doc, word) count table
-    — the shared-scan tier (see oov_profile_counts): the vocabulary, the
-    stem candidates, and the per-doc profile all roll off one tokenize
-    pass. Same rows by the same count identities; the stem/accept logic is
-    generated from the identical MORPH_SUFFIXES arms."""
+    """oov_profile_counts with suffix-stripping morphology: the vocabulary,
+    the stem candidates (`_morph_accepted_vocab`), and the per-doc profile
+    all roll off one pre-aggregated per-(doc, word) count table — two
+    broadcast joins and one shuffle of the count table. The stem/accept
+    logic is generated from the MORPH_SUFFIXES arms."""
     accepted = _morph_accepted_vocab(
         doc_word_counts.select("word").distinct(), dictionary
     )

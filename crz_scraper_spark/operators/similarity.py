@@ -622,27 +622,10 @@ def kmeans_lloyd_distributed(
     return final, cents, inertia_hist
 
 
-def _assign_l2_numpy_udf(centroids: list[list[float]]):
-    """Arrow-batched L2 argmin over the centroid matrix (BLAS expansion)."""
-    import numpy as np
-
-    cm = np.asarray(centroids, dtype=np.float64)
-    c_sq = (cm * cm).sum(axis=1)  # (k,)
-
-    @F.pandas_udf("int")
-    def assign(vs):
-        import pandas as pd
-
-        mat = np.stack(vs.to_numpy())
-        d2 = (mat * mat).sum(axis=1, keepdims=True) - 2.0 * (mat @ cm.T) + c_sq
-        return pd.Series(np.argmin(np.round(d2, 9), axis=1).astype("int32"))
-
-    return assign
-
-
 def _assign_l2_d2_numpy_udf(centroids: list[list[float]]):
-    """As `_assign_l2_numpy_udf`, but also returns the winning (rounded)
-    squared distance so assignment and inertia come from ONE pass.
+    """Arrow-batched L2 argmin over the centroid matrix (BLAS expansion)
+    that also returns the winning (rounded) squared distance, so
+    assignment and inertia come from ONE pass.
     Per-row results depend only on that row ⇒ deterministic across
     partitionings/batchings; the 9-dp round before argmin/min matches the
     assignment convention."""

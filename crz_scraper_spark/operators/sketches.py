@@ -185,37 +185,6 @@ def _hll_sparse(
     )
 
 
-def _hll_densify(regs: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Materialize empty registers at mx = 0 so the register SUM in
-    `hll_estimate` is well-defined over exactly ``m`` rows per group."""
-    # Group list for register densification comes from the ALREADY-AGGREGATED
-    # register table, not the raw input: a `df.select(...).distinct()` here
-    # would force a second full scan + distinct shuffle of the source (full
-    # lineitem at sf10) to enumerate a handful of groups the register rows
-    # already name. Every non-empty group has >= 1 register row, and an
-    # empty group has no defined estimate anyway, so the group sets match.
-    groups = regs.select(*group_cols).distinct()
-    allregs = groups.select(
-        *group_cols,
-        F.explode(F.sequence(F.lit(0), F.lit(_HLL_M - 1))).alias("bucket"),
-    ).join(regs, [*group_cols, "bucket"], "left")
-    return allregs.withColumn("mx", F.coalesce(F.col("mx"), F.lit(0)))
-
-
-def hll_registers(
-    df: DataFrame, value_col: str, group_cols: list[str]
-) -> DataFrame:
-    """Per-group HLL register table: ``group_cols + (bucket, mx)``.
-
-    Exactly ``m`` rows per group (empty registers materialized at mx = 0 so
-    the register sum is well-defined), built with one max-aggregate — the
-    shuffle payload is register-table-sized, never input-sized. Register
-    tables are mergeable by MAX on (group, bucket), so incremental daily
-    builds never re-read history — `hll_incremental` below is that path.
-    """
-    return _hll_densify(_hll_sparse(df, value_col, group_cols), group_cols)
-
-
 def hll_sparse_with_exact(
     df: DataFrame, value_col: str, group_cols: list[str]
 ) -> DataFrame:
@@ -255,9 +224,9 @@ def hll_incremental(
     store_path: str,
 ) -> DataFrame:
     """Incremental distinct-count maintenance — the daily-ingest form of
-    `hll_registers`: the NEW batch's sparse register table is computed
-    (one map-side-combined aggregate over the increment only), committed
-    to a persisted register store via the signature-store protocol
+    the HLL register table: the NEW batch's sparse register table is
+    computed (one map-side-combined aggregate over the increment only),
+    committed to a persisted register store via the signature-store protocol
     (atomic dot-staging + rename, `_family` marker pinning the hash
     family/width), and the estimate is read from store ∪ batch merged by
     element-wise MAX. The corpus never re-scans: daily cost is
@@ -303,14 +272,14 @@ def hll_incremental(
 def hll_estimate_sparse(
     sparse: DataFrame, group_cols: list[str]
 ) -> DataFrame:
-    """`hll_estimate` taken directly on a SPARSE register table — the
+    """The HLL estimate taken directly on a SPARSE register table — the
     ``m - n_present`` absent registers are pure arithmetic (each
     contributes ``2^53`` to the register sum and 1 to ``zero_regs``), so
     the densify explode + 256-way left join disappears and the estimate
     is ONE aggregation over ≤ groups × 256 rows (r10, guide §1.2).
     Requires every present register to have mx ≥ 1, which `_hll_sparse`
     guarantees (rho ≥ 1 by construction) and MAX-merging preserves —
-    identical output to `hll_estimate(_hll_densify(sparse))`, pinned by
+    identical output to the estimate over the densified table, pinned by
     tests/test_graph_sketches.py."""
     n_absent = F.lit(_HLL_M) - F.count(F.lit(1))
     summed = sparse.groupBy(*group_cols).agg(
@@ -319,25 +288,6 @@ def hll_estimate_sparse(
             + n_absent * F.lit(1 << 53)
         ).alias("s"),
         n_absent.cast("bigint").alias("zero_regs"),
-    )
-    est = F.floor(F.lit(HLL_NUMERATOR) / F.col("s").cast("double"))
-    return summed.select(
-        *group_cols, est.cast("bigint").alias("hll_est"), "zero_regs"
-    )
-
-
-def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Collapse a register table to ``group_cols + (hll_est, zero_regs)``.
-
-    The register sum is EXACT int64 (sum of 2^(53-mx) over 256 registers
-    <= 2^61); the only float op is the final division of two values both
-    engines hold bit-identically, so `hll_est` hash-matches a DuckDB twin.
-    """
-    summed = registers.groupBy(*group_cols).agg(
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 53 - mx)")).alias("s"),
-        F.sum(F.when(F.col("mx") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("zero_regs"),
     )
     est = F.floor(F.lit(HLL_NUMERATOR) / F.col("s").cast("double"))
     return summed.select(

@@ -17,8 +17,9 @@ Python. The per-category and grand totals are plain column sums over the
 already-computed keyword columns — no second pass, no groupBy at all.
 
 Scale note (SURVEY.md §7 Hard-4): this is O(keywords × corpus) inside
-whole-stage codegen; beyond ~10³ keywords switch to an Aho-Corasick automaton
-inside `mapInPandas` (one pass per document regardless of keyword count).
+whole-stage codegen, which suits the reference's taxonomy. The large-taxonomy
+tiers (Arrow-batched counting, an Aho-Corasick automaton) are not here: no
+query, pipeline or CLI command tags with more than a handful of keywords.
 """
 
 from __future__ import annotations
@@ -81,179 +82,6 @@ def keyword_tag(
         c = F.col(f"cat_{_safe(cat)}")
         grand = c if grand is None else grand + c
     return out.withColumn("total_hits", grand)
-
-
-def keyword_tag_batched(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    taxonomy: dict[str, list[str]] | None = None,
-) -> DataFrame:
-    """Arrow-batched tagging path for LARGE keyword sets (SURVEY §7 Hard-4).
-
-    The JVM-expression path (`keyword_tag`) emits one codegen'd expression
-    per keyword — ideal up to a few hundred keywords, but expression count
-    grows the generated code linearly and whole-stage codegen falls over
-    around 10³ columns. This variant runs inside `mapInPandas`: per Arrow
-    batch, one C-speed vectorized `Series.str.count` pass per keyword over
-    the lowercased text. Same non-overlapping `str.count` semantics
-    (pandas counts non-overlapping regex matches of the escaped literal —
-    identical to Python `str.count`, `04_tag_text_contracts.py:118`).
-
-    At even larger keyword sets (10⁴+), use `keyword_tag_ac` — an
-    Aho-Corasick automaton with a per-keyword last-match-end guard that
-    preserves the same non-overlapping counting rule in ONE text pass
-    regardless of keyword count; the Spark plan (a shuffle-free batched
-    map) is unchanged.
-    """
-    import re
-
-    tax = taxonomy or DEFAULT_TAXONOMY
-    kw_by_cat = {cat: [kw.lower() for kw in kws] for cat, kws in tax.items()}
-    out_schema = (
-        f"{id_col} bigint, "
-        + ", ".join(
-            f"kw_{_safe(kw)} bigint" for kws in tax.values() for kw in kws
-        )
-        + ", "
-        + ", ".join(f"cat_{_safe(cat)} bigint" for cat in tax)
-        + ", total_hits bigint"
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            lower = pdf[text_col].fillna("").str.lower()
-            data = {id_col: pdf[id_col]}
-            cat_totals = {}
-            for cat, kws in kw_by_cat.items():
-                cat_sum = None
-                for kw in kws:
-                    counts = lower.str.count(re.escape(kw)).astype("int64")
-                    data[f"kw_{_safe(kw)}"] = counts
-                    cat_sum = counts if cat_sum is None else cat_sum + counts
-                cat_totals[cat] = cat_sum
-            for cat, s in cat_totals.items():
-                data[f"cat_{_safe(cat)}"] = s
-            data["total_hits"] = sum(cat_totals.values())
-            yield pd.DataFrame(data)
-
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
-
-
-class AhoCorasick:
-    """Dependency-free Aho-Corasick automaton over lowercased keywords.
-
-    `counts(text)` returns per-keyword NON-overlapping occurrence counts —
-    Python `str.count` semantics (`04_tag_text_contracts.py:118`) — in one
-    left-to-right pass: the automaton emits every match; a per-keyword
-    "last accepted end" guard drops matches that overlap an accepted one,
-    which is exactly str.count's greedy-left rule. O(|text| + matches) per
-    document, independent of keyword-set size.
-    """
-
-    def __init__(self, keywords: list[str]):
-        self.keywords = keywords
-        self.klen = [len(k) for k in keywords]
-        goto: list[dict[str, int]] = [{}]
-        out: list[list[int]] = [[]]
-        for idx, kw in enumerate(keywords):
-            node = 0
-            for ch in kw:
-                nxt = goto[node].get(ch)
-                if nxt is None:
-                    goto.append({})
-                    out.append([])
-                    nxt = len(goto) - 1
-                    goto[node][ch] = nxt
-                node = nxt
-            out[node].append(idx)
-        fail = [0] * len(goto)
-        from collections import deque
-
-        q = deque(goto[0].values())
-        while q:
-            u = q.popleft()
-            for ch, v in goto[u].items():
-                q.append(v)
-                f = fail[u]
-                while f and ch not in goto[f]:
-                    f = fail[f]
-                cand = goto[f].get(ch, 0)
-                fail[v] = cand if cand != v else 0
-                if out[fail[v]]:
-                    out[v] = out[v] + out[fail[v]]
-        self.goto, self.fail, self.out = goto, fail, out
-
-    def counts(self, text: str) -> list[int]:
-        res = [0] * len(self.keywords)
-        last_end = [0] * len(self.keywords)
-        goto, fail, out, klen = self.goto, self.fail, self.out, self.klen
-        node = 0
-        for i, ch in enumerate(text):
-            while node and ch not in goto[node]:
-                node = fail[node]
-            node = goto[node].get(ch, 0)
-            if out[node]:
-                end = i + 1
-                for k in out[node]:
-                    if end - klen[k] >= last_end[k]:
-                        res[k] += 1
-                        last_end[k] = end
-        return res
-
-
-def keyword_tag_ac(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    taxonomy: dict[str, list[str]] | None = None,
-) -> DataFrame:
-    """One-pass tagging for VERY large keyword sets (SURVEY §7 Hard-4,
-    10⁴+ keywords): same wide output schema as `keyword_tag`/
-    `keyword_tag_batched`, but each Arrow batch scans every document ONCE
-    through an Aho-Corasick automaton instead of once per keyword. The
-    automaton is built per task (driver-side pickling of the closure ships
-    only the keyword list) and shared across the task's batches.
-    """
-    tax = taxonomy or DEFAULT_TAXONOMY
-    orig_kws = [kw for kws in tax.values() for kw in kws]
-    flat_kws = [kw.lower() for kw in orig_kws]
-    cat_slices: list[tuple[str, int, int]] = []
-    pos = 0
-    for cat, kws in tax.items():
-        cat_slices.append((cat, pos, pos + len(kws)))
-        pos += len(kws)
-    out_schema = (
-        f"{id_col} bigint, "
-        + ", ".join(f"kw_{_safe(kw)} bigint" for kws in tax.values() for kw in kws)
-        + ", "
-        + ", ".join(f"cat_{_safe(cat)} bigint" for cat in tax)
-        + ", total_hits bigint"
-    )
-
-    def batches(it):
-        import pandas as pd
-
-        ac = AhoCorasick(flat_kws)
-        for pdf in it:
-            rows = [
-                ac.counts(t) for t in pdf[text_col].fillna("").str.lower()
-            ]
-            data = {id_col: pdf[id_col]}
-            for j, kw in enumerate(orig_kws):
-                data[f"kw_{_safe(kw)}"] = [r[j] for r in rows]
-            cat_sums = {}
-            for cat, lo, hi in cat_slices:
-                cat_sums[cat] = [sum(r[lo:hi]) for r in rows]
-                data[f"cat_{_safe(cat)}"] = cat_sums[cat]
-            data["total_hits"] = [
-                sum(vals) for vals in zip(*cat_sums.values())
-            ] if cat_sums else [0] * len(rows)
-            yield pd.DataFrame(data)
-
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
 
 
 def tag_rank_filter(

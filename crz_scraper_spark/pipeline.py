@@ -386,6 +386,7 @@ def curation_pipeline(
 
 __all__ = [
     "contracts_pipeline",
+    "observe_discards",
     "documents_pipeline",
     "tables_pipeline",
     "curation_pipeline",

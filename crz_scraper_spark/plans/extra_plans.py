@@ -80,10 +80,9 @@ FROM prof
 # ---------------------------------------------------------------------------
 # dictionary_oov_morph — the SURVEY §7 Hard-3 upgrade of dictionary_oov:
 # membership accepts suffix-stripped stems (Hunspell-affix approximation,
-# operators/profiling.py::morph_oov_profile). The suffix arms in BOTH the
-# Spark plan and the oracle SQL are generated from the same MORPH_SUFFIXES
-# constant — the two sides cannot drift. Real Hunspell handles inside a
-# pandas UDF remain the full-fidelity path when the library exists.
+# operators/profiling.py::morph_oov_profile_counts). The suffix arms in BOTH
+# the Spark plan and the oracle SQL are generated from the same
+# MORPH_SUFFIXES constant — the two sides cannot drift.
 # ---------------------------------------------------------------------------
 
 
@@ -707,7 +706,7 @@ def approx_percentile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # hll_distinct_md5 — the engine-portable HyperLogLog twin of
-# approx_distinct_profile (operators/sketches.py::hll_registers): per
+# approx_distinct_profile (operators/sketches.py::hll_sparse_with_exact): per
 # (l_returnflag, l_linestatus), the md5-register HLL estimate of distinct
 # l_orderkey beside the exact count. Unlike Spark's private HLL++, every
 # step is public arithmetic (md5 bucket + leading-zero rho + integer

@@ -193,9 +193,9 @@ ORDER BY hop
 
 def part_reach_3hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side: the kNN edge frame is built ONCE as a DataFrame
-    (collect_set + map-side explode — `copurchase_edges`' shape — plus the
-    per-source top-5 window), cached, and the FIXED 3-hop walk is unrolled
-    into chained broadcast joins over the cached frame (the recursive-CTE
+    (collect_set + map-side explode plus the per-source top-5 window),
+    cached, and the FIXED 3-hop walk is unrolled into chained broadcast
+    joins over the cached frame (the recursive-CTE
     executor re-planned one union branch per level and re-evaluated every
     CTE it referenced per iteration — measured 14.7 s at sf0.1 with the
     pair build inside the recursion, and still 33 driver jobs with it

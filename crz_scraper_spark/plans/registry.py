@@ -39,19 +39,11 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # every query whose CODE or ORACLE changed this round (first check of
 # the new shape) + the remaining slots refresh the STALEST coverage —
 # queries whose last driver check is oldest, oldest-first in registry
-# order. Changed code in this rotation: one implementation per job —
-# semantic_dedup's pair phase is the blocked BLAS gram alone,
-# triangle_counts always compacts ids and hints the hash joins,
-# salted_skew_join salts through operators/skew.salted_join,
-# compact_small_files unescapes partition names through Catalyst
-# directly, write_pipe_csv lost its single-file option, the JSONL and XML
-# fixtures share fixture_plans' memo, and split_corrupt caches nothing
-# (xml_ingest_flatten, already pinned). The oracled queries on those
-# paths take the changed-code slots. The staleness slots start with
-# excess_quantity_suppliers (last checked r10, carried over), then take
-# 37 of the 40 oracled queries last checked in r11, in registry order;
-# multimodal_frame_index, multimodal_resize_audit and
-# dictionary_oov_morph roll to the next rotation.
+# order. No registry query's code changed in this rotation, so every
+# non-pinned slot is a staleness slot, ranked by tools/rotate_window.py
+# (which counts each committed window after the last CORRECTNESS record
+# as one round): the three queries last checked in r11, all 39 last
+# checked in r12, then the first 3 of r13 in registry order.
 # The window stays all-oracled by policy (tests/test_integrity.py:
 # every window slot must hash-match, the strongest driver signal) —
 # the rows-only entries are deliberately never window-rotated: each
@@ -65,55 +57,54 @@ _FIRST_WINDOW = [
     "xml_ingest_flatten",       # S1/S2 XML dump scan + corrupt routing
     "minhash_near_dup_md5",     # dedup: MinHash-LSH (portable hash)
     "streaming_interval_join",  # §2.8 stream-stream interval join
-    # -- changed code: one implementation per job ------------------------
-    "semantic_dedup",
-    "semantic_dedup_trained_fixed",
-    "part_triangles",
-    "salted_skew_join",
-    "compaction_roundtrip",
-    "pipe_csv_roundtrip",
-    "jsonl_ingest_roundtrip",
-    # -- staleness refresh: carried over (last checked r10)
-    "excess_quantity_suppliers",
-    # -- staleness refresh: last checked r11 (37 of 40 oracled, registry
-    #    order)
-    "top_orders_per_customer",
-    "customers_without_orders",
-    "order_lineitem_rollup",
-    "priority_status_pivot",
-    "dedup_orders_first_wins",
-    "nationkey_set_ops",
-    "date_sequence",
-    "order_parts_array",
-    "top_status_per_priority",
-    "string_column_profile",
-    "perplexity_filter",
-    "doc_chunking",
-    "boilerplate_ngram_filter",
-    "ngram_lm_counts",
-    "dup_span_detect",
-    "line_dedup_reconstruct",
-    "pii_redact",
-    "per_class_sample",
-    "repetition_stats",
-    "stratified_sample",
-    "eval_contamination",
-    "bpe_fixed_merges_stats",
-    "word_frequency",
-    "tf_idf_top_terms",
-    "train_test_split",
-    "sequence_packing",
-    "keyword_tagging",
-    "keyword_hits_unpivot",
-    "subject_extract_600",
-    "contains_theta_join",
-    "doc_quality",
-    "event_transition_matrix",
-    "tumbling_hourly",
-    "scd2_intervals",
-    "funnel_conversion",
-    "weekly_retention",
-    "ngram_jaccard_consecutive",
+    # -- staleness refresh (tools/rotate_window.py): last checked r11
+    "multimodal_frame_index",
+    "multimodal_resize_audit",
+    "dictionary_oov_morph",
+    # -- staleness refresh: last checked r12 (all 39, registry order)
+    "gopher_rules_filter",
+    "epoch_shuffle",
+    "token_count_stats",
+    "doc_fingerprint",
+    "lang_id",
+    "exact_dedup_groups",
+    "rolling_active_users",
+    "user_running_totals",
+    "hard_negative_mining",
+    "fuzzy_name_pairs",
+    "pdf_text_extract",
+    "pdf_table_detect",
+    "lsh_band_occupancy_md5",
+    "near_dup_clusters",
+    "near_dup_keep_best",
+    "simhash_near_dup_md5",
+    "multimodal_decode",
+    "multimodal_frame_features",
+    "keyword_rollup",
+    "orders_snapshot_diff",
+    "ivf_incremental_assign",
+    "dir_tree_corpus_scan",
+    "wordlist_sink_roundtrip",
+    "suggested_keywords_score",
+    "natural_sort_rank",
+    "minhash_incremental_md5",
+    "simhash_incremental_md5",
+    "table_checksum",
+    "incremental_daily_rollup",
+    "partition_minmax_index",
+    "zorder_layout_key",
+    "daily_gap_fill",
+    "locf_fill",
+    "event_value_distribution",
+    "tagged_metadata_rank",
+    "attachments_explode_sum",
+    "path_derived_metadata_join",
+    "tables_per_contract",
+    "embedding_cosine_near_dup",
+    # -- staleness refresh: last checked r13 (first 3 of 41)
+    "ewma_nation_revenue",
+    "streaming_left_outer_join",
+    "streaming_tumbling_hourly",
 ]
 
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}

@@ -11,6 +11,10 @@ Spark design: one distributed scan of the whole tree; the contract ID is a
 At 100 TB the tree is millions of files: listing parallelizes across the
 cluster and small files should be compacted into Parquet early (the engine
 does exactly that: this source feeds a `docs(id, filename, text)` Parquet).
+
+Extension routing (P11, `04_convert_contracts_to_text.py:222-232`) has no
+helper here: no query, pipeline or CLI command routes files through one
+(`path_derived_metadata_join` classifies paths with its own inline CASE).
 """
 
 from __future__ import annotations
@@ -54,17 +58,4 @@ def read_binary_tree(spark: SparkSession, root: str, glob: str = "*.pdf") -> Dat
         F.element_at(F.split(F.col("path"), "/"), -1).alias("filename"),
         F.col("length"),
         F.col("content"),
-    )
-
-
-def route_by_extension(df: DataFrame, path_col: str = "filename") -> DataFrame:
-    """P11: casefolded extension routing (pdf/doc/docx/txt → handler tag,
-    `04_convert_contracts_to_text.py:222-232`, `06_extract_tables.py:181-195`)."""
-    lower = F.lower(F.col(path_col))
-    return df.withColumn(
-        "route",
-        F.when(lower.endswith(".pdf"), F.lit("pdf"))
-        .when(lower.endswith(".docx") | lower.endswith(".doc"), F.lit("convert"))
-        .when(lower.endswith(".txt"), F.lit("text"))
-        .otherwise(F.lit("skip")),
     )

@@ -69,28 +69,7 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean_rows_without_corrupt_col, corrupt_rows).
 
     The corrupt side keeps the full row shape (data columns null, raw
-    line in the corrupt column); `read_corrupt_lines` yields just the raw
-    lines for a quarantine sink."""
+    line in the corrupt column) for a quarantine sink."""
     clean = df.filter(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
     corrupt = df.filter(df[CORRUPT_COL].isNotNull())
     return clean, corrupt
-
-
-def read_corrupt_lines(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Just the malformed raw lines (for the quarantine sink)."""
-    from pyspark.sql import functions as F
-
-    parsed = F.from_json(
-        "value",
-        _probe_schema(schema),
-        {"columnNameOfCorruptRecord": CORRUPT_COL},
-    )
-    return (
-        spark.read.text(path)
-        .filter(F.length(F.trim("value")) > 0)
-        .filter(parsed[CORRUPT_COL].isNotNull())
-        .select(F.col("value").alias(CORRUPT_COL))
-    )
-

@@ -8,10 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from crz_scraper_spark.operators.compaction import compact_small_files
-from crz_scraper_spark.operators.heavyhitters import (
-    heavy_hitters,
-    mg_candidates,
-)
+
+from tests.reference import heavy_hitters, mg_candidates
 
 
 def _data_files(root: str) -> list[str]:

@@ -216,7 +216,11 @@ def test_jsonl_corrupt_routing(spark, sf_dir):
 
     from crz_scraper_spark.plans.fixture_plans import _fixture_dir
     from crz_scraper_spark.plans.parity_plans import jsonl_ingest_roundtrip
-    from crz_scraper_spark.sources.jsonl import read_jsonl, split_corrupt
+    from crz_scraper_spark.sources.jsonl import (
+        CORRUPT_COL,
+        read_jsonl,
+        split_corrupt,
+    )
 
     jsonl_ingest_roundtrip(spark, sf_dir).count()  # materialize fixture
     out_dir = _fixture_dir("jsonl_ingest_fixture", sf_dir)
@@ -224,17 +228,15 @@ def test_jsonl_corrupt_routing(spark, sf_dir):
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ])
-    clean, _corrupt = split_corrupt(read_jsonl(spark, out_dir, schema))
-    from crz_scraper_spark.sources.jsonl import read_corrupt_lines
-
-    corrupt = read_corrupt_lines(spark, out_dir, schema)
+    clean, corrupt = split_corrupt(read_jsonl(spark, out_dir, schema))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_bad = docs.filter(F.col("doc_id") % 41 == 0).count()
     n_all = docs.count()
     assert corrupt.count() == n_bad
     assert clean.count() == n_all - n_bad
     # Corrupt lines carry the raw text for quarantine, not nulls.
-    assert all(r[0].startswith('{"doc_id') for r in corrupt.collect())
+    raw = corrupt.select(CORRUPT_COL).collect()
+    assert all(r[0].startswith('{"doc_id') for r in raw)
 
 
 def test_jsonl_write_read_roundtrip(spark, tmp_path):

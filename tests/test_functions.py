@@ -9,7 +9,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from crz_scraper_spark.functions.text import (
-    normalize_ws,
     subject_extract,
     substring_count,
     tokens_nonempty,
@@ -51,11 +50,6 @@ def test_tokenize_matches_regex_split(spark):
     for t, toks in zip(texts, got):
         expected = [w for w in pat.split(t.lower()) if w != ""]
         assert toks == expected, t
-
-
-def test_normalize_ws(spark):
-    df = spark.createDataFrame([Row(t="  a \n b\t\tc ")])
-    assert df.select(normalize_ws("t").alias("n")).first()["n"] == "a b c"
 
 
 def test_subject_extract_anchor_priority(spark):

@@ -7,12 +7,127 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
 from crz_scraper_spark.operators.graph import (
-    copurchase_edges,
-    pagerank_fixed_point,
+    copurchase_adjacency,
+    pagerank_on_adjacency,
 )
-from crz_scraper_spark.operators.sketches import cms_build, cms_estimate
+from crz_scraper_spark.operators.sketches import (
+    _HLL_M,
+    HLL_NUMERATOR,
+    _hll_sparse,
+    cms_build,
+    cms_estimate,
+)
+
+# ---------------------------------------------------------------------------
+# References the tests below compare the engine's operators against: the
+# edge-list PageRank and co-purchase forms, and the dense HLL register table.
+# ---------------------------------------------------------------------------
+
+
+def pagerank_fixed_point(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    iterations: int = 5,
+    damping_num: int = 85,
+    damping_den: int = 100,
+    scale: int = 1_000_000,
+) -> DataFrame:
+    """(node, rank) after ``iterations`` damped power steps, integer ppm.
+
+    ``edges`` is a directed edge list; nodes are the distinct sources (a
+    symmetric graph — the co-occurrence graphs this engine builds — makes
+    that the full node set). Sinks receive the teleport mass only
+    (coalesce 0), matching the unrolled SQL oracle exactly.
+    """
+    # Adjacency-list form: the per-iteration join is then NODE-sized on
+    # both sides (ranks ⋈ adjacency), with the edge list riding along as
+    # an array payload that explodes map-side AFTER the join — each
+    # iteration ships ranks + one copy of the adjacency, not an edge-sized
+    # join probe. (First cut joined ranks against the raw 12M-row edge
+    # list every iteration; the array form measures ~2× faster at sf1 —
+    # 20 s → 10.5 s — and scales with nodes, not edges, on the join side.)
+    # Callers that already hold an adjacency (copurchase_adjacency) should
+    # use `pagerank_on_adjacency` directly and skip this regroup.
+    return pagerank_on_adjacency(
+        edges.groupBy(F.col(src).alias("node")).agg(
+            F.collect_list(dst).alias("nbrs")
+        ),
+        iterations=iterations,
+        damping_num=damping_num,
+        damping_den=damping_den,
+        scale=scale,
+    )
+
+
+def copurchase_edges(
+    lineitem: DataFrame, max_basket: int = 50
+) -> DataFrame:
+    """Distinct symmetric (src, dst) part pairs co-occurring in an order.
+
+    Derived by exploding `copurchase_adjacency` — distinctness comes from
+    the set semantics of the adjacency aggregate (a map-side-combined,
+    node-keyed shuffle), NOT from a pair-keyed ``distinct()`` over the full
+    expansion, which the sf10 probe measured at 332 s against 54 s for the
+    adjacency build it was feeding anyway. The explode is map-only, so
+    edge consumers pay one shuffle total.
+    """
+    return copurchase_adjacency(lineitem, max_basket).select(
+        F.col("node").alias("src"), F.explode("nbrs").alias("dst")
+    )
+
+
+def _hll_densify(regs: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Materialize empty registers at mx = 0 so the register SUM in
+    `hll_estimate` is well-defined over exactly ``m`` rows per group."""
+    # Group list for register densification comes from the ALREADY-AGGREGATED
+    # register table, not the raw input: a `df.select(...).distinct()` here
+    # would force a second full scan + distinct shuffle of the source (full
+    # lineitem at sf10) to enumerate a handful of groups the register rows
+    # already name. Every non-empty group has >= 1 register row, and an
+    # empty group has no defined estimate anyway, so the group sets match.
+    groups = regs.select(*group_cols).distinct()
+    allregs = groups.select(
+        *group_cols,
+        F.explode(F.sequence(F.lit(0), F.lit(_HLL_M - 1))).alias("bucket"),
+    ).join(regs, [*group_cols, "bucket"], "left")
+    return allregs.withColumn("mx", F.coalesce(F.col("mx"), F.lit(0)))
+
+
+def hll_registers(
+    df: DataFrame, value_col: str, group_cols: list[str]
+) -> DataFrame:
+    """Per-group HLL register table: ``group_cols + (bucket, mx)``.
+
+    Exactly ``m`` rows per group (empty registers materialized at mx = 0 so
+    the register sum is well-defined), built with one max-aggregate — the
+    shuffle payload is register-table-sized, never input-sized. Register
+    tables are mergeable by MAX on (group, bucket), so incremental daily
+    builds never re-read history — `sketches.hll_incremental` is that path.
+    """
+    return _hll_densify(_hll_sparse(df, value_col, group_cols), group_cols)
+
+
+def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Collapse a register table to ``group_cols + (hll_est, zero_regs)``.
+
+    The register sum is EXACT int64 (sum of 2^(53-mx) over 256 registers
+    <= 2^61); the only float op is the final division of two values both
+    engines hold bit-identically, so `hll_est` hash-matches a DuckDB twin.
+    """
+    summed = registers.groupBy(*group_cols).agg(
+        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 53 - mx)")).alias("s"),
+        F.sum(F.when(F.col("mx") == 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("zero_regs"),
+    )
+    est = F.floor(F.lit(HLL_NUMERATOR) / F.col("s").cast("double"))
+    return summed.select(
+        *group_cols, est.cast("bigint").alias("hll_est"), "zero_regs"
+    )
 
 
 def test_cms_never_undercounts_and_is_bounded(spark):
@@ -304,7 +419,7 @@ def test_association_rules_invariants(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# HyperLogLog (md5-portable edition, operators/sketches.py::hll_registers)
+# HyperLogLog (md5-portable edition, operators/sketches.py)
 # ---------------------------------------------------------------------------
 
 
@@ -325,8 +440,6 @@ def _py_hll_registers(values):
 def test_hll_registers_match_independent_reference(spark):
     """Every (bucket, mx) register equals a hashlib reimplementation — the
     portability contract the DuckDB oracle depends on."""
-    from crz_scraper_spark.operators.sketches import hll_registers
-
     vals = list(range(1, 400))
     df = spark.createDataFrame([(v,) for v in vals], ["v"]).withColumn(
         "g", F.lit("only")
@@ -344,12 +457,7 @@ def test_hll_estimate_sparse_equals_densified_estimate(spark):
     register table (absent buckets as arithmetic) must reproduce
     hll_estimate over the densified table bit-for-bit — hll_est AND
     zero_regs, across groups with very different fill levels."""
-    from crz_scraper_spark.operators.sketches import (
-        _hll_densify,
-        _hll_sparse,
-        hll_estimate,
-        hll_estimate_sparse,
-    )
+    from crz_scraper_spark.operators.sketches import hll_estimate_sparse
 
     rows = [(v, "big") for v in range(2000)] + [(v, "tiny") for v in range(3)]
     df = spark.createDataFrame(rows, ["v", "g"])
@@ -403,8 +511,6 @@ def test_hll_estimate_accuracy_and_max_merge(spark):
     the true 5000, and registers(A ∪ B) == element-wise MAX of partial
     register tables — the contract that makes daily/per-executor sketches
     composable without revisiting data."""
-    from crz_scraper_spark.operators.sketches import hll_estimate, hll_registers
-
     a = spark.createDataFrame([(i,) for i in range(3000)], ["v"]).withColumn(
         "g", F.lit("x")
     )
@@ -440,11 +546,7 @@ def test_hll_incremental_store_matches_full_build_and_is_idempotent(
     input — the merge-over-batches ≡ union contract the DuckDB oracle of
     `hll_incremental_md5` rests on — and re-ingesting day 2 must change
     nothing (MAX-merge absorbs duplicate registers)."""
-    from crz_scraper_spark.operators.sketches import (
-        hll_estimate,
-        hll_incremental,
-        hll_registers,
-    )
+    from crz_scraper_spark.operators.sketches import hll_incremental
 
     store = str(tmp_path / "hll_store")
     full = spark.createDataFrame(
@@ -528,11 +630,6 @@ def test_graph_adjacency_path_equals_edge_path(spark):
 def test_copurchase_adjacency_matches_exploded_edges(spark):
     """copurchase_edges == explode(copurchase_adjacency): distinct symmetric
     pairs either way, so every edge consumer inherits the cheap build."""
-    from crz_scraper_spark.operators.graph import (
-        copurchase_adjacency,
-        copurchase_edges,
-    )
-
     rows = [
         (1, 10), (1, 11), (1, 10),       # dup within basket
         (2, 10), (2, 11),                # repeats pair (10,11)

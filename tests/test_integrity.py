@@ -6,6 +6,7 @@ gate already proves.
 
 from __future__ import annotations
 
+import ast
 import os
 
 from pyspark.sql import functions as F
@@ -353,92 +354,137 @@ def test_readme_registry_counts_not_stale():
     )
 
 
-# Public functions and classes of the package that no non-test code
-# references, each kept on purpose. Anything else unreached is either a
-# second implementation of a job the engine already does one way, or dead.
-KEPT_UNREACHED: dict[str, str] = {
-    # pipeline API — library entry points a caller composes itself
-    "documents_pipeline": "pipeline entry 2 (corpus -> curated documents)",
-    "tables_pipeline": "pipeline entry 3 (extracted table cells -> clean tables)",
-    "observe_discards": "one-pass stage-2 discard tallies for contracts_pipeline callers",
-    # the reference's stage 4a/6 real backends (ROADMAP carried item X2/X3)
-    "convert_to_pdf": "X3 document-to-PDF adapter; real converters are absent here",
-    "count_pages": "X4 page counter over the real PDF backends",
-    # SURVEY §7 Hard 3/4 tiers
-    "hunspell_oov_profile": "Hard 3: full Hunspell affix expansion (needs the .dic/.aff files)",
-    "keyword_tag_batched": "Hard 4: Arrow-batched tagging for >=10^3 keywords",
-    "keyword_tag_ac": "Hard 4: Aho-Corasick tagging for >=10^4 keywords",
-    # references the tests of a reached tier compare against
-    "hll_registers": "register table behind the hll_distinct_md5 tier's tests",
-    "hll_estimate": "estimator behind the hll_distinct_md5 tier's tests",
-    "pagerank_fixed_point": "fixed-iteration reference for the part_pagerank tests",
-    "copurchase_edges": "edge-list input the triangle/pagerank tests compare against",
-    "extract_features": "per-frame featurizer the multimodal tier's tests check",
-    "mg_candidates": "Misra-Gries candidate set the heavy-hitter tests check",
-    "heavy_hitters": "exact-count reference for the token_heavy_hitters tier",
-    "morph_oov_profile": "two-pass reference for the dictionary_oov_morph counts tier",
-    # small source/function helpers
-    "read_corrupt_lines": "raw-line quarantine reader for the JSONL source",
-    "normalize_ws": "whitespace normalizer (P2), a column helper for callers",
-}
+_DEFINITIONS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
-def _non_test_modules(root: str) -> list[str]:
+def _referenced_names(node: ast.AST) -> set[str]:
+    """Every Name, Attribute and import-alias reference under ``node``.
+    Docstrings and other string constants carry none."""
+    names = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            names.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            names.add(sub.attr)
+        elif isinstance(sub, ast.alias):
+            names.add(sub.name.split(".")[-1])
+    return names
+
+
+def unreached_definitions(
+    sources: list[tuple[str, str]], keep: list[str]
+) -> list[str]:
+    """``path::name`` of each top-level function and class under
+    ``crz_scraper_spark/`` that no root reaches, sorted.
+
+    ``sources`` are ``(repo-relative path, source)`` pairs. Roots are every
+    module-level statement of the package, the whole of every other
+    non-test source, and the names in ``keep``. A definition reaches the
+    names its body references; references are matched by name. Files under
+    a ``tests/`` directory are no roots."""
+    defs: dict[str, list[tuple[str, str]]] = {}
+    edges: dict[tuple[str, str], set[str]] = {}
+    todo = list(keep)
+    for path, source in sources:
+        if "tests" in path.split("/")[:-1]:
+            continue
+        in_package = path.startswith("crz_scraper_spark/")
+        for top in ast.parse(source).body:
+            if in_package and isinstance(top, _DEFINITIONS):
+                key = (path, top.name)
+                defs.setdefault(top.name, []).append(key)
+                edges[key] = _referenced_names(top)
+            else:
+                todo += _referenced_names(top)
+    seen: set[str] = set()
+    reached: set[tuple[str, str]] = set()
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for key in defs.get(name, ()):
+            reached.add(key)
+            todo += edges[key]
+    return sorted(f"{p}::{n}" for p, n in edges if (p, n) not in reached)
+
+
+def _non_test_sources(root: str) -> list[tuple[str, str]]:
     out = []
     for rel in ("crz_scraper_spark", "bench.py", "__spark_entry__.py", "tools", "perfbench"):
         path = os.path.join(root, rel)
-        if os.path.isfile(path):
-            out.append(path)
-            continue
-        for d, dirs, files in os.walk(path):
-            dirs[:] = [x for x in dirs if x != "tests"]
-            out += [os.path.join(d, f) for f in files if f.endswith(".py")]
-    return sorted(out)
+        files = [path] if os.path.isfile(path) else []
+        for d, _dirs, names in os.walk(path):
+            files += [os.path.join(d, f) for f in names if f.endswith(".py")]
+        for f in sorted(files):
+            rel_path = os.path.relpath(f, root).replace(os.sep, "/")
+            out.append((rel_path, open(f).read()))
+    return out
 
 
 def test_every_public_function_is_reached():
-    """Every public top-level function and class in the package is
-    referenced by non-test code (the package, bench.py, the driver entry,
-    tools/, perfbench/) — a Name, an Attribute or an import alias; a
-    reference inside the definition's own body and docstring mentions do
-    not count — or is named in KEPT_UNREACHED with its reason."""
-    import ast
+    """Every top-level function and class in the package, private ones
+    included, is reached transitively from non-test code (the package's
+    module-level statements, bench.py, the driver entry, tools/,
+    perfbench/) or from the pipeline API in `pipeline.__all__`. Code that
+    only tests use lives in tests/."""
+    from crz_scraper_spark import pipeline
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(root, "crz_scraper_spark")
-    defined: set[tuple[str, str]] = set()
-    refs: dict[str, set[tuple[str, str | None]]] = {}
-    for path in _non_test_modules(root):
-        tree = ast.parse(open(path).read())
-        owner: dict[int, str] = {}
-        for top in tree.body:
-            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if path.startswith(pkg) and not top.name.startswith("_"):
-                    defined.add((path, top.name))
-                for node in ast.walk(top):
-                    owner[id(node)] = top.name
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
-                name = node.id
-            elif isinstance(node, ast.Attribute):
-                name = node.attr
-            elif isinstance(node, ast.alias):
-                name = node.name.split(".")[-1]
-            else:
-                continue
-            refs.setdefault(name, set()).add((path, owner.get(id(node))))
-    def reached(path: str, name: str) -> bool:
-        return any((p, o) != (path, name) for p, o in refs.get(name, ()))
-
-    unreached = sorted(
-        f"{os.path.relpath(path, root)}::{name}"
-        for path, name in defined
-        if name not in KEPT_UNREACHED and not reached(path, name)
-    )
+    sources = _non_test_sources(root)
+    unreached = unreached_definitions(sources, pipeline.__all__)
     assert not unreached, (
-        "public functions no non-test code reaches (delete them, or keep "
-        f"one on purpose in KEPT_UNREACHED with a reason): {unreached}"
+        "definitions no query, pipeline or CLI reaches (delete them, or "
+        f"move a test-only reference into tests/): {unreached}"
     )
-    kept = {name: reached(path, name) for path, name in defined if name in KEPT_UNREACHED}
-    stale = sorted(n for n in KEPT_UNREACHED if kept.get(n, True))
-    assert not stale, f"KEPT_UNREACHED names a reached or missing function: {stale}"
+
+
+def test_reachability_walk_on_synthetic_sources():
+    """The walk follows calls transitively into private helpers, and flags
+    a definition named only in text, only by itself, or only by tests."""
+    package = (
+        "crz_scraper_spark/m.py",
+        '''"""Helpers a, _b, c and d."""
+
+
+def a():
+    """Calls _b; see also c."""
+    return _b()
+
+
+def _b():
+    return 1
+
+
+def c(n):
+    return c(n - 1) if n else 0
+
+
+def d():
+    return 3
+''',
+    )
+    root = (
+        "bench.py",
+        '''from crz_scraper_spark.m import a
+
+LABEL = "c"
+a()
+''',
+    )
+    test = (
+        "tests/test_m.py",
+        '''from crz_scraper_spark.m import d
+
+
+def test_d():
+    assert d() == 3
+''',
+    )
+    assert unreached_definitions([package, root, test], []) == [
+        "crz_scraper_spark/m.py::c",
+        "crz_scraper_spark/m.py::d",
+    ]
+    assert unreached_definitions([package, root, test], ["d"]) == [
+        "crz_scraper_spark/m.py::c",
+    ]

@@ -4,11 +4,16 @@ and determinism of the stubbed decode/resize/frame-sample/feature steps
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crz_scraper_spark.operators.multimodal import (
+    FEATURES_SCHEMA,
+    _featurize_bytes,
     decode_documents,
-    extract_features,
     frame_features,
     resize_images,
     sample_frames,
@@ -16,6 +21,43 @@ from crz_scraper_spark.operators.multimodal import (
 
 
 _P1 = b"hello world, this is a payload"
+
+
+# The per-frame featurizer over already-sampled frame rows: the two-step form
+# the fused `frame_features` is checked against.
+def extract_features(frames: DataFrame, dim: int = 16) -> DataFrame:
+    """Per-frame embedding: binary → array<float>[dim], numpy-vectorized.
+
+    STUB featurizer (a stand-in for a vision encoder), but a DETERMINISTIC
+    INTEGER one: feature[j] is the strided byte-window sum — the sum of
+    byte values at positions j, j+dim, j+2*dim, ... of the frame (zero
+    padded). Integer-valued float32 (frames are bounded, so sums stay far
+    below 2^24) ⇒ every downstream aggregate is exact and the whole chain
+    is byte-arithmetic oracleable in ANSI SQL — unlike the earlier
+    hash-seeded Gaussian stub, which had no SQL analog and forced the
+    registry query onto the weaker rows-only check. Output still feeds the
+    similarity-search operators (operators/similarity.py) unchanged —
+    binary column in, embedding column out is the whole multimodal→ANN
+    bridge.
+    """
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        zero = np.zeros(dim, dtype="float32")
+        for pdf in it:
+            feats = [
+                _featurize_bytes(p, dim, np, zero) for p in pdf["frame"]
+            ]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "frame_no": pdf["frame_no"],
+                    "feature": feats,
+                }
+            )
+
+    return frames.mapInPandas(batches, FEATURES_SCHEMA)
 
 
 def _binary(spark):

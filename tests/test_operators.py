@@ -1,15 +1,15 @@
-"""Unit tests: extraction UDF plumbing (X1–X5 shapes), batched tagging
-equivalence, natural sort, stage-9 column classification."""
+"""Unit tests: extraction UDF plumbing (X1/X2/X4/X5 shapes), natural sort,
+stage-9 column classification."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from crz_scraper_spark.functions.text import natural_sort_key
+from crz_scraper_spark.functions.text import natural_sort_key, tokens_nonempty
 from crz_scraper_spark.operators.extraction import (
-    count_pages,
+    _resolve_page_count,
     detect_tables,
     extract_text,
 )
@@ -17,11 +17,6 @@ from crz_scraper_spark.operators.profiling import (
     best_column_per_table,
     classify_columns,
     suggest_keywords,
-)
-from crz_scraper_spark.operators.tagging import (
-    DEFAULT_TAXONOMY,
-    keyword_tag,
-    keyword_tag_batched,
 )
 
 
@@ -42,9 +37,11 @@ def test_extract_text_deterministic(spark, binaries):
     assert all(t.startswith("extracted text ") for t in out1.values())
 
 
-def test_count_pages(spark, binaries):
-    got = {r["id"]: r["n_pages"] for r in count_pages(binaries).collect()}
-    assert got == {"1": 3, "2": 1, "3": 1}  # 200//64=3, 64//64=1, min 1
+def test_count_pages():
+    """X4 on non-PDF payloads: the auto tier falls back to the stub."""
+    count = _resolve_page_count("auto")
+    got = [count(p) for p in (b"x" * 200, b"y" * 64, b"")]
+    assert got == [3, 1, 1]  # 200//64=3, 64//64=1, min 1
 
 
 def test_detect_tables_flatmap_shape(spark, binaries):
@@ -64,52 +61,6 @@ def test_detect_tables_flatmap_shape(spark, binaries):
         per_doc.setdefault(r["id"], []).append(r["table_no"])
     for tnos in per_doc.values():
         assert sorted(tnos) == list(range(1, len(tnos) + 1))
-
-
-def test_keyword_tag_batched_equivalence(spark, sf_dir):
-    """The Arrow-batched large-taxonomy path must produce exactly the same
-    wide table as the JVM-expression path (SURVEY §7 Hard-4)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
-    a = keyword_tag(docs, "doc_id", "text", DEFAULT_TAXONOMY)
-    b = keyword_tag_batched(docs, "doc_id", "text", DEFAULT_TAXONOMY)
-    assert a.columns == b.columns
-    rows_a = {r["doc_id"]: tuple(r) for r in a.collect()}
-    rows_b = {r["doc_id"]: tuple(r) for r in b.collect()}
-    assert rows_a == rows_b
-
-
-def test_keyword_tag_ac_equivalence(spark, sf_dir):
-    """The one-pass Aho-Corasick path (10⁴-keyword scale) must match the
-    JVM-expression path exactly, including on nested/overlapping keywords
-    where the non-overlap guard is load-bearing."""
-    from crz_scraper_spark.operators.tagging import keyword_tag_ac
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(100)
-    a = keyword_tag(docs, "doc_id", "text", DEFAULT_TAXONOMY)
-    c = keyword_tag_ac(docs, "doc_id", "text", DEFAULT_TAXONOMY)
-    assert a.columns == c.columns
-    rows_a = {r["doc_id"]: tuple(r) for r in a.collect()}
-    rows_c = {r["doc_id"]: tuple(r) for r in c.collect()}
-    assert rows_a == rows_c
-
-
-def test_aho_corasick_str_count_semantics():
-    """AhoCorasick.counts ≡ Python str.count per keyword, on adversarial
-    inputs: self-overlapping keywords (aa in aaaa → 2, not 3), keywords
-    that are prefixes/suffixes/infixes of each other, and shared-suffix
-    emission through failure links."""
-    import random
-
-    from crz_scraper_spark.operators.tagging import AhoCorasick
-
-    kws = ["a", "aa", "aaa", "ab", "ba", "aba", "bab", "abab", "b", "bb"]
-    ac = AhoCorasick(kws)
-    rng = random.Random(7)
-    for _ in range(200):
-        text = "".join(rng.choice("ab") for _ in range(rng.randrange(0, 40)))
-        got = ac.counts(text)
-        want = [text.count(k) for k in kws]
-        assert got == want, (text, dict(zip(kws, got)), dict(zip(kws, want)))
 
 
 def test_natural_sort_key(spark):
@@ -536,17 +487,45 @@ def test_pq_topk_recall_and_determinism(spark, sf_dir):
     assert sum(recalls) / len(recalls) >= 0.15
 
 
+def oov_profile(
+    docs: DataFrame,
+    dictionary: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    gibberish_threshold: float = 0.75,
+) -> DataFrame:
+    """Plain-membership OOV profile straight off the token stream: the
+    one-pass form of `oov_profile_counts`, and the baseline the suffix
+    tier is compared against."""
+    toks = docs.select(
+        F.col(id_col), F.explode(tokens_nonempty(text_col)).alias("word")
+    )
+    dic = dictionary.select(
+        F.col(dictionary.columns[0]).alias("word"), F.lit(1).alias("__in_dict")
+    ).distinct()
+    joined = toks.join(F.broadcast(dic), "word", "left")
+    return (
+        joined.groupBy(id_col)
+        .agg(
+            F.count("*").alias("n_tokens"),
+            F.count(F.when(F.col("__in_dict").isNull(), 1)).alias("n_oov"),
+        )
+        .withColumn(
+            "oov_ratio", F.round(F.col("n_oov") / F.col("n_tokens"), 6)
+        )
+        .withColumn(
+            "is_gibberish", (F.col("oov_ratio") > gibberish_threshold).cast("int")
+        )
+    )
+
+
 def test_morph_oov_accepts_inflections_plain_does_not(spark, sf_dir):
     """The suffix tier must accept exactly the inflected probe tokens
     (tables/rows/joins/sorting — stems in dict) and still reject the
     gibberish probe; plain membership rejects all five."""
     from crz_scraper_spark.catalog import load_table
-    from crz_scraper_spark.functions.text import tokens_nonempty
-    from crz_scraper_spark.operators.profiling import (
-        morph_oov_profile,
-        oov_profile,
-    )
     from crz_scraper_spark.plans.extra_plans import _MORPH_PROBE
+    from tests.reference import morph_oov_profile
 
     docs = load_table(spark, sf_dir, "documents")
     dictionary = (
@@ -637,11 +616,7 @@ def test_auto_backend_routes_real_pdf_and_stub(spark):
     assert auto["x"].startswith("extracted text ")
     stub = {r["id"]: r["text"] for r in extract_text(df, backend="stub").collect()}
     assert stub["p"].startswith("extracted text ")
-    pages = {
-        r["id"]: r["n_pages"]
-        for r in count_pages(df, backend="auto").collect()
-    }
-    assert pages["p"] == 2
+    assert _resolve_page_count("auto")(_mini_pdf()) == 2
 
 
 # ---------------------------------------------------------------------------

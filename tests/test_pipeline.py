@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from crz_scraper_spark.operators.filtering import stage2_clean, stage2_filter
 from crz_scraper_spark.sources.csv import read_pipe_csv, write_pipe_csv
-from crz_scraper_spark.sources.files import read_text_tree, route_by_extension
+from crz_scraper_spark.sources.files import read_text_tree
 from crz_scraper_spark.sources.xml import (
     flatten_contracts,
     read_contracts_xml,
@@ -147,14 +147,6 @@ def test_text_tree_scan(spark, tmp_path):
         ("100", "doc1.txt"): "content of 100",
         ("200", "doc1.txt"): "content of 200",
     }
-
-
-def test_route_by_extension(spark):
-    df = spark.createDataFrame(
-        [("a.PDF",), ("b.docx",), ("c.txt",), ("d.zip",)], "filename string"
-    )
-    got = {r["filename"]: r["route"] for r in route_by_extension(df).collect()}
-    assert got == {"a.PDF": "pdf", "b.docx": "convert", "c.txt": "text", "d.zip": "skip"}
 
 
 def test_contracts_pipeline_end_to_end(spark, tmp_path):

