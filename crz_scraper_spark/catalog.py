@@ -40,11 +40,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Defensive: the driver may pass a session built without the engine's
     # configs (session.py). Both confs below are runtime-settable and
     # required for correct/readable results: nanos parquet support and
-    # UTC timestamp semantics for oracle comparison.
+    # UTC timestamp semantics for oracle comparison. AQE is left as the
+    # session has it (on by default), so a run with it off stays off.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Integer DIV, not float division — nanos exceed double's 53-bit
@@ -66,7 +65,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the session's parallelism.
 
     The driver testdata ships each table as ONE small parquet file, which
@@ -77,9 +76,7 @@ def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     should be skipped — the helper exists to keep that decision explicit
     and in one place.
     """
-    if parallelism is None:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(parallelism)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def pin(df: DataFrame) -> DataFrame:

@@ -23,18 +23,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dsum(expr: Column, scale: int = 2, cast_scale: int = 6) -> Column:
+def dsum(expr: Column, scale: int = 2) -> Column:
     """Order-independent double sum: decimal-exact accumulate, then round."""
     return (
-        F.round(F.sum(expr.cast(f"decimal(18,{cast_scale})")), scale)
+        F.round(F.sum(expr.cast("decimal(18,6)")), scale)
         .cast("double")
     )
 
 
-def davg(expr: Column, scale: int = 6, cast_scale: int = 4) -> Column:
+def davg(expr: Column) -> Column:
     """Order-independent double average: exact decimal sum ÷ count."""
     return F.round(
-        F.sum(expr.cast(f"decimal(18,{cast_scale})")).cast("double") / F.count("*"),
-        scale,
+        F.sum(expr.cast("decimal(18,4)")).cast("double") / F.count("*"), 6
     )
 

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 WORD_SEPARATOR_RE = "[^a-z0-9áäčďéíľĺňóôŕšťúýž]+"
 
 
-def tokenize(col: Column | str, sep_re: str = WORD_SEPARATOR_RE) -> Column:
+def tokenize(col: Column | str) -> Column:
     """Lowercase + split on non-alphabet runs → array<string> of words (F13).
 
     Mirrors the reference's character-scanner tokenizer as one regex split;
@@ -34,12 +34,12 @@ def tokenize(col: Column | str, sep_re: str = WORD_SEPARATOR_RE) -> Column:
     (`F.filter(tokens, lambda w: w != '')`) to match the scanner's behavior.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.lower(c), sep_re)
+    return F.split(F.lower(c), WORD_SEPARATOR_RE)
 
 
-def tokens_nonempty(col: Column | str, sep_re: str = WORD_SEPARATOR_RE) -> Column:
+def tokens_nonempty(col: Column | str) -> Column:
     """`tokenize` with empty strings removed — exact scanner semantics."""
-    return F.filter(tokenize(col, sep_re), lambda w: w != "")
+    return F.filter(tokenize(col), lambda w: w != "")
 
 
 def substring_count(text: Column | str, needle: str) -> Column:
@@ -58,7 +58,7 @@ def substring_count(text: Column | str, needle: str) -> Column:
     ).cast("bigint")
 
 
-def natural_sort_key(col: Column | str, pad: int = 20) -> Column:
+def natural_sort_key(col: Column | str) -> Column:
     """Alphanumeric ("natural") sort key (O3): `file10` sorts after `file2`.
 
     The reference hand-rolls digit/non-digit splitting with numeric
@@ -73,7 +73,7 @@ def natural_sort_key(col: Column | str, pad: int = 20) -> Column:
     return F.transform(
         runs,
         lambda r: F.when(
-            r.rlike(r"^\d+$"), F.lpad(r, pad, "0")
+            r.rlike(r"^\d+$"), F.lpad(r, 20, "0")
         ).otherwise(r),
     )
 

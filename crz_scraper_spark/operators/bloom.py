@@ -43,13 +43,13 @@ from pyspark.sql.types import BooleanType
 
 
 def _probe_positions(
-    h1: np.ndarray, h2: np.ndarray, n_bits: int, k: int
+    h1: np.ndarray, h2: np.ndarray, n_bits: int
 ) -> Iterable[np.ndarray]:
     """The ONE probe sequence (Kirsch-Mitzenmacher: pos_i = h1 + i*h2 mod
-    n_bits) shared by the build and the probe below — edits here keep both
-    sides bit-identical by construction."""
+    n_bits, i < 5) shared by the build and the probe below — edits here
+    keep both sides bit-identical by construction."""
     h2 = h2 | np.uint64(1)  # odd stride: never degenerates on 2^k n_bits
-    for i in range(k):
+    for i in range(5):
         yield (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
 
 
@@ -73,20 +73,20 @@ def _hash_halves(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def build_bloom_from_hashes(
-    hashes: Iterable[int], n_bits: int = 1 << 20, k: int = 5
+    hashes: Iterable[int], n_bits: int = 1 << 20
 ) -> np.ndarray:
     """Bitset over PRE-HASHED 64-bit keys (e.g. Spark-side `xxhash64` of
     the item): h1/h2 are the key's low/high halves, so no further hashing
     happens at probe time."""
     h = np.asarray(list(hashes), dtype=np.int64).view(np.uint64)
     bits = np.zeros((n_bits + 7) // 8, dtype=np.uint8)
-    for pos in _probe_positions(*_hash_halves(h), n_bits, k):
+    for pos in _probe_positions(*_hash_halves(h), n_bits):
         _set_bits(bits, pos)
     return bits
 
 
 def might_contain_hash_udf(
-    spark: SparkSession, bits: np.ndarray, n_bits: int = 1 << 20, k: int = 5
+    spark: SparkSession, bits: np.ndarray, n_bits: int = 1 << 20
 ):
     """Probe for `build_bloom_from_hashes`: input is the 64-bit hash column
     (LongType), whole-batch numpy — zero per-row Python, zero string
@@ -110,7 +110,7 @@ def might_contain_hash_udf(
         b = bc.value
         h = s.to_numpy(dtype=np.int64).view(np.uint64)
         ok = np.ones(len(s), dtype=bool)
-        for pos in _probe_positions(*_hash_halves(h), n_bits, k):
+        for pos in _probe_positions(*_hash_halves(h), n_bits):
             ok &= _test_bits(b, pos).astype(bool)
         return pd.Series(ok)
 

@@ -143,24 +143,17 @@ def bpe_token_count_udf(spark: SparkSession, merges: list[tuple[str, str]]):
     return count_tokens
 
 
-def bpe_token_stats(
-    docs: DataFrame,
-    spark: SparkSession,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_ids: int = 64,
-    n_merges: int = 200,
-) -> DataFrame:
+def bpe_token_stats(docs: DataFrame, spark: SparkSession) -> DataFrame:
     """Learn merges on the deterministic id-prefix sample, count BPE tokens
     corpus-wide. Output: (doc_id, n_words, n_bpe_tokens, chars_per_token_ppm).
 
-    100 TB posture: learning reads `sample_ids` documents (bounded,
+    100 TB posture: learning reads 64 documents (bounded,
     driver-side — vocabulary training is index metadata, the FAISS-trainer
     rationale); application is one map-only scan with the rank table
     broadcast. chars_per_token_ppm is integer (chars*1e6 div tokens) — the
     fertility metric token-budget planning divides by.
 
-    The sample is the `sample_ids` documents with the smallest
+    The sample is the 64 documents with the smallest
     xxhash64(id) — a deterministic pseudo-random pick that works on ANY id
     space (sparse, offset, string), unlike an `id < N` predicate which
     silently returns nothing off a dense 0-based space and would degrade
@@ -168,11 +161,9 @@ def bpe_token_stats(
     + driver merge (TakeOrdered), not a global sort."""
     sample = [
         r[0]
-        for r in docs.select(
-            text_col, F.xxhash64(F.col(id_col)).alias("__h")
-        )
+        for r in docs.select("text", F.xxhash64("doc_id").alias("__h"))
         .orderBy("__h")
-        .limit(sample_ids)
+        .limit(64)
         .collect()
     ]
     if not sample:
@@ -181,25 +172,24 @@ def bpe_token_stats(
             "no rows; merges learned from nothing would silently degrade "
             "every word to character-level tokens"
         )
-    merges = learn_bpe(sample, n_merges=n_merges)
-    return _apply_bpe_stats(docs, spark, merges, id_col, text_col)
+    return _apply_bpe_stats(docs, spark, learn_bpe(sample))
 
 
-def _apply_bpe_stats(docs, spark, merges, id_col, text_col) -> DataFrame:
+def _apply_bpe_stats(docs, spark, merges) -> DataFrame:
     # asNondeterministic: semantically the count IS deterministic, but the
     # flag stops Catalyst substituting the UDF expression into downstream
     # filter predicates (e.g. the registry's n_bpe_tokens >= n_words
     # invariant), which would run the Arrow batch eval TWICE over the
     # corpus — measured as a second full ArrowEvalPython node in the plan.
     count_udf = bpe_token_count_udf(spark, merges).asNondeterministic()
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
+    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != "")
     return docs.select(
-        F.col(id_col),
+        "doc_id",
         F.size(toks).cast("bigint").alias("n_words"),
-        count_udf(F.col(text_col)).alias("n_bpe_tokens"),
-        F.length(text_col).cast("bigint").alias("__chars"),
+        count_udf(F.col("text")).alias("n_bpe_tokens"),
+        F.length("text").cast("bigint").alias("__chars"),
     ).select(
-        id_col,
+        "doc_id",
         "n_words",
         "n_bpe_tokens",
         F.expr(
@@ -211,8 +201,6 @@ def _apply_bpe_stats(docs, spark, merges, id_col, text_col) -> DataFrame:
 def bpe_corpus_token_stats(
     docs: DataFrame,
     spark: SparkSession,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_vocab: int = 65_536,
     n_merges: int = 200,
 ) -> DataFrame:
@@ -228,9 +216,7 @@ def bpe_corpus_token_stats(
     against head pairs, so for realistic Zipfian corpora the merge list
     equals the untruncated one. Application is unchanged: map-only scan,
     broadcast ranks, per-word memo."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
+    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != "")
     counts = (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -247,4 +233,4 @@ def bpe_corpus_token_stats(
     merges = learn_bpe_from_word_counts(
         ((r["word"], r["cnt"]) for r in counts), n_merges
     )
-    return _apply_bpe_stats(docs, spark, merges, id_col, text_col)
+    return _apply_bpe_stats(docs, spark, merges)

@@ -171,12 +171,13 @@ MINHASH_FAMILIES = ("xxhash64", "md5")
 MINHASH_PRIME = (1 << 31) - 1  # Mersenne prime for the Carter-Wegman family
 
 
-def _minhash_coeffs(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Fixed (a_i, c_i) pairs for h_i(x) = (a_i*x + c_i) mod p, generated by
-    a tiny deterministic LCG so BOTH the Spark plan and the SQL oracle embed
-    the identical literals. a_i ∈ [1, p), c_i ∈ [0, p); with x < 2^32 and
-    a_i < 2^31, a_i*x + c_i < 2^63 — exact in signed-64 on every engine."""
-    state = seed
+    a tiny deterministic LCG (seed 7) so BOTH the Spark plan and the SQL
+    oracle embed the identical literals. a_i ∈ [1, p), c_i ∈ [0, p); with
+    x < 2^32 and a_i < 2^31, a_i*x + c_i < 2^63 — exact in signed-64 on
+    every engine."""
+    state = 7
     out = []
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
@@ -599,16 +600,12 @@ def _default_driver_max_edges(spark) -> int:
 
 
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    driver_max_edges: int | None = None,
+    pairs: DataFrame, driver_max_edges: int | None = None
 ) -> DataFrame:
-    """(doc_id, cluster_id) for every node in the near-dup pair graph —
-    cluster_id = the minimum node id reachable through pair edges. This is
-    the step that turns pairwise near-dup evidence into a deduplicated
-    corpus (keep one representative per cluster).
+    """(doc_id, cluster_id) for every node in the ``(id_a, id_b)`` near-dup
+    pair graph — cluster_id = the minimum node id reachable through pair
+    edges. This is the step that turns pairwise near-dup evidence into a
+    deduplicated corpus (keep one representative per cluster).
 
     Implementation: iterative min-label propagation with pointer jumping
     (the dataframe core of the large-star/small-star CC algorithm): each
@@ -648,7 +645,7 @@ def connected_components(
     # set. cap = driver_max_edges // 2 keeps the old 2·n_pairs ≤ ceiling
     # cutover bit-exactly (floor is the conservative side on odd values).
     cap = driver_max_edges // 2
-    head = pairs.select(id_a, id_b).limit(cap + 1).collect()
+    head = pairs.select("id_a", "id_b").limit(cap + 1).collect()
     take_driver = len(head) <= cap
     if take_driver:
         CC_DECISIONS.append({
@@ -697,7 +694,7 @@ def connected_components(
             rows.extend((node, rep) for node in group)
         out_schema = (
             pairs.select(
-                F.col(id_a).alias("doc_id"), F.col(id_a).alias("cluster_id")
+                F.col("id_a").alias("doc_id"), F.col("id_a").alias("cluster_id")
             ).schema
         )
         return spark.createDataFrame(rows, out_schema)
@@ -714,9 +711,9 @@ def connected_components(
         "max_result_size": spark.conf.get("spark.driver.maxResultSize", "1g"),
     })
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
         .persist()
@@ -727,7 +724,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -1254,33 +1251,27 @@ def simhash_incremental(
 # reason). This operator detects high-containment pairs without all-pairs
 # work via RARE-SHINGLE BLOCKING: a pair with containment >= c shares at
 # least c·min_size shingles, so if the smaller doc has ANY globally-rare
-# shared shingle, joining on each doc's K rarest shingles (document
-# frequency capped at max_df) surfaces the pair. Work bounds:
+# shared shingle, joining on each doc's K = 3 rarest shingles (document
+# frequency capped at 20) surfaces the pair. Work bounds:
 #   - one DF aggregation over the exploded shingle table (shuffle on
 #     shingle — uniformly distributed keys);
 #   - K rarest per doc = a per-doc row_number window (partition key = doc,
 #     bounded partitions, deterministic (df, shingle) tie-break);
-#   - the blocking join emits <= K · max_df candidates PER DOC — linear in
+#   - the blocking join emits <= K · 20 candidates PER DOC — linear in
 #     corpus size by construction, never O(n²);
 #   - exact verification joins only candidate docs' shingles.
 # Recall is bounded, not perfect: a contained doc whose every shingle has
-# df > max_df (pure boilerplate) is missed — at that point the
+# df > 20 (pure boilerplate) is missed — at that point the
 # line/span-level dedup (`line_dedup_reconstruct`, `dup_span_detect`) is
-# the right tool, and `max_df` is the knob that trades candidate volume
-# for recall.
+# the right tool.
 # ---------------------------------------------------------------------------
 
 
 def containment_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_words: int = 3,
-    rare_k: int = 3,
-    max_df: int = 20,
-    min_containment_ppm: int = 800_000,
+    docs: DataFrame, min_containment_ppm: int = 800_000
 ) -> DataFrame:
-    """Doc pairs with shingle containment >= threshold, rare-shingle blocked.
+    """``(doc_id, text)`` pairs with word-3-shingle containment >= threshold,
+    blocked on each doc's 3 rarest shingles of document frequency 2..20.
 
     Returns ``(id_a, id_b, inter_cnt, min_sz, containment_ppm)`` with
     ``id_a < id_b``, ppm = floor(|A∩B| · 1e6 / min(|A|, |B|)) — integer
@@ -1288,19 +1279,19 @@ def containment_pairs(
     """
     t = F.col("toks")
     shingle = F.when(
-        F.size(t) >= shingle_words,
+        F.size(t) >= 3,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.size(t) - (shingle_words - 1)),
+                F.sequence(F.lit(1), F.size(t) - 2),
                 lambda i: F.concat_ws(
-                    " ", *[F.element_at(t, i + j) for j in range(shingle_words)]
+                    " ", *[F.element_at(t, i + j) for j in range(3)]
                 ),
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
     sh = (
-        docs.select(id_col, tokens_nonempty(text_col).alias("toks"))
-        .select(F.col(id_col).alias("doc"), F.explode(shingle).alias("shingle"))
+        docs.select("doc_id", tokens_nonempty("text").alias("toks"))
+        .select(F.col("doc_id").alias("doc"), F.explode(shingle).alias("shingle"))
         .persist()
     )
     # Populate the cache eagerly: the shingle table feeds FIVE branches of
@@ -1337,9 +1328,9 @@ def containment_pairs(
         )
         rare = (
             sh.join(dfreq, "shingle")
-            .filter((F.col("df") >= 2) & (F.col("df") <= max_df))
+            .filter((F.col("df") >= 2) & (F.col("df") <= 20))
             .withColumn("rk", rk)
-            .filter(F.col("rk") <= rare_k)
+            .filter(F.col("rk") <= 3)
             .select("doc", F.xxhash64("shingle").alias("sid"))
         )
         # Seed from BOTH directions: every doc's K rarest shingles probe the
@@ -1347,7 +1338,7 @@ def containment_pairs(
         # least/greatest before distinct. A one-directional join keyed on the
         # lower id would drop any pair where only the HIGHER-id doc's rare
         # shingles are shared — e.g. a contained doc with the higher id whose
-        # host's K rarest df∈[2,max_df] shingles all come from OTHER overlaps.
+        # host's K rarest df∈[2,20] shingles all come from OTHER overlaps.
         # The blocking join keys on the 8-byte sid, not the string (a
         # collision-spurious candidate is removed by exact verification).
         cand = (

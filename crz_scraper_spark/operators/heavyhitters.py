@@ -55,9 +55,12 @@ def _mg_fold(counters: dict, counts, m: int) -> dict:
     return counters
 
 
-def mg_candidates_arrays(
-    df: DataFrame, arr_col: str, out_col: str, m: int
-) -> DataFrame:
+# Counters kept per partition by pass 1: every value above 1% frequency
+# survives, and at most 100 values can be that frequent.
+_COUNTERS = 100
+
+
+def mg_candidates_arrays(df: DataFrame, arr_col: str, out_col: str) -> DataFrame:
     """Misra–Gries pass 1 over an ARRAY column — one Arrow row per document
     instead of one per element, so pass 1 transfers a fraction of the row
     overhead (measured ~2× end-to-end on the token stream at sf1). Array
@@ -66,8 +69,6 @@ def mg_candidates_arrays(
     sentinel row (NULL, n_elements) per partition — the same pass that
     prunes candidates also measures N, so the caller needs no second
     corpus scan (and no corpus-sized persist) to learn the total."""
-    if m < 1:
-        raise ValueError(f"mg_candidates_arrays: m must be >= 1, got {m}")
     eltype = df.schema[arr_col].dataType.elementType.simpleString()
 
     def _mg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -76,7 +77,7 @@ def mg_candidates_arrays(
         for pdf in batches:
             flat = pdf[arr_col].explode().dropna()
             n_part += int(len(flat))
-            counters = _mg_fold(counters, flat.value_counts(), m)
+            counters = _mg_fold(counters, flat.value_counts(), _COUNTERS)
         # object dtype: a None appended to int64 keys would coerce the
         # column to float64 and corrupt values > 2^53 (e.g. xxhash64-derived
         # ids) before the Arrow cast back — object arrays of Python ints
@@ -120,38 +121,30 @@ def _hitter_report(recount: DataFrame, col: str, n_total: int) -> DataFrame:
     ).orderBy(F.desc("cnt"), F.asc(col))
 
 
-def heavy_hitters_arrays(
-    df: DataFrame,
-    arr_col: str,
-    out_col: str,
-    freq_num: int = 1,
-    freq_den: int = 100,
-    m: int | None = None,
-) -> DataFrame:
-    """Exact heavy hitters over the ELEMENTS of an array column (the token-
-    stream shape: one row per document, `arr_col` its token array) —
-    identical result set, cheaper physique, and NO lingering state:
+def heavy_hitters_arrays(df: DataFrame, arr_col: str, out_col: str) -> DataFrame:
+    """Exact heavy hitters (frequency above 1%) over the ELEMENTS of an
+    array column (the token-stream shape: one row per document, `arr_col`
+    its token array) — identical result set, cheaper physique, and NO
+    lingering state:
 
     - Pass 1 ships arrays (one Arrow row per document) through the MG
       pruner, which emits candidates AND per-partition element counts, so
-      one bounded collect (≤ m+1 rows per partition) yields both the
-      candidate list and N — no separate count() scan.
+      one bounded collect (≤ `_COUNTERS` + 1 rows per partition) yields
+      both the candidate list and N — no separate count() scan.
     - The element projection is persisted so the recount explode reads
       the already-computed arrays instead of re-deriving them; because at
-      most freq_den/freq_num values can exceed frequency
-      freq_num/freq_den, the final report is PROVABLY bounded — it is
-      collected and the cache released (`catalog.collect_and_release`),
-      so no corpus-sized persist outlives the call.
+      most `_COUNTERS` values can exceed frequency 1%, the final report
+      is PROVABLY bounded — it is collected and the cache released
+      (`catalog.collect_and_release`), so no corpus-sized persist
+      outlives the call.
 
     Array elements must be non-null; null/empty arrays contribute
     nothing."""
-    if m is None:
-        m = freq_den // freq_num
     eltype = df.schema[arr_col].dataType.elementType.simpleString()
     spark = df.sparkSession
     empty_schema = f"{out_col} {eltype}, cnt bigint, freq_ppm bigint"
     arr = df.select(arr_col).persist()
-    raw = mg_candidates_arrays(arr, arr_col, out_col, m).collect()
+    raw = mg_candidates_arrays(arr, arr_col, out_col).collect()
     n_total = sum(r["__pn"] for r in raw if r["__pn"] is not None)
     cands = _sorted_keys(r[out_col] for r in raw)
     if not n_total or not cands:
@@ -163,6 +156,6 @@ def heavy_hitters_arrays(
         toks.join(F.broadcast(cand), out_col, "left_semi")
         .groupBy(out_col)
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") * freq_den > F.lit(n_total) * freq_num)
+        .filter(F.col("cnt") * _COUNTERS > F.lit(n_total))
     )
     return collect_and_release(_hitter_report(recount, out_col, n_total), arr)

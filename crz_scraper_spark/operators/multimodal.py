@@ -66,13 +66,10 @@ def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def decode_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def decode_documents(docs: DataFrame) -> DataFrame:
     """Treat each document's UTF-8 bytes as an opaque binary payload and run
     the decode UDF — the full multimodal column path on available data."""
-    binary = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
-    )
+    binary = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     return binary.mapInPandas(decode_batches, DECODED_SCHEMA)
 
 
@@ -121,11 +118,12 @@ def resize_images(
 FRAMES_SCHEMA = "doc_id bigint, frame_no int, ts_ms bigint, frame binary"
 
 
-def sample_frames(binary: DataFrame, fps_divisor: int = 10) -> DataFrame:
+def sample_frames(binary: DataFrame) -> DataFrame:
     """Flat-map (UDTF shape): one video payload → 0..n sampled frame rows.
 
     STUB sampling: frame count = payload_length % 7 (a deterministic stand-in
-    for ffmpeg's keyframe walk); each "frame" is a 16-byte slice. The shape is
+    for ffmpeg's keyframe walk); each "frame" is a 16-byte slice, 10 s
+    apart. The shape is
     the load-bearing part — one input row emitting a variable number of
     output rows through `mapInPandas`, exactly the X5 table-detection pattern
     (`06_extract_tables.py:197-220`).
@@ -139,7 +137,7 @@ def sample_frames(binary: DataFrame, fps_divisor: int = 10) -> DataFrame:
                 for i, frame in enumerate(_frame_slices(p)):
                     out["doc_id"].append(doc_id)
                     out["frame_no"].append(i)
-                    out["ts_ms"].append(i * 1000 * fps_divisor)
+                    out["ts_ms"].append(i * 10_000)
                     out["frame"].append(frame)
             yield pd.DataFrame(out)
 

@@ -34,19 +34,15 @@ from crz_scraper_spark.functions.text import tokens_nonempty
 
 
 def oov_profile_counts(
-    doc_word_counts: DataFrame,
-    dictionary: DataFrame,
-    id_col: str = "doc_id",
-    count_col: str = "n",
-    gibberish_threshold: float = 0.75,
+    doc_word_counts: DataFrame, dictionary: DataFrame
 ) -> DataFrame:
     """Per-document out-of-vocabulary ratio + gibberish flag (A9+J7) over a
-    pre-aggregated per-(doc, word) count table.
+    pre-aggregated per-(doc_id, word) count table with counts in `n`.
 
     `dictionary` is a (word) DataFrame (e.g. the corpus words with count > 5,
     the stage-5a special dictionary `05_build_special_dictionary.py:136-141`).
     Words left-join the broadcast dictionary; OOV ratio = unmatched /
-    total tokens, gibberish iff ratio > threshold (`09:211`). Callers whose
+    total tokens, gibberish iff ratio > 0.75 (`09:211`). Callers whose
     dictionary ALSO derives from the corpus (dictionary_oov) tokenize once
     into (id, word, n) and roll both the dictionary and the profile off
     that table — a shuffle of the far smaller count table instead of a
@@ -57,13 +53,11 @@ def oov_profile_counts(
     ).distinct()
     joined = doc_word_counts.join(F.broadcast(dic), "word", "left")
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
-            F.sum(count_col).alias("n_tokens"),
+            F.sum("n").alias("n_tokens"),
             F.coalesce(
-                F.sum(
-                    F.when(F.col("__in_dict").isNull(), F.col(count_col))
-                ),
+                F.sum(F.when(F.col("__in_dict").isNull(), F.col("n"))),
                 F.lit(0),
             ).alias("n_oov"),
         )
@@ -71,7 +65,7 @@ def oov_profile_counts(
             "oov_ratio", F.round(F.col("n_oov") / F.col("n_tokens"), 6)
         )
         .withColumn(
-            "is_gibberish", (F.col("oov_ratio") > gibberish_threshold).cast("int")
+            "is_gibberish", (F.col("oov_ratio") > 0.75).cast("int")
         )
     )
 
@@ -116,11 +110,7 @@ def _morph_accepted_vocab(vocab: DataFrame, dictionary: DataFrame) -> DataFrame:
 
 
 def morph_oov_profile_counts(
-    doc_word_counts: DataFrame,
-    dictionary: DataFrame,
-    id_col: str = "doc_id",
-    count_col: str = "n",
-    gibberish_threshold: float = 0.75,
+    doc_word_counts: DataFrame, dictionary: DataFrame
 ) -> DataFrame:
     """oov_profile_counts with suffix-stripping morphology: the vocabulary,
     the stem candidates (`_morph_accepted_vocab`), and the per-doc profile
@@ -132,11 +122,11 @@ def morph_oov_profile_counts(
     )
     joined = doc_word_counts.join(F.broadcast(accepted), "word", "left")
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
-            F.sum(count_col).alias("n_tokens"),
+            F.sum("n").alias("n_tokens"),
             F.coalesce(
-                F.sum(F.when(F.col("__ok").isNull(), F.col(count_col))),
+                F.sum(F.when(F.col("__ok").isNull(), F.col("n"))),
                 F.lit(0),
             ).alias("n_oov"),
         )
@@ -144,7 +134,7 @@ def morph_oov_profile_counts(
             "oov_ratio", F.round(F.col("n_oov") / F.col("n_tokens"), 6)
         )
         .withColumn(
-            "is_gibberish", (F.col("oov_ratio") > gibberish_threshold).cast("int")
+            "is_gibberish", (F.col("oov_ratio") > 0.75).cast("int")
         )
     )
 
@@ -201,12 +191,10 @@ def classify_columns(
     )
 
 
-def best_column_per_table(
-    classified: DataFrame, score_col: str = "digit_ratio"
-) -> DataFrame:
-    """O4: top-1 column per table by ratio (09:263-264,309) — deterministic
-    tie-break on column name."""
-    w = Window.partitionBy("table_id").orderBy(F.desc(score_col), F.asc("col"))
+def best_column_per_table(classified: DataFrame) -> DataFrame:
+    """O4: top-1 column per table by digit ratio (09:263-264,309) —
+    deterministic tie-break on column name."""
+    w = Window.partitionBy("table_id").orderBy(F.desc("digit_ratio"), F.asc("col"))
     return (
         classified.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -214,21 +202,20 @@ def best_column_per_table(
     )
 
 
-def suggest_keywords(
-    cells: DataFrame, classified: DataFrame, score_col: str = "digit_ratio"
-) -> DataFrame:
-    """A10: header words of qualifying columns accumulate the column score
-    (09:310-324) — explode(header words) + groupBy(word) sum(weight)."""
+def suggest_keywords(cells: DataFrame, classified: DataFrame) -> DataFrame:
+    """A10: header words of qualifying columns accumulate the column's digit
+    ratio as a score (09:310-324) — explode(header words) + groupBy(word)
+    sum(weight)."""
     headers = cells.filter(F.col("row_no") == 0).select(
         "table_id", "col", F.col("cell").alias("header")
     )
     scored = headers.join(
-        classified.select("table_id", "col", score_col), ["table_id", "col"]
+        classified.select("table_id", "col", "digit_ratio"), ["table_id", "col"]
     )
     return (
         scored.select(
             F.explode(tokens_nonempty("header")).alias("word"),
-            F.col(score_col).alias("weight"),
+            F.col("digit_ratio").alias("weight"),
         )
         .groupBy("word")
         .agg(F.round(F.sum("weight"), 6).alias("score"))

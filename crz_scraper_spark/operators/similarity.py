@@ -47,12 +47,11 @@ def cosine(a: Column, b: Column) -> Column:
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     round_to: int | None = None,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector; both frames
+    carry ``(vec_id, embedding)``.
 
     Output: (query_id, neighbor_id, cos_sim, rank), excluding self-matches.
     The query side is broadcast (BroadcastNestedLoopJoin): the corpus never
@@ -61,10 +60,10 @@ def cosine_topk(
     differing in last-ulp summation order produce the identical top-k cut.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec")
     )
     sim = cosine(F.col("__qvec"), F.col("__cvec"))
     if round_to is not None:
@@ -109,11 +108,11 @@ def matrix_lit(rows: list[list[float]]) -> Column:
     )
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic random hyperplanes (numpy PCG64, fixed seed)."""
+def hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
+    """Deterministic random hyperplanes (numpy PCG64, seed 42)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
@@ -139,16 +138,14 @@ def bucket_signature(vec: Column, planes: list[list[float]]) -> Column:
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
-    seed: int = 42,
     multiprobe: int = 0,
     round_to: int | None = None,
 ) -> DataFrame:
-    """Approximate top-k: score only same-bucket candidates.
+    """Approximate top-k over ``(vec_id, embedding)`` frames: score only
+    same-bucket candidates.
 
     With `n_planes` bits the corpus splits into 2^n buckets; the candidate
     join is equi on the signature (hash-partitioned, skew-free for isotropic
@@ -163,16 +160,16 @@ def lsh_ann_topk(
     """
     from itertools import combinations
 
-    planes = hyperplanes(dim, n_planes, seed)
+    planes = hyperplanes(dim, n_planes)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        bucket_signature(F.col(vec_col), planes).alias("__bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cvec"),
+        bucket_signature(F.col("embedding"), planes).alias("__bucket"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        bucket_signature(F.col(vec_col), planes).alias("__bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        bucket_signature(F.col("embedding"), planes).alias("__bucket"),
     )
     if multiprobe > 0:
         masks = [0] + [
@@ -211,10 +208,8 @@ def _sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-def fixed_unit_centroids(
-    dim: int, nlist: int, seed: int = 4242
-) -> list[list[float]]:
-    """Deterministic UNIT-NORM random centroids (numpy PCG64, fixed seed)
+def fixed_unit_centroids(dim: int, nlist: int) -> list[list[float]]:
+    """Deterministic UNIT-NORM random centroids (numpy PCG64, seed 4242)
     for the oracleable IVF variant. Unit-norm matters: the corpus vectors
     are unit-norm, so against raw gaussian centroids the ||c||² spread
     (χ²_dim, std ≈ √(2·dim)) would dominate the 2·v·c signal term and
@@ -223,23 +218,23 @@ def fixed_unit_centroids(
     (measured ±15% occupancy across sf0.001–sf0.1)."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(4242)
     c = rng.standard_normal((nlist, dim))
     return (c / np.linalg.norm(c, axis=1, keepdims=True)).tolist()
 
 
 def fixed_pq_codebooks(
-    dim: int, m_subspaces: int, ksub: int, seed: int = 777
+    dim: int, m_subspaces: int, ksub: int
 ) -> list[list[list[float]]]:
-    """Deterministic random PQ codebooks scaled to the subvector
-    magnitude of unit-norm inputs (per-dim std 1/√dim — a raw N(0,1)
+    """Deterministic random PQ codebooks (numpy PCG64, seed 777) scaled to
+    the subvector magnitude of unit-norm inputs (per-dim std 1/√dim — a raw N(0,1)
     codebook would sit ~8× outside the data's radius and every subvector
     would quantize to the smallest-norm entry). Production replaces these
     with per-subspace trained k-means (`pq_topk`'s sampled trainer); the
     operator is indifferent to where the matrix comes from."""
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(777)
     dsub = dim // m_subspaces
     return (
         rng.standard_normal((m_subspaces, ksub, dsub)) / np.sqrt(dim)
@@ -249,19 +244,15 @@ def fixed_pq_codebooks(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
     nlist: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
-    round_to: int | None = None,
     centroids: list[list[float]] | None = None,
     assign_round_to: int | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means-partition the corpus
-    into `nlist` cells, score queries only against their `nprobe` nearest
-    cells.
+    """IVF (inverted-file) approximate top-5 over ``(vec_id, embedding)``
+    frames: k-means-partition the corpus into `nlist` cells, score queries
+    only against their `nprobe` nearest cells, by cosine rounded to 4
+    places.
 
     The index build is the FAISS IVF shape: Lloyd's k-means trains
     driver-side on a bounded deterministic sample (coarse quantizers need a
@@ -282,13 +273,13 @@ def ivf_topk(
     literals, making the whole search SQL-reproducible cross-engine).
     `assign_round_to` rounds the squared distances BEFORE the argmin /
     probe ranking so engines differing in last-ulp summation order pick
-    identical cells (the `round_to` discipline, applied to assignment).
+    identical cells (the cosine rounding, applied to assignment).
     """
     import numpy as np
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("__cvec"),
     )
 
     if centroids is None:
@@ -302,7 +293,7 @@ def ivf_topk(
         # — independent of corpus size.
         sample = c.orderBy("neighbor_id").limit(4096).collect()
         X = np.array([list(r["__cvec"]) for r in sample])
-        rng = np.random.default_rng(seed)
+        rng = np.random.default_rng(42)
         cent = X[
             rng.choice(len(X), size=min(nlist, len(X)), replace=False)
         ].copy()
@@ -333,8 +324,8 @@ def ivf_topk(
         "__cell int, __centroid array<double>",
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("__qvec"),
     )
     wp = Window.partitionBy("query_id").orderBy(F.asc("__d2"), F.asc("__cell"))
     probes = (
@@ -346,9 +337,7 @@ def ivf_topk(
         .filter(F.col("__pr") <= nprobe)
         .select("query_id", "__qvec", "__cell")
     )
-    sim = cosine(F.col("__qvec"), F.col("__cvec"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
+    sim = F.round(cosine(F.col("__qvec"), F.col("__cvec")), 4)
     scored = (
         assigned.join(F.broadcast(probes), "__cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -357,7 +346,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
@@ -365,18 +354,14 @@ def ivf_topk(
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    m_subspaces: int = 8,
-    ksub: int = 32,
-    seed: int = 7,
     codebooks: list[list[list[float]]] | None = None,
     encode_round_to: int | None = None,
 ) -> DataFrame:
-    """Product-quantization approximate top-k (the memory-bound ANN scale
-    path): each vector is encoded as `m_subspaces` one-byte codes — a 64-dim
-    float vector (256 B) compresses to 8 B, so a 100 TB embedding corpus
+    """Product-quantization approximate top-k over ``(vec_id, embedding)``
+    frames (the memory-bound ANN scale path): each vector is encoded as
+    m = 8 one-byte codes (32 centroids per subspace) — a 64-dim float
+    vector (256 B) compresses to 8 B, so a 100 TB embedding corpus
     becomes a ~3 TB code table that scans from memory — and queries rank
     neighbors by asymmetric distance (ADC): exact query subvector vs the
     centroid the code names, d(q,x) ≈ Σ_m ||q_m − C_m[code_m(x)]||².
@@ -385,14 +370,14 @@ def pq_topk(
     driver-side on a bounded deterministic sample; encoding is ONE
     scalar-only scan (argmin over each subspace's centroid literal — pure
     codegen, no UDF, no shuffle). Scoring precomputes each query's
-    m×ksub distance table driver-side (queries are few; the table is index
+    m×32 distance table driver-side (queries are few; the table is index
     metadata) and evaluates Σ_m table[m][code_m] per corpus row via
     element_at lookups — again scan-only; the only exchange is the final
     per-query top-k window, map-side-limited by WindowGroupLimit.
 
     Deterministic end to end (fixed seed, fixed sample, argmin ties by
-    first index). Accuracy/compression tradeoff is (m_subspaces, ksub);
-    tests/test_operators.py bounds recall against the exact L2 top-k.
+    first index). Accuracy/compression tradeoff is (m, centroids per
+    subspace); tests/test_operators.py bounds recall against the exact L2 top-k.
 
     With `codebooks` the per-subspace trainer is skipped — the caller
     supplies the quantizer (e.g. `fixed_pq_codebooks` deterministic
@@ -403,21 +388,21 @@ def pq_topk(
     import numpy as np
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("__cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("__cvec"),
     )
     if codebooks is None:
         sample = c.orderBy("neighbor_id").limit(4096).collect()
         X = np.array([list(r["__cvec"]) for r in sample])
         dim = X.shape[1]
-        assert dim % m_subspaces == 0, "dim must divide into subspaces"
-        dsub = dim // m_subspaces
-        rng = np.random.default_rng(seed)
+        assert dim % 8 == 0, "dim must divide into subspaces"
+        dsub = dim // 8
+        rng = np.random.default_rng(7)
 
         codebooks = []
-        for m in range(m_subspaces):
+        for m in range(8):
             Xm = X[:, m * dsub : (m + 1) * dsub]
-            kk = min(ksub, len(Xm))
+            kk = min(32, len(Xm))
             cent = Xm[rng.choice(len(Xm), size=kk, replace=False)].copy()
             for _ in range(8):
                 d2 = ((Xm[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
@@ -427,9 +412,8 @@ def pq_topk(
                     if len(members):
                         cent[j] = members.mean(0)
             codebooks.append([[float(x) for x in row] for row in cent])
-    else:
-        m_subspaces = len(codebooks)
-        dsub = len(codebooks[0][0])
+    m_subspaces = len(codebooks)
+    dsub = len(codebooks[0][0])
 
     # Encode: argmin per subspace over the codebook literal — scan-only.
     def _argmin_code(m: int):
@@ -450,8 +434,8 @@ def pq_topk(
     # Per-query ADC tables, driver-side (queries are index-metadata-sized).
     qrows = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("__qvec"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("__qvec"),
         )
         .orderBy("query_id")
         .collect()
@@ -514,19 +498,17 @@ def pq_topk(
 
 def kmeans_lloyd_distributed(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 5,
     dim: int = 64,
     seed: int = 99,
-    round_to: int = 9,
 ):
-    """Full-corpus Lloyd iterations, deterministic across partitionings.
+    """Full-corpus Lloyd iterations over ``(vec_id, embedding)``,
+    deterministic across partitionings.
 
     Determinism discipline (the reason this is not just `avg(...)`):
     centroid updates are DECIMAL-exact sums divided by counts, rounded to
-    `round_to` before re-broadcast — double `avg` is summation-order-
+    9 places before re-broadcast — double `avg` is summation-order-
     dependent, so without this two runs on different partition layouts
     could drift assignments after the first iteration. Assignment is the
     L2 argmin over the current centroid matrix, computed per Arrow batch
@@ -534,7 +516,7 @@ def kmeans_lloyd_distributed(
     distance, argmin identical), ties to the lowest cell index. Empty
     cells keep their previous centroid (standard Lloyd convention).
 
-    Returns (assignments DataFrame[(id, cell)], centroids list, inertia
+    Returns (assignments DataFrame[(vec_id, cell)], centroids list, inertia
     history list) — inertia (decimal-exact sum of squared distances) is
     the monotone-non-increasing convergence witness. The assignments are
     lazy: they read ``emb`` once more when the caller runs them.
@@ -553,8 +535,8 @@ def kmeans_lloyd_distributed(
     cents = rng.standard_normal((k, dim)).tolist()
 
     base = emb.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").cast("array<double>").alias("__v"),
     )
     inertia_hist: list[float] = []
     for _ in range(n_iter):
@@ -592,7 +574,7 @@ def kmeans_lloyd_distributed(
                 "cell",
                 "dim",
                 F.round(
-                    (F.col("s") / F.col("n")).cast("double"), round_to
+                    (F.col("s") / F.col("n")).cast("double"), 9
                 ).alias("m"),
                 "i",
             )
@@ -617,7 +599,7 @@ def kmeans_lloyd_distributed(
         cents = new_cents
     final_udf = _assign_l2_d2_numpy_udf(cents)
     final = base.withColumn("__a", final_udf("__v")).select(
-        F.col("__id").alias(id_col), F.col("__a.cell").alias("cell")
+        F.col("__id").alias("vec_id"), F.col("__a.cell").alias("cell")
     )
     return final, cents, inertia_hist
 

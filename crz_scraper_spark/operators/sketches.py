@@ -341,17 +341,19 @@ def quantile_histogram(
     )
 
 
+# (name, numerator, denominator) of each quantile `histogram_quantiles` reads.
+_QUANTILES = (("p50", 1, 2), ("p95", 19, 20))
+
+
 def histogram_quantiles(
     hist: DataFrame,
     group_cols: list[str],
-    probs: list[tuple[str, int, int]] | None = None,
     scale: int = 16,
 ) -> DataFrame:
-    """Nearest-rank-lower quantiles from a `quantile_histogram` table.
+    """Nearest-rank-lower p50 and p95 from a `quantile_histogram` table.
 
-    ``probs`` is a list of (name, numerator, denominator); returns
-    ``group_cols + (n_rows, <name>_bucket bigint, <name>_est double)`` per
-    prob. Everything up to the readout is integer (running count vs
+    Returns ``group_cols + (n_rows, <p>_bucket bigint, <p>_est double)`` for
+    p in (p50, p95). Everything up to the readout is integer (running count vs
     integer target rank); the only float op is bucket/scale with scale a
     power of two — exact in IEEE — so the output hash-matches a DuckDB
     twin. The cumulative window partitions on the GROUP and orders by
@@ -361,8 +363,6 @@ def histogram_quantiles(
     """
     from pyspark.sql import Window
 
-    if probs is None:
-        probs = [("p50", 1, 2), ("p95", 19, 20)]
     w = (
         Window.partitionBy(*group_cols)
         .orderBy("bucket")
@@ -372,7 +372,7 @@ def histogram_quantiles(
     tot = hist.groupBy(*group_cols).agg(F.sum("cnt").alias("n_rows"))
     j = cum.join(tot, list(group_cols))
     aggs = [F.max("n_rows").cast("bigint").alias("n_rows")]
-    for name, num, den in probs:
+    for name, num, den in _QUANTILES:
         target = F.expr(f"((n_rows - 1) * {num}) DIV {den} + 1")
         aggs.append(
             F.min(F.when(F.col("cum") >= target, F.col("bucket"))).alias(
@@ -380,7 +380,7 @@ def histogram_quantiles(
             )
         )
     out = j.groupBy(*group_cols).agg(*aggs)
-    for name, _num, _den in probs:
+    for name, _num, _den in _QUANTILES:
         out = out.withColumn(
             f"{name}_est",
             F.col(f"{name}_bucket").cast("double") / F.lit(float(scale)),

@@ -27,9 +27,9 @@ def salted_join(
     skewed_key: str,
     other_key: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join `skewed ⋈ other` with the skewed side salted `salt` ways.
+    """Inner equi-join `skewed ⋈ other` with the skewed side salted `salt`
+    ways.
 
     Deterministic: the salt is a content hash of the whole skewed row
     (xxhash64), not `rand()` — identical input always lands identically, so
@@ -40,8 +40,6 @@ def salted_join(
     Output columns = skewed's + other's (like a plain `join(..., on=expr)`);
     the helper columns never escape.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     s = skewed.withColumn(
         "__salt", F.pmod(F.xxhash64(F.struct(*skewed.columns)), F.lit(salt))
     )
@@ -52,8 +50,6 @@ def salted_join(
         ),
     )
     joined = s.join(
-        o,
-        (s[skewed_key] == o[other_key]) & (s["__salt"] == o["__salt"]),
-        how,
+        o, (s[skewed_key] == o[other_key]) & (s["__salt"] == o["__salt"])
     )
     return joined.drop("__salt")

@@ -84,13 +84,9 @@ def keyword_tag(
     return out.withColumn("total_hits", grand)
 
 
-def tag_rank_filter(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    taxonomy: dict[str, list[str]] | None = None,
-) -> DataFrame:
-    """Tag + rank + filter: the full stage-4b chain (A1→A3, O1, P10).
+def tag_rank_filter(docs: DataFrame) -> DataFrame:
+    """Tag + rank + filter: the full stage-4b chain (A1→A3, O1, P10) over
+    ``(doc_id, text)`` with `DEFAULT_TAXONOMY`.
 
     Ranks by (total_hits desc, n_chars desc) — the reference's multi-key
     descending ranking sort (`04_tag_text_contracts.py:189-195`, char count
@@ -101,13 +97,9 @@ def tag_rank_filter(
     shuffle for a map-only column).
     """
     with_len = keyword_tag(
-        docs,
-        id_col,
-        text_col,
-        taxonomy,
-        carry=[F.length(text_col).alias("n_chars_calc")],
+        docs, carry=[F.length("text").alias("n_chars_calc")]
     )
     return (
         with_len.filter(F.col("total_hits") > 0)
-        .orderBy(F.desc("total_hits"), F.desc("n_chars_calc"), F.asc(id_col))
+        .orderBy(F.desc("total_hits"), F.desc("n_chars_calc"), F.asc("doc_id"))
     )

@@ -29,12 +29,11 @@ def asof_join(
     right: DataFrame,
     ts_col: str,
     by: str,
-    value_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """For each left row, attach the latest right row with
     `right.ts <= left.ts` within the same `by` group (backward as-of join,
-    DuckDB/pandas `ASOF JOIN` semantics).
+    DuckDB/pandas `ASOF JOIN` semantics). Every right column but `ts_col`
+    and `by` comes back with the suffix `_asof`.
 
     Implementation: tag and union both sides, sort per `by` key on
     (ts, side) with right rows first at equal timestamps, carry the right
@@ -46,8 +45,7 @@ def asof_join(
     right rows at the same (by, ts): the last under a deterministic
     (ts, tie-break) sort wins; pass pre-deduped rights for full determinism.
     """
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (ts_col, by)]
+    value_cols = [c for c in right.columns if c not in (ts_col, by)]
 
     l_tag = left.select(
         F.col(by),
@@ -82,7 +80,7 @@ def asof_join(
     )
     out = carried.filter(F.col("__side") == 1).select(
         *[F.col("__lrow")[c].alias(c) for c in left.columns],
-        *[F.col(f"__carry_{c}").alias(f"{c}{suffix}") for c in value_cols],
+        *[F.col(f"__carry_{c}").alias(f"{c}_asof") for c in value_cols],
     )
     return out
 
@@ -92,12 +90,11 @@ def range_join(
     right: DataFrame,
     ts_col: str,
     by: str,
-    lower_s: int,
     upper_s: int,
-    suffix: str = "_r",
 ) -> DataFrame:
     """All (left, right) pairs in the same `by` group with
-    `left.ts + lower_s <= right.ts <= left.ts + upper_s` (seconds).
+    `left.ts <= right.ts <= left.ts + upper_s` (seconds). Right columns
+    come back with the suffix `_r`.
 
     Implementation: bucket both sides by a coarse time window the size of
     the range span, equi-join on (by, bucket) for the right bucket and its
@@ -105,8 +102,8 @@ def range_join(
     the exact range predicate. The join stays a hash equi-join — bounded
     fan-out, no BroadcastNestedLoop — which is what survives at 100 TB.
     """
-    span = max(upper_s - lower_s, 1)
-    # Bucket width == range span, so [ts+lower, ts+upper] spans at most two
+    span = max(upper_s, 1)
+    # Bucket width == range span, so [ts, ts+upper] spans at most two
     # consecutive buckets — each left row probes exactly 2 equi-join keys.
     offsets = [0, 1]
 
@@ -119,31 +116,31 @@ def range_join(
         # same session-tz interpretation so bucket and predicate agree.
         return F.unix_micros(ts.cast("timestamp")) / F.lit(1000000.0)
 
-    def bucket(ts, shift_s: int = 0):
-        return F.floor((epoch_s(ts) + F.lit(shift_s)) / F.lit(span))
+    def bucket(ts):
+        return F.floor(epoch_s(ts) / F.lit(span))
 
     l = left.select(
         *[F.col(c) for c in left.columns],
         F.explode(
-            F.array(*[(bucket(F.col(ts_col), lower_s) + F.lit(o)) for o in offsets])
+            F.array(*[(bucket(F.col(ts_col)) + F.lit(o)) for o in offsets])
         ).alias("__bucket"),
     )
     r = right.select(
         F.col(by).alias("__rby"),
         F.col(ts_col).alias("__rts"),
         *[
-            F.col(c).alias(f"{c}{suffix}")
+            F.col(c).alias(f"{c}_r")
             for c in right.columns
             if c not in (ts_col, by)
         ],
         bucket(F.col("__rts")).alias("__bucket"),
     )
-    lo = epoch_s(F.col(ts_col)) + F.lit(lower_s)
+    lo = epoch_s(F.col(ts_col))
     hi = epoch_s(F.col(ts_col)) + F.lit(upper_s)
     rts = epoch_s(F.col("__rts"))
     return (
         l.join(r, (F.col(by) == F.col("__rby")) & (l["__bucket"] == r["__bucket"]))
         .filter((rts >= lo) & (rts <= hi))
         .drop("__bucket", "__rby")
-        .withColumnRenamed("__rts", f"{ts_col}{suffix}")
+        .withColumnRenamed("__rts", f"{ts_col}_r")
     )

@@ -90,14 +90,15 @@ def quality_score_expr(text_col: str = "text", toks: Column | None = None) -> Co
     return _composite_score(n_tokens, stop_ratio, punct_ratio)
 
 
-def lang_id_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-language stopword-hit scores + argmax language guess.
+def lang_id_scores(docs: DataFrame) -> DataFrame:
+    """Per-language stopword-hit scores + argmax language guess per
+    ``(doc_id, text)`` row.
 
     Ties resolve to the alphabetically-first language among the max scores
     (deterministic); zero hits everywhere → 'und' (undetermined).
     """
-    toks = tokens_nonempty(text_col)
-    out = docs.select(F.col(id_col), toks.alias("__toks"))
+    toks = tokens_nonempty("text")
+    out = docs.select(F.col("doc_id"), toks.alias("__toks"))
     for lang, words in LANG_STOPWORDS.items():
         out = out.withColumn(f"score_{lang}", _stopword_hits(F.col("__toks"), words))
     score_cols = [F.col(f"score_{lang}") for lang in LANG_STOPWORDS]
@@ -111,7 +112,7 @@ def lang_id_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     return out.withColumn("lang_guess", guess).drop("__toks")
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality features + composite score per document.
 
     Features: char count, token count, mean token length, punctuation ratio,
@@ -131,13 +132,13 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     same single pass — measured 1.195 → 0.550 s interleaved min-of-6 at
     sf0.1, identical rows and schema.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     all_stop = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
     stopset = F.array(*[F.lit(w) for w in all_stop])
     counted = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.length(t).alias("__nc"),
-        tokens_nonempty(text_col).alias("__toks"),
+        tokens_nonempty("text").alias("__toks"),
         (F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))).alias(
             "__np"
         ),
@@ -145,7 +146,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
             "__nu"
         ),
     ).select(
-        id_col,
+        "doc_id",
         "__nc",
         "__np",
         "__nu",
@@ -171,7 +172,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         nc > 0, F.col("__nu").cast("double") / nc
     ).otherwise(F.lit(0.0))
     return counted.select(
-        F.col(id_col),
+        F.col("doc_id"),
         nc.alias("n_chars_calc"),
         nt.alias("n_tokens"),
         F.round(mean_tok_len, 6).alias("mean_tok_len"),
@@ -182,34 +183,34 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
-def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + BPE-ish subword token estimate per document.
 
     `ws_tokens` = whitespace split count; `bpe_ish_tokens` = count of matches
     of a GPT-2-style pre-tokenizer regex approximation (word pieces, numbers,
     punctuation runs) via `regexp_count` — a deterministic, JVM-side stand-in
     for a real BPE vocab."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.size(F.filter(F.split(t, r"\s+"), lambda w: w != ""))
     bpe = F.regexp_count(t, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ws.alias("ws_tokens"),
         bpe.alias("bpe_ish_tokens"),
         (F.length(t) / F.lit(4.0)).alias("chars_div4_est"),
     )
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Deterministic document fingerprints: md5 of the whitespace-normalized
     lowercased text (content hash) + xxhash64 (cheap 64-bit shuffle key).
 
     The content hash dedups exact near-whitespace variants; downstream exact
     dedup groups by the 16-byte digest instead of multi-KB text (narrow
     shuffle rows at 100 TB)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(norm).alias("content_md5"),
         F.xxhash64(norm).alias("content_xxh64"),
     )

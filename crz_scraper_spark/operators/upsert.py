@@ -69,21 +69,19 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: list[str],
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Row-level diff of two table snapshots — the question a daily-dump
     consumer actually asks ("what changed since yesterday's dump?"; the
     reference re-downloads and re-processes everything,
     `00_download_CRZ_DB.py:179-220`). One full outer join on the key;
-    change detection compares a single xxhash64 over the compared columns
+    change detection compares a single xxhash64 over the non-key columns
     (null-tagged so NULL≠'' and column boundaries can't alias), so wide
     rows shuffle once and compare as one long. Output: the key columns +
     `change_type` ∈ {inserted, deleted, changed} (unchanged rows are
     dropped — at 100 TB they are almost everything, and they leave the
     plan at the join).
     """
-    if compare_cols is None:
-        compare_cols = [c for c in new.columns if c not in key_cols]
+    compare_cols = [c for c in new.columns if c not in key_cols]
 
     def content_hash(df: DataFrame):
         tagged = [

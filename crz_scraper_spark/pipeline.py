@@ -184,7 +184,7 @@ def tables_pipeline(
         .select("table_id", "kw_hits")
     )
     best_price_col = best_column_per_table(
-        classified.filter(F.col("is_numeric_col") == 1), "digit_ratio"
+        classified.filter(F.col("is_numeric_col") == 1)
     )
     return {
         "classified": classified,

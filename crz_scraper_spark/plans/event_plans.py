@@ -54,7 +54,7 @@ GROUP BY 1, 2
 
 
 def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return streaming_tumbling_agg(spark, sf_dir, "1 hour", "2 hours")
+    return streaming_tumbling_agg(spark, sf_dir)
 
 
 def streaming_parquet_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,7 +196,7 @@ WHERE c.event_type = 'click'
 def streaming_enriched_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crz_scraper_spark.streaming.windows import streaming_enriched_segments
 
-    return streaming_enriched_segments(spark, sf_dir, "1 hour", "2 hours")
+    return streaming_enriched_segments(spark, sf_dir)
 
 
 STREAMING_ENRICHED_SEGMENTS_SQL = """
@@ -591,7 +591,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("value"))
     )
-    out = asof_join(clicks, purchases, "ts", "user_id", value_cols=["value"])
+    out = asof_join(clicks, purchases, "ts", "user_id")
     return out.select(
         "event_id", "user_id", "ts", F.round("value_asof", 6).alias("value_asof")
     )
@@ -628,7 +628,7 @@ def range_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id", "ts"
     )
-    out = range_join(clicks, purchases, "ts", "user_id", lower_s=0, upper_s=1800)
+    out = range_join(clicks, purchases, "ts", "user_id", upper_s=1800)
     return out.select("click_id", "user_id", F.col("purchase_id_r").alias("purchase_id"))
 
 

@@ -54,7 +54,7 @@ def dictionary_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cnt") > 5)
         .select("word")
     )
-    return oov_profile_counts(dw, dictionary, gibberish_threshold=0.75)
+    return oov_profile_counts(dw, dictionary)
 
 
 DICTIONARY_OOV_SQL = f"""
@@ -141,7 +141,7 @@ def dictionary_oov_morph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("orig") > 5)
         .select("word")
     )
-    return morph_oov_profile_counts(dw, dictionary, gibberish_threshold=0.75)
+    return morph_oov_profile_counts(dw, dictionary)
 
 
 def _dictionary_oov_morph_sql() -> str:
@@ -637,7 +637,7 @@ WHERE rn = 1
 
 
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return streaming_dedup(spark, sf_dir, watermark="1 hour")
+    return streaming_dedup(spark, sf_dir)
 
 
 STREAMING_DEDUP_EVENTS_SQL = """

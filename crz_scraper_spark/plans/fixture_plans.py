@@ -141,7 +141,7 @@ def dir_tree_corpus_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "filename",
         F.length("text").alias("n_chars"),
     )
-    binary = read_binary_tree(spark, root, glob="*.txt").select(
+    binary = read_binary_tree(spark, root).select(
         F.col("filename").alias("bin_filename"),
         F.col("length").alias("n_bytes"),
     )
@@ -336,49 +336,17 @@ def minhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_incremental_sql() -> str:
-    from crz_scraper_spark.operators.dedup import (
-        MINHASH_PRIME,
-        _minhash_coeffs,
-    )
+    from crz_scraper_spark.plans.scale_plans import _minhash_md5_ctes
 
-    n, nh, nb = _MHI_SHINGLE, _MHI_HASHES, _MHI_BANDS
-    rows = nh // nb
-    mins = ",\n         ".join(
-        f"min(({a} * x + {c}) % {MINHASH_PRIME}) AS h{i}"
-        for i, (a, c) in enumerate(_minhash_coeffs(nh))
-    )
-    # Band equality is slice-value equality (the engine hashes the slice,
-    # the oracle compares the concatenated values — equivalent).
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, "
-        + " || ',' || ".join(f"h{b * rows + j}::VARCHAR" for j in range(rows))
-        + " AS bv FROM sig"
-        for b in range(nb)
-    )
+    nh = _MHI_HASHES
     agree = " + ".join(f"(sa.h{i} = sb.h{i})::INT" for i in range(nh))
+    ctes = _minhash_md5_ctes("documents", _MHI_SHINGLE, nh, _MHI_BANDS)
     return f"""
-WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(length(t) - {n - 1}, 1) + 1),
-           i -> substr(t, i, {n})))) AS s
-  FROM (SELECT doc_id, lower(text) AS t FROM documents)
-),
-based AS (
-  SELECT doc_id, ('0x' || substr(md5(s),1,8))::BIGINT AS x
-  FROM sh
-),
-sig AS (
-  SELECT doc_id,
-         {mins}
-  FROM based GROUP BY doc_id
-),
-banded AS (
-{band_rows}
-),
+WITH {ctes},
 cand AS (
   SELECT DISTINCT b.doc_id AS id_new, a.doc_id AS id_other
   FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
+    ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
   WHERE b.doc_id % 2 = 1
 )
 SELECT c.id_new, c.id_other,
@@ -672,32 +640,15 @@ def curation_pipeline_audit_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_audit_md5_sql() -> str:
-    """Composed oracle: exact-dedup window → md5 MinHash-LSH pairs (the
-    `_minhash_md5_sql` CTEs re-headed over `exact`, threshold 0.8) →
+    """Composed oracle: exact-dedup window → md5 MinHash-LSH pairs and
+    their closure (`_md5_cluster_ctes` over `exact`, threshold 0.8) →
     recursive-CTE connected components → doc_quality score ≥ 0.3 →
     five-row ledger. Every fragment is individually hash-proven
     (exact_dedup_groups, minhash_near_dup_md5, near_dup_clusters,
     doc_quality); this string wires them exactly as pipeline.py does."""
-    from crz_scraper_spark.plans.scale_plans import _minhash_md5_sql
+    from crz_scraper_spark.plans.scale_plans import _md5_cluster_ctes
     from crz_scraper_spark.plans.text_plans import quality_score_sql
 
-    pairs_sql = _minhash_md5_sql(src="exact", threshold=0.8).strip()
-    # The re-heading below is string surgery on the template's layout; a
-    # whitespace/layout drift in _minhash_md5_sql must raise HERE, not
-    # silently emit malformed SQL the driver would only catch as a
-    # hash mismatch.
-    if not pairs_sql.startswith("WITH "):
-        raise ValueError(
-            "_minhash_md5_sql layout drift: expected leading 'WITH '"
-        )
-    body = pairs_sql[len("WITH ") :]
-    parts = body.rsplit(")\nSELECT", 1)
-    if len(parts) != 2:
-        raise ValueError(
-            "_minhash_md5_sql layout drift: ')\\nSELECT' separator not found"
-        )
-    head, final_select = parts
-    final_select = "SELECT" + final_select
     return f"""
 WITH RECURSIVE base AS (
   SELECT doc_id, text FROM documents
@@ -709,24 +660,7 @@ exact AS (
     FROM base)
   WHERE rn = 1
 ),
-{head}),
-pairs AS (
-{final_select}
-),
-bi AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(node, r) AS (
-  SELECT src, dst FROM bi
-  UNION
-  SELECT rr.node, b.dst FROM reach rr JOIN bi b ON rr.r = b.src
-),
-clusters AS (
-  SELECT node AS doc_id, least(node, min(r)) AS cluster_id
-  FROM reach GROUP BY node
-),
+{_md5_cluster_ctes("exact", 0.8)},
 non_reps AS (SELECT doc_id FROM clusters WHERE doc_id <> cluster_id),
 deduped AS (
   SELECT e.doc_id, e.text FROM exact e

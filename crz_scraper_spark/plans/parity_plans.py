@@ -50,7 +50,7 @@ from crz_scraper_spark.plans.scale_plans import _doc_binaries
 
 def tagged_metadata_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    ranked = tag_rank_filter(docs, "doc_id", "text", DEFAULT_TAXONOMY)
+    ranked = tag_rank_filter(docs)
     meta = docs.select("doc_id", "lang", "source", "n_chars")
     return ranked.select("doc_id", "total_hits").join(meta, "doc_id").select(
         "doc_id", "lang", "source", "n_chars", "total_hits"

@@ -60,7 +60,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8)
-    out = cosine_topk(emb, queries, "vec_id", "embedding", k=5, round_to=4)
+    out = cosine_topk(emb, queries, k=5, round_to=4)
     return out
 
 
@@ -103,8 +103,6 @@ def ann_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_ann_topk(
         emb,
         queries,
-        "vec_id",
-        "embedding",
         k=_LSH_K,
         n_planes=_LSH_PLANES,
         dim=_LSH_DIM,
@@ -118,7 +116,7 @@ def _ann_lsh_sql() -> str:
 
     from crz_scraper_spark.operators.similarity import hyperplanes
 
-    planes = hyperplanes(_LSH_DIM, _LSH_PLANES, seed=42)
+    planes = hyperplanes(_LSH_DIM, _LSH_PLANES)
     plane_rows = ",\n    ".join(
         f"({pid}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
         for pid, p in enumerate(planes)
@@ -282,11 +280,10 @@ def _with_recall_guard(
     exact: DataFrame,
     corpus: DataFrame,
     floor_x_random: int,
-    k: int = _ANN_K,
 ) -> DataFrame:
     """Append corpus_recall_ppm (aggregate recall of `topk` against the
     exact twin) and floor_ppm (= floor_x_random × the random-ranking
-    baseline k/(n−1), n from `corpus`) to every row, and drop ALL rows
+    baseline k/(n−1), k = _ANN_K, n from `corpus`) to every row, and drop ALL rows
     when recall falls below the floor — the in-query invariant that turns
     the driver's weak rows-only count into a real index-health assertion
     (VERDICT r3 item 7)."""
@@ -308,7 +305,7 @@ def _with_recall_guard(
                 "corpus_recall_ppm"
             ),
             F.expr(
-                f"CAST({floor_x_random} * {k} * 1000000 div (__n - 1) "
+                f"CAST({floor_x_random} * {_ANN_K} * 1000000 div (__n - 1) "
                 "AS BIGINT)"
             ).alias("floor_ppm"),
         )
@@ -320,8 +317,8 @@ def _with_recall_guard(
     return collect_and_release(guarded, topk)
 
 
-def _exact_l2_topk(emb: DataFrame, k: int = 5) -> DataFrame:
-    """Exact L2 top-k of the standard 8-query cohort — the in-query truth
+def _exact_l2_topk(emb: DataFrame) -> DataFrame:
+    """Exact L2 top-5 of the standard 8-query cohort — the in-query truth
     twin for the PQ recall guard (PQ scores asymmetric L2 distance, so
     cosine_topk_bruteforce is the wrong referee)."""
     from pyspark.sql.window import Window
@@ -343,7 +340,7 @@ def _exact_l2_topk(emb: DataFrame, k: int = 5) -> DataFrame:
     return (
         q.join(c, F.col("query_id") != F.col("neighbor_id"))
         .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
+        .filter(F.col("__rk") <= 5)
         .select("query_id", "neighbor_id")
     )
 
@@ -359,10 +356,8 @@ def _exact_l2_topk(emb: DataFrame, k: int = 5) -> DataFrame:
 # recall bounds; determinism).
 _IVF_NLIST = 8
 _IVF_NPROBE = 2
-_IVF_SEED = 4242
 _PQ_M = 8
 _PQ_KSUB = 32
-_PQ_SEED = 777
 _ANN_DIM = 64
 
 
@@ -385,10 +380,8 @@ def pq_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = pq_topk(
         emb,
         queries,
-        "vec_id",
-        "embedding",
         k=5,
-        codebooks=fixed_pq_codebooks(_ANN_DIM, _PQ_M, _PQ_KSUB, _PQ_SEED),
+        codebooks=fixed_pq_codebooks(_ANN_DIM, _PQ_M, _PQ_KSUB),
         encode_round_to=6,
     )
     # The guard only COUNTS the corpus frame — hand it the raw table so
@@ -418,13 +411,9 @@ def ivf_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = ivf_topk(
         emb,
         queries,
-        "vec_id",
-        "embedding",
-        k=5,
         nlist=_IVF_NLIST,
         nprobe=_IVF_NPROBE,
-        round_to=4,
-        centroids=fixed_unit_centroids(_ANN_DIM, _IVF_NLIST, _IVF_SEED),
+        centroids=fixed_unit_centroids(_ANN_DIM, _IVF_NLIST),
         assign_round_to=6,
     )
     exact = cosine_topk_bruteforce(spark, sf_dir).select(
@@ -446,7 +435,7 @@ def _sq_dist_sql(a: str, b: str) -> str:
 
 
 def _ann_ivf_sql() -> str:
-    cents = fixed_unit_centroids(_ANN_DIM, _IVF_NLIST, _IVF_SEED)
+    cents = fixed_unit_centroids(_ANN_DIM, _IVF_NLIST)
     cent_rows = ",\n    ".join(
         f"({pid}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
         for pid, c in enumerate(cents)
@@ -511,7 +500,7 @@ WHERE h.corpus_recall_ppm >= h.floor_ppm
 
 
 def _ann_pq_sql() -> str:
-    cbs = fixed_pq_codebooks(_ANN_DIM, _PQ_M, _PQ_KSUB, _PQ_SEED)
+    cbs = fixed_pq_codebooks(_ANN_DIM, _PQ_M, _PQ_KSUB)
     dsub = _ANN_DIM // _PQ_M
     cb_rows = ",\n    ".join(
         f"({m}, {j}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
@@ -717,36 +706,31 @@ def minhash_near_dup_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_md5_sql(
-    src: str = "documents", threshold: float = _MH_THRESHOLD
-) -> str:
-    """DuckDB analog of `minhash_near_dup_md5` over the table/CTE `src`.
-    Callers that re-head this string (`_lsh_band_occupancy_md5_sql`,
-    `_near_dup_clusters_sql`, the curation-audit oracle) split on the CTE
-    markers below — keep the layout stable."""
+def _minhash_md5_ctes(src: str, shingle_n: int, num_hashes: int, bands: int) -> str:
+    """The md5 MinHash-LSH family as DuckDB CTEs over the relation `src`
+    (doc_id, text): `sh` (distinct character shingles of the lowercased
+    text), `based` (their 32-bit md5 ids), `sig` (doc_id,
+    h0..h{num_hashes-1}, the Carter-Wegman minima) and `banded` (doc_id,
+    band, bh — a 60-bit md5 of the band's minima). Every md5 MinHash oracle
+    composes its query from this text: no leading WITH, no trailing
+    comma."""
     from crz_scraper_spark.operators.dedup import MINHASH_PRIME, _minhash_coeffs
 
-    n, nh, nb = _MH_SHINGLE, _MH_HASHES, _MH_BANDS
-    rows = nh // nb
-    h64 = "('0x' || substr(md5({x}),1,15))::BIGINT"
+    rows = num_hashes // bands
     mins = ",\n         ".join(
         f"min(({a} * x + {c}) % {MINHASH_PRIME}) AS h{i}"
-        for i, (a, c) in enumerate(_minhash_coeffs(nh))
+        for i, (a, c) in enumerate(_minhash_coeffs(num_hashes))
     )
     band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, "
-        + h64.format(
-            x=" || ',' || ".join(f"h{b * rows + j}::VARCHAR" for j in range(rows))
-        )
-        + " AS bh FROM sig"
-        for b in range(nb)
+        f"  SELECT doc_id, {b} AS band, ('0x' || substr(md5("
+        + " || ',' || ".join(f"h{b * rows + j}::VARCHAR" for j in range(rows))
+        + "),1,15))::BIGINT AS bh FROM sig"
+        for b in range(bands)
     )
-    agree = " + ".join(f"(sa.h{i} = sb.h{i})::INT" for i in range(nh))
-    return f"""
-WITH sh AS (
+    return f"""sh AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(length(t) - {n - 1}, 1) + 1),
-           i -> substr(t, i, {n})))) AS s
+           range(1, greatest(length(t) - {shingle_n - 1}, 1) + 1),
+           i -> substr(t, i, {shingle_n})))) AS s
   FROM (SELECT doc_id, lower(text) AS t FROM {src})
 ),
 based AS (
@@ -760,18 +744,58 @@ sig AS (
 ),
 banded AS (
 {band_rows}
-),
+)"""
+
+
+def _md5_pair_ctes(src: str, threshold: float) -> str:
+    """`_minhash_md5_ctes` over `src` with `minhash_near_dup_md5`'s
+    settings, plus `cand` (band-bucket candidates) and `pairs` (id_a, id_b,
+    est_jaccard) at est_jaccard >= `threshold`."""
+    nh = _MH_HASHES
+    agree = " + ".join(f"(sa.h{i} = sb.h{i})::INT" for i in range(nh))
+    ctes = _minhash_md5_ctes(src, _MH_SHINGLE, nh, _MH_BANDS)
+    return f"""{ctes},
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM banded a JOIN banded b
     ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-)
-SELECT c.id_a, c.id_b,
-       round(({agree}) / {nh}.0, 6) AS est_jaccard
-FROM cand c
-JOIN sig sa ON sa.doc_id = c.id_a
-JOIN sig sb ON sb.doc_id = c.id_b
-WHERE round(({agree}) / {nh}.0, 6) >= {threshold}
+),
+pairs AS (
+  SELECT c.id_a, c.id_b,
+         round(({agree}) / {nh}.0, 6) AS est_jaccard
+  FROM cand c
+  JOIN sig sa ON sa.doc_id = c.id_a
+  JOIN sig sb ON sb.doc_id = c.id_b
+  WHERE round(({agree}) / {nh}.0, 6) >= {threshold}
+)"""
+
+
+def _md5_cluster_ctes(src: str, threshold: float) -> str:
+    """`_md5_pair_ctes` plus the transitive closure of the pair graph:
+    `bi`, `reach` and `clusters` (doc_id, cluster_id = the minimum
+    reachable id). The query must open with WITH RECURSIVE."""
+    return f"""{_md5_pair_ctes(src, threshold)},
+bi AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION
+  SELECT id_b AS src, id_a AS dst FROM pairs
+),
+reach(node, r) AS (
+  SELECT src, dst FROM bi
+  UNION
+  SELECT rr.node, b.dst FROM reach rr JOIN bi b ON rr.r = b.src
+),
+clusters AS (
+  SELECT node AS doc_id, least(node, min(r)) AS cluster_id
+  FROM reach GROUP BY node
+)"""
+
+
+def _minhash_md5_sql() -> str:
+    """DuckDB analog of `minhash_near_dup_md5`."""
+    return f"""
+WITH {_md5_pair_ctes("documents", _MH_THRESHOLD)}
+SELECT id_a, id_b, est_jaccard FROM pairs
 """
 
 
@@ -797,11 +821,9 @@ def lsh_band_occupancy_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_band_occupancy_md5_sql() -> str:
-    pairs_sql = _minhash_md5_sql().strip()
-    # Re-head the pairs query: keep the shared sh/based/sig/banded CTEs,
-    # replace the candidate join + verify tail with the occupancy rollup.
-    head, _tail = pairs_sql.split(",\ncand AS (", 1)
-    return f"""{head},
+    ctes = _minhash_md5_ctes("documents", _MH_SHINGLE, _MH_HASHES, _MH_BANDS)
+    return f"""
+WITH {ctes},
 per AS (
   SELECT band, bh, count(*) AS c FROM banded GROUP BY band, bh
 )
@@ -826,32 +848,13 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crz_scraper_spark.operators.dedup import connected_components
 
     pairs = minhash_near_dup_md5(spark, sf_dir)
-    return connected_components(pairs, "id_a", "id_b")
+    return connected_components(pairs)
 
 
 def _near_dup_clusters_sql() -> str:
-    pairs_sql = _minhash_md5_sql().strip()
-    # Re-head the pairs query as CTEs of a recursive closure query.
-    body = pairs_sql[len("WITH ") :]
-    head, final_select = body.rsplit(")\nSELECT", 1)
-    final_select = "SELECT" + final_select
     return f"""
-WITH RECURSIVE {head}),
-pairs AS (
-{final_select}
-),
-bi AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(node, r) AS (
-  SELECT src, dst FROM bi
-  UNION
-  SELECT rr.node, b.dst FROM reach rr JOIN bi b ON rr.r = b.src
-)
-SELECT node AS doc_id, least(node, min(r)) AS cluster_id
-FROM reach GROUP BY node
+WITH RECURSIVE {_md5_cluster_ctes("documents", _MH_THRESHOLD)}
+SELECT doc_id, cluster_id FROM clusters
 """
 
 
@@ -895,14 +898,8 @@ def near_dup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_dup_keep_best_sql() -> str:
-    cl = _near_dup_clusters_sql().strip()
-    body = cl[len("WITH RECURSIVE ") :]
-    head, final_select = body.rsplit(")\nSELECT", 1)
     return f"""
-WITH RECURSIVE {head}),
-clusters AS (
-SELECT{final_select}
-),
+WITH RECURSIVE {_md5_cluster_ctes("documents", _MH_THRESHOLD)},
 m AS (
   SELECT c.doc_id, c.cluster_id, d.n_chars
   FROM clusters c JOIN documents d USING (doc_id)
@@ -1021,7 +1018,7 @@ FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
 # containment_near_dup — Broder CONTAINMENT |A∩B|/min(|A|,|B|) pairs via
 # rare-shingle blocking (operators/dedup.py::containment_pairs): the
 # asymmetric doc-embedded-in-doc case Jaccard-threshold MinHash misses by
-# construction. Candidates are bounded at K·max_df per doc (linear, never
+# construction. Candidates are bounded at 3·20 per doc (linear, never
 # all-pairs); scoring is integer counts + ONE IEEE division, so the DuckDB
 # twin hash-matches exactly.
 # ---------------------------------------------------------------------------
@@ -1616,51 +1613,14 @@ def fuzzy_name_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fuzzy_name_pairs_banded_sql() -> str:
-    from crz_scraper_spark.operators.dedup import (
-        MINHASH_PRIME,
-        _minhash_coeffs,
-    )
-
-    n, nh, nb = _FNB_SHINGLE, _FNB_HASHES, _FNB_BANDS
-    rows = nh // nb
-    h64 = "('0x' || substr(md5({x}),1,15))::BIGINT"
-    mins = ",\n         ".join(
-        f"min(({a} * x + {c}) % {MINHASH_PRIME}) AS h{i}"
-        for i, (a, c) in enumerate(_minhash_coeffs(nh))
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, "
-        + h64.format(
-            x=" || ',' || ".join(
-                f"h{b * rows + j}::VARCHAR" for j in range(rows)
-            )
-        )
-        + " AS bh FROM sig"
-        for b in range(nb)
-    )
+    ctes = _minhash_md5_ctes("names", _FNB_SHINGLE, _FNB_HASHES, _FNB_BANDS)
     return f"""
 WITH g AS (
   SELECT p_brand, p_name, count(*) AS m, min(p_partkey) AS gid
   FROM part GROUP BY 1, 2
 ),
-sh AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           range(1, greatest(length(t) - {n - 1}, 1) + 1),
-           i -> substr(t, i, {n})))) AS s
-  FROM (SELECT gid AS doc_id, lower(p_name) AS t FROM g)
-),
-based AS (
-  SELECT doc_id, ('0x' || substr(md5(s),1,8))::BIGINT AS x
-  FROM sh
-),
-sig AS (
-  SELECT doc_id,
-         {mins}
-  FROM based GROUP BY doc_id
-),
-banded AS (
-{band_rows}
-),
+names AS (SELECT gid AS doc_id, p_name AS text FROM g),
+{ctes},
 keyed AS (
   SELECT bd.doc_id, bd.band, bd.bh, g.p_brand AS brand
   FROM banded bd JOIN g ON g.gid = bd.doc_id
@@ -1798,7 +1758,7 @@ def embedding_kmeans_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ).persist()
     assigned, _cents, hist = kmeans_lloyd_distributed(
-        emb, "vec_id", "embedding", k=_KM_K, n_iter=_KM_ITER,
+        emb, k=_KM_K, n_iter=_KM_ITER,
         dim=_KM_DIM, seed=_KM_SEED,
     )
     # In-query invariant: Lloyd's inertia is provably non-increasing; a
@@ -1945,7 +1905,7 @@ def semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(raw.select("vec_id", "embedding")).persist()
     try:
         _assigned, cents, _hist = kmeans_lloyd_distributed(
-            emb, "vec_id", "embedding", k=k, n_iter=3,
+            emb, k=k, n_iter=3,
         )
         sd = semantic_dedup(
             emb,
@@ -1983,7 +1943,7 @@ def semantic_dedup_trained_fixed_q(
     ).persist()
     try:
         _assigned, cents, hist = kmeans_lloyd_distributed(
-            emb, "vec_id", "embedding", k=_KM_K, n_iter=_KM_ITER,
+            emb, k=_KM_K, n_iter=_KM_ITER,
             dim=_KM_DIM, seed=_KM_SEED,
         )
         sd = semantic_dedup(

@@ -158,7 +158,7 @@ _ANCHORS = ("customer", "window")
 def subject_extract_600(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return docs.select(
-        "doc_id", subject_extract("text", _ANCHORS, 600).alias("subject")
+        "doc_id", subject_extract("text", _ANCHORS).alias("subject")
     )
 
 
@@ -781,7 +781,7 @@ def bpe_fixed_merges_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return _bpe_invariant(
-        _apply_bpe_stats(docs, spark, _bpe_fixed_merges(), "doc_id", "text")
+        _apply_bpe_stats(docs, spark, _bpe_fixed_merges())
     )
 
 
@@ -868,7 +868,7 @@ def token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     arrs = docs.select(tokens_nonempty("text").alias("toks"))
-    return heavy_hitters_arrays(arrs, "toks", "word", freq_num=1, freq_den=100)
+    return heavy_hitters_arrays(arrs, "toks", "word")
 
 
 TOKEN_HEAVY_HITTERS_SQL = f"""

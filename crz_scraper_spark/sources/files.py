@@ -26,10 +26,9 @@ from pyspark.sql import functions as F
 ID_FROM_PATH_RE = r".*/([^/]+)/[^/]+$"
 
 
-def read_text_tree(
-    spark: SparkSession, root: str, glob: str = "*/*.txt"
-) -> DataFrame:
-    """S5: whole-file text rows (id, filename, text) from a corpus tree."""
+def read_text_tree(spark: SparkSession, root: str) -> DataFrame:
+    """S5: whole-file text rows (id, filename, text) from the ``*.txt``
+    files of a corpus tree."""
     df = (
         spark.read.option("wholetext", True)
         .option("pathGlobFilter", "*.txt")
@@ -44,12 +43,13 @@ def read_text_tree(
     )
 
 
-def read_binary_tree(spark: SparkSession, root: str, glob: str = "*.pdf") -> DataFrame:
-    """S6: binary payload rows (id, filename, length, content) — the input
-    shape for the X1–X5 extraction UDFs (operators/multimodal.py)."""
+def read_binary_tree(spark: SparkSession, root: str) -> DataFrame:
+    """S6: binary payload rows (id, filename, length, content) from the
+    ``*.txt`` files of a corpus tree — the input shape for the X1–X5
+    extraction UDFs (operators/multimodal.py)."""
     df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.txt")
         .option("recursiveFileLookup", True)
         .load(root)
     )

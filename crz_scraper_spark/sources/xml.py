@@ -88,15 +88,13 @@ CONTRACT_SCHEMA = T.StructType(
 )
 
 
-def read_contracts_xml(
-    spark: SparkSession, path: str, row_tag: str = "contract"
-) -> DataFrame:
+def read_contracts_xml(spark: SparkSession, path: str) -> DataFrame:
     """Permissive XML scan: one row per `<contract>`, corrupt rows captured
     in `_corrupt_record` (S2) rather than aborting the scan (the Spark
     equivalent of lxml `recover=True` + the corrupted-files directory)."""
     return (
         spark.read.format("xml")
-        .option("rowTag", row_tag)
+        .option("rowTag", "contract")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .schema(CONTRACT_SCHEMA)

@@ -14,7 +14,6 @@ batch tumbling aggregation.
 
 from __future__ import annotations
 
-import os
 import uuid
 from contextlib import contextmanager
 
@@ -36,11 +35,11 @@ def _stream_confs(spark: SparkSession, needs_eviction_batch: bool = False):
     whose whole state fits in one page — pure fixed overhead locally, and
     the same sizing mistake a real deployment makes when it lets state
     partitioning default instead of sizing it to stateful-key cardinality /
-    throughput. The default, `min(8, defaultParallelism)`, is one wave of
-    state tasks (8 partitions on 4 cores are two waves of ~200 ms commits).
-    SPARK_GRAFT_STREAM_STATE_PARTS overrides it; a production stream sets
-    it to O(cores × state volume) before the FIRST start, since it is fixed
-    into the checkpoint thereafter. Partition count never affects results.
+    throughput. `min(8, defaultParallelism)` is one wave of state tasks
+    (8 partitions on 4 cores are two waves of ~200 ms commits). A
+    production stream sizes it to O(cores × state volume) before the FIRST
+    start, since it is fixed into the checkpoint thereafter. Partition
+    count never affects results.
 
     No-data batch: after the data is exhausted the engine runs one more
     NO-DATA micro-batch (noDataMicroBatches, default on) purely to advance
@@ -52,18 +51,15 @@ def _stream_confs(spark: SparkSession, needs_eviction_batch: bool = False):
     update-mode aggregations or append-mode pass-throughs (inner join,
     dedup, an update-mode foreachBatch whose trailing batch carries zero
     changed rows) emit everything in the data batches, so they skip it;
-    `needs_eviction_batch=True` keeps it. SPARK_GRAFT_STREAM_NODATA_BATCH=1
-    restores the engine default for every query (the A/B escape hatch).
+    `needs_eviction_batch=True` keeps it.
     """
-    parts = str(min(8, spark.sparkContext.defaultParallelism))
-    no_data = needs_eviction_batch or (
-        os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCH") == "1"
-    )
     confs = {
-        "spark.sql.shuffle.partitions": os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PARTS", parts
+        "spark.sql.shuffle.partitions": str(
+            min(8, spark.sparkContext.defaultParallelism)
         ),
-        "spark.sql.streaming.noDataMicroBatches.enabled": str(no_data).lower(),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(
+            needs_eviction_batch
+        ).lower(),
     }
     saved = {k: spark.conf.get(k) for k in confs}
     try:
@@ -150,14 +146,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return src.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def streaming_tumbling_agg(
-    spark: SparkSession,
-    sf_dir: str,
-    window_len: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window count/sum per event_type, executed by the
-    streaming engine end-to-end and returned as a bounded DataFrame.
+def streaming_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked (2 hours) 1-hour tumbling-window count/sum per
+    event_type, executed by the streaming engine end-to-end and returned as
+    a bounded DataFrame.
 
     `complete` output mode + `processAllAvailable()` ⇒ every input row is
     reflected exactly once, so the result equals the batch `time_bucket`
@@ -165,8 +157,8 @@ def streaming_tumbling_agg(
     """
     src = _events_stream(spark, sf_dir)
     agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_len).alias("w"), F.col("event_type"))
+        src.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
@@ -214,16 +206,11 @@ def stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_bounded(counted, "update", "stream_state")
 
 
-def streaming_enriched_segments(
-    spark: SparkSession,
-    sf_dir: str,
-    window_len: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the event stream enriched against the static
-    customer dimension (user_id = c_custkey), then a watermarked tumbling
-    count/sum per market segment. Stream-static equi-joins are stateless in
-    Structured Streaming — the static side is planned like any batch
+    customer dimension (user_id = c_custkey), then a watermarked (2 hours)
+    1-hour tumbling count/sum per market segment. Stream-static equi-joins
+    are stateless in Structured Streaming — the static side is planned like any batch
     relation per micro-batch, so this adds no state store beyond the
     windowed agg. customer grows with sf, so it carries no broadcast hint:
     AQE sizes the pruned 2-column projection each micro-batch instead of a
@@ -239,9 +226,9 @@ def streaming_enriched_segments(
     )
     src = _events_stream(spark, sf_dir)
     agg = (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", "2 hours")
         .join(customer, src.user_id == customer.c_custkey)
-        .groupBy(F.window("ts", window_len).alias("w"), F.col("c_mktsegment"))
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("c_mktsegment"))
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
@@ -258,23 +245,21 @@ def streaming_enriched_segments(
     return _run_bounded(agg, "complete", "stream_enrich")
 
 
-def streaming_dedup(
-    spark: SparkSession, sf_dir: str, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming dropDuplicates on the event key within a watermark
+def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming dropDuplicates on the event key within a 1-hour watermark
     (`dropDuplicatesWithinWatermark` — bounded state at 100 TB/day rates):
     returns the deduplicated bounded result."""
     src = _events_stream(spark, sf_dir)
-    dedup = src.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    dedup = src.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     return _run_bounded(dedup, "append", "stream_dedup")
 
 
-def _windowed_counts(src: DataFrame, window_len: str, watermark: str) -> DataFrame:
+def _windowed_counts(src: DataFrame, watermark: str) -> DataFrame:
     return (
         src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_len).alias("w"), F.col("event_type"))
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -289,12 +274,11 @@ def stream_to_upsert_store(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    window_len: str = "1 hour",
     watermark: str = "2 hours",
     stream_src: DataFrame | None = None,
 ) -> None:
     """The MULTI-BATCH-SAFE streaming sink: each micro-batch MERGES its
-    changed windows into the store by key (`upsert_by_key` on
+    changed 1-hour windows into the store by key (`upsert_by_key` on
     (window_start, event_type)) instead of overwriting date partitions.
 
     Why a second sink exists: `stream_to_partitioned_parquet`'s
@@ -311,7 +295,7 @@ def stream_to_upsert_store(
     from crz_scraper_spark.operators.upsert import _hadoop_fs, upsert_by_key
 
     src = stream_src if stream_src is not None else _events_stream(spark, sf_dir)
-    agg = _windowed_counts(src, window_len, watermark)
+    agg = _windowed_counts(src, watermark)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         fs, jvm = _hadoop_fs(spark, out_dir)
@@ -337,12 +321,11 @@ def stream_to_partitioned_parquet(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    window_len: str = "1 hour",
     watermark: str = "2 hours",
     stream_src: DataFrame | None = None,
 ) -> None:
     """Production sink pattern (S10's idempotent re-save, done right): the
-    watermarked tumbling aggregation lands in date-partitioned parquet via
+    watermarked 1-hour tumbling aggregation lands in date-partitioned parquet via
     `foreachBatch` with dynamic partition overwrite — each micro-batch
     rewrites exactly the partitions it touches, so re-running a batch after
     failure is idempotent (the reference instead rewrote its whole CSV
@@ -357,7 +340,7 @@ def stream_to_partitioned_parquet(
     (hazard pinned in tests/test_streaming_late.py).
     """
     src = stream_src if stream_src is not None else _events_stream(spark, sf_dir)
-    agg = _windowed_counts(src, window_len, watermark)
+    agg = _windowed_counts(src, watermark)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -370,23 +353,22 @@ def stream_to_partitioned_parquet(
     _drain(spark, agg.writeStream.outputMode("update").foreachBatch(write_batch))
 
 
-def stream_stream_interval_join(
-    spark: SparkSession,
-    sf_dir: str,
-    lower_s: int = 0,
-    upper_s: int = 1800,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join with an event-time interval condition:
-    clicks joined to the same user's purchases within (lower_s, upper_s]
-    seconds — both sides are live streams (two file-source readers over
-    the same drop), both watermarked so the join state is BOUNDED: a
-    buffered click can be dropped once the purchase-side watermark passes
-    click_ts + upper_s (Structured Streaming derives the state TTL from
-    the time-bound condition; without it the buffers grow forever).
-    Append mode + processAllAvailable over the bounded local input makes
-    the result equal to the batch range join (the driver's oracle —
-    RANGE_CLICK_PURCHASE_SQL / operators/temporal.py::range_join)."""
+# A purchase joins a click of the same user at most this many seconds
+# after it; both streams are watermarked 2 hours.
+_JOIN_UPPER_S = 1800
+_JOIN_WATERMARK_S = 7200
+_JOIN_CONDITION = (
+    "c_user_id = p_user_id"
+    " AND purchase_ts >= click_ts + interval 0 seconds"
+    f" AND purchase_ts <= click_ts + interval {_JOIN_UPPER_S} seconds"
+)
+
+
+def _click_purchase_streams(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Clicks and purchases as two live, watermarked streams over the same
+    drop, for the stream-stream interval joins."""
     clicks = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -395,7 +377,7 @@ def stream_stream_interval_join(
             F.col("user_id").alias("c_user_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", f"{_JOIN_WATERMARK_S} seconds")
     )
     purchases = (
         _events_stream(spark, sf_dir)
@@ -405,44 +387,44 @@ def stream_stream_interval_join(
             F.col("user_id").alias("p_user_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", f"{_JOIN_WATERMARK_S} seconds")
     )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"c_user_id = p_user_id"
-            f" AND purchase_ts >= click_ts + interval {lower_s} seconds"
-            f" AND purchase_ts <= click_ts + interval {upper_s} seconds"
-        ),
-    ).select(
+    return clicks, purchases
+
+
+def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join with an event-time interval condition:
+    clicks joined to the same user's purchases within [0, 1800] seconds —
+    both sides are live streams (two file-source readers over the same
+    drop), both watermarked so the join state is BOUNDED: a buffered click
+    can be dropped once the purchase-side watermark passes
+    click_ts + 1800 s (Structured Streaming derives the state TTL from
+    the time-bound condition; without it the buffers grow forever).
+    Append mode + processAllAvailable over the bounded local input makes
+    the result equal to the batch range join (the driver's oracle —
+    RANGE_CLICK_PURCHASE_SQL / operators/temporal.py::range_join)."""
+    clicks, purchases = _click_purchase_streams(spark, sf_dir)
+    joined = clicks.join(purchases, F.expr(_JOIN_CONDITION)).select(
         "click_id", F.col("c_user_id").alias("user_id"), "purchase_id"
     )
     return _run_bounded(joined, "append", "stream_join")
 
 
-def stream_stream_left_outer_join(
-    spark: SparkSession,
-    sf_dir: str,
-    lower_s: int = 0,
-    upper_s: int = 1800,
-    watermark: str = "2 hours",
-    watermark_s: int = 7200,
-    safety_s: int = 3600,
-) -> DataFrame:
+def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click, null-padded when
-    no same-user purchase follows within (lower_s, upper_s] seconds.
+    no same-user purchase follows within [0, 1800] seconds.
 
     Outer results differ from the inner join in WHEN rows can be emitted:
     a match streams out immediately, but an unmatched click is only known
-    unmatched once the watermark passes ``click_ts + upper_s`` and its join
+    unmatched once the watermark passes ``click_ts + 1800 s`` and its join
     state evicts — Structured Streaming emits the null-padded row in the
     eviction micro-batch (`processAllAvailable` runs that extra batch once
     the final watermark advances). Clicks in the LAST
-    ``watermark + upper_s`` of the stream never evict on bounded input, so
+    ``watermark + 1800 s`` of the stream never evict on bounded input, so
     a naive batch comparison would miss exactly that tail. The query
     therefore pins a deterministic frontier from the BOUNDED input — the
     final watermark ``min(max click_ts, max purchase_ts) - watermark``
-    minus ``upper_s`` and a safety margin — and filters BOTH the streaming
+    minus 1800 s and a one-hour safety margin — and filters BOTH the streaming
     result and the batch oracle to clicks at or below it: inside the
     frontier, streaming-with-eviction and the batch left join are provably
     identical, which is what makes an *outer* streaming join
@@ -450,35 +432,8 @@ def stream_stream_left_outer_join(
     batch-boundary watermark rounding; results never depend on where
     micro-batch boundaries fell.
     """
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"c_user_id = p_user_id"
-            f" AND purchase_ts >= click_ts + interval {lower_s} seconds"
-            f" AND purchase_ts <= click_ts + interval {upper_s} seconds"
-        ),
-        "leftOuter",
-    ).select(
+    clicks, purchases = _click_purchase_streams(spark, sf_dir)
+    joined = clicks.join(purchases, F.expr(_JOIN_CONDITION), "leftOuter").select(
         "click_id",
         F.col("c_user_id").alias("user_id"),
         "click_ts",
@@ -505,6 +460,6 @@ def stream_stream_left_outer_join(
         ),
     ).collect()[0]
     cutoff = min(row["c"], row["p"]) - _dt.timedelta(
-        seconds=watermark_s + upper_s + safety_s
+        seconds=_JOIN_WATERMARK_S + _JOIN_UPPER_S + 3600
     )
     return out.filter(F.col("click_ts") <= F.lit(cutoff))

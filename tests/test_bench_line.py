@@ -6,9 +6,10 @@ driver's stdout capture truncated the line in r1 and r9, making
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 

@@ -202,7 +202,7 @@ def test_heavy_hitters_bigint_above_2_53_exact(spark):
     docs = spark.createDataFrame(
         [([hot, i],) for i in range(500)], "toks array<bigint>"
     ).repartition(8)
-    arr = heavy_hitters_arrays(docs, "toks", "v", 1, 100).collect()
+    arr = heavy_hitters_arrays(docs, "toks", "v").collect()
     assert [r["v"] for r in arr] == [hot]
 
 
@@ -256,7 +256,7 @@ def test_heavy_hitters_arrays_matches_exploded(spark):
     ).repartition(8)
     exploded = docs.select(F.explode("toks").alias("w"))
     a = [tuple(r) for r in heavy_hitters(exploded, "w", 1, 100).collect()]
-    got = heavy_hitters_arrays(docs, "toks", "w", 1, 100)
+    got = heavy_hitters_arrays(docs, "toks", "w")
     b = [tuple(r) for r in got.collect()]
     assert a == b and len(a) >= 2
 
@@ -265,7 +265,7 @@ def test_heavy_hitters_arrays_empty_input(spark):
     from crz_scraper_spark.operators.heavyhitters import heavy_hitters_arrays
 
     docs = spark.createDataFrame([], "toks array<string>")
-    out = heavy_hitters_arrays(docs, "toks", "w", 1, 100)
+    out = heavy_hitters_arrays(docs, "toks", "w")
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["w", "cnt", "freq_ppm"]
 

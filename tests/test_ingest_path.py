@@ -292,8 +292,6 @@ NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 def test_stream_state_parts_default_and_override(spark, monkeypatch):
     from crz_scraper_spark.streaming.windows import _stream_confs
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_NODATA_BATCH", raising=False)
     with _stream_confs(spark):
         assert spark.conf.get(STATE) == str(
             min(8, spark.sparkContext.defaultParallelism)
@@ -305,16 +303,13 @@ def test_stream_state_parts_default_and_override(spark, monkeypatch):
     )
     with _stream_confs(spark):
         assert spark.conf.get(STATE) == "3"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "5")
     with _stream_confs(spark, needs_eviction_batch=True):
-        assert spark.conf.get(STATE) == "5"
         assert spark.conf.get(NO_DATA) == "true"
 
 
-def test_stream_confs_restored_when_query_raises(spark, tmp_path, monkeypatch):
+def test_stream_confs_restored_when_query_raises(spark, tmp_path):
     from crz_scraper_spark.streaming.windows import _drain
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTS", raising=False)
     src = str(tmp_path / "src")
     spark.range(10).write.parquet(src)
     agg = spark.readStream.schema("id bigint").parquet(src).groupBy().count()

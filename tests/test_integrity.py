@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -26,6 +27,8 @@ from crz_scraper_spark.plans.integrity_plans import (
 )
 
 from tests.conftest import SF_DIR
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_checksum_merges_by_xor(spark):
@@ -268,7 +271,7 @@ def test_window_rotation_covers_never_checked():
     assert len(_FIRST_WINDOW) == 50
     assert list(REGISTRY)[:50] == _FIRST_WINDOW
     checked: set = set()
-    for p in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         checked |= set(json.load(open(p)))
     never = [q for q in REGISTRY if q not in checked]
     missing = [q for q in never if q not in _FIRST_WINDOW]
@@ -316,7 +319,7 @@ def test_architecture_registry_map_not_stale():
     oracled/rows-only counts in its header line."""
     from crz_scraper_spark.plans.registry import REGISTRY
 
-    text = open("/root/repo/ARCHITECTURE.md").read()
+    text = open(os.path.join(ROOT, "ARCHITECTURE.md")).read()
     assert "## Registry map" in text
     section = text.split("## Registry map", 1)[1]
     missing = [q for q in REGISTRY if f"`{q}`" not in section]
@@ -339,7 +342,7 @@ def test_readme_registry_counts_not_stale():
 
     from crz_scraper_spark.plans.registry import REGISTRY
 
-    text = open("/root/repo/README.md").read()
+    text = open(os.path.join(ROOT, "README.md")).read()
     n = len(REGISTRY)
     oracled = sum(1 for _f, s in REGISTRY.values() if s is not None)
     assert f"maps {n} named operators" in text, (
@@ -430,8 +433,7 @@ def test_every_public_function_is_reached():
     only tests use lives in tests/."""
     from crz_scraper_spark import pipeline
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sources = _non_test_sources(root)
+    sources = _non_test_sources(ROOT)
     unreached = unreached_definitions(sources, pipeline.__all__)
     assert not unreached, (
         "definitions no query, pipeline or CLI reaches (delete them, or "
@@ -488,3 +490,351 @@ def test_d():
     assert unreached_definitions([package, root, test], ["d"]) == [
         "crz_scraper_spark/m.py::c",
     ]
+
+
+# ---------------------------------------------------------------------------
+# Options: a defaulted parameter that every caller leaves at one value is a
+# configuration nothing tests — fold it into the constant the callers use.
+
+# Callers whose keywords stay: the benchmark, the driver entry and the
+# scripts must keep working unchanged.
+_FIXED_CALLERS = ("bench.py", "__spark_entry__.py", "tools/", "perfbench/")
+# Deployment settings: the session's core count and extra confs.
+_DEPLOYMENT = (
+    "crz_scraper_spark/session.py::get_spark(cpus)",
+    "crz_scraper_spark/session.py::get_spark(extra_conf)",
+)
+_CONSTANT_NAME = re.compile(r"_?[A-Z][A-Z0-9_]*$")
+_ARITHMETIC = (
+    ast.Constant, ast.BinOp, ast.UnaryOp, ast.operator, ast.unaryop,
+    ast.Tuple, ast.List, ast.Load,
+)
+# An argument whose value the source does not fix.
+_VARIED = ("varied",)
+
+
+def _static_value(node: ast.AST):
+    """A key for an argument whose value the source fixes (a literal, a
+    constant expression, an ALL_CAPS constant name), else None."""
+    if all(isinstance(n, _ARITHMETIC) for n in ast.walk(node)):
+        try:
+            code = compile(ast.Expression(node), "<arg>", "eval")
+            return ("=", repr(eval(code, {"__builtins__": {}})))
+        except Exception:
+            return None
+    if isinstance(node, ast.Name) and _CONSTANT_NAME.match(node.id):
+        return ("name", node.id)
+    if isinstance(node, ast.Attribute) and _CONSTANT_NAME.match(node.attr):
+        return ("name", ast.unparse(node))
+    return None
+
+
+class _Signature:
+    """One function definition: where it is and how arguments bind."""
+
+    def __init__(self, path: str, qual: str, node, method: bool):
+        self.path, self.qual, self.node, self.method = path, qual, node, method
+        a = node.args
+        positional = a.posonlyargs + a.args
+        self.positional = [p.arg for p in positional[1 if method else 0 :]]
+        self.params = self.positional + [p.arg for p in a.kwonlyargs]
+        self.params += [x.arg for x in (a.vararg, a.kwarg) if x]
+        defaulted = positional[len(positional) - len(a.defaults) :]
+        self.defaults = dict(zip([p.arg for p in defaulted], a.defaults))
+        self.defaults.update(
+            (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        )
+
+
+def _signatures(path: str, tree: ast.AST) -> list[_Signature]:
+    out: list[_Signature] = []
+
+    def visit(node, qual: str, in_class: bool) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = f"{qual}.{child.name}" if qual else child.name
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in child.decorator_list
+                )
+                out.append(_Signature(path, name, child, in_class and not static))
+                visit(child, name, False)
+            elif isinstance(child, ast.ClassDef):
+                visit(child, f"{qual}.{child.name}" if qual else child.name, True)
+            else:
+                visit(child, qual, in_class)
+
+    visit(tree, "", False)
+    return out
+
+
+def one_value_parameters(
+    sources: list[tuple[str, str]], exempt: list[str]
+) -> list[str]:
+    """``path::function(param)`` of each defaulted parameter of a
+    ``crz_scraper_spark/`` function that its callers give fewer than two
+    distinct values, sorted.
+
+    ``sources`` are ``(repo-relative path, source)`` pairs, and every one
+    of them is a caller. A call matches every definition of its name (a
+    method by attribute, a class by its name for ``__init__``). An omitted
+    argument is the default, and a bare reference to a function (a
+    registry entry, a UDF) is a call with every default. A literal or an
+    ALL_CAPS constant is its own value; a bare name of the caller's own
+    parameter carries that parameter's values. Any other argument, a
+    ``*args``/``**kw`` call, a parameter named in ``exempt`` (as
+    ``path::function`` or ``path::function(param)``) and a parameter that
+    one of ``_FIXED_CALLERS`` passes count as varied."""
+    trees = [(path, ast.parse(source)) for path, source in sources]
+    sigs = [s for path, tree in trees for s in _signatures(path, tree)]
+    by_name: dict[tuple[str, str], list[_Signature]] = {}
+    for s in sigs:
+        leaf = s.qual.rsplit(".", 1)[-1]
+        if s.method and leaf == "__init__":
+            cls = s.qual.rsplit(".", 2)[-2]
+            keys = [("name", cls), ("attr", cls)]
+        elif s.method:
+            keys = [("attr", leaf)]
+        else:
+            keys = [("name", leaf), ("attr", leaf)]
+        for k in keys:
+            by_name.setdefault(k, []).append(s)
+
+    def targets(node) -> list[_Signature]:
+        if isinstance(node, ast.Name):
+            return by_name.get(("name", node.id), [])
+        if isinstance(node, ast.Attribute):
+            return by_name.get(("attr", node.attr), [])
+        return []
+
+    values: dict[tuple[int, str], set] = {}
+    pinned = {
+        (id(s), p)
+        for s in sigs
+        for p in s.params
+        if f"{s.path}::{s.qual}" in exempt or f"{s.path}::{s.qual}({p})" in exempt
+    }
+
+    def record(s: _Signature, p: str, key) -> None:
+        values.setdefault((id(s), p), set()).add(key)
+
+    def record_default(s: _Signature, p: str) -> None:
+        default = s.defaults.get(p)
+        if default is None:
+            record(s, p, _VARIED)
+        else:
+            key = _static_value(default)
+            record(s, p, key or ("expr", s.path, s.qual, ast.unparse(default)))
+
+    def record_call(call: ast.Call, s: _Signature, caller, fixed: bool) -> None:
+        given = {}
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                break
+            if i < len(s.positional):
+                given[s.positional[i]] = arg
+        given.update((k.arg, k.value) for k in call.keywords if k.arg)
+        star = any(isinstance(a, ast.Starred) for a in call.args)
+        double_star = any(k.arg is None for k in call.keywords)
+        for p in s.params:
+            if p in given:
+                arg = given[p]
+                key = _static_value(arg)
+                own = caller is not None and isinstance(arg, ast.Name)
+                if key is None and own and arg.id in caller.params:
+                    key = ("link", id(caller), arg.id)
+                record(s, p, key or _VARIED)
+            elif double_star or (star and p in s.positional):
+                record(s, p, _VARIED)
+            else:
+                record_default(s, p)
+                continue
+            if fixed:
+                pinned.add((id(s), p))
+
+    for path, tree in trees:
+        sig_of = {id(s.node): s for s in sigs if s.path == path}
+        callees = {id(c.func) for c in ast.walk(tree) if isinstance(c, ast.Call)}
+        fixed = any(path == c or path.startswith(c) for c in _FIXED_CALLERS)
+
+        def scan(node, caller) -> None:
+            for child in ast.iter_child_nodes(node):
+                inner = caller
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    inner = sig_of[id(child)]
+                elif isinstance(child, ast.Lambda):
+                    inner = None
+                if isinstance(child, ast.Call):
+                    for s in targets(child.func):
+                        record_call(child, s, caller, fixed)
+                elif (
+                    isinstance(child, (ast.Name, ast.Attribute))
+                    and isinstance(child.ctx, ast.Load)
+                    and id(child) not in callees
+                ):
+                    for s in targets(child):
+                        for p in s.params:
+                            record_default(s, p)
+                scan(child, inner)
+
+        scan(tree, None)
+
+    for key in pinned:
+        values[key] = {_VARIED}
+    changed = True
+    while changed:
+        changed = False
+        for vals in values.values():
+            for v in [v for v in vals if v[0] == "link"]:
+                new = {
+                    x for x in values.get(v[1:], {_VARIED}) if x[0] != "link"
+                }
+                if not new <= vals:
+                    vals |= new
+                    changed = True
+    out = []
+    for s in sigs:
+        if not s.path.startswith("crz_scraper_spark/"):
+            continue
+        for p in s.defaults:
+            vals = {v for v in values.get((id(s), p), ()) if v[0] != "link"}
+            if _VARIED not in vals and len(vals) < 2:
+                out.append(f"{s.path}::{s.qual}({p})")
+    return sorted(out)
+
+
+def _test_sources(root: str) -> list[tuple[str, str]]:
+    tests = os.path.join(root, "tests")
+    return [
+        (f"tests/{f}", open(os.path.join(tests, f)).read())
+        for f in sorted(os.listdir(tests))
+        if f.endswith(".py")
+    ]
+
+
+def test_every_defaulted_parameter_takes_two_values():
+    """Every defaulted parameter of the package takes at least two distinct
+    values across its callers (the package, bench.py, the driver entry,
+    tools/, perfbench/ and tests/). One that never does is folded into
+    the constant its callers use. Exempt: the pipeline API in
+    `pipeline.__all__`, every keyword the benchmark, the driver entry or
+    tools/ pass, and the deployment settings of `get_spark`."""
+    from crz_scraper_spark import pipeline
+
+    exempt = [f"crz_scraper_spark/pipeline.py::{n}" for n in pipeline.__all__]
+    sources = _non_test_sources(ROOT) + _test_sources(ROOT)
+    one_value = one_value_parameters(sources, exempt + list(_DEPLOYMENT))
+    assert not one_value, (
+        "defaulted parameters every caller leaves at one value (fold each "
+        f"into that value): {one_value}"
+    )
+
+
+def test_parameter_walk_on_synthetic_sources():
+    """The walk counts omitted arguments as the default, follows a
+    caller's own parameter, treats starred calls, fixed callers and
+    exemptions as varied, and counts tests as callers."""
+    package = (
+        "crz_scraper_spark/m.py",
+        '''
+def f(x, k=3):
+    return x + k
+
+
+def g(x, k=3):
+    return x - k
+
+
+def h(x, n=1):
+    return x * n
+
+
+def outer(m=2):
+    return h(0, n=m)
+
+
+def u(x, w=1):
+    return x
+
+
+def p(x, s=1):
+    return x
+
+
+def e(x, z=0):
+    return x
+
+
+def only_ref(x, y=1):
+    return x
+
+
+def q(x, t=1):
+    return x
+
+
+REGISTRY = {"u": u, "only_ref": only_ref}
+
+
+def run(*args):
+    f(1)
+    f(2, k=3)
+    g(1)
+    g(1, k=4)
+    outer()
+    outer(m=5)
+    u(0, *args)
+    e(0)
+    q(0)
+''',
+    )
+    tool = ("tools/t.py", "from crz_scraper_spark.m import p\n\np(0, s=1)\n")
+    test = ("tests/test_m.py", "from crz_scraper_spark.m import q\n\nq(0, t=2)\n")
+    sources = [package, tool, test]
+    assert one_value_parameters(sources, ["crz_scraper_spark/m.py::e"]) == [
+        "crz_scraper_spark/m.py::f(k)",
+        "crz_scraper_spark/m.py::only_ref(y)",
+    ]
+    assert one_value_parameters([package, tool], ["crz_scraper_spark/m.py::e"]) == [
+        "crz_scraper_spark/m.py::f(k)",
+        "crz_scraper_spark/m.py::only_ref(y)",
+        "crz_scraper_spark/m.py::q(t)",
+    ]
+
+
+def _names_a_checkout(text: str) -> bool:
+    """True when ``text`` is an absolute path into a checkout of this
+    repository (a directory holding both crz_scraper_spark/ and tests/)."""
+    if not text.startswith("/") or any(c.isspace() for c in text):
+        return False
+    path = os.path.normpath(text.split("*", 1)[0])
+    while True:
+        if os.path.isdir(os.path.join(path, "crz_scraper_spark")) and os.path.isdir(
+            os.path.join(path, "tests")
+        ):
+            return True
+        parent = os.path.dirname(path)
+        if parent == path:
+            return False
+        path = parent
+
+
+def test_no_absolute_checkout_path_in_tools_or_tests():
+    """Scripts and tests find the checkout from their own ``__file__``. A
+    string naming an absolute checkout path makes a second copy import and
+    read the first copy's files."""
+    offenders = []
+    for rel in ("tools", "tests"):
+        for d, _dirs, names in os.walk(os.path.join(ROOT, rel)):
+            for f in sorted(names):
+                if not f.endswith(".py"):
+                    continue
+                path = os.path.join(d, f)
+                for node in ast.walk(ast.parse(open(path).read())):
+                    if (
+                        isinstance(node, ast.Constant)
+                        and isinstance(node.value, str)
+                        and _names_a_checkout(node.value)
+                    ):
+                        offenders.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert not offenders, f"absolute checkout paths: {offenders}"

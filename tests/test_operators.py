@@ -3,6 +3,8 @@ stage-9 column classification."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
@@ -108,7 +110,7 @@ def test_best_column_and_suggestions(spark, cells):
     classified = classify_columns(cells, ["cena"])
     best = {
         r["table_id"]: r["col"]
-        for r in best_column_per_table(classified, "digit_ratio").collect()
+        for r in best_column_per_table(classified).collect()
     }
     assert best["t1"] == "c2"
     sugg = {r["word"]: r["score"] for r in suggest_keywords(cells, classified).collect()}
@@ -128,10 +130,8 @@ def test_ivf_exhaustive_probe_equals_bruteforce(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=5, round_to=4)
-    ivf = ivf_topk(
-        emb, queries, "vec_id", "embedding", k=5, nlist=4, nprobe=4, round_to=4
-    )
+    exact = cosine_topk(emb, queries, k=5, round_to=4)
+    ivf = ivf_topk(emb, queries, nlist=4, nprobe=4)
     assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, ivf.collect()))
 
 
@@ -419,14 +419,14 @@ def test_lsh_multiprobe_improves_recall(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in cosine_topk(emb, queries, "vec_id", "embedding", k=5, round_to=4).collect()
+        for r in cosine_topk(emb, queries, k=5, round_to=4).collect()
     }
 
     def recall(m):
         got = {
             (r.query_id, r.neighbor_id)
             for r in lsh_ann_topk(
-                emb, queries, "vec_id", "embedding", k=5, n_planes=4, multiprobe=m
+                emb, queries, k=5, n_planes=4, multiprobe=m
             ).collect()
         }
         return len(got & exact) / len(exact)
@@ -441,7 +441,8 @@ def test_every_registry_query_documented_in_survey():
     must be name-dropped there (regression guard against doc drift)."""
     from crz_scraper_spark.plans.registry import REGISTRY
 
-    txt = open("/root/repo/SURVEY.md", encoding="utf-8").read()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    txt = open(os.path.join(root, "SURVEY.md"), encoding="utf-8").read()
     missing = [n for n in REGISTRY if f"`{n}`" not in txt]
     assert not missing, f"undocumented queries: {missing}"
 
@@ -695,9 +696,9 @@ def test_bloom_no_false_negatives_bounded_fp(spark):
         "item string, present boolean",
     ).withColumn("h", F.coalesce(F.xxhash64("item"), F.lit(0)))
     bloom = build_bloom_from_hashes(
-        [r["h"] for r in df.filter("present").collect()], n_bits=1 << 16, k=5
+        [r["h"] for r in df.filter("present").collect()], n_bits=1 << 16
     )
-    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16, k=5)
+    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16)
     rows = df.withColumn("hit", probe(F.col("h"))).collect()
     assert all(r["hit"] for r in rows if r["present"])  # no false negatives
     fp = sum(1 for r in rows if r["hit"] and not r["present"])
@@ -717,8 +718,8 @@ def test_bloom_hash_path_no_false_negatives(spark):
     rng = np.random.default_rng(3)
     inserted = rng.integers(-(2**62), 2**62, size=3000).tolist()
     absent = rng.integers(-(2**62), 2**62, size=5000).tolist()
-    bloom = build_bloom_from_hashes(inserted, n_bits=1 << 16, k=5)
-    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16, k=5)
+    bloom = build_bloom_from_hashes(inserted, n_bits=1 << 16)
+    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16)
     df = spark.createDataFrame(
         [(int(h), True) for h in inserted] + [(int(h), False) for h in set(absent) - set(inserted)],
         "h long, present boolean",

@@ -102,6 +102,28 @@ def test_broadcast_threshold_respected(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
+def test_load_table_keeps_aqe_off(spark, sf_dir):
+    """`load_table` sets only the confs a vanilla session needs to read the
+    tables (nanos parquet, UTC): a session that switched AQE off keeps it
+    off, so an AQE-off replay really runs without it."""
+    from crz_scraper_spark.catalog import load_table
+
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "false")
+        load_table(spark, sf_dir, "events")
+        assert {k: spark.conf.get(k) for k in keys} == dict.fromkeys(keys, "false")
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
 def test_salted_join_matches_plain_join(spark, sf_dir):
     """salted_join ≡ plain join on results; the replicated side shows up as
     a Generate (explode) in the plan and the join key includes the salt."""

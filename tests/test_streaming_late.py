@@ -105,10 +105,10 @@ def test_events_stream_reads_directory_layout(spark, tmp_path):
     alt.mkdir()
     events = load_table(spark, sf_dir, "events")
     events.repartition(3).write.parquet(str(alt / "events.parquet"))
-    got = streaming_tumbling_agg(spark, str(alt), "1 hour", "2 hours")
+    got = streaming_tumbling_agg(spark, str(alt))
     assert got.count() > 0
     # Same windows as streaming over the single-file layout.
-    ref = streaming_tumbling_agg(spark, sf_dir, "1 hour", "2 hours")
+    ref = streaming_tumbling_agg(spark, sf_dir)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
 
 

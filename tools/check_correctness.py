@@ -7,11 +7,12 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crz_scraper_spark.oracle import compare, duckdb_connection  # noqa: E402
 from crz_scraper_spark.plans.registry import _FIRST_WINDOW, REGISTRY  # noqa: E402

@@ -6,9 +6,10 @@ Usage: python tools/dump_plans.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crz_scraper_spark.plans.registry import REGISTRY  # noqa: E402
 from crz_scraper_spark.session import get_spark  # noqa: E402
