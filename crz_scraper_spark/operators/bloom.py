@@ -72,25 +72,26 @@ def _hash_halves(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return h, h >> np.uint64(32)
 
 
-def build_bloom_from_hashes(
-    hashes: Iterable[int], n_bits: int = 1 << 20
-) -> np.ndarray:
-    """Bitset over PRE-HASHED 64-bit keys (e.g. Spark-side `xxhash64` of
-    the item): h1/h2 are the key's low/high halves, so no further hashing
-    happens at probe time."""
+# Filter size in bits (a multiple of 8: the probe reads it back as
+# 8 * len(bits)).
+_N_BITS = 1 << 20
+
+
+def build_bloom_from_hashes(hashes: Iterable[int]) -> np.ndarray:
+    """Bitset of ``_N_BITS`` bits over PRE-HASHED 64-bit keys (e.g.
+    Spark-side `xxhash64` of the item): h1/h2 are the key's low/high
+    halves, so no further hashing happens at probe time."""
     h = np.asarray(list(hashes), dtype=np.int64).view(np.uint64)
-    bits = np.zeros((n_bits + 7) // 8, dtype=np.uint8)
-    for pos in _probe_positions(*_hash_halves(h), n_bits):
+    bits = np.zeros(_N_BITS // 8, dtype=np.uint8)
+    for pos in _probe_positions(*_hash_halves(h), _N_BITS):
         _set_bits(bits, pos)
     return bits
 
 
-def might_contain_hash_udf(
-    spark: SparkSession, bits: np.ndarray, n_bits: int = 1 << 20
-):
+def might_contain_hash_udf(spark: SparkSession, bits: np.ndarray):
     """Probe for `build_bloom_from_hashes`: input is the 64-bit hash column
     (LongType), whole-batch numpy — zero per-row Python, zero string
-    traffic.
+    traffic. The filter size is the bitset's own, ``8 * len(bits)``.
 
     The hash column must be NON-NULLABLE (`F.coalesce(xxhash64(x), lit(0))`
     at the call site): a nullable long batch crosses Arrow→pandas as
@@ -98,6 +99,7 @@ def might_contain_hash_udf(
     keys into false negatives — the probe REFUSES float input rather than
     corrupt the guarantee."""
     bc = spark.sparkContext.broadcast(bits)
+    n_bits = 8 * len(bits)
 
     @pandas_udf(BooleanType())
     def might_contain(s: pd.Series) -> pd.Series:

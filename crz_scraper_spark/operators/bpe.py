@@ -198,18 +198,17 @@ def _apply_bpe_stats(docs, spark, merges) -> DataFrame:
     )
 
 
-def bpe_corpus_token_stats(
-    docs: DataFrame,
-    spark: SparkSession,
-    max_vocab: int = 65_536,
-    n_merges: int = 200,
-) -> DataFrame:
+# Words of the corpus-wide count table that reach the driver.
+_MAX_VOCAB = 65_536
+
+
+def bpe_corpus_token_stats(docs: DataFrame, spark: SparkSession) -> DataFrame:
     """The exact-corpus form of `bpe_token_stats`: merges are learned from
     the FULL corpus's word frequencies instead of a document sample.
 
     100 TB posture: ONE distributed word-count aggregate (explode →
     partial+final hash agg — the same shape as `word_frequency`) reduces
-    the token stream to its distinct-word table; only the top `max_vocab`
+    the token stream to its distinct-word table; only the top `_MAX_VOCAB`
     words by (count desc, word asc) — a deterministic total order — reach
     the driver, bounding memory regardless of corpus size. Truncation
     drops only tail words whose frequencies are too small to win a merge
@@ -222,7 +221,7 @@ def bpe_corpus_token_stats(
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("word"))
-        .limit(max_vocab)
+        .limit(_MAX_VOCAB)
         .collect()
     )
     if not counts:
@@ -230,7 +229,5 @@ def bpe_corpus_token_stats(
             "bpe_corpus_token_stats: empty corpus — no word frequencies to "
             "learn merges from"
         )
-    merges = learn_bpe_from_word_counts(
-        ((r["word"], r["cnt"]) for r in counts), n_merges
-    )
+    merges = learn_bpe_from_word_counts((r["word"], r["cnt"]) for r in counts)
     return _apply_bpe_stats(docs, spark, merges)

@@ -47,10 +47,7 @@ from crz_scraper_spark.functions.text import tokens_nonempty
 
 
 def first_wins_dedup(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[Column],
-    group_size_col: str | None = None,
+    df: DataFrame, keys: list[str], order_by: list[Column]
 ) -> DataFrame:
     """Keep the first row per key under an explicit deterministic ordering.
 
@@ -58,13 +55,6 @@ def first_wins_dedup(
     "first" = file order; here the caller names the ordering column(s)
     (ingest index / primary key), making the pick reproducible across runs
     and partitionings — `dropDuplicates` does not guarantee that.
-
-    `group_size_col`: when set, the kept row also carries the SIZE of its
-    duplicate group under that column name — computed by the same window
-    pass (count over the identical partition spec adds no shuffle and no
-    extra scan), so a caller that needs "how many rows did dedup see" can
-    aggregate the deduped output instead of re-scanning the input
-    (curation_pipeline's audit ledger; r10, guide §1.2 step 1).
 
     Tier note (optimization round 10): a `min_by`-aggregation twin
     (`first_wins_dedup_agg`) exists for DUPLICATE-HEAVY keyings — it
@@ -79,23 +69,11 @@ def first_wins_dedup(
     """
     w = Window.partitionBy(*keys).orderBy(*order_by)
     out = df.withColumn("__rn", F.row_number().over(w))
-    if group_size_col is not None:
-        # Unbounded count over the same partition keys: the second window
-        # reuses the row_number window's Exchange (identical partitioning,
-        # no ordering requirement of its own) — the group size rides the
-        # shuffle the dedup already pays for, zero extra scans.
-        out = out.withColumn(
-            group_size_col,
-            F.count(F.lit(1)).over(Window.partitionBy(*keys)),
-        )
     return out.filter(F.col("__rn") == 1).drop("__rn")
 
 
 def first_wins_dedup_agg(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[Column],
-    group_size_col: str | None = None,
+    df: DataFrame, keys: list[str], order_by: list[Column]
 ) -> DataFrame:
     """`first_wins_dedup` as a `min_by` AGGREGATION — the tier for
     duplicate-HEAVY keyings (guide §2.3 "aggregate before you shuffle"):
@@ -113,21 +91,23 @@ def first_wins_dedup_agg(
     group (or tied rows identical) for a deterministic pick — the same
     determinism condition the window form needs. Multi-column orderings
     compare lexicographically via a struct, exactly like a multi-key
-    sort. Output rows, column order and types are identical to
-    `first_wins_dedup` (pinned by
-    tests/test_functions.py::test_first_wins_dedup_agg_matches_window_reference
-    and the curation-audit oracle hash-match).
+    sort. Output rows, column order and types are those of
+    `first_wins_dedup` plus a trailing ``__grp_n``: the SIZE of each kept
+    row's duplicate group, from the same aggregation, so a caller that
+    needs "how many rows did dedup see" aggregates the deduped output
+    instead of re-scanning the input (curation_pipeline's audit ledger;
+    r10, guide §1.2 step 1). Pinned by
+    tests/test_functions.py::test_first_wins_dedup_agg_matches_window_form
+    and the curation-audit oracle hash-match.
     """
     ord_key = F.struct(*order_by) if len(order_by) > 1 else order_by[0]
     payload = F.struct(*[F.col(c) for c in df.columns])
-    aggs = [F.min_by(payload, ord_key).alias("__first")]
-    if group_size_col is not None:
-        aggs.append(F.count(F.lit(1)).alias(group_size_col))
-    grouped = df.groupBy(*keys).agg(*aggs)
+    grouped = df.groupBy(*keys).agg(
+        F.min_by(payload, ord_key).alias("__first"),
+        F.count(F.lit(1)).alias("__grp_n"),
+    )
     cols = [F.col("__first").getField(c).alias(c) for c in df.columns]
-    if group_size_col is not None:
-        cols.append(F.col(group_size_col))
-    return grouped.select(*cols)
+    return grouped.select(*cols, "__grp_n")
 
 
 def _md5_bigint_sql(x: str, n_hex: int) -> str:
@@ -338,26 +318,19 @@ def _lsh_pairs(
     )
 
 
-def lsh_bucket_occupancy(
-    sig: DataFrame,
-    id_col: str,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    family: str = "xxhash64",
-) -> DataFrame:
+def lsh_bucket_occupancy(keys: DataFrame) -> DataFrame:
     """Band-bucket occupancy report — the scale-health metric behind the
     LSH cost model: a bucket of c members emits c·(c−1)/2 pairs inside its
     group, so if max occupancy or implied pairs grow super-linearly with
     the corpus the "near-linear" claim is failing (watch whether a slope
     is shuffle constants or creeping bucket occupancy).
 
-    Two aggregations over the shared `minhash_bands` keys (identical to the
-    pair path's). Returns one row per band:
+    Two aggregations over band keys from the shared `minhash_bands`
+    (identical to the pair path's). Returns one row per band:
     (band, n_buckets, max_occupancy, implied_pairs) — implied_pairs is the
     exact number of within-bucket pairs that band emits before the
     distinct/threshold steps.
     """
-    keys = minhash_bands(sig, id_col, bands, rows_per_band, family)
     return (
         keys.groupBy("band", "bh")
         .agg(F.expr("count(1) AS c"))
@@ -558,11 +531,10 @@ def _parse_byte_size(s: str, default_unit: int = 1) -> int:
 #     the 48 GiB figure says the box provisions tens of GiB for the
 #     driver; the binding constraint is the 1 GiB collect relay at
 #     10.7M × 50 B ≈ 512 MiB, half the configured maxResultSize)
-# A caller overriding driver_max_edges directly bypasses BOTH guards:
-# keep any manual value under (driver heap)/4/300 AND
-# (maxResultSize)/2/50, or the collect either OOMs the driver's Python
-# process or trips Spark's "serialized results bigger than
-# maxResultSize" error at 100 TB pair volumes.
+# Both guards bind: a ceiling above (driver heap)/4/300 or
+# (maxResultSize)/2/50 would let the collect either OOM the driver's Python
+# process or trip Spark's "serialized results bigger than maxResultSize"
+# error at 100 TB pair volumes.
 _BYTES_PER_EDGE_DRIVER = 300
 _DRIVER_HEAP_FRACTION = 4  # use at most 1/4 of the driver heap for edges
 
@@ -599,9 +571,7 @@ def _default_driver_max_edges(spark) -> int:
     return max(100_000, min(by_heap, by_relay))
 
 
-def connected_components(
-    pairs: DataFrame, driver_max_edges: int | None = None
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(doc_id, cluster_id) for every node in the ``(id_a, id_b)`` near-dup
     pair graph — cluster_id = the minimum node id reachable through pair
     edges. This is the step that turns pairwise near-dup evidence into a
@@ -620,20 +590,19 @@ def connected_components(
 
     Scale strategy (the broadcast-join analog for graphs): a near-dup pair
     graph is usually TINY relative to the corpus — LSH emits edges only
-    for actual near-duplicates. Below `driver_max_edges` the edge set is
+    for actual near-duplicates. Below a driver edge ceiling the edge set is
     collected and solved with driver-side union-find (microseconds; ONE
     action — a limit-bounded collect — both decides the path and fetches
     the edges); the iterative loop is the path for genuinely large
     pair graphs, where each round's joins are worth their scheduling cost.
-    Both paths produce identical (doc_id, min-reachable-id) labels.
-    `driver_max_edges` defaults to a MEMORY-DERIVED bound
-    (`_default_driver_max_edges`: ¼ of spark.driver.memory at a measured
-    300 B/edge, capped by the maxResultSize relay) so the cutover scales
-    with the deployment instead of assuming one driver size.
+    Both paths produce identical (doc_id, min-reachable-id) labels. The
+    ceiling is MEMORY-DERIVED (`_default_driver_max_edges`: ¼ of
+    spark.driver.memory at a measured 300 B/edge, capped by the
+    maxResultSize relay) so the cutover scales with the deployment instead
+    of assuming one driver size.
     """
-    if driver_max_edges is None:
-        driver_max_edges = _default_driver_max_edges(pairs.sparkSession)
     spark = pairs.sparkSession
+    driver_max_edges = _default_driver_max_edges(spark)
     # ONE action decides the path AND fetches the edges (optimization
     # round 10, guide §1.2 step 1): the former count()-then-collect()
     # shape materialized the whole upstream pair pipeline for the count,
@@ -781,18 +750,17 @@ def fixed_centroids(dim: int, n_cells: int, seed: int = 99) -> list[list[float]]
 _CELL_BLOCK_ROWS = 1024
 
 
-def semantic_dedup(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    round_to: int = 4,
-) -> DataFrame:
+# SemDeDup's drop threshold: a vector goes when its cosine similarity
+# (rounded to 4 dp) to a lower-id vector of its cell reaches it.
+_SEMDEDUP_TAU = 0.35
+
+
+def semantic_dedup(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster the
     embedding space, then drop any vector whose cosine similarity to a
-    LOWER-id vector in the SAME cluster exceeds `threshold` (keep-lowest-id,
-    fully deterministic). Output: one row per input vector —
+    LOWER-id vector in the SAME cluster reaches `_SEMDEDUP_TAU`
+    (keep-lowest-id, fully deterministic). Input: (vec_id, embedding).
+    Output: one row per input vector —
     (vec_id, cell, kept 0/1, rep_id = the lowest-id vector that triggered
     the drop, itself when kept). NOTE: rep_id is the direct trigger, not a
     transitively-resolved root — in a similarity chain 1~2, 2~3 (but 1≁3),
@@ -816,7 +784,7 @@ def semantic_dedup(
     salted away.
 
     Cross-engine determinism: per-centroid similarities are rounded to 6 dp
-    BEFORE the argmax and pair similarities to `round_to` before the
+    BEFORE the argmax and pair similarities to 4 dp before the
     threshold cut, so a last-ulp summation difference (BLAS pairwise vs a
     SQL engine's sequential sum) cannot flip a cell assignment or the
     keep/drop decision; argmax ties break to the lowest centroid index on
@@ -827,21 +795,14 @@ def semantic_dedup(
     the narrow verdict is `catalog.pin`ned and the base released before
     returning, so no cache outlives the call.
     """
-    result, base = _semantic_dedup_plan(
-        emb, centroids, id_col, vec_col, threshold, round_to
-    )
+    result, base = _semantic_dedup_plan(emb, centroids)
     out = pin(result)
     base.unpersist()
     return out
 
 
 def _semantic_dedup_plan(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    round_to: int,
+    emb: DataFrame, centroids: list[list[float]]
 ) -> tuple[DataFrame, DataFrame]:
     """`semantic_dedup`'s lazy verdict plus the persisted base it reads —
     the operator pins the first and releases the second; plan-shape tests
@@ -867,8 +828,7 @@ def _semantic_dedup_plan(
     if len(centroids) > 16:
         assign = _assign_cells_numpy_udf(centroids)
         base = emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
+            "vec_id", F.col("embedding").cast("array<double>").alias("__v")
         ).withColumns({"cell": assign("__v"), "__nrm": _norm(v)})
     else:
         sims = F.transform(
@@ -876,8 +836,7 @@ def _semantic_dedup_plan(
             lambda c: F.round(_dot(v, c) / (_norm(v) * _norm(c)), 6),
         )
         base = emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
+            "vec_id", F.col("embedding").cast("array<double>").alias("__v")
         ).withColumns(
             {
                 "cell": (
@@ -892,7 +851,7 @@ def _semantic_dedup_plan(
     id_type = base.schema["vec_id"].dataType.simpleString()
     if id_type not in ("tinyint", "smallint", "int", "bigint"):
         raise ValueError(
-            f"semantic_dedup: id column {id_col!r} has type {id_type}; the "
+            f"semantic_dedup: id column 'vec_id' has type {id_type}; the "
             f"BLAS gram pair phase requires an integral id (numpy "
             f"comparison + min semantics). Map ids to integers first."
         )
@@ -940,7 +899,6 @@ def _semantic_dedup_plan(
         F.least(F.col("__blk"), F.col("__other")).alias("__bi"),
         F.greatest(F.col("__blk"), F.col("__other")).alias("__bj"),
     )
-    tau, rt = threshold, round_to
 
     def _block_drops(pdf: pd.DataFrame) -> pd.DataFrame:
         # Same dot-first, divide-then-round form as the SQL oracle's
@@ -951,13 +909,13 @@ def _semantic_dedup_plan(
         x = np.stack(pdf["__v"].to_numpy())
         nrm = pdf["__nrm"].to_numpy()
         blk = pdf["__blk"].to_numpy()
-        sims = np.round((x @ x.T) / np.outer(nrm, nrm), rt)
+        sims = np.round((x @ x.T) / np.outer(nrm, nrm), 4)
         mask = ids[:, None] < ids[None, :]
         if blk.min() != blk.max():
             # bi < bj group: within-block pairs are the (bi, bi)/(bj, bj)
             # groups' job — count cross only.
             mask &= blk[:, None] != blk[None, :]
-        ai, bi = np.nonzero((sims >= tau) & mask)
+        ai, bi = np.nonzero((sims >= _SEMDEDUP_TAU) & mask)
         if len(bi) == 0:
             return pd.DataFrame({"vec_id": [], "__rep": []}).astype(
                 {"vec_id": "int64", "__rep": "int64"}
@@ -1186,13 +1144,17 @@ def _store_commit(spark, df: DataFrame, store_path: str) -> None:
         )
 
 
+# Hamming radius of `simhash_incremental`: its four 15-bit blocks cover
+# every pair within 3 bits (pigeonhole).
+_SHI_MAX_HAMMING = 3
+
+
 def simhash_incremental(
     spark,
     new_docs: DataFrame,
     id_col: str,
     text_col: str,
     store_path: str,
-    max_hamming: int = 3,
 ) -> DataFrame:
     """Incremental SimHash maintenance — `minhash_incremental`'s twin for
     the second hash family: the new batch's 60-bit portable-md5 simhashes
@@ -1236,7 +1198,7 @@ def simhash_incremental(
         .where("id_other < id_new")
         .selectExpr("id_new", "id_other", "bit_count(sh_new ^ sh_other) AS hamming")
         .distinct()
-        .where(f"hamming <= {int(max_hamming)}")
+        .where(f"hamming <= {_SHI_MAX_HAMMING}")
     )
 
 
@@ -1267,11 +1229,14 @@ def simhash_incremental(
 # ---------------------------------------------------------------------------
 
 
-def containment_pairs(
-    docs: DataFrame, min_containment_ppm: int = 800_000
-) -> DataFrame:
-    """``(doc_id, text)`` pairs with word-3-shingle containment >= threshold,
-    blocked on each doc's 3 rarest shingles of document frequency 2..20.
+# Containment bar of `containment_pairs`, in parts per million.
+_MIN_CONTAINMENT_PPM = 800_000
+
+
+def containment_pairs(docs: DataFrame) -> DataFrame:
+    """``(doc_id, text)`` pairs with word-3-shingle containment >=
+    `_MIN_CONTAINMENT_PPM`, blocked on each doc's 3 rarest shingles of
+    document frequency 2..20.
 
     Returns ``(id_a, id_b, inter_cnt, min_sz, containment_ppm)`` with
     ``id_a < id_b``, ppm = floor(|A∩B| · 1e6 / min(|A|, |B|)) — integer
@@ -1394,7 +1359,7 @@ def containment_pairs(
                 F.least("a_sz", "b_sz").alias("min_sz"),
                 ppm.alias("containment_ppm"),
             )
-            .filter(F.col("containment_ppm") >= min_containment_ppm)
+            .filter(F.col("containment_ppm") >= _MIN_CONTAINMENT_PPM)
             .orderBy("id_a", "id_b")
         )
         out = out.localCheckpoint()

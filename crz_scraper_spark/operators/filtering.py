@@ -20,8 +20,7 @@ Semantic details mirrored exactly:
 - Price/date/dup checks only run when `tosslevel == 0` so far.
 - **Resort early-exit quirk**: the reference's `key_count` logic
   (`02:214-225`) aborts after examining only the FIRST THREE resort columns
-  — reproduced via `max_resort_keys=3` (pass None for the presumably
-  intended all-keys behavior).
+  — reproduced by consulting only `resort_names_by_key[:_MAX_RESORT_KEYS]`.
 - **Order-dependent dedup** (SURVEY §7 Hard-1): a row is a duplicate only if
   an EARLIER row with the same (normalized name, ID) passed checks 1–4 —
   rows discarded for other reasons never enter the control list. Implemented
@@ -54,6 +53,10 @@ def _norm_name(sql: str) -> str:
     return f"trim(regexp_replace({sql}, {sql_str(chr(10))}, ' '))"
 
 
+# Resort key columns the reference examines before its early exit.
+_MAX_RESORT_KEYS = 3
+
+
 def _array(items) -> str:
     return "array(" + ", ".join(sql_str(s) for s in items) + ")"
 
@@ -64,8 +67,6 @@ def stage2_filter(
     resort_names_by_key: list[list[str]],
     price_min: float = 0.0,
     date_min: str | None = None,
-    max_resort_keys: int | None = 3,
-    index_col: str = "ingest_idx",
 ) -> DataFrame:
     """Annotate every contract row with `discard_reason` (0 = kept).
 
@@ -75,11 +76,10 @@ def stage2_filter(
     in-memory Python lists. `price_min` must be finite.
 
     Callers keep rows with `discard_reason == 0` and may audit the rest —
-    the reference only printed the reasons to the console.
+    the reference only printed the reasons to the console. Duplicates are
+    "earlier" in `ingest_idx` order.
     """
-    keys = resort_names_by_key
-    if max_resort_keys is not None:
-        keys = keys[:max_resort_keys]
+    keys = resort_names_by_key[:_MAX_RESORT_KEYS]
     cins = _array(c.replace(" ", "") for c in company_cins)
     resorts = _array(
         n.upper().replace(" ", "") for names in keys for n in names if n
@@ -112,7 +112,7 @@ def stage2_filter(
 
     earlier_kept = (
         f"coalesce(sum(CASE WHEN {pass14} THEN 1 ELSE 0 END) OVER ("
-        f"PARTITION BY {_norm_name('nazov')}, id ORDER BY {sql_ident(index_col)} "
+        f"PARTITION BY {_norm_name('nazov')}, id ORDER BY ingest_idx "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
     )
     reason = (

@@ -11,7 +11,7 @@ loop is a FIXED iteration count, so the whole computation is one plan chain.
 
 All arithmetic is integer fixed-point (parts-per-million ranks, integer DIV
 for both the out-degree split and the damping multiply) — deterministic and
-engine-portable, so a SQL oracle that unrolls the same ``iterations`` steps
+engine-portable, so a SQL oracle that unrolls the same ``_PR_ITERS`` steps
 reproduces the ranks bit-for-bit. That is what makes an *iterative* operator
 hash-checkable against DuckDB at all: float PageRank would drift in the last
 ulp between engines.
@@ -20,7 +20,7 @@ Fixed-point quantization note: a node's contribution ``rank DIV outdeg``
 floors to 0 once ``outdeg > rank`` (hub nodes with millions of neighbours at
 ppm scale). That loses mass monotonically — ranks are a deterministic lower
 bound of the real-valued iteration, which is the right failure mode for a
-"top influencers" ranking; raise ``scale`` if the graph's max degree
+"top influencers" ranking; raise ``_PR_SCALE`` if the graph's max degree
 approaches it.
 """
 
@@ -29,16 +29,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# PageRank: power steps, damping factor 85/100, ranks in parts per million.
+_PR_ITERS = 5
+_PR_DAMP_NUM, _PR_DAMP_DEN = 85, 100
+_PR_SCALE = 1_000_000
+# Orders with more distinct parts than this are left out of the co-purchase
+# graph.
+_PR_MAX_BASKET = 50
+# Nodes `triangle_counts` returns, by triangle count.
+_TRI_TOP = 20
 
-def _pagerank_chain(
-    adj: DataFrame,
-    nodes: DataFrame,
-    iterations: int,
-    damping_num: int,
-    damping_den: int,
-    scale: int,
-) -> DataFrame:
-    """The lazy ``iterations``-step rank-update chain: ONE join + ONE
+
+def _pagerank_chain(adj: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The lazy ``_PR_ITERS``-step rank-update chain: ONE join + ONE
     aggregation per iteration.
 
     The pre-r10 shape ran TWO joins per step — (adj ⋈ ranks) to ship
@@ -56,14 +59,14 @@ def _pagerank_chain(
     mass now sums tot = 0 (its zero row) and ``(d * 0) DIV den = 0``
     reproduces the old ``coalesce(NULL, 0)`` bit-for-bit.
     """
-    base = scale - scale * damping_num // damping_den
-    ranks = nodes.select("node", F.lit(scale).cast("bigint").alias("rank"))
+    base = _PR_SCALE - _PR_SCALE * _PR_DAMP_NUM // _PR_DAMP_DEN
+    ranks = nodes.select("node", F.lit(_PR_SCALE).cast("bigint").alias("rank"))
     zeros = nodes.select(
         "node",
         F.lit(0).cast("bigint").alias("contrib"),
         F.lit(1).alias("is_node"),
     )
-    for _ in range(iterations):
+    for _ in range(_PR_ITERS):
         contribs = adj.join(ranks, "node").select(
             F.explode("nbrs").alias("node"),
             F.expr("rank DIV size(nbrs)").alias("contrib"),
@@ -81,7 +84,7 @@ def _pagerank_chain(
             "node",
             (
                 F.lit(base)
-                + F.expr(f"({damping_num} * tot) DIV {damping_den}")
+                + F.expr(f"({_PR_DAMP_NUM} * tot) DIV {_PR_DAMP_DEN}")
             )
             .cast("bigint")
             .alias("rank"),
@@ -89,13 +92,7 @@ def _pagerank_chain(
     return ranks
 
 
-def pagerank_on_adjacency(
-    adjacency: DataFrame,
-    iterations: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def pagerank_on_adjacency(adjacency: DataFrame) -> DataFrame:
     """PageRank over a prebuilt ``(node, nbrs array)`` adjacency.
 
     The adjacency is persisted here for the iteration loop. The
@@ -105,9 +102,7 @@ def pagerank_on_adjacency(
     adj = adjacency.select("node", "nbrs").persist()
     nodes = adj.select("node")
     try:
-        ranks = _pagerank_chain(
-            adj, nodes, iterations, damping_num, damping_den, scale
-        )
+        ranks = _pagerank_chain(adj, nodes)
         # Materialize the bounded-depth chain while the adjacency persist is
         # alive; the result is node-sized, not edge-sized, so localCheckpoint
         # (executor-memory, no lineage) is the right cut point.
@@ -117,14 +112,12 @@ def pagerank_on_adjacency(
     return ranks
 
 
-def copurchase_adjacency(
-    lineitem: DataFrame, max_basket: int = 50
-) -> DataFrame:
+def copurchase_adjacency(lineitem: DataFrame) -> DataFrame:
     """Co-purchase graph in adjacency form: ``(node, nbrs array)``, each
     neighbor set distinct by construction.
 
     Pair generation is quadratic in basket size, so baskets with more than
-    ``max_basket`` distinct parts are dropped first — the standard guard
+    ``_PR_MAX_BASKET`` distinct parts are dropped first — the standard guard
     that keeps one mega-order (a crawler, a corporate bulk buy) from
     emitting k^2 pairs in a single task. TPC-H baskets top out at 7 parts,
     so the cap is a no-op on testdata and purely a scale guard.
@@ -149,7 +142,7 @@ def copurchase_adjacency(
         lineitem.groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("parts"))
         .filter(
-            (F.size("parts") >= 2) & (F.size("parts") <= max_basket)
+            (F.size("parts") >= 2) & (F.size("parts") <= _PR_MAX_BASKET)
         )
         .select("parts")
     )
@@ -161,24 +154,18 @@ def copurchase_adjacency(
     return pairs.groupBy("node").agg(F.collect_set("nbr").alias("nbrs"))
 
 
-def triangle_counts(
-    edges: DataFrame | None = None,
-    top_k: int | None = None,
-    adjacency: DataFrame | None = None,
-) -> DataFrame:
-    """(node, n_tri): how many triangles each node participates in.
+def triangle_counts(adjacency: DataFrame) -> DataFrame:
+    """(node, n_tri) of the ``_TRI_TOP`` nodes in the most triangles
+    (ties to the lower node id).
 
-    ``edges`` is a symmetric edge list (both directions present, like an
-    exploded adjacency). ``adjacency`` — the cheaper input when the
-    caller already built one — MUST likewise be SYMMETRIC (v ∈ nbrs[u] ⇔
+    ``adjacency`` ``(node, nbrs array)`` MUST be SYMMETRIC (v ∈ nbrs[u] ⇔
     u ∈ nbrs[v]) and self-loop-free, as `copurchase_adjacency` guarantees:
-    the fast path reads each node's undirected degree as ``size(nbrs)`` and
-    derives the undirected edge set by keeping only the src<dst half of the
-    explosion. A DIRECTED adjacency (e.g. the one pagerank builds from an
-    arbitrary edge list) silently yields wrong degrees and a wrong triangle
-    set — pass ``edges`` instead for anything not symmetric by
-    construction. The naive wedge enumeration explodes on hub
-    nodes (sum of deg^2); the standard fix — and the whole point of this
+    each node's undirected degree is read as ``size(nbrs)`` and the
+    undirected edge set is the src<dst half of the explosion. A DIRECTED
+    adjacency (e.g. the one pagerank builds from an arbitrary edge list)
+    silently yields wrong degrees and a wrong triangle set. The naive
+    wedge enumeration explodes on hub nodes (sum of deg^2); the standard
+    fix — and the whole point of this
     operator — is DEGREE-ORDERED ORIENTATION (Chiba-Nishizeki / the
     "node-iterator++" scheme): orient every undirected edge from its
     lower-(degree, id) endpoint to the higher one, which caps every node's
@@ -201,27 +188,15 @@ def triangle_counts(
     a<b<c three-way self-join oracle: orientation and the intersection
     plan change the strategy, not the triangle set.
     """
-    if (edges is None) == (adjacency is None):
-        raise ValueError("pass exactly one of edges / adjacency")
-    if adjacency is not None:
-        # Adjacency fast path (round-8 sf10 probe): the symmetric neighbor
-        # sets already hold each node's undirected degree as size(nbrs) —
-        # deriving degrees from an exploded edge list would re-shuffle the
-        # full 2m-row expansion (map-side combined, but still the graph's
-        # biggest aggregate) to recompute what the adjacency aggregate
-        # already paid for.
-        und = adjacency.select(
-            F.col("node").alias("src"), F.explode("nbrs").alias("dst")
-        ).filter(F.col("src") < F.col("dst"))
-        deg = adjacency.select("node", F.size("nbrs").alias("deg"))
-    else:
-        und = edges.filter(F.col("src") < F.col("dst"))
-        deg = (
-            und.select(F.col("src").alias("node"))
-            .union(und.select(F.col("dst").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+    # The symmetric neighbor sets already hold each node's undirected
+    # degree as size(nbrs) — deriving degrees from an exploded edge list
+    # would re-shuffle the full 2m-row expansion (map-side combined, but
+    # still the graph's biggest aggregate) to recompute what the adjacency
+    # aggregate already paid for (round-8 sf10 probe).
+    und = adjacency.select(
+        F.col("node").alias("src"), F.explode("nbrs").alias("dst")
+    ).filter(F.col("src") < F.col("dst"))
+    deg = adjacency.select("node", F.size("nbrs").alias("deg"))
     # Annotate both endpoints, then orient by (deg, node).
     e = (
         und.join(deg.withColumnRenamed("node", "src"), "src")
@@ -325,6 +300,4 @@ def triangle_counts(
         per_node = per_node.localCheckpoint(eager=True)
     finally:
         oriented.unpersist()
-    if top_k is not None:
-        per_node = per_node.orderBy(F.desc("n_tri"), "node").limit(top_k)
-    return per_node
+    return per_node.orderBy(F.desc("n_tri"), "node").limit(_TRI_TOP)

@@ -82,32 +82,34 @@ def decode_documents(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 RESIZED_SCHEMA = "doc_id bigint, width int, height int, thumb binary"
+# Thumbnail size of `resize_images` and its stub's byte count.
+_RESIZE_W = 64
+_RESIZE_H = 64
+_RESIZE_TARGET = _RESIZE_W * _RESIZE_H // 8
 
 
-def resize_images(
-    binary: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """1:1 binary→binary map: (doc_id, payload) → fixed-size thumbnail.
+def resize_images(binary: DataFrame) -> DataFrame:
+    """1:1 binary→binary map: (doc_id, payload) → fixed-size
+    ``_RESIZE_W`` x ``_RESIZE_H`` thumbnail.
 
     STUB resize: the "thumbnail" is the payload truncated/cycled to
     width*height//8 bytes — a deterministic stand-in for
     `PIL.Image.resize((w, h))`. The contract a real swap-in keeps: binary in,
     binary out, no shuffle, size bounded by the target dims not the input.
     """
-    target = max(width * height // 8, 1)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             thumbs = []
             for p in pdf["payload"]:
                 p = p if p else b"\0"
-                reps = (target + len(p) - 1) // len(p)
-                thumbs.append((p * reps)[:target])
+                reps = (_RESIZE_TARGET + len(p) - 1) // len(p)
+                thumbs.append((p * reps)[:_RESIZE_TARGET])
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
+                    "width": _RESIZE_W,
+                    "height": _RESIZE_H,
                     "thumb": thumbs,
                 }
             )
@@ -166,15 +168,20 @@ def _featurize_bytes(frame: bytes, dim: int, np, zero):
     return windows.sum(axis=0, dtype="int64").astype("float32")
 
 
-def frame_features(binary: DataFrame, dim: int = 16) -> DataFrame:
+# Length of a `frame_features` vector.
+_FEATURE_DIM = 16
+
+
+def frame_features(binary: DataFrame) -> DataFrame:
     """Fused sample_frames ∘ featurize in ONE mapInPandas pass.
 
     Chaining the two verbs ships every frame's bytes across the JVM↔Python
     boundary twice (payload → Python → frame rows → JVM → Python →
     features → JVM); consumers that never need the raw frame rows (the
     per-doc feature rollup) fuse the sampler and featurizer so the payload
-    crosses ONCE and only dim floats per frame cross back (optimization
-    guide §4: the boundary cost is columns × crossings — control both).
+    crosses ONCE and only _FEATURE_DIM floats per frame cross back
+    (optimization guide §4: the boundary cost is columns × crossings —
+    control both).
     Slice arithmetic and window sums are the SAME helpers the standalone
     verbs use, so output parity is structural (pinned by
     tests/test_multimodal.py::test_frame_features_fused_parity).
@@ -183,6 +190,7 @@ def frame_features(binary: DataFrame, dim: int = 16) -> DataFrame:
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
+        dim = _FEATURE_DIM
         zero = np.zeros(dim, dtype="float32")
         for pdf in it:
             out: dict[str, list] = {"doc_id": [], "frame_no": [], "feature": []}

@@ -19,6 +19,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Neighbours each query gets from the top-k searches below.
+_TOP_K = 5
+# Random-hyperplane LSH: signature bits, embedding width, and the Hamming
+# radius of the probed buckets around a query's own.
+_LSH_PLANES = 4
+_LSH_DIM = 64
+_LSH_MULTIPROBE = 1
+# IVF: coarse-quantizer cells, and the nearest cells each query scans.
+_IVF_NLIST = 8
+_IVF_NPROBE = 2
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -44,19 +55,14 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    round_to: int | None = None,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector; both frames
-    carry ``(vec_id, embedding)``.
+def cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-``_TOP_K`` cosine neighbors for each query vector; both
+    frames carry ``(vec_id, embedding)``.
 
     Output: (query_id, neighbor_id, cos_sim, rank), excluding self-matches.
     The query side is broadcast (BroadcastNestedLoopJoin): the corpus never
     shuffles; scoring is a scan. Ties broken by neighbor id for determinism.
-    With `round_to`, similarity is rounded BEFORE ranking so that engines
+    Similarity is rounded to 4 places BEFORE ranking so that engines
     differing in last-ulp summation order produce the identical top-k cut.
     """
     q = queries.select(
@@ -65,9 +71,7 @@ def cosine_topk(
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec")
     )
-    sim = cosine(F.col("__qvec"), F.col("__cvec"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
+    sim = F.round(cosine(F.col("__qvec"), F.col("__cvec")), 4)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -78,7 +82,7 @@ def cosine_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOP_K)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
@@ -135,32 +139,25 @@ def bucket_signature(vec: Column, planes: list[list[float]]) -> Column:
     return F.aggregate(bits, F.lit(0.0), lambda a, v: a + v).cast("int")
 
 
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 4,
-    dim: int = 64,
-    multiprobe: int = 0,
-    round_to: int | None = None,
-) -> DataFrame:
-    """Approximate top-k over ``(vec_id, embedding)`` frames: score only
-    same-bucket candidates.
+def lsh_ann_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-``_TOP_K`` over ``(vec_id, embedding)`` frames:
+    score only same-bucket candidates, by cosine rounded to 4 places.
 
-    With `n_planes` bits the corpus splits into 2^n buckets; the candidate
-    join is equi on the signature (hash-partitioned, skew-free for isotropic
-    embeddings). Recall < 1.0 by construction — this is the 100 TB path
-    where the exact cross-scan is unaffordable.
+    With `_LSH_PLANES` bits the corpus splits into 2^n buckets; the
+    candidate join is equi on the signature (hash-partitioned, skew-free
+    for isotropic embeddings). Recall < 1.0 by construction — this is the
+    100 TB path where the exact cross-scan is unaffordable.
 
-    `multiprobe=m` additionally probes every bucket within Hamming distance
-    1..m of the query's signature (the standard multi-probe LSH recall
-    lever): each query row explodes to 1 + C(n_planes, ≤m) probe buckets —
-    query-side fan-out only, the corpus is never duplicated, and the join
-    stays equi on the bucket id.
+    Each query also probes every bucket within Hamming distance
+    1..`_LSH_MULTIPROBE` of its signature (the standard multi-probe LSH
+    recall lever): each query row explodes to
+    1 + C(_LSH_PLANES, ≤ _LSH_MULTIPROBE) probe buckets — query-side fan-out
+    only, the corpus is never duplicated, and the join stays equi on the
+    bucket id.
     """
     from itertools import combinations
 
-    planes = hyperplanes(dim, n_planes)
+    planes = hyperplanes(_LSH_DIM, _LSH_PLANES)
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__cvec"),
@@ -171,22 +168,19 @@ def lsh_ann_topk(
         F.col("embedding").alias("__qvec"),
         bucket_signature(F.col("embedding"), planes).alias("__bucket"),
     )
-    if multiprobe > 0:
-        masks = [0] + [
-            sum(1 << b for b in bits)
-            for r in range(1, multiprobe + 1)
-            for bits in combinations(range(n_planes), r)
-        ]
-        q = q.select(
-            "query_id",
-            "__qvec",
-            F.explode(
-                F.array(*[F.col("__bucket").bitwiseXOR(F.lit(m)) for m in masks])
-            ).alias("__bucket"),
-        )
-    sim = cosine(F.col("__qvec"), F.col("__cvec"))
-    if round_to is not None:
-        sim = F.round(sim, round_to)
+    masks = [0] + [
+        sum(1 << b for b in bits)
+        for r in range(1, _LSH_MULTIPROBE + 1)
+        for bits in combinations(range(_LSH_PLANES), r)
+    ]
+    q = q.select(
+        "query_id",
+        "__qvec",
+        F.explode(
+            F.array(*[F.col("__bucket").bitwiseXOR(F.lit(m)) for m in masks])
+        ).alias("__bucket"),
+    )
+    sim = F.round(cosine(F.col("__qvec"), F.col("__cvec")), 4)
     scored = (
         c.join(F.broadcast(q), "__bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -195,7 +189,7 @@ def lsh_ann_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOP_K)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
@@ -244,15 +238,12 @@ def fixed_pq_codebooks(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    nlist: int = 16,
-    nprobe: int = 4,
     centroids: list[list[float]] | None = None,
-    assign_round_to: int | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-5 over ``(vec_id, embedding)``
-    frames: k-means-partition the corpus into `nlist` cells, score queries
-    only against their `nprobe` nearest cells, by cosine rounded to 4
-    places.
+    """IVF (inverted-file) approximate top-``_TOP_K`` over ``(vec_id,
+    embedding)`` frames: k-means-partition the corpus into `_IVF_NLIST`
+    cells, score queries only against their `_IVF_NPROBE` nearest cells,
+    by cosine rounded to 4 places.
 
     The index build is the FAISS IVF shape: Lloyd's k-means trains
     driver-side on a bounded deterministic sample (coarse quantizers need a
@@ -271,8 +262,8 @@ def ivf_topk(
     With `centroids` the trainer is skipped entirely — the caller supplies
     the coarse quantizer (e.g. `fixed_unit_centroids` deterministic
     literals, making the whole search SQL-reproducible cross-engine).
-    `assign_round_to` rounds the squared distances BEFORE the argmin /
-    probe ranking so engines differing in last-ulp summation order pick
+    Squared distances are rounded to 6 places BEFORE the argmin / probe
+    ranking so engines differing in last-ulp summation order pick
     identical cells (the cosine rounding, applied to assignment).
     """
     import numpy as np
@@ -295,7 +286,7 @@ def ivf_topk(
         X = np.array([list(r["__cvec"]) for r in sample])
         rng = np.random.default_rng(42)
         cent = X[
-            rng.choice(len(X), size=min(nlist, len(X)), replace=False)
+            rng.choice(len(X), size=min(_IVF_NLIST, len(X)), replace=False)
         ].copy()
         for _ in range(8):
             d2 = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
@@ -306,14 +297,11 @@ def ivf_topk(
                     cent[j] = members.mean(0)
         centroids = [[float(x) for x in row] for row in cent]
 
-    def _maybe_round(col: Column) -> Column:
-        return col if assign_round_to is None else F.round(col, assign_round_to)
-
     def cell_of(vec: Column, cents: list[list[float]]) -> Column:
         # Scalar argmin over the centroid matrix as ONE 2-D array literal
         # (the bucket_signature codegen trick) — assignment is a pure scan.
         cm = matrix_lit(cents)
-        dists = F.transform(cm, lambda p: _maybe_round(_sq_dist(vec, p)))
+        dists = F.transform(cm, lambda p: F.round(_sq_dist(vec, p), 6))
         return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
     assigned = c.withColumn("__cell", cell_of(F.col("__cvec"), centroids))
@@ -331,10 +319,10 @@ def ivf_topk(
     probes = (
         q.crossJoin(F.broadcast(cents))
         .withColumn(
-            "__d2", _maybe_round(_sq_dist(F.col("__qvec"), F.col("__centroid")))
+            "__d2", F.round(_sq_dist(F.col("__qvec"), F.col("__centroid")), 6)
         )
         .withColumn("__pr", F.row_number().over(wp))
-        .filter(F.col("__pr") <= nprobe)
+        .filter(F.col("__pr") <= _IVF_NPROBE)
         .select("query_id", "__qvec", "__cell")
     )
     sim = F.round(cosine(F.col("__qvec"), F.col("__cvec")), 4)
@@ -346,7 +334,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= _TOP_K)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 
@@ -354,14 +342,12 @@ def ivf_topk(
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     codebooks: list[list[list[float]]] | None = None,
-    encode_round_to: int | None = None,
 ) -> DataFrame:
-    """Product-quantization approximate top-k over ``(vec_id, embedding)``
-    frames (the memory-bound ANN scale path): each vector is encoded as
-    m = 8 one-byte codes (32 centroids per subspace) — a 64-dim float
-    vector (256 B) compresses to 8 B, so a 100 TB embedding corpus
+    """Product-quantization approximate top-``_TOP_K`` over ``(vec_id,
+    embedding)`` frames (the memory-bound ANN scale path): each vector is
+    encoded as m = 8 one-byte codes (32 centroids per subspace) — a 64-dim
+    float vector (256 B) compresses to 8 B, so a 100 TB embedding corpus
     becomes a ~3 TB code table that scans from memory — and queries rank
     neighbors by asymmetric distance (ADC): exact query subvector vs the
     centroid the code names, d(q,x) ≈ Σ_m ||q_m − C_m[code_m(x)]||².
@@ -381,9 +367,9 @@ def pq_topk(
 
     With `codebooks` the per-subspace trainer is skipped — the caller
     supplies the quantizer (e.g. `fixed_pq_codebooks` deterministic
-    literals, making encode + ADC SQL-reproducible cross-engine).
-    `encode_round_to` rounds the per-subspace distances BEFORE the argmin
-    so both engines pick identical codes on last-ulp ties.
+    literals, making encode + ADC SQL-reproducible cross-engine). The
+    per-subspace distances are rounded to 6 places BEFORE the argmin so
+    both engines pick identical codes on last-ulp ties.
     """
     import numpy as np
 
@@ -421,10 +407,7 @@ def pq_topk(
         # two-parameter lambda as (element, index).
         sub = F.slice(F.col("__cvec"), m * dsub + 1, dsub)
         dists = F.transform(
-            matrix_lit(codebooks[m]),
-            lambda p: _sq_dist(sub, p)
-            if encode_round_to is None
-            else F.round(_sq_dist(sub, p), encode_round_to),
+            matrix_lit(codebooks[m]), lambda p: F.round(_sq_dist(sub, p), 6)
         )
         return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
@@ -480,7 +463,7 @@ def pq_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _TOP_K)
         .select("query_id", "neighbor_id", "approx_dist", "rank")
     )
 
@@ -496,13 +479,12 @@ def pq_topk(
 # ---------------------------------------------------------------------------
 
 
-def kmeans_lloyd_distributed(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
-    dim: int = 64,
-    seed: int = 99,
-):
+# Embedding width and seed of the trainer's initial centroids (the DuckDB
+# oracle rebuilds the same seeded matrix).
+_KM_DIM, _KM_SEED = 64, 99
+
+
+def kmeans_lloyd_distributed(emb: DataFrame, k: int = 8, n_iter: int = 5):
     """Full-corpus Lloyd iterations over ``(vec_id, embedding)``,
     deterministic across partitionings.
 
@@ -531,8 +513,8 @@ def kmeans_lloyd_distributed(
 
     import numpy as np
 
-    rng = np.random.default_rng(seed)
-    cents = rng.standard_normal((k, dim)).tolist()
+    rng = np.random.default_rng(_KM_SEED)
+    cents = rng.standard_normal((k, _KM_DIM)).tolist()
 
     base = emb.select(
         F.col("vec_id").alias("__id"),

@@ -25,8 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Sketch shape: 4 hash rows of 512 counters (the DuckDB oracle rebuilds it).
+_CMS_DEPTH, _CMS_WIDTH = 4, 512
 
-def _bucket(col: Column, j: int, width: int) -> Column:
+
+def _bucket(col: Column, j: int) -> Column:
     """Portable bucket index for hash row ``j``: 60-bit md5 prefix mod width.
 
     The 15-hex-char prefix is non-negative in both engines, so ``%`` needs
@@ -34,54 +37,36 @@ def _bucket(col: Column, j: int, width: int) -> Column:
     15))::BIGINT % width``).
     """
     h = F.conv(F.substring(F.md5(F.concat(F.lit(f"{j}:"), col)), 1, 15), 16, 10)
-    return (h.cast("bigint") % F.lit(width)).alias(f"b{j}")
+    return (h.cast("bigint") % F.lit(_CMS_WIDTH)).alias(f"b{j}")
 
 
-def cms_build(
-    tokens: DataFrame,
-    token_col: str,
-    depth: int = 4,
-    width: int = 512,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Build the sketch: ``(j, bucket, c)`` — exactly ``depth*width`` rows.
+def cms_build(counts: DataFrame, token_col: str) -> DataFrame:
+    """Build the sketch from a (token, ``cnt``) count table: ``(j, bucket,
+    c)`` — exactly ``depth*width`` rows.
 
-    One pass over the token stream; the explode to ``depth`` rows per token
-    is collapsed by map-side partial aggregation to at most ``depth*width``
-    rows per task before the (tiny, fixed-size) shuffle.
-
-    ``weight_col``: build from a PRE-AGGREGATED (token, count) table instead
-    of the raw occurrence stream — counter (j, bucket) becomes the SUM of
-    weights of the tokens hashing there, which equals the occurrence count
-    bit-for-bit (the bucket depends only on the token). A caller that
-    already holds word counts thus sketches vocabulary-sized input instead
-    of re-streaming the corpus (r10, guide §1.2 — fewer passes).
+    Counter (j, bucket) is the SUM of the counts of the tokens hashing
+    there, which equals the occurrence count of the raw token stream
+    bit-for-bit (the bucket depends only on the token), so the sketch is
+    built from vocabulary-sized input instead of re-streaming the corpus
+    (r10, guide §1.2 — fewer passes). The explode to ``depth`` rows per
+    token is collapsed by map-side partial aggregation to at most
+    ``depth*width`` rows per task before the (tiny, fixed-size) shuffle.
     """
     c = F.col(token_col)
     rows = F.array(
         *[
-            F.struct(F.lit(j).alias("j"), _bucket(c, j, width).alias("bucket"))
-            for j in range(depth)
+            F.struct(F.lit(j).alias("j"), _bucket(c, j).alias("bucket"))
+            for j in range(_CMS_DEPTH)
         ]
     )
-    w = F.count("*") if weight_col is None else F.sum(weight_col)
     return (
-        tokens.select(
-            *([] if weight_col is None else [weight_col]),
-            F.explode(rows).alias("r"),
-        )
+        counts.select("cnt", F.explode(rows).alias("r"))
         .groupBy(F.col("r.j").alias("j"), F.col("r.bucket").alias("bucket"))
-        .agg(w.cast("bigint").alias("c"))
+        .agg(F.sum("cnt").cast("bigint").alias("c"))
     )
 
 
-def cms_estimate(
-    sketch: DataFrame,
-    probes: DataFrame,
-    token_col: str,
-    depth: int = 4,
-    width: int = 512,
-) -> DataFrame:
+def cms_estimate(sketch: DataFrame, probes: DataFrame, token_col: str) -> DataFrame:
     """Point-query the sketch: min over the ``depth`` counters per probe.
 
     The sketch is ``depth*width`` rows however large the corpus was, so the
@@ -96,9 +81,10 @@ def cms_estimate(
             F.array(
                 *[
                     F.struct(
-                        F.lit(j).alias("j"), _bucket(c, j, width).alias("bucket")
+                        F.lit(j).alias("j"),
+                        _bucket(c, j).alias("bucket"),
                     )
-                    for j in range(depth)
+                    for j in range(_CMS_DEPTH)
                 ]
             )
         ).alias("k"),
@@ -318,8 +304,13 @@ def hll_estimate_sparse(
 # ---------------------------------------------------------------------------
 
 
+# Buckets per unit of value: a power of two, so bucket/scale is IEEE-exact
+# in both engines.
+_QH_SCALE = 16
+
+
 def quantile_histogram(
-    df: DataFrame, value_col: str, group_cols: list[str], scale: int = 16
+    df: DataFrame, value_col: str, group_cols: list[str]
 ) -> DataFrame:
     """Per-group fixed-boundary histogram: ``group_cols + (bucket, cnt)``.
 
@@ -333,7 +324,7 @@ def quantile_histogram(
     Quantiles over NULLs are undefined anyway; the filter makes both
     engines agree by never producing the bucket.
     """
-    bucket = F.floor(F.col(value_col) * F.lit(float(scale))).cast("bigint")
+    bucket = F.floor(F.col(value_col) * F.lit(float(_QH_SCALE))).cast("bigint")
     return (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(*group_cols, bucket.alias("bucket"))
@@ -345,11 +336,7 @@ def quantile_histogram(
 _QUANTILES = (("p50", 1, 2), ("p95", 19, 20))
 
 
-def histogram_quantiles(
-    hist: DataFrame,
-    group_cols: list[str],
-    scale: int = 16,
-) -> DataFrame:
+def histogram_quantiles(hist: DataFrame, group_cols: list[str]) -> DataFrame:
     """Nearest-rank-lower p50 and p95 from a `quantile_histogram` table.
 
     Returns ``group_cols + (n_rows, <p>_bucket bigint, <p>_est double)`` for
@@ -383,6 +370,6 @@ def histogram_quantiles(
     for name, _num, _den in _QUANTILES:
         out = out.withColumn(
             f"{name}_est",
-            F.col(f"{name}_bucket").cast("double") / F.lit(float(scale)),
+            F.col(f"{name}_bucket").cast("double") / F.lit(float(_QH_SCALE)),
         )
     return out

@@ -8,10 +8,10 @@ code change. Salting is the explicit fallback for cases AQE can't fix:
 a single key so hot it overwhelms one task even after splitting, or
 aggregation-under-join shapes where the skew is created mid-plan.
 
-Mechanics: the skewed side gets a per-row salt in [0, salt); the other side
-is replicated once per salt value; the join key becomes (key, salt). One hot
-key's rows then spread over `salt` reducers. Cost: the small side shuffles
-`salt` times its size — choose `salt` ≈ (hot-key rows / target rows per
+Mechanics: the skewed side gets a per-row salt in [0, _SALTS); the other
+side is replicated once per salt value; the join key becomes (key, salt). One
+hot key's rows then spread over `_SALTS` reducers. Cost: the small side
+shuffles `_SALTS` times its size — size it ≈ (hot-key rows / target rows per
 task), not "big to be safe".
 """
 
@@ -20,16 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_SALTS = 8
+
 
 def salted_join(
     skewed: DataFrame,
     other: DataFrame,
     skewed_key: str,
     other_key: str,
-    salt: int = 8,
 ) -> DataFrame:
-    """Inner equi-join `skewed ⋈ other` with the skewed side salted `salt`
-    ways.
+    """Inner equi-join `skewed ⋈ other` with the skewed side salted
+    `_SALTS` ways.
 
     Deterministic: the salt is a content hash of the whole skewed row
     (xxhash64), not `rand()` — identical input always lands identically, so
@@ -41,12 +42,12 @@ def salted_join(
     the helper columns never escape.
     """
     s = skewed.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.struct(*skewed.columns)), F.lit(salt))
+        "__salt", F.pmod(F.xxhash64(F.struct(*skewed.columns)), F.lit(_SALTS))
     )
     o = other.withColumn(
         "__salt",
         F.explode(
-            F.sequence(F.lit(0).cast("bigint"), F.lit(salt - 1).cast("bigint"))
+            F.sequence(F.lit(0).cast("bigint"), F.lit(_SALTS - 1).cast("bigint"))
         ),
     )
     joined = s.join(

@@ -281,7 +281,6 @@ def curation_pipeline(
         base.withColumn("__h", digest),
         keys=["__h"],
         order_by=[F.col(id_col)],
-        group_size_col="__grp_n",
     ).drop("__h").persist(StorageLevel.MEMORY_AND_DISK)
     # Stage 2 — near-dup: LSH pairs -> connected components -> keep the
     # cluster representative (minimum reachable id). No broadcast hint:

@@ -276,60 +276,40 @@ WHERE b.cnt >= {_LM_MIN_COUNT}
 # ---------------------------------------------------------------------------
 # quality_band_filter — quantile-band outlier trimming: drop the shortest 5%
 # and longest 5% of documents (truncated/concatenated crawl artifacts).
-# percentile_disc picks ACTUAL data values (no interpolation — integer-exact
+# The band edges are ACTUAL data values (no interpolation — integer-exact
 # on both engines, no float-comparison risk). The two scalars come from one
-# tiny aggregate and broadcast into the scan filter. At 100 TB use
-# `exact=False`: the boundaries come from percentile_approx's mergeable
-# KLL-style sketch — ONE map-combine pass over the corpus, no global sort
-# window — with rank error ≤ 1/accuracy (tested); the band-filter plan
-# shape downstream is identical, which is why the exact form is the
-# oracled one.
+# tiny aggregate and broadcast into the scan filter.
 # ---------------------------------------------------------------------------
 
 
-def quality_band_filter(
-    spark: SparkSession,
-    sf_dir: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    # Exact mode: the 5%/95% boundaries are the values at EXPLICIT integer
-    # ranks ceil(0.05*n)/ceil(0.95*n) (1-based row_number over the sorted
-    # key) — not percentile_disc/quantile_disc, whose tie/index conventions
-    # are engine-version-sensitive at exact-integer ranks (round-1 driver
-    # hash mismatch). The rank window only ever sees the single n_chars
-    # column. Approx mode: sketch aggregate, no window at all.
+def quality_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The 5%/95% boundaries are the values at EXPLICIT integer ranks
+    # ceil(0.05*n)/ceil(0.95*n) (1-based row_number over the sorted key) —
+    # not percentile_disc/quantile_disc, whose tie/index conventions are
+    # engine-version-sensitive at exact-integer ranks (round-1 driver hash
+    # mismatch). The rank window only ever sees the single n_chars column.
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    if exact:
-        ranked = docs.select("n_chars").select(
-            "n_chars",
-            F.row_number().over(Window.orderBy("n_chars")).alias("rn"),
-            F.count("*").over(Window.partitionBy()).alias("n"),
-        )
-        band = ranked.agg(
-            F.max(
-                F.when(
-                    F.col("rn") == F.expr("(5 * n + 99) div 100"),
-                    F.col("n_chars"),
-                )
-            ).alias("lo"),
-            F.max(
-                F.when(
-                    F.col("rn") == F.expr("(95 * n + 99) div 100"),
-                    F.col("n_chars"),
-                )
-            ).alias("hi"),
-        )
-    else:
-        band = docs.agg(
-            F.percentile_approx(
-                "n_chars", F.lit([0.05, 0.95]), F.lit(accuracy)
-            ).alias("pts")
-        ).select(
-            F.col("pts")[0].alias("lo"), F.col("pts")[1].alias("hi")
-        )
+    ranked = docs.select("n_chars").select(
+        "n_chars",
+        F.row_number().over(Window.orderBy("n_chars")).alias("rn"),
+        F.count("*").over(Window.partitionBy()).alias("n"),
+    )
+    band = ranked.agg(
+        F.max(
+            F.when(
+                F.col("rn") == F.expr("(5 * n + 99) div 100"),
+                F.col("n_chars"),
+            )
+        ).alias("lo"),
+        F.max(
+            F.when(
+                F.col("rn") == F.expr("(95 * n + 99) div 100"),
+                F.col("n_chars"),
+            )
+        ).alias("hi"),
+    )
     return (
         docs.join(F.broadcast(band))
         .filter(F.col("n_chars").between(F.col("lo"), F.col("hi")))

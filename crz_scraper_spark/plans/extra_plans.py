@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from crz_scraper_spark.catalog import load_table, pin
 from crz_scraper_spark.functions.text import WORD_SEPARATOR_RE, tokens_nonempty
 from crz_scraper_spark.operators.dedup import first_wins_dedup
+from crz_scraper_spark.operators.sketches import _QH_SCALE
 from crz_scraper_spark.operators.skew import salted_join
 
 from crz_scraper_spark.operators.tagging import DEFAULT_TAXONOMY, _safe
@@ -840,8 +841,6 @@ ORDER BY rflag, lstatus
 # (exact interpolated percentiles are NOT engine-portable in IEEE).
 # ---------------------------------------------------------------------------
 
-_QH_SCALE = 16  # power of two: bucket/scale is IEEE-exact both engines
-
 
 def quantile_histogram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crz_scraper_spark.operators.sketches import (
@@ -850,8 +849,8 @@ def quantile_histogram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    hist = quantile_histogram(events, "value", ["event_type"], scale=_QH_SCALE)
-    out = histogram_quantiles(hist, ["event_type"], scale=_QH_SCALE)
+    hist = quantile_histogram(events, "value", ["event_type"])
+    out = histogram_quantiles(hist, ["event_type"])
     return out.orderBy("event_type")
 
 
@@ -931,8 +930,6 @@ GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 # never the answer.
 # ---------------------------------------------------------------------------
 
-_SALTS = 8
-
 
 def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
@@ -948,7 +945,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("grp", F.pmod(F.col("k"), F.lit(10)).cast("int"))
     )
     return (
-        salted_join(fact.hint("merge"), dim, "k", "k", salt=_SALTS)
+        salted_join(fact.hint("merge"), dim, "k", "k")
         .groupBy("grp")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from crz_scraper_spark.catalog import collect_and_release, fan_out, load_table
 from crz_scraper_spark.functions.casts import dsum
+from crz_scraper_spark.operators.dedup import _SHI_MAX_HAMMING
 
 _BUILT: set = set()
 
@@ -370,8 +371,6 @@ WHERE round(({agree}) / {nh}.0, 6) >= {_MHI_THRESHOLD}
 # guaranteed by pigeonhole, so the oracle can filter on Hamming alone).
 # ---------------------------------------------------------------------------
 
-_SHI_MAX_HAMMING = 3
-
 
 def simhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crz_scraper_spark.operators.dedup import simhash_incremental
@@ -381,14 +380,11 @@ def simhash_incremental_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     if store not in _BUILT:
         _sh.rmtree(store, ignore_errors=True)
         day1 = docs.filter(F.col("doc_id") % 2 == 0)
-        simhash_incremental(
-            spark, day1, "doc_id", "text", store, _SHI_MAX_HAMMING
-        ).count()  # materialize day-1 ingest (report discarded)
+        # Materialize the day-1 ingest (its report is discarded).
+        simhash_incremental(spark, day1, "doc_id", "text", store).count()
         _BUILT.add(store)
     day2 = docs.filter(F.col("doc_id") % 2 == 1)
-    return simhash_incremental(
-        spark, day2, "doc_id", "text", store, _SHI_MAX_HAMMING
-    )
+    return simhash_incremental(spark, day2, "doc_id", "text", store)
 
 
 def _simhash_incremental_sql() -> str:

@@ -16,11 +16,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crz_scraper_spark.catalog import load_table
+from crz_scraper_spark.operators.graph import (
+    _PR_DAMP_DEN,
+    _PR_DAMP_NUM,
+    _PR_ITERS,
+    _PR_MAX_BASKET,
+    _PR_SCALE,
+    _TRI_TOP,
+)
 
-_PR_ITERS = 5
-_PR_DAMP_NUM, _PR_DAMP_DEN = 85, 100
-_PR_SCALE = 1_000_000
-_PR_MAX_BASKET = 50
 _PR_TOP = 20
 
 
@@ -36,21 +40,12 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an edge list only for pagerank to regroup it would re-shuffle the
     # full edge expansion for nothing (the 332 s sf10 distinct, PLANS.md
     # round-8 probe).
-    ranks = pagerank_on_adjacency(
-        copurchase_adjacency(li, max_basket=_PR_MAX_BASKET),
-        iterations=_PR_ITERS,
-        damping_num=_PR_DAMP_NUM,
-        damping_den=_PR_DAMP_DEN,
-        scale=_PR_SCALE,
-    )
+    ranks = pagerank_on_adjacency(copurchase_adjacency(li))
     # Global top-K: plain orderBy + limit compiles to TakeOrderedAndProject
     # (per-partition heaps, K rows to the driver) — no full sort runs.
     return ranks.select(
         F.col("node").alias("partkey"), F.col("rank").alias("rank_ppm")
     ).orderBy(F.desc("rank_ppm"), "partkey").limit(_PR_TOP)
-
-
-_TRI_TOP = 20
 
 
 def part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,10 +63,7 @@ def part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    out = triangle_counts(
-        adjacency=copurchase_adjacency(li, max_basket=_PR_MAX_BASKET),
-        top_k=_TRI_TOP,
-    )
+    out = triangle_counts(copurchase_adjacency(li))
     return out.select(F.col("node").alias("partkey"), "n_tri").orderBy(
         F.desc("n_tri"), "partkey"
     )

@@ -235,62 +235,35 @@ FROM (
 # range_split_points — how a range-partitioned layout picks its boundaries
 # (what repartitionByRange's sampled RangePartitioner estimates, computed
 # exactly): the i/R equi-depth quantiles of the sort key, plus the exact
-# row count at-or-below each boundary as the balance audit. percentile_disc
-# returns actual data values (integer-exact). The quantile aggregate is one
-# pass; the audit join is a boundary-count-sized broadcast. At 100 TB the
-# boundaries come from approx_percentile over a sample — same shape.
+# row count at-or-below each boundary as the balance audit. The boundaries
+# are actual data values (integer-exact). The quantile aggregate is one
+# pass; the audit join is a boundary-count-sized broadcast.
 # ---------------------------------------------------------------------------
 
 _RANGE_BUCKETS = 8
 
 
-def range_split_points(
-    spark: SparkSession,
-    sf_dir: str,
-    exact: bool = True,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    # Exact mode: boundaries come from an EXPLICIT integer-rank selection
-    # (value at row_number ceil(i*n/R), 1-based), not each engine's
-    # quantile builtin: percentile_disc/quantile_disc tie/index conventions
-    # are engine-version-sensitive at exact-integer ranks, which is a
-    # driver correctness hazard (round-1 quality_band_filter). The rank
-    # window runs over the single narrow sort-key column. At 100 TB use
-    # `exact=False`: percentile_approx's mergeable sketch computes all R-1
-    # boundaries in ONE map-combine pass (rank error ≤ 1/accuracy, tested;
-    # no global sort window) — the downstream audit shape is identical.
+def range_split_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Boundaries come from an EXPLICIT integer-rank selection (value at
+    # row_number ceil(i*n/R), 1-based), not each engine's quantile builtin:
+    # percentile_disc/quantile_disc tie/index conventions are
+    # engine-version-sensitive at exact-integer ranks, which is a driver
+    # correctness hazard (round-1 quality_band_filter). The rank window
+    # runs over the single narrow sort-key column.
     from pyspark.sql.window import Window
 
     events = load_table(spark, sf_dir, "events")
     r = _RANGE_BUCKETS
-    if exact:
-        ranked = events.select("user_id").select(
-            "user_id",
-            F.row_number().over(Window.orderBy("user_id")).alias("rn"),
-            F.count("*").over(Window.partitionBy()).alias("n"),
-        )
-        idx = spark.range(1, r).select(F.col("id").alias("bucket_id"))
-        bounds = (
-            ranked.join(
-                F.broadcast(idx),
-                F.col("rn") == F.expr(f"(bucket_id * n + {r - 1}) div {r}"),
-            )
-            .select("bucket_id", F.col("user_id").alias("boundary"))
-        )
-    else:
-        probs = [i / r for i in range(1, r)]
-        bounds = (
-            events.agg(
-                F.percentile_approx(
-                    "user_id", F.lit(probs), F.lit(accuracy)
-                ).alias("pts")
-            )
-            .select(F.posexplode("pts").alias("pos", "boundary"))
-            .select(
-                (F.col("pos") + 1).cast("bigint").alias("bucket_id"),
-                "boundary",
-            )
-        )
+    ranked = events.select("user_id").select(
+        "user_id",
+        F.row_number().over(Window.orderBy("user_id")).alias("rn"),
+        F.count("*").over(Window.partitionBy()).alias("n"),
+    )
+    idx = spark.range(1, r).select(F.col("id").alias("bucket_id"))
+    bounds = ranked.join(
+        F.broadcast(idx),
+        F.col("rn") == F.expr(f"(bucket_id * n + {r - 1}) div {r}"),
+    ).select("bucket_id", F.col("user_id").alias("boundary"))
     return (
         events.join(F.broadcast(bounds))
         .filter(F.col("user_id") <= F.col("boundary"))

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from crz_scraper_spark.catalog import collect_and_release, fan_out, load_table
 from crz_scraper_spark.functions.text import WORD_SEPARATOR_RE, tokens_nonempty
 from crz_scraper_spark.operators.dedup import (
+    _MIN_CONTAINMENT_PPM,
+    _SEMDEDUP_TAU,
     fixed_centroids,
     lsh_bucket_occupancy,
     minhash_bands,
@@ -33,12 +35,23 @@ from crz_scraper_spark.operators.extraction import (
     extract_text,
 )
 from crz_scraper_spark.operators.multimodal import (
+    _RESIZE_H,
+    _RESIZE_TARGET,
+    _RESIZE_W,
     decode_documents,
     frame_features,
     resize_images,
     sample_frames,
 )
 from crz_scraper_spark.operators.similarity import (
+    _IVF_NLIST,
+    _IVF_NPROBE,
+    _KM_DIM,
+    _KM_SEED,
+    _LSH_DIM,
+    _LSH_MULTIPROBE,
+    _LSH_PLANES,
+    _TOP_K,
     cosine_topk,
     fixed_pq_codebooks,
     fixed_unit_centroids,
@@ -60,8 +73,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8)
-    out = cosine_topk(emb, queries, k=5, round_to=4)
-    return out
+    return cosine_topk(emb, queries)
 
 
 COSINE_TOPK_SQL = """
@@ -89,26 +101,12 @@ WHERE rank <= 5
 # top-k bit-for-bit from the same constants.
 # ---------------------------------------------------------------------------
 
-_LSH_PLANES = 4
-_LSH_DIM = 64
-_LSH_K = 5
-_LSH_MULTIPROBE = 1
-
-
 def ann_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8)
-    return lsh_ann_topk(
-        emb,
-        queries,
-        k=_LSH_K,
-        n_planes=_LSH_PLANES,
-        dim=_LSH_DIM,
-        multiprobe=_LSH_MULTIPROBE,
-        round_to=4,
-    )
+    return lsh_ann_topk(emb, queries)
 
 
 def _ann_lsh_sql() -> str:
@@ -160,7 +158,7 @@ FROM (
                             ORDER BY cos_sim DESC, neighbor_id) AS rank
   FROM scored
 )
-WHERE rank <= {_LSH_K}
+WHERE rank <= {_TOP_K}
 """
 
 
@@ -191,16 +189,12 @@ def embedding_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         base.filter(F.col("vec_id") < 8).select(
             "vec_id", F.col("v").alias("embedding")
         ),
-        k=5,
-        round_to=4,
     )
     quant = cosine_topk(
         base.select("vec_id", F.col("q").alias("embedding")),
         base.filter(F.col("vec_id") < 8).select(
             "vec_id", F.col("q").alias("embedding")
         ),
-        k=5,
-        round_to=4,
     )
     return (
         exact.select("query_id", "neighbor_id")
@@ -354,8 +348,6 @@ def _exact_l2_topk(emb: DataFrame) -> DataFrame:
 # sampled-kmeans trainers remain the production path for drifted corpora
 # and stay covered by tests/test_operators.py (nprobe=nlist ≡ exact;
 # recall bounds; determinism).
-_IVF_NLIST = 8
-_IVF_NPROBE = 2
 _PQ_M = 8
 _PQ_KSUB = 32
 _ANN_DIM = 64
@@ -378,11 +370,7 @@ def pq_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.filter(F.col("vec_id") < 8)
     topk = pq_topk(
-        emb,
-        queries,
-        k=5,
-        codebooks=fixed_pq_codebooks(_ANN_DIM, _PQ_M, _PQ_KSUB),
-        encode_round_to=6,
+        emb, queries, codebooks=fixed_pq_codebooks(_ANN_DIM, _PQ_M, _PQ_KSUB)
     )
     # The guard only COUNTS the corpus frame — hand it the raw table so
     # floor_ppm's n comes from a parquet count, not a full repartition
@@ -409,12 +397,7 @@ def ivf_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.filter(F.col("vec_id") < 8)
     topk = ivf_topk(
-        emb,
-        queries,
-        nlist=_IVF_NLIST,
-        nprobe=_IVF_NPROBE,
-        centroids=fixed_unit_centroids(_ANN_DIM, _IVF_NLIST),
-        assign_round_to=6,
+        emb, queries, centroids=fixed_unit_centroids(_ANN_DIM, _IVF_NLIST)
     )
     exact = cosine_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
@@ -579,10 +562,16 @@ WHERE h.corpus_recall_ppm >= h.floor_ppm
 # ---------------------------------------------------------------------------
 
 
-def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _minhash_near_pairs(
+    spark: SparkSession, sf_dir: str, max_bucket_occupancy: int | None
+) -> DataFrame:
+    """xxhash64 MinHash near-dup pairs (32 hashes in 8 bands, 5-shingles,
+    threshold 0.5) of the documents, under `minhash_dedup`'s mega-bucket
+    cap."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     pairs = minhash_dedup(
-        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=5, threshold=0.5
+        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=5,
+        threshold=0.5, max_bucket_occupancy=max_bucket_occupancy,
     )
     # In-query invariant for the rows-only check: every emitted pair must
     # be ordered and verified (est_jaccard within [threshold, 1]). A
@@ -592,6 +581,10 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("id_a") < F.col("id_b"))
         & F.col("est_jaccard").between(0.5, 1.0)
     )
+
+
+def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _minhash_near_pairs(spark, sf_dir, None)
 
 
 def minhash_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -605,15 +598,7 @@ def minhash_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     OUTPUT drops 4× (26k vs 100k) — the quantity that feeds every
     downstream join/clustering stage, and the one that grows
     quadratically with cluster size uncapped."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = minhash_dedup(
-        docs, "doc_id", "text", num_hashes=32, bands=8, shingle_n=5,
-        threshold=0.5, max_bucket_occupancy=64,
-    )
-    return pairs.filter(
-        (F.col("id_a") < F.col("id_b"))
-        & F.col("est_jaccard").between(0.5, 1.0)
-    )
+    return _minhash_near_pairs(spark, sf_dir, 64)
 
 
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,7 +801,7 @@ def lsh_band_occupancy_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", _MH_HASHES, _MH_SHINGLE, family="md5"
     )
     return lsh_bucket_occupancy(
-        sig, "doc_id", _MH_BANDS, _MH_HASHES // _MH_BANDS, family="md5"
+        minhash_bands(sig, "doc_id", _MH_BANDS, _MH_HASHES // _MH_BANDS, family="md5")
     )
 
 
@@ -1082,7 +1067,7 @@ FROM inter i
 JOIN sizes za ON za.doc = i.id_a
 JOIN sizes zb ON zb.doc = i.id_b
 WHERE CAST(floor(i.inter_cnt * 1000000.0 / least(za.sz, zb.sz)) AS BIGINT)
-      >= 800000
+      >= {_MIN_CONTAINMENT_PPM}
 ORDER BY i.id_a, i.id_b
 """
 
@@ -1145,7 +1130,7 @@ def multimodal_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fused sampler+featurizer: ONE Python boundary crossing for the
     # payload bytes instead of two chained mapInPandas nodes (r10, guide
     # §4) — structurally the same slice/window helpers, parity-tested.
-    feats = frame_features(binary, dim=16)
+    feats = frame_features(binary)
     fsum = F.aggregate(
         F.col("feature"),
         F.lit(0).cast("bigint"),
@@ -1241,11 +1226,6 @@ SELECT doc_id, frame_no, ts_ms, frame_hex FROM f
 """
 
 
-_RESIZE_W = 64
-_RESIZE_H = 64
-_RESIZE_TARGET = max(_RESIZE_W * _RESIZE_H // 8, 1)
-
-
 def multimodal_resize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The last multimodal verb made driver-visible: `resize_images`' 1:1
     binary→binary mapInPandas (payload → fixed-size thumbnail; the stub
@@ -1260,7 +1240,7 @@ def multimodal_resize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary = docs.select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
-    resized = resize_images(binary, _RESIZE_W, _RESIZE_H)
+    resized = resize_images(binary)
     return resized.select(
         "doc_id",
         "width",
@@ -1709,27 +1689,17 @@ FROM part
 
 _SEMDEDUP_CELLS = 8
 _SEMDEDUP_DIM = 64
-_SEMDEDUP_TAU = 0.35
 _SEMDEDUP_SEED = 99
 
 
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     cents = fixed_centroids(_SEMDEDUP_DIM, _SEMDEDUP_CELLS, _SEMDEDUP_SEED)
-    return semantic_dedup(
-        emb,
-        cents,
-        "vec_id",
-        "embedding",
-        threshold=_SEMDEDUP_TAU,
-        round_to=4,
-    )
+    return semantic_dedup(emb, cents)
 
 
 _KM_K = 8
 _KM_ITER = 4
-_KM_SEED = 99
-_KM_DIM = 64
 
 
 def embedding_kmeans_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1757,10 +1727,7 @@ def embedding_kmeans_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     ).persist()
-    assigned, _cents, hist = kmeans_lloyd_distributed(
-        emb, k=_KM_K, n_iter=_KM_ITER,
-        dim=_KM_DIM, seed=_KM_SEED,
-    )
+    assigned, _cents, hist = kmeans_lloyd_distributed(emb, k=_KM_K, n_iter=_KM_ITER)
     # In-query invariant: Lloyd's inertia is provably non-increasing; a
     # trainer regression that breaks monotonicity (or empties a cell)
     # empties the result, which the driver's rows-only count catches.
@@ -1872,6 +1839,27 @@ HAVING count(*) > 0
 """
 
 
+def _trained_semantic_dedup(
+    emb: DataFrame, k: int, n_iter: int
+) -> tuple[DataFrame, list[float]]:
+    """SemDeDup over centroids the distributed Lloyd trainer learns from
+    ``emb``: the (invariant-checked) verdict and the inertia history.
+    The trainer and the dedup pass read ONE persisted copy of the fanned
+    vectors (one corpus scan + one fan-out exchange per query), released
+    before returning."""
+    from crz_scraper_spark.operators.similarity import (
+        kmeans_lloyd_distributed,
+    )
+
+    emb = emb.persist()
+    try:
+        _assigned, cents, hist = kmeans_lloyd_distributed(emb, k=k, n_iter=n_iter)
+        sd = semantic_dedup(emb, cents)
+    finally:
+        emb.unpersist()
+    return _semdedup_invariant(sd), hist
+
+
 def semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with a TRAINED coarse quantizer — the paper's actual
     design: centroids come from distributed full-corpus Lloyd's k-means
@@ -1886,10 +1874,6 @@ def semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trainer's cross-layout bit-stability."""
     from math import isqrt
 
-    from crz_scraper_spark.operators.similarity import (
-        kmeans_lloyd_distributed,
-    )
-
     raw = load_table(spark, sf_dir, "embeddings")
     # k ∝ √n is the IVF balance point: quantizer assignment costs O(n·k)
     # and the within-cell pair phase O(n·(n/k)) — both n^1.5 at k = √n. A
@@ -1899,23 +1883,9 @@ def semantic_dedup_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value is identical, but counting after repartition shuffles the
     # whole table to answer a metadata question.
     n = raw.count()
-    k = max(8, isqrt(n))
-    # The trainer and the SemDeDup pass read the SAME persisted vectors:
-    # one corpus scan + one fan-out exchange per query.
-    emb = fan_out(raw.select("vec_id", "embedding")).persist()
-    try:
-        _assigned, cents, _hist = kmeans_lloyd_distributed(
-            emb, k=k, n_iter=3,
-        )
-        sd = semantic_dedup(
-            emb,
-            cents,
-            threshold=_SEMDEDUP_TAU,
-            round_to=4,
-        )
-    finally:
-        emb.unpersist()
-    return _semdedup_invariant(sd)
+    emb = fan_out(raw.select("vec_id", "embedding"))
+    sd, _hist = _trained_semantic_dedup(emb, k=max(8, isqrt(n)), n_iter=3)
+    return sd
 
 
 def semantic_dedup_trained_fixed_q(
@@ -1932,56 +1902,38 @@ def semantic_dedup_trained_fixed_q(
     production posture (k ∝ √n) stays in `semantic_dedup_trained`; this
     twin pins the algorithm's correctness with a static-k oracle, the
     same twin discipline as minhash_near_dup_md5 / ann_ivf_topk."""
-    from crz_scraper_spark.operators.similarity import (
-        kmeans_lloyd_distributed,
-    )
-
-    # Same cache-sharing as semantic_dedup_trained: the trainer and the
-    # dedup pass read one persisted copy of the fanned vectors.
     emb = fan_out(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ).persist()
-    try:
-        _assigned, cents, hist = kmeans_lloyd_distributed(
-            emb, k=_KM_K, n_iter=_KM_ITER,
-            dim=_KM_DIM, seed=_KM_SEED,
-        )
-        sd = semantic_dedup(
-            emb,
-            cents,
-            threshold=_SEMDEDUP_TAU,
-            round_to=4,
-        )
-    finally:
-        emb.unpersist()
+    )
+    sd, hist = _trained_semantic_dedup(emb, k=_KM_K, n_iter=_KM_ITER)
     monotone = all(
         hist[i + 1] <= hist[i] + 1e-9 for i in range(len(hist) - 1)
     )
     # Mirror the trainer's monotone-inertia witness (the oracle gates on
     # the same predicate): a trainer regression empties the result.
-    return _semdedup_invariant(sd).filter(F.lit(monotone))
+    return sd.filter(F.lit(monotone))
 
 
-def _semantic_dedup_trained_fixed_sql() -> str:
-    """Chained oracle: the unrolled Lloyd CTE chain produces the trained
-    centroids, which the SemDeDup assignment (6-dp-rounded cosine argmax,
-    ties to lowest cell) and keep-lowest-id prune consume — identical
-    constants to the Spark pipeline above."""
-    prefix, cents_final = _kmeans_train_ctes()
-    return f"""{prefix},
-sd_assign AS (
+def _semdedup_verdict_sql(cents: str) -> str:
+    """The SemDeDup verdict as SQL over an `emb(vec_id, v)` CTE and a
+    centroid CTE `cents(cell, c)`: the `assign` (6-dp-rounded cosine
+    argmax, ties to the lowest cell) and `drops` (keep-lowest-id prune at
+    `_SEMDEDUP_TAU`, 4-dp-rounded cosines) CTEs and the (vec_id, cell,
+    kept, rep_id) SELECT — the twin of `operators/dedup.py::semantic_dedup`
+    that both SemDeDup oracles end with."""
+    return f"""assign AS (
   SELECT vec_id, v, cell FROM (
     SELECT e.vec_id, e.v, ct.cell,
            row_number() OVER (
                PARTITION BY e.vec_id
                ORDER BY round(list_cosine_similarity(e.v, ct.c), 6) DESC,
                         ct.cell) AS rn
-    FROM emb e CROSS JOIN {cents_final} ct)
+    FROM emb e CROSS JOIN {cents} ct)
   WHERE rn = 1
 ),
-sd_drops AS (
+drops AS (
   SELECT b.vec_id, min(a.vec_id) AS rep
-  FROM sd_assign a JOIN sd_assign b
+  FROM assign a JOIN assign b
     ON a.cell = b.cell AND a.vec_id < b.vec_id
   WHERE round(list_cosine_similarity(a.v, b.v), 4) >= {_SEMDEDUP_TAU}
   GROUP BY b.vec_id
@@ -1989,8 +1941,17 @@ sd_drops AS (
 SELECT s.vec_id, CAST(s.cell AS INT) AS cell,
        CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS INT) AS kept,
        coalesce(d.rep, s.vec_id) AS rep_id
-FROM sd_assign s LEFT JOIN sd_drops d ON s.vec_id = d.vec_id
-WHERE {_KM_MONOTONE_SQL}
+FROM assign s LEFT JOIN drops d ON s.vec_id = d.vec_id
+"""
+
+
+def _semantic_dedup_trained_fixed_sql() -> str:
+    """Chained oracle: the unrolled Lloyd CTE chain produces the trained
+    centroids, which the SemDeDup verdict consumes — identical constants
+    to the Spark pipeline above."""
+    prefix, cents_final = _kmeans_train_ctes()
+    return f"""{prefix},
+{_semdedup_verdict_sql(cents_final)}WHERE {_KM_MONOTONE_SQL}
 """
 
 
@@ -2010,16 +1971,7 @@ def semantic_dedup_scaled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = raw.count()
     n_cells = max(8, n // 250)
     cents = fixed_centroids(_SEMDEDUP_DIM, n_cells, _SEMDEDUP_SEED)
-    return _semdedup_invariant(
-        semantic_dedup(
-            emb,
-            cents,
-            "vec_id",
-            "embedding",
-            threshold=_SEMDEDUP_TAU,
-            round_to=4,
-        )
-    )
+    return _semdedup_invariant(semantic_dedup(emb, cents))
 
 
 def _semdedup_invariant(result: DataFrame) -> DataFrame:
@@ -2036,40 +1988,18 @@ def _semdedup_invariant(result: DataFrame) -> DataFrame:
 def _semantic_dedup_sql() -> str:
     cents = fixed_centroids(_SEMDEDUP_DIM, _SEMDEDUP_CELLS, _SEMDEDUP_SEED)
     cent_rows = ",\n    ".join(
-        f"({pid}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for pid, c in enumerate(cents)
+        f"({cell}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
+        for cell, c in enumerate(cents)
     )
     return f"""
 WITH emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
-cents(pid, c) AS (
+cents(cell, c) AS (
   VALUES
     {cent_rows}
 ),
-assign AS (
-  SELECT vec_id, v, pid AS cell FROM (
-    SELECT e.vec_id, e.v, ct.pid,
-           row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.v, ct.c), 6) DESC,
-                        ct.pid) AS rn
-    FROM emb e CROSS JOIN cents ct)
-  WHERE rn = 1
-),
-drops AS (
-  SELECT b.vec_id, min(a.vec_id) AS rep
-  FROM assign a JOIN assign b
-    ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE round(list_cosine_similarity(a.v, b.v), 4) >= {_SEMDEDUP_TAU}
-  GROUP BY b.vec_id
-)
-SELECT s.vec_id, CAST(s.cell AS INT) AS cell,
-       CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS INT) AS kept,
-       coalesce(d.rep, s.vec_id) AS rep_id
-FROM assign s LEFT JOIN drops d ON s.vec_id = d.vec_id
-"""
-
+{_semdedup_verdict_sql("cents")}"""
 
 
 # ---------------------------------------------------------------------------

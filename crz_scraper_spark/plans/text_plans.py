@@ -24,6 +24,7 @@ from crz_scraper_spark.functions.text import (
     subject_extract,
     tokens_nonempty,
 )
+from crz_scraper_spark.operators.sketches import _CMS_DEPTH, _CMS_WIDTH
 from crz_scraper_spark.operators.tagging import DEFAULT_TAXONOMY, _safe, keyword_tag
 from crz_scraper_spark.operators.textquality import (
     LANG_STOPWORDS,
@@ -844,7 +845,7 @@ WHERE coalesce(a.n_bpe_tokens, 0) >= coalesce(a.n_words, 0)
 
 def bpe_corpus_token_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact-corpus vocabulary: merges learned from the FULL corpus's word
-    # frequencies via one distributed word-count agg (top-max_vocab rows
+    # frequencies via one distributed word-count agg (top-_MAX_VOCAB rows
     # reach the driver — bounded at any corpus size), not from a document
     # sample. Rows-only check (merge learning has no SQL analog).
     from crz_scraper_spark.operators.bpe import bpe_corpus_token_stats
@@ -895,9 +896,6 @@ ORDER BY cnt DESC, word ASC
 # makes the CMS never-undercount guarantee a driver-verified invariant.
 # ---------------------------------------------------------------------------
 
-_CMS_DEPTH, _CMS_WIDTH = 4, 512
-
-
 def cms_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crz_scraper_spark.operators.sketches import cms_build, cms_estimate
 
@@ -917,12 +915,12 @@ def cms_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .persist()
     )
-    sketch = cms_build(wc, "word", _CMS_DEPTH, _CMS_WIDTH, weight_col="cnt")
+    sketch = cms_build(wc, "word")
     total = wc.agg(F.sum("cnt")).collect()[0][0]
     # Probe set = the exact >1% heavy hitters (bounded at <= 100 rows by
     # construction), so the output carries both truths side by side.
     probes = wc.filter(F.col("cnt") * 100 > F.lit(total))
-    est = cms_estimate(sketch, probes, "word", _CMS_DEPTH, _CMS_WIDTH)
+    est = cms_estimate(sketch, probes, "word")
     out = est.select(
         "word",
         "cnt",

@@ -256,9 +256,13 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_bounded(dedup, "append", "stream_dedup")
 
 
-def _windowed_counts(src: DataFrame, watermark: str) -> DataFrame:
+# Event-time lateness the two stream sinks accept before a window closes.
+_SINK_WATERMARK = "2 hours"
+
+
+def _windowed_counts(src: DataFrame) -> DataFrame:
     return (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", _SINK_WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -274,7 +278,6 @@ def stream_to_upsert_store(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    watermark: str = "2 hours",
     stream_src: DataFrame | None = None,
 ) -> None:
     """The MULTI-BATCH-SAFE streaming sink: each micro-batch MERGES its
@@ -295,7 +298,7 @@ def stream_to_upsert_store(
     from crz_scraper_spark.operators.upsert import _hadoop_fs, upsert_by_key
 
     src = stream_src if stream_src is not None else _events_stream(spark, sf_dir)
-    agg = _windowed_counts(src, watermark)
+    agg = _windowed_counts(src)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         fs, jvm = _hadoop_fs(spark, out_dir)
@@ -321,7 +324,6 @@ def stream_to_partitioned_parquet(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    watermark: str = "2 hours",
     stream_src: DataFrame | None = None,
 ) -> None:
     """Production sink pattern (S10's idempotent re-save, done right): the
@@ -340,7 +342,7 @@ def stream_to_partitioned_parquet(
     (hazard pinned in tests/test_streaming_late.py).
     """
     src = stream_src if stream_src is not None else _events_stream(spark, sf_dir)
-    agg = _windowed_counts(src, watermark)
+    agg = _windowed_counts(src)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (

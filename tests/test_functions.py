@@ -82,35 +82,15 @@ def test_first_wins_dedup_deterministic(spark):
     assert got == {"a": "first", "b": "only"}
 
 
-def test_first_wins_dedup_group_size_col(spark):
-    """group_size_col (r10): the kept row carries its duplicate-group size
-    from the same window pass, Σ sizes reproduces the input count (the
-    curation audit's input-ledger contract), and omitting the parameter
-    leaves the schema untouched."""
-    rows = [
-        Row(k="a", idx=3, v="third"),
-        Row(k="a", idx=1, v="first"),
-        Row(k="a", idx=2, v="second"),
-        Row(k="b", idx=10, v="only"),
-    ]
-    df = spark.createDataFrame(rows).repartition(8)
-    out = first_wins_dedup(
-        df, ["k"], [F.asc("idx")], group_size_col="grp_n"
-    ).collect()
-    got = {r["k"]: (r["v"], r["grp_n"]) for r in out}
-    assert got == {"a": ("first", 3), "b": ("only", 1)}
-    assert sum(n for _, n in got.values()) == len(rows)
-    plain = first_wins_dedup(df, ["k"], [F.asc("idx")])
-    assert "grp_n" not in plain.columns
-
-
 def test_first_wins_dedup_agg_matches_window_form(spark):
     """r10: `first_wins_dedup_agg` is the min_by-aggregation tier for
     duplicate-heavy keyings (map-side partial reduction before the
     exchange — guide §2.3); the curation pipeline's exact stage uses it.
     Pin it row-identical, column-order-identical and type-identical to
     the window-form operator on a multi-key multi-order frame with
-    string payloads and a group_size_col."""
+    string payloads; the trailing __grp_n is each kept row's group size,
+    and the sizes add up to the input count (the curation audit's
+    input-ledger contract)."""
     from crz_scraper_spark.operators.dedup import first_wins_dedup_agg
 
     rows = [
@@ -121,18 +101,18 @@ def test_first_wins_dedup_agg_matches_window_form(spark):
         Row(k1="b", k2=1, d="2021-01-05", idx=7, v="solo"),
     ]
     df = spark.createDataFrame(rows).repartition(7)
-    got = first_wins_dedup_agg(
-        df, ["k1", "k2"], [F.col("d"), F.col("idx")], group_size_col="n"
-    )
-    ref = first_wins_dedup(
-        df, ["k1", "k2"], [F.asc("d"), F.asc("idx")], group_size_col="n"
-    )
+    with_n = first_wins_dedup_agg(df, ["k1", "k2"], [F.col("d"), F.col("idx")])
+    sizes = {(r["k1"], r["k2"]): r["__grp_n"] for r in with_n.collect()}
+    assert sizes == {("a", 1): 3, ("a", 2): 1, ("b", 1): 1}
+    assert sum(sizes.values()) == len(rows)
+    got = with_n.drop("__grp_n")
+    ref = first_wins_dedup(df, ["k1", "k2"], [F.asc("d"), F.asc("idx")])
     assert got.columns == ref.columns
     assert [f.dataType for f in got.schema] == [f.dataType for f in ref.schema]
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
     # the aggregation tier reduces map-side: partial_min_by below the
     # exchange is the structural point of the tier
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = with_n._jdf.queryExecution().executedPlan().toString()
     assert "partial_min_by" in plan
 
 
@@ -181,7 +161,7 @@ def test_cosine_topk_excludes_self_and_ranks(spark):
         Row(vec_id=2, embedding=[0.0, 1.0]),
     ]
     df = spark.createDataFrame(rows)
-    out = cosine_topk(df, df.filter(F.col("vec_id") == 0), k=2).collect()
+    out = cosine_topk(df, df.filter(F.col("vec_id") == 0)).collect()
     assert [r["neighbor_id"] for r in sorted(out, key=lambda r: r["rank"])] == [1, 2]
 
 
@@ -218,9 +198,7 @@ def test_containment_detects_embedded_doc(spark):
         Row(doc_id=3, text="entirely unrelated content about spark engines"),
         Row(doc_id=4, text="another standalone document with private words"),
     ]
-    out = containment_pairs(
-        spark.createDataFrame(rows), min_containment_ppm=800_000
-    ).collect()
+    out = containment_pairs(spark.createDataFrame(rows)).collect()
     pairs = {(r["id_a"], r["id_b"]): r for r in out}
     assert set(pairs) == {(1, 2)}
     hit = pairs[(1, 2)]
@@ -246,9 +224,7 @@ def test_containment_detects_higher_id_contained_doc(spark):
         Row(doc_id=2, text=chunk),  # contained, HIGHER id
         Row(doc_id=3, text=boiler + " " + " ".join(f"other{i}" for i in range(30))),
     ]
-    out = containment_pairs(
-        spark.createDataFrame(rows), min_containment_ppm=800_000
-    ).collect()
+    out = containment_pairs(spark.createDataFrame(rows)).collect()
     pairs = {(r["id_a"], r["id_b"]): r for r in out}
     # host's 3 rarest shingles are the boiler ones (df=2, sort first), none
     # shared with doc 2 — a lower-id-only seed join would return {} here.
@@ -256,9 +232,10 @@ def test_containment_detects_higher_id_contained_doc(spark):
     assert pairs[(1, 2)]["containment_ppm"] == 1_000_000
 
 
-def test_containment_below_threshold_excluded(spark):
+def test_containment_below_threshold_excluded(spark, monkeypatch):
     """Half-overlapping docs share rare shingles (candidates) but fall below
     the 0.8 containment bar — blocked-then-verified, not blocked-then-kept."""
+    from crz_scraper_spark.operators import dedup
     from crz_scraper_spark.operators.dedup import containment_pairs
 
     a = " ".join(f"shared{i}" for i in range(10))
@@ -267,6 +244,7 @@ def test_containment_below_threshold_excluded(spark):
         Row(doc_id=2, text=a + " " + " ".join(f"right{i}" for i in range(10))),
     ]
     df = spark.createDataFrame(rows)
-    assert containment_pairs(df, min_containment_ppm=800_000).count() == 0
-    loose = containment_pairs(df, min_containment_ppm=300_000).collect()
+    assert containment_pairs(df).count() == 0
+    monkeypatch.setattr(dedup, "_MIN_CONTAINMENT_PPM", 300_000)
+    loose = containment_pairs(df).collect()
     assert [(r["id_a"], r["id_b"]) for r in loose] == [(1, 2)]

@@ -27,16 +27,8 @@ from crz_scraper_spark.operators.sketches import (
 # ---------------------------------------------------------------------------
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """(node, rank) after ``iterations`` damped power steps, integer ppm.
+def pagerank_fixed_point(edges: DataFrame) -> DataFrame:
+    """(node, rank) after the damped power steps, integer ppm.
 
     ``edges`` is a directed edge list; nodes are the distinct sources (a
     symmetric graph — the co-occurrence graphs this engine builds — makes
@@ -53,19 +45,13 @@ def pagerank_fixed_point(
     # Callers that already hold an adjacency (copurchase_adjacency) should
     # use `pagerank_on_adjacency` directly and skip this regroup.
     return pagerank_on_adjacency(
-        edges.groupBy(F.col(src).alias("node")).agg(
-            F.collect_list(dst).alias("nbrs")
-        ),
-        iterations=iterations,
-        damping_num=damping_num,
-        damping_den=damping_den,
-        scale=scale,
+        edges.groupBy(F.col("src").alias("node")).agg(
+            F.collect_list("dst").alias("nbrs")
+        )
     )
 
 
-def copurchase_edges(
-    lineitem: DataFrame, max_basket: int = 50
-) -> DataFrame:
+def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Distinct symmetric (src, dst) part pairs co-occurring in an order.
 
     Derived by exploding `copurchase_adjacency` — distinctness comes from
@@ -75,7 +61,7 @@ def copurchase_edges(
     adjacency build it was feeding anyway. The explode is map-only, so
     edge consumers pay one shuffle total.
     """
-    return copurchase_adjacency(lineitem, max_basket).select(
+    return copurchase_adjacency(lineitem).select(
         F.col("node").alias("src"), F.explode("nbrs").alias("dst")
     )
 
@@ -130,12 +116,17 @@ def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def test_cms_never_undercounts_and_is_bounded(spark):
+def test_cms_never_undercounts_and_is_bounded(spark, monkeypatch):
     """est >= true count for EVERY key (the CMS guarantee), and the sketch
-    is exactly depth*width rows no matter the input volume."""
+    is exactly depth*width rows no matter the input volume (width 64 here,
+    so the 38 keys collide)."""
+    from crz_scraper_spark.operators import sketches
+
+    monkeypatch.setattr(sketches, "_CMS_WIDTH", 64)
     words = [f"w{i % 37}" for i in range(5000)] + ["hot"] * 500
     toks = spark.createDataFrame([(w,) for w in words], ["word"])
-    sketch = cms_build(toks, "word", depth=4, width=64).persist()
+    exact = toks.groupBy("word").agg(F.count("*").alias("cnt"))
+    sketch = cms_build(exact, "word").persist()
     try:
         assert sketch.count() <= 4 * 64
         # every counter row belongs to a valid (j, bucket) cell
@@ -144,8 +135,7 @@ def test_cms_never_undercounts_and_is_bounded(spark):
             | (F.col("bucket") < 0) | (F.col("bucket") >= 64)
         ).count()
         assert bad == 0
-        exact = toks.groupBy("word").agg(F.count("*").alias("cnt"))
-        est = cms_estimate(sketch, exact, "word", depth=4, width=64)
+        est = cms_estimate(sketch, exact, "word")
         under = est.filter(F.col("est") < F.col("cnt")).count()
         assert under == 0
         hot = est.filter(F.col("word") == "hot").collect()[0]
@@ -156,19 +146,31 @@ def test_cms_never_undercounts_and_is_bounded(spark):
 
 def test_cms_build_weighted_equals_occurrence_stream(spark):
     """The r10 single-pass contract: building the sketch from the
-    pre-aggregated (word, cnt) table with weight_col yields the IDENTICAL
-    counter table as building from the raw occurrence stream — the bucket
+    pre-aggregated (word, cnt) table yields the IDENTICAL counter table as
+    counting the raw occurrence stream per (j, bucket) — the bucket
     depends only on the word, so Σ cnt per (j, bucket) ≡ count(*)."""
+    from crz_scraper_spark.operators.sketches import _CMS_DEPTH, _bucket
+
     words = [f"w{i % 23}" for i in range(400)] + ["hot"] * 60
     toks = spark.createDataFrame([(w,) for w in words], ["word"])
     wc = toks.groupBy("word").agg(F.count("*").alias("cnt"))
+    stream = toks.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"), _bucket(F.col("word"), j).alias("bucket")
+                    )
+                    for j in range(_CMS_DEPTH)
+                ]
+            )
+        ).alias("r")
+    )
     raw = sorted(
-        tuple(r) for r in cms_build(toks, "word", 3, 32).collect()
-    )
-    weighted = sorted(
         tuple(r)
-        for r in cms_build(wc, "word", 3, 32, weight_col="cnt").collect()
+        for r in stream.groupBy("r.j", "r.bucket").agg(F.count("*")).collect()
     )
+    weighted = sorted(tuple(r) for r in cms_build(wc, "word").collect())
     assert raw == weighted and raw
 
 
@@ -176,16 +178,19 @@ def test_cms_merges_by_addition(spark):
     """The scale contract: sketch(A ∪ B) == sketch(A) + sketch(B)
     element-wise — what makes per-executor / per-day partial sketches
     composable without revisiting data."""
+
+    def counts(df):
+        return df.groupBy("word").agg(F.count("*").alias("cnt"))
+
     a = spark.createDataFrame([(f"a{i % 11}",) for i in range(300)], ["word"])
     b = spark.createDataFrame([(f"a{i % 7}",) for i in range(200)], ["word"])
-    both = a.union(b)
     merged = (
-        cms_build(a, "word", 2, 32)
-        .union(cms_build(b, "word", 2, 32))
+        cms_build(counts(a), "word")
+        .union(cms_build(counts(b), "word"))
         .groupBy("j", "bucket")
         .agg(F.sum("c").alias("c"))
     )
-    direct = cms_build(both, "word", 2, 32)
+    direct = cms_build(counts(a.union(b)), "word")
     diff = merged.alias("m").join(
         direct.alias("d"), ["j", "bucket"], "full"
     ).filter(
@@ -229,7 +234,7 @@ def test_pagerank_matches_integer_reference_on_small_graph(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {
         r["node"]: r["rank"]
-        for r in pagerank_fixed_point(df, iterations=5).collect()
+        for r in pagerank_fixed_point(df).collect()
     }
     assert got == _py_pagerank(edges)
 
@@ -241,22 +246,25 @@ def test_pagerank_mass_is_bounded_and_deterministic(spark, sf_dir):
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_edges(li)
-    r1 = pagerank_fixed_point(edges, iterations=3)
+    r1 = pagerank_fixed_point(edges)
     agg = r1.agg(
         F.count("*").alias("n"), F.sum("rank").alias("mass")
     ).collect()[0]
     assert 150_000 * agg["n"] <= agg["mass"] <= 1_000_000 * agg["n"]
-    r2 = pagerank_fixed_point(edges, iterations=3)
+    r2 = pagerank_fixed_point(edges)
     sym = r1.alias("a").join(r2.alias("b"), "node").filter(
         F.col("a.rank") != F.col("b.rank")
     )
     assert sym.count() == 0 and r1.count() == r2.count()
 
 
-def test_copurchase_basket_cap_drops_mega_orders(spark):
+def test_copurchase_basket_cap_drops_mega_orders(spark, monkeypatch):
+    from crz_scraper_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_PR_MAX_BASKET", 5)
     rows = [(1, p) for p in range(10)] + [(2, 100), (2, 101)]
     li = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
-    edges = copurchase_edges(li, max_basket=5)
+    edges = copurchase_edges(li)
     # order 1 (10 parts) is dropped entirely; order 2 yields both directions
     got = sorted((r["src"], r["dst"]) for r in edges.collect())
     assert got == [(100, 101), (101, 100)]
@@ -301,15 +309,16 @@ def test_streaming_left_outer_join_emits_unmatched(spark, sf_dir):
 
 
 @pytest.mark.parametrize("width", [16, 1024])
-def test_cms_error_shrinks_with_width(spark, width):
+def test_cms_error_shrinks_with_width(spark, monkeypatch, width):
     """Wider sketches overcount less (on average) — the epsilon = e/width
     knob actually connected."""
+    from crz_scraper_spark.operators import sketches
+
+    monkeypatch.setattr(sketches, "_CMS_WIDTH", width)
     words = [f"w{i % 200}" for i in range(4000)]
     toks = spark.createDataFrame([(w,) for w in words], ["word"])
     exact = toks.groupBy("word").agg(F.count("*").alias("cnt"))
-    est = cms_estimate(
-        cms_build(toks, "word", 2, width), exact, "word", 2, width
-    )
+    est = cms_estimate(cms_build(exact, "word"), exact, "word")
     over = est.agg(F.sum(F.col("est") - F.col("cnt"))).collect()[0][0]
     if width == 16:
         assert over > 0  # heavy collision regime must overcount
@@ -333,22 +342,26 @@ def test_triangle_counts_match_bruteforce(spark):
             expect[b] += 1
             expect[c] += 1
     expect = {n: k for n, k in expect.items() if k}
-    from crz_scraper_spark.operators.graph import triangle_counts
+    from crz_scraper_spark.operators.graph import _TRI_TOP, triangle_counts
 
-    df = spark.createDataFrame(sorted(adj), ["src", "dst"])
-    got = {r["node"]: r["n_tri"] for r in triangle_counts(df).collect()}
+    assert len(expect) <= _TRI_TOP
+
+    def adjacency(pairs):
+        return (
+            spark.createDataFrame(sorted(pairs), ["src", "dst"])
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.collect_set("dst").alias("nbrs"))
+        )
+
+    got = {r["node"]: r["n_tri"] for r in triangle_counts(adjacency(adj)).collect()}
     assert got == expect
     # Ids beyond int32 must skip compaction (bounds check) yet stay exact,
     # and the output keeps the input's bigint type.
     big = 2**40
-    shifted = spark.createDataFrame(
-        sorted((a + big, b + big) for a, b in adj), ["src", "dst"]
-    )
-    got_big = {
-        r["node"] - big: r["n_tri"] for r in triangle_counts(shifted).collect()
-    }
+    shifted = triangle_counts(adjacency((a + big, b + big) for a, b in adj))
+    got_big = {r["node"] - big: r["n_tri"] for r in shifted.collect()}
     assert got_big == expect
-    assert dict(triangle_counts(shifted).dtypes)["node"] == "bigint"
+    assert dict(shifted.dtypes)["node"] == "bigint"
 
 
 def test_referential_integrity_clean_on_testdata(spark, sf_dir):
@@ -588,14 +601,11 @@ def test_hll_incremental_store_rejects_family_mismatch(spark, tmp_path):
 
 
 def test_graph_adjacency_path_equals_edge_path(spark):
-    """The round-8 plan change: triangles and PageRank consumed via
-    `copurchase_adjacency` (one node-keyed shuffle, set-semantics dedup)
-    must produce IDENTICAL results to the original edge-list path — the
-    physical strategy changed, the graph didn't."""
-    from crz_scraper_spark.operators.graph import (
-        pagerank_on_adjacency,
-        triangle_counts,
-    )
+    """The round-8 plan change: PageRank consumed via a set-semantics
+    adjacency (`copurchase_adjacency`'s one node-keyed shuffle) must
+    produce IDENTICAL results to the edge-list path — the physical
+    strategy changed, the graph didn't."""
+    from crz_scraper_spark.operators.graph import pagerank_on_adjacency
 
     edges = [
         (1, 2), (2, 1), (1, 3), (3, 1), (2, 3), (3, 2),
@@ -606,25 +616,9 @@ def test_graph_adjacency_path_equals_edge_path(spark):
     adj = df.groupBy(F.col("src").alias("node")).agg(
         F.collect_set("dst").alias("nbrs")
     )
-    tri_e = {r["node"]: r["n_tri"] for r in triangle_counts(df).collect()}
-    tri_a = {
-        r["node"]: r["n_tri"]
-        for r in triangle_counts(adjacency=adj).collect()
-    }
-    assert tri_e == tri_a and tri_e
-    pr_e = {
-        r["node"]: r["rank"]
-        for r in pagerank_fixed_point(df, iterations=4).collect()
-    }
-    pr_a = {
-        r["node"]: r["rank"]
-        for r in pagerank_on_adjacency(adj, iterations=4).collect()
-    }
-    assert pr_e == pr_a
-    with pytest.raises(ValueError):
-        triangle_counts(df, adjacency=adj)
-    with pytest.raises(ValueError):
-        triangle_counts()
+    pr_e = {r["node"]: r["rank"] for r in pagerank_fixed_point(df).collect()}
+    pr_a = {r["node"]: r["rank"] for r in pagerank_on_adjacency(adj).collect()}
+    assert pr_e == pr_a and pr_e
 
 
 def test_copurchase_adjacency_matches_exploded_edges(spark):

@@ -34,15 +34,11 @@ def stage2_filter_columns(
     resort_names_by_key: list[list[str]],
     price_min: float = 0.0,
     date_min: str | None = None,
-    max_resort_keys: int | None = 3,
-    index_col: str = "ingest_idx",
 ) -> DataFrame:
     """The Column-API stage-2 ladder, kept verbatim as the reference the
     SQL-text builder must agree with."""
     cins = F.array(*[F.lit(c.replace(" ", "")) for c in company_cins])
-    keys = resort_names_by_key
-    if max_resort_keys is not None:
-        keys = keys[:max_resort_keys]
+    keys = resort_names_by_key[:3]
     resort_names = [
         n.upper().replace(" ", "") for names in keys for n in names if n
     ]
@@ -77,7 +73,7 @@ def stage2_filter_columns(
 
     w = (
         Window.partitionBy(_norm_name_col(F.col("nazov")), F.col("id"))
-        .orderBy(F.col(index_col))
+        .orderBy(F.col("ingest_idx"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     earlier_kept = F.coalesce(
@@ -99,11 +95,13 @@ def stage2_filter_columns(
 
 # Reference-list entries that a naive SQL literal would break or misread.
 TRICKY_CINS = ["O'Brien 1", "back\\slash", "50%_off", "trail\\", "a\\'b", "Ľščťžýáíé"]
+# The fourth key column lies past the reference's early exit, so "Obec"
+# never matches.
 TRICKY_RESORTS = [
     ["Ministerstvo vnútra"],
     ["Úrad pre 'kvalitu'", "Dvor\\Súd"],
-    ["Ministerstvo\nfinancií", "100% _test"],
-    ["Štvrtý kľúč"],
+    ["Ministerstvo\nfinancií", "100% _test", "Štvrtý kľúč"],
+    ["Obec"],
 ]
 LINK = [{"odkaz": "https://x/a.pdf"}]
 
@@ -144,20 +142,20 @@ def _reasons(df: DataFrame) -> list[tuple[int, int]]:
 
 
 @pytest.mark.parametrize(
-    "cins, resorts, date_min, max_keys",
+    "cins, resorts, date_min",
     [
-        (TRICKY_CINS, TRICKY_RESORTS, "2024-01-01", 3),
-        (TRICKY_CINS, TRICKY_RESORTS, None, None),
-        ([], TRICKY_RESORTS, "2024-01-01", 3),
-        (TRICKY_CINS, [], "2024-01-01", 3),
-        (TRICKY_CINS, [[""], []], None, 3),
+        (TRICKY_CINS, TRICKY_RESORTS, "2024-01-01"),
+        (TRICKY_CINS, TRICKY_RESORTS, None),
+        ([], TRICKY_RESORTS, "2024-01-01"),
+        (TRICKY_CINS, [], "2024-01-01"),
+        (TRICKY_CINS, [[""], []], None),
     ],
-    ids=["tricky", "no-date-all-keys", "empty-cins", "empty-resorts", "blank-resorts"],
+    ids=["tricky", "no-date", "empty-cins", "empty-resorts", "blank-resorts"],
 )
 def test_stage2_sql_text_matches_column_ladder(
-    spark, tricky_contracts, cins, resorts, date_min, max_keys
+    spark, tricky_contracts, cins, resorts, date_min
 ):
-    kw = dict(price_min=100.0, date_min=date_min, max_resort_keys=max_keys)
+    kw = dict(price_min=100.0, date_min=date_min)
     want = _reasons(stage2_filter_columns(tricky_contracts, cins, resorts, **kw))
     got = _reasons(stage2_filter(tricky_contracts, cins, resorts, **kw))
     assert got == want
@@ -176,7 +174,6 @@ def test_stage2_tricky_literals_match_themselves(spark, tricky_contracts):
                 TRICKY_RESORTS,
                 price_min=100.0,
                 date_min="2024-01-01",
-                max_resort_keys=None,
             )
         )
     )

@@ -199,64 +199,6 @@ def test_checksum_sum_catches_even_multiplicity_swap(spark):
     assert a[1] != b[1]  # the sum component catches it
 
 
-def test_range_split_points_approx_mode(spark, sf_dir):
-    """`exact=False` swaps the global rank window for percentile_approx's
-    mergeable sketch (one map-combine pass, no Window/global sort in the
-    plan) and keeps the guarantee that matters for a range layout:
-    every boundary's cumulative fraction is within 1/accuracy (+ the
-    worst single-value tie mass — the sketch returns actual data values,
-    and a duplicated value carries all its rows) of i/R."""
-    from crz_scraper_spark.plans.integrity_plans import (
-        _RANGE_BUCKETS,
-        range_split_points,
-    )
-
-    acc = 100
-    df = range_split_points(spark, sf_dir, exact=False, accuracy=acc)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    from pyspark.sql import functions as F
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    n = events.count()
-    max_tie = (
-        events.groupBy("user_id").count()
-        .agg(F.max("count")).collect()[0][0]
-    ) / n
-    rows = df.collect()
-    assert len(rows) == _RANGE_BUCKETS - 1
-    for r in rows:
-        target = r["bucket_id"] / _RANGE_BUCKETS
-        frac = r["n_rows_le"] / n
-        assert abs(frac - target) <= 1.0 / acc + max_tie, (
-            r["bucket_id"], frac, target, max_tie,
-        )
-
-
-def test_quality_band_filter_approx_mode(spark, sf_dir):
-    """`exact=False` computes the 5%/95% band from the percentile sketch:
-    no Window in the plan, and the kept fraction is 90% within the
-    sketch's rank-error bound (+ boundary tie mass)."""
-    from pyspark.sql import functions as F
-
-    from crz_scraper_spark.plans.corpus_plans import quality_band_filter
-
-    acc = 100
-    df = quality_band_filter(spark, sf_dir, exact=False, accuracy=acc)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = docs.count()
-    max_tie = (
-        docs.groupBy("n_chars").count().agg(F.max("count")).collect()[0][0]
-    ) / n
-    kept = df.count() / n
-    assert abs(kept - 0.90) <= 2 * (1.0 / acc + max_tie), (kept, max_tie)
-    # Exact and approx agree on the band within the same tolerance.
-    exact_rows = quality_band_filter(spark, sf_dir, exact=True).count() / n
-    assert abs(kept - exact_rows) <= 2 * (1.0 / acc + max_tie)
-
-
 def test_window_rotation_covers_never_checked():
     """The 50-query driver window must keep its rotation contract: exactly
     50 entries, first in registry order, and EVERY registry query no
@@ -493,8 +435,10 @@ def test_d():
 
 
 # ---------------------------------------------------------------------------
-# Options: a defaulted parameter that every caller leaves at one value is a
-# configuration nothing tests — fold it into the constant the callers use.
+# Options: a defaulted parameter that every non-test caller leaves at one
+# value is a configuration no query, pipeline or CLI varies — fold it into
+# the constant those callers use. Tests are not callers: a test that needs
+# a second value patches the module constant.
 
 # Callers whose keywords stay: the benchmark, the driver entry and the
 # scripts must keep working unchanged.
@@ -503,6 +447,19 @@ _FIXED_CALLERS = ("bench.py", "__spark_entry__.py", "tools/", "perfbench/")
 _DEPLOYMENT = (
     "crz_scraper_spark/session.py::get_spark(cpus)",
     "crz_scraper_spark/session.py::get_spark(extra_conf)",
+)
+# Seams: parameters through which a test injects an input, or that choose
+# the only path real inputs take.
+_SEAMS = (
+    # argparse reads sys.argv when argv is None; tests pass an argument list.
+    "crz_scraper_spark/__main__.py::main(argv)",
+    # Tests inject a file stream with a controlled trigger.
+    "crz_scraper_spark/streaming/windows.py::stream_to_upsert_store(stream_src)",
+    "crz_scraper_spark/streaming/windows.py::stream_to_partitioned_parquet(stream_src)",
+    # The registry queries pass "stub"; "auto", which tests run, is the
+    # only path that runs real PDFs through camelot (the reference's
+    # stage 6).
+    "crz_scraper_spark/operators/extraction.py::detect_tables(backend)",
 )
 _CONSTANT_NAME = re.compile(r"_?[A-Z][A-Z0-9_]*$")
 _ARITHMETIC = (
@@ -576,8 +533,10 @@ def one_value_parameters(
     distinct values, sorted.
 
     ``sources`` are ``(repo-relative path, source)`` pairs, and every one
-    of them is a caller. A call matches every definition of its name (a
-    method by attribute, a class by its name for ``__init__``). An omitted
+    outside ``tests/`` is a caller: a test is not a caller, so a value
+    only a test gives does not count. A call matches every definition of
+    its name (a method by attribute, a class by its name for
+    ``__init__``). An omitted
     argument is the default, and a bare reference to a function (a
     registry entry, a UDF) is a call with every default. A literal or an
     ALL_CAPS constant is its own value; a bare name of the caller's own
@@ -585,7 +544,11 @@ def one_value_parameters(
     ``*args``/``**kw`` call, a parameter named in ``exempt`` (as
     ``path::function`` or ``path::function(param)``) and a parameter that
     one of ``_FIXED_CALLERS`` passes count as varied."""
-    trees = [(path, ast.parse(source)) for path, source in sources]
+    trees = [
+        (path, ast.parse(source))
+        for path, source in sources
+        if not path.startswith("tests/")
+    ]
     sigs = [s for path, tree in trees for s in _signatures(path, tree)]
     by_name: dict[tuple[str, str], list[_Signature]] = {}
     for s in sigs:
@@ -703,37 +666,32 @@ def one_value_parameters(
     return sorted(out)
 
 
-def _test_sources(root: str) -> list[tuple[str, str]]:
-    tests = os.path.join(root, "tests")
-    return [
-        (f"tests/{f}", open(os.path.join(tests, f)).read())
-        for f in sorted(os.listdir(tests))
-        if f.endswith(".py")
-    ]
-
-
 def test_every_defaulted_parameter_takes_two_values():
     """Every defaulted parameter of the package takes at least two distinct
-    values across its callers (the package, bench.py, the driver entry,
-    tools/, perfbench/ and tests/). One that never does is folded into
-    the constant its callers use. Exempt: the pipeline API in
+    values across its non-test callers (the package, bench.py, the driver
+    entry, tools/ and perfbench/). One that never does is folded into the
+    constant its callers use. Exempt: the pipeline API in
     `pipeline.__all__`, every keyword the benchmark, the driver entry or
-    tools/ pass, and the deployment settings of `get_spark`."""
+    tools/ pass, the deployment settings of `get_spark`, and `_SEAMS`."""
     from crz_scraper_spark import pipeline
 
     exempt = [f"crz_scraper_spark/pipeline.py::{n}" for n in pipeline.__all__]
-    sources = _non_test_sources(ROOT) + _test_sources(ROOT)
-    one_value = one_value_parameters(sources, exempt + list(_DEPLOYMENT))
+    exempt += list(_DEPLOYMENT)
+    sources = _non_test_sources(ROOT)
+    one_value = one_value_parameters(sources, exempt + list(_SEAMS))
     assert not one_value, (
-        "defaulted parameters every caller leaves at one value (fold each "
-        f"into that value): {one_value}"
+        "defaulted parameters every non-test caller leaves at one value "
+        f"(fold each into that value): {one_value}"
     )
+    # Every seam is still a one-value parameter without its exemption.
+    assert set(_SEAMS) <= set(one_value_parameters(sources, exempt))
 
 
 def test_parameter_walk_on_synthetic_sources():
     """The walk counts omitted arguments as the default, follows a
-    caller's own parameter, treats starred calls, fixed callers and
-    exemptions as varied, and counts tests as callers."""
+    caller's own parameter, and treats starred calls, fixed callers and
+    exemptions as varied. A second value given only by a test does not
+    count, and a `_SEAMS` entry is not flagged."""
     package = (
         "crz_scraper_spark/m.py",
         '''
@@ -790,16 +748,18 @@ def run(*args):
     )
     tool = ("tools/t.py", "from crz_scraper_spark.m import p\n\np(0, s=1)\n")
     test = ("tests/test_m.py", "from crz_scraper_spark.m import q\n\nq(0, t=2)\n")
-    sources = [package, tool, test]
-    assert one_value_parameters(sources, ["crz_scraper_spark/m.py::e"]) == [
-        "crz_scraper_spark/m.py::f(k)",
-        "crz_scraper_spark/m.py::only_ref(y)",
-    ]
-    assert one_value_parameters([package, tool], ["crz_scraper_spark/m.py::e"]) == [
+    flagged = [
         "crz_scraper_spark/m.py::f(k)",
         "crz_scraper_spark/m.py::only_ref(y)",
         "crz_scraper_spark/m.py::q(t)",
     ]
+    exempt = ["crz_scraper_spark/m.py::e"]
+    # q's second value comes only from a test, so q(t) is still flagged.
+    assert one_value_parameters([package, tool, test], exempt) == flagged
+    assert one_value_parameters([package, tool], exempt) == flagged
+    # A seam, exempted by ``path::function(param)`` as in `_SEAMS`.
+    seam = ["crz_scraper_spark/m.py::q(t)"]
+    assert one_value_parameters([package, tool, test], exempt + seam) == flagged[:2]
 
 
 def _names_a_checkout(text: str) -> bool:

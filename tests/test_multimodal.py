@@ -76,8 +76,13 @@ def test_decode_schema_and_determinism(spark, sf_dir):
     assert a == b and len(a) == 10
 
 
-def test_resize_bounds_output_size(spark):
-    out = resize_images(_binary(spark), width=32, height=16).collect()
+def test_resize_bounds_output_size(spark, monkeypatch):
+    from crz_scraper_spark.operators import multimodal
+
+    monkeypatch.setattr(multimodal, "_RESIZE_W", 32)
+    monkeypatch.setattr(multimodal, "_RESIZE_H", 16)
+    monkeypatch.setattr(multimodal, "_RESIZE_TARGET", 32 * 16 // 8)
+    out = resize_images(_binary(spark)).collect()
     target = 32 * 16 // 8
     assert all(len(r.thumb) == target for r in out)
     assert all((r.width, r.height) == (32, 16) for r in out)
@@ -108,16 +113,19 @@ def test_extract_features_byte_window_sums(spark):
     assert all(x == 0.0 for x in row16.feature[5:])
 
 
-def test_frame_features_fused_parity(spark):
+def test_frame_features_fused_parity(spark, monkeypatch):
     # The fused sampler+featurizer (one mapInPandas pass, r10 guide §4)
     # must emit exactly the rows the chained verbs emit — same frame
     # count, same frame_no, same feature vectors — across payloads that
     # exercise the empty-doc, short-frame and multi-frame branches.
+    from crz_scraper_spark.operators import multimodal
+
     binary = _binary(spark)
     for dim in (3, 16):
+        monkeypatch.setattr(multimodal, "_FEATURE_DIM", dim)
         fused = sorted(
             (r.doc_id, r.frame_no, tuple(r.feature))
-            for r in frame_features(binary, dim=dim).collect()
+            for r in frame_features(binary).collect()
         )
         chained = sorted(
             (r.doc_id, r.frame_no, tuple(r.feature))

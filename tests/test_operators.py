@@ -118,20 +118,23 @@ def test_best_column_and_suggestions(spark, cells):
     assert "spolu" in sugg
 
 
-def test_ivf_exhaustive_probe_equals_bruteforce(spark, sf_dir):
+def test_ivf_exhaustive_probe_equals_bruteforce(spark, sf_dir, monkeypatch):
     """ivf_topk with nprobe == nlist scans every cell — must equal the exact
     brute-force top-k (same rounding, same tie-breaks). The recall knob is
     nprobe; exhaustive probing removes the approximation entirely."""
     from pyspark.sql import functions as F
 
+    from crz_scraper_spark.operators import similarity
     from crz_scraper_spark.operators.similarity import cosine_topk, ivf_topk
 
+    monkeypatch.setattr(similarity, "_IVF_NLIST", 4)
+    monkeypatch.setattr(similarity, "_IVF_NPROBE", 4)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, queries, k=5, round_to=4)
-    ivf = ivf_topk(emb, queries, nlist=4, nprobe=4)
+    exact = cosine_topk(emb, queries)
+    ivf = ivf_topk(emb, queries)
     assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, ivf.collect()))
 
 
@@ -267,9 +270,10 @@ def test_quantile_histogram_ignores_nulls(spark):
     assert got[0].n_rows == 400  # NULL rows never reach the count
 
 
-def test_connected_components_chain_and_triangle(spark):
+def test_connected_components_chain_and_triangle(spark, monkeypatch):
     """Min-label propagation finds components across multi-hop chains: a
     4-node chain (10-11-12-13), a triangle (20,21,22), one isolated pair."""
+    from crz_scraper_spark.operators import dedup
     from crz_scraper_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -284,9 +288,9 @@ def test_connected_components_chain_and_triangle(spark):
     }
     assert got == want
     # ...and the distributed pointer-jumping loop (forced), identical.
+    monkeypatch.setattr(dedup, "_default_driver_max_edges", lambda spark: 0)
     got_loop = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(pairs, driver_max_edges=0).collect()
+        r.doc_id: r.cluster_id for r in connected_components(pairs).collect()
     }
     assert got_loop == want
 
@@ -310,13 +314,16 @@ def test_connected_components_giant_component_readout_is_linear(spark):
     assert len(agg) == 1 and agg[0].cluster_id == 0 and agg[0]["count"] == n
 
 
-def test_connected_components_paths_agree_on_random_graphs(spark):
+def test_connected_components_paths_agree_on_random_graphs(spark, monkeypatch):
     """The distributed pointer-jumping loop and the driver union-find must
     produce identical labels on random graphs (chains, stars, cycles,
     isolated pairs all arise at these densities)."""
     import random
 
+    from crz_scraper_spark.operators import dedup
     from crz_scraper_spark.operators.dedup import connected_components
+
+    ceiling = dedup._default_driver_max_edges
 
     for seed, n_nodes, n_edges in ((1, 30, 18), (2, 40, 55), (3, 25, 10)):
         rng = random.Random(seed)
@@ -327,39 +334,39 @@ def test_connected_components_paths_agree_on_random_graphs(spark):
             }
         )
         pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        monkeypatch.setattr(dedup, "_default_driver_max_edges", ceiling)
         uf = {
             r.doc_id: r.cluster_id for r in connected_components(pairs).collect()
         }
+        monkeypatch.setattr(dedup, "_default_driver_max_edges", lambda spark: 0)
         loop = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(pairs, driver_max_edges=0).collect()
+            r.doc_id: r.cluster_id for r in connected_components(pairs).collect()
         }
         assert uf == loop, (seed, uf, loop)
 
 
-def test_connected_components_threshold_boundary(spark):
-    """Exactly at the driver_max_edges boundary (2*n_pairs == threshold)
-    the driver path runs; one below it the distributed loop runs — both
-    produce identical labels on the same input, proving the switch is
-    purely a physical-strategy choice."""
-    from crz_scraper_spark.operators.dedup import connected_components
+def test_connected_components_threshold_boundary(spark, monkeypatch):
+    """Exactly at the driver edge ceiling (2*n_pairs == ceiling) the driver
+    path runs; one below it the distributed loop runs — both produce
+    identical labels on the same input, proving the switch is purely a
+    physical-strategy choice."""
+    from crz_scraper_spark.operators import dedup
+    from crz_scraper_spark.operators.dedup import CC_DECISIONS, connected_components
 
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
     pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-    at = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
-            pairs, driver_max_edges=2 * len(edges)
-        ).collect()
-    }
-    below = {
-        r.doc_id: r.cluster_id
-        for r in connected_components(
-            pairs, driver_max_edges=2 * len(edges) - 1
-        ).collect()
-    }
-    assert at == want and below == want
+    labels = {}
+    for name, ceiling in (("at", 2 * len(edges)), ("below", 2 * len(edges) - 1)):
+        monkeypatch.setattr(dedup, "_default_driver_max_edges", lambda spark: ceiling)
+        CC_DECISIONS.clear()
+        labels[name] = {
+            r.doc_id: r.cluster_id for r in connected_components(pairs).collect()
+        }
+        labels[name + "_path"] = [d["path"] for d in CC_DECISIONS]
+    assert labels["at"] == want and labels["below"] == want
+    assert labels["at_path"] == ["driver_union_find"]
+    assert labels["below_path"] == ["iterative_label_prop"]
 
 
 def test_driver_max_edges_memory_derived(spark):
@@ -405,12 +412,13 @@ def test_driver_max_edges_memory_derived(spark):
     assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
 
 
-def test_lsh_multiprobe_improves_recall(spark, sf_dir):
+def test_lsh_multiprobe_improves_recall(spark, sf_dir, monkeypatch):
     """Multi-probe LSH strictly widens the candidate set: recall@5 vs the
     exact brute force is monotonically non-decreasing in probe radius, and
     full-radius probing (all buckets) equals exhaustive search."""
     from pyspark.sql import functions as F
 
+    from crz_scraper_spark.operators import similarity
     from crz_scraper_spark.operators.similarity import cosine_topk, lsh_ann_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -419,18 +427,18 @@ def test_lsh_multiprobe_improves_recall(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in cosine_topk(emb, queries, k=5, round_to=4).collect()
+        for r in cosine_topk(emb, queries).collect()
     }
 
     def recall(m):
+        monkeypatch.setattr(similarity, "_LSH_MULTIPROBE", m)
         got = {
             (r.query_id, r.neighbor_id)
-            for r in lsh_ann_topk(
-                emb, queries, k=5, n_planes=4, multiprobe=m
-            ).collect()
+            for r in lsh_ann_topk(emb, queries).collect()
         }
         return len(got & exact) / len(exact)
 
+    assert similarity._LSH_PLANES == 4
     r0, r1, r4 = recall(0), recall(1), recall(4)
     assert r0 <= r1 <= r4
     assert r4 == 1.0  # radius n_planes probes every bucket == exhaustive
@@ -447,7 +455,7 @@ def test_every_registry_query_documented_in_survey():
     assert not missing, f"undocumented queries: {missing}"
 
 
-def test_pq_topk_recall_and_determinism(spark, sf_dir):
+def test_pq_topk_recall_and_determinism(spark, sf_dir, monkeypatch):
     """PQ approximate top-10 must overlap the exact L2 top-10 well above
     chance (random vectors are PQ's adversarial case; chance recall at
     sf0.001 is 10/49 ≈ 0.2 — observed 0.21-0.39 across SFs), and two
@@ -455,14 +463,16 @@ def test_pq_topk_recall_and_determinism(spark, sf_dir):
     from pyspark.sql import Window
 
     from crz_scraper_spark.catalog import fan_out, load_table
+    from crz_scraper_spark.operators import similarity
     from crz_scraper_spark.operators.similarity import _sq_dist, pq_topk
 
+    monkeypatch.setattr(similarity, "_TOP_K", 10)
     emb = fan_out(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     qs = emb.filter(F.col("vec_id") < 8)
-    got1 = sorted(map(tuple, pq_topk(emb, qs, k=10).collect()))
-    got2 = sorted(map(tuple, pq_topk(emb, qs, k=10).collect()))
+    got1 = sorted(map(tuple, pq_topk(emb, qs).collect()))
+    got2 = sorted(map(tuple, pq_topk(emb, qs).collect()))
     assert got1 == got2  # deterministic rebuild
 
     approx: dict = {}
@@ -679,10 +689,11 @@ def test_epoch_shuffle_contiguous_and_epoch_varying(spark, sf_dir):
     assert order[0] != order[1]
 
 
-def test_bloom_no_false_negatives_bounded_fp(spark):
+def test_bloom_no_false_negatives_bounded_fp(spark, monkeypatch):
     """String items keyed the way `bloom_decontaminate` keys them: the
     bitset is built from Spark-side xxhash64 of the inserted strings and
     probed with the non-nullable hash column."""
+    from crz_scraper_spark.operators import bloom as bloom_mod
     from crz_scraper_spark.operators.bloom import (
         build_bloom_from_hashes,
         might_contain_hash_udf,
@@ -695,10 +706,9 @@ def test_bloom_no_false_negatives_bounded_fp(spark):
         [(s, True) for s in inserted] + [(s, False) for s in absent],
         "item string, present boolean",
     ).withColumn("h", F.coalesce(F.xxhash64("item"), F.lit(0)))
-    bloom = build_bloom_from_hashes(
-        [r["h"] for r in df.filter("present").collect()], n_bits=1 << 16
-    )
-    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16)
+    monkeypatch.setattr(bloom_mod, "_N_BITS", 1 << 16)
+    bloom = build_bloom_from_hashes([r["h"] for r in df.filter("present").collect()])
+    probe = might_contain_hash_udf(spark, bloom)
     rows = df.withColumn("hit", probe(F.col("h"))).collect()
     assert all(r["hit"] for r in rows if r["present"])  # no false negatives
     fp = sum(1 for r in rows if r["hit"] and not r["present"])
@@ -706,9 +716,10 @@ def test_bloom_no_false_negatives_bounded_fp(spark):
     assert fp / len(absent) < 0.05
 
 
-def test_bloom_hash_path_no_false_negatives(spark):
+def test_bloom_hash_path_no_false_negatives(spark, monkeypatch):
     import numpy as np
 
+    from crz_scraper_spark.operators import bloom as bloom_mod
     from crz_scraper_spark.operators.bloom import (
         build_bloom_from_hashes,
         might_contain_hash_udf,
@@ -718,8 +729,9 @@ def test_bloom_hash_path_no_false_negatives(spark):
     rng = np.random.default_rng(3)
     inserted = rng.integers(-(2**62), 2**62, size=3000).tolist()
     absent = rng.integers(-(2**62), 2**62, size=5000).tolist()
-    bloom = build_bloom_from_hashes(inserted, n_bits=1 << 16)
-    probe = might_contain_hash_udf(spark, bloom, n_bits=1 << 16)
+    monkeypatch.setattr(bloom_mod, "_N_BITS", 1 << 16)
+    bloom = build_bloom_from_hashes(inserted)
+    probe = might_contain_hash_udf(spark, bloom)
     df = spark.createDataFrame(
         [(int(h), True) for h in inserted] + [(int(h), False) for h in set(absent) - set(inserted)],
         "h long, present boolean",
@@ -941,6 +953,7 @@ def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
 
     from crz_scraper_spark.operators.dedup import (
         lsh_bucket_occupancy,
+        minhash_bands,
         minhash_dedup,
         minhash_signatures,
     )
@@ -954,7 +967,7 @@ def test_lsh_bucket_occupancy_and_mega_bucket_cap(spark):
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
 
     sig = minhash_signatures(docs, "doc_id", "text", 32, 5)
-    occ = lsh_bucket_occupancy(sig, "doc_id", 8, 4).collect()
+    occ = lsh_bucket_occupancy(minhash_bands(sig, "doc_id", 8, 4)).collect()
     assert len(occ) == 8
     for r in occ:
         # The 6-doc template cluster shares every band bucket.
@@ -1085,25 +1098,27 @@ def test_bpe_corpus_learning_matches_driver_learning(spark):
     )
     rows = {
         r["doc_id"]: r
-        for r in bpe_corpus_token_stats(docs, spark, n_merges=8).collect()
+        for r in bpe_corpus_token_stats(docs, spark).collect()
     }
     assert len(rows) == 3
     for r in rows.values():
         assert r["n_bpe_tokens"] >= r["n_words"]
 
 
-def test_bpe_corpus_vocab_cap_is_deterministic(spark):
-    """Truncating to max_vocab uses the (count desc, word asc) total order:
-    two runs over the same data give identical merge lists even when the
-    cap bites."""
+def test_bpe_corpus_vocab_cap_is_deterministic(spark, monkeypatch):
+    """Truncating to the vocabulary cap uses the (count desc, word asc)
+    total order: two runs over the same data give identical merge lists
+    even when the cap bites."""
+    from crz_scraper_spark.operators import bpe
     from crz_scraper_spark.operators.bpe import bpe_corpus_token_stats
 
+    monkeypatch.setattr(bpe, "_MAX_VOCAB", 6)
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma w{i} w{i} shared shared shared") for i in range(20)],
         "doc_id bigint, text string",
     )
-    a = sorted(map(tuple, bpe_corpus_token_stats(docs, spark, max_vocab=6, n_merges=10).collect()))
-    b = sorted(map(tuple, bpe_corpus_token_stats(docs, spark, max_vocab=6, n_merges=10).collect()))
+    a = sorted(map(tuple, bpe_corpus_token_stats(docs, spark).collect()))
+    b = sorted(map(tuple, bpe_corpus_token_stats(docs, spark).collect()))
     assert a == b
 
 
@@ -1209,12 +1224,7 @@ def test_semantic_dedup_gram_pair_path_matches_expr(spark, sf_dir):
     expr_out = sorted(
         map(tuple, _semantic_dedup_self_join(emb, cents, 0.35, 4).collect())
     )
-    gram_out = sorted(
-        map(
-            tuple,
-            semantic_dedup(emb, cents, threshold=0.35, round_to=4).collect(),
-        )
-    )
+    gram_out = sorted(map(tuple, semantic_dedup(emb, cents).collect()))
     assert expr_out == gram_out
 
 
@@ -1239,15 +1249,10 @@ def test_semantic_dedup_blocked_gram_matches_single_task(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = fixed_centroids(64, 4, seed=99)  # few cells => big cells
-    kw = dict(threshold=0.35, round_to=4)
     assert emb.count() <= dedup._CELL_BLOCK_ROWS
-    single = sorted(
-        map(tuple, semantic_dedup(emb, cents, **kw).collect())
-    )
+    single = sorted(map(tuple, semantic_dedup(emb, cents).collect()))
     monkeypatch.setattr(dedup, "_CELL_BLOCK_ROWS", 7)
-    blocked = sorted(
-        map(tuple, semantic_dedup(emb, cents, **kw).collect())
-    )
+    blocked = sorted(map(tuple, semantic_dedup(emb, cents).collect()))
     assert single == blocked and len(single) > 0
 
 

@@ -135,7 +135,7 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
-    salted = salted_join(li.hint("merge"), orders, "l_orderkey", "o_orderkey", salt=4)
+    salted = salted_join(li.hint("merge"), orders, "l_orderkey", "o_orderkey")
     plain = li.join(orders, li.l_orderkey == orders.o_orderkey)
     assert salted.count() == plain.count()
     got = sorted(map(tuple, salted.collect()))
@@ -484,9 +484,7 @@ def test_semantic_dedup_pair_join_is_equi_on_cell(spark, sf_dir):
     from crz_scraper_spark.operators.dedup import _semantic_dedup_plan
 
     emb, cents = _semdedup_inputs(spark, sf_dir)
-    lazy, base = _semantic_dedup_plan(
-        emb, cents, "vec_id", "embedding", 0.35, 4
-    )
+    lazy, base = _semantic_dedup_plan(emb, cents)
     try:
         plan = _plan(lazy)
         assert "BroadcastNestedLoopJoin" not in plan
@@ -505,13 +503,10 @@ def test_semantic_dedup_releases_its_base(spark, sf_dir):
     )
 
     emb, cents = _semdedup_inputs(spark, sf_dir)
-    kw = dict(threshold=0.35, round_to=4)
     spark.catalog.clearCache()
-    out = semantic_dedup(emb, cents, "vec_id", "embedding", **kw)
+    out = semantic_dedup(emb, cents)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    lazy, base = _semantic_dedup_plan(
-        emb, cents, "vec_id", "embedding", **kw
-    )
+    lazy, base = _semantic_dedup_plan(emb, cents)
     try:
         expect = sorted(tuple(r) for r in lazy.collect())
     finally:
@@ -932,7 +927,7 @@ def test_cms_probe_join_broadcasts_the_sketch(spark):
 
     toks = spark.createDataFrame([(f"w{i%9}",) for i in range(400)], ["word"])
     probes = toks.groupBy("word").agg(F.count("*").alias("cnt"))
-    est = cms_estimate(cms_build(toks, "word"), probes, "word")
+    est = cms_estimate(cms_build(probes, "word"), probes, "word")
     est.collect()
     plan = est._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
@@ -982,7 +977,8 @@ def test_salted_join_splits_the_hot_key(spark, sf_dir):
     key (~40% of fact rows) across _SALTS reducer tasks instead of one
     straggler — and the salt must spread the hot key's rows near-uniformly
     (xxhash64 on a per-row-unique column)."""
-    from crz_scraper_spark.plans.extra_plans import _SALTS, salted_skew_join
+    from crz_scraper_spark.operators.skew import _SALTS
+    from crz_scraper_spark.plans.extra_plans import salted_skew_join
 
     df = salted_skew_join(spark, sf_dir)
     df.count()

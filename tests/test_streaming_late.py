@@ -112,7 +112,7 @@ def test_events_stream_reads_directory_layout(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
 
 
-def test_multibatch_sink_upsert_safe_overwrite_lossy(spark, tmp_path):
+def test_multibatch_sink_upsert_safe_overwrite_lossy(spark, tmp_path, monkeypatch):
     """Under MULTI-batch arrival (4-file source, maxFilesPerTrigger=1) the
     merge sink (`stream_to_upsert_store`) lands exactly the batch answer,
     while the partition-overwrite sink silently LOSES windows: update mode
@@ -122,6 +122,7 @@ def test_multibatch_sink_upsert_safe_overwrite_lossy(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from crz_scraper_spark.catalog import load_table
+    from crz_scraper_spark.streaming import windows
     from crz_scraper_spark.streaming.windows import (
         stream_to_partitioned_parquet,
         stream_to_upsert_store,
@@ -157,10 +158,9 @@ def test_multibatch_sink_upsert_safe_overwrite_lossy(spark, tmp_path):
     # The long watermark keeps state for every window: a 4-way random file
     # split delivers timestamps out of order, and this test is about sink
     # semantics, not late-data drops.
+    monkeypatch.setattr(windows, "_SINK_WATERMARK", "100000 hours")
     up = str(tmp_path / "upsert_store")
-    stream_to_upsert_store(
-        spark, sf_dir, up, watermark="100000 hours", stream_src=make_stream()
-    )
+    stream_to_upsert_store(spark, sf_dir, up, stream_src=make_stream())
     got = sorted(
         map(
             tuple,
@@ -172,9 +172,7 @@ def test_multibatch_sink_upsert_safe_overwrite_lossy(spark, tmp_path):
     assert got == want
 
     ow = str(tmp_path / "overwrite_store")
-    stream_to_partitioned_parquet(
-        spark, sf_dir, ow, watermark="100000 hours", stream_src=make_stream()
-    )
+    stream_to_partitioned_parquet(spark, sf_dir, ow, stream_src=make_stream())
     lost = spark.read.parquet(ow).count()
     assert lost < len(want)  # the documented multi-batch hazard, observed
 
